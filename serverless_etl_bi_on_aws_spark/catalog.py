@@ -11,6 +11,8 @@ and "event" tables is just ``df.join``.
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 #: Every fixture table the driver generates (TESTDATA.md). The first seven are
@@ -36,6 +38,13 @@ TABLES: tuple[str, ...] = (
 #: and schema across queries instead of re-reading footers per query build.
 _TABLE_CACHE: dict[tuple[int, str, str], DataFrame] = {}
 
+#: Serializes cache misses and every set/restore of the session-global
+#: ``nanosAsLong`` conf. Plans build on concurrent driver threads: without
+#: it, two cold loads of a ns-timestamp table interleave their set/unset,
+#: so one read runs with the conf already unset (PARQUET_TYPE_ILLEGAL) or
+#: the conf leaks as "true".
+_LOAD_LOCK = threading.Lock()
+
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one fixture table (cached per session). Plain parquet scan:
@@ -50,11 +59,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     DuckDB narrows ns -> us.
     """
     key = (id(spark), sf_dir, name)
-    cached = _TABLE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    df = _load_table_uncached(spark, sf_dir, name)
-    _TABLE_CACHE[key] = df
+    with _LOAD_LOCK:
+        df = _TABLE_CACHE.get(key)
+        if df is None:
+            df = _TABLE_CACHE[key] = _load_table_uncached(spark, sf_dir, name)
     return df
 
 
@@ -152,17 +160,18 @@ def register_as_catalog_tables(
     for name in tables:
         path = f"{sf_dir}/{name}.parquet"
         needs_nanos = bool(_ns_timestamp_cols(path))
-        prior = spark.conf.get(nanos_key, None) if needs_nanos else None
-        if needs_nanos:
-            spark.conf.set(nanos_key, "true")
-        try:
-            spark.sql(
-                f"CREATE TABLE IF NOT EXISTS {database}.{name} USING parquet "
-                f"LOCATION '{path}'"
-            )
-        finally:
+        with _LOAD_LOCK:
+            prior = spark.conf.get(nanos_key, None) if needs_nanos else None
             if needs_nanos:
-                if prior is None:
-                    spark.conf.unset(nanos_key)
-                else:
-                    spark.conf.set(nanos_key, prior)
+                spark.conf.set(nanos_key, "true")
+            try:
+                spark.sql(
+                    f"CREATE TABLE IF NOT EXISTS {database}.{name} USING parquet "
+                    f"LOCATION '{path}'"
+                )
+            finally:
+                if needs_nanos:
+                    if prior is None:
+                        spark.conf.unset(nanos_key)
+                    else:
+                        spark.conf.set(nanos_key, prior)

@@ -5,8 +5,9 @@ Reference behaviors covered:
     (README.md:124)  -> :func:`to_ts`
   * deriving ``year``/``month`` columns for partitioned parquet output
     (README.md:87, 124, 166)  -> :func:`with_year_month`
-  * the trailing-3-month incremental extract window (README.md:60, 147)
-    -> :func:`trailing_window_predicate`
+
+The trailing-3-month incremental extract window (README.md:60, 147) is a
+scalar-broadcast cutoff inside the query (plans/queries.q5_incremental_window).
 """
 
 from __future__ import annotations
@@ -27,9 +28,3 @@ def with_year_month(df: DataFrame, ts_col: str) -> DataFrame:
     year/month predicates is automatic downstream."""
     return df.withColumn("year", F.year(ts_col)).withColumn("month", F.month(ts_col))
 
-
-def trailing_months(ts: Column, months: int) -> Column:
-    """``ts - INTERVAL <months> MONTH`` keeping timestamp type (the
-    reference's hourly job re-extracts a trailing 3-month window,
-    README.md:60, 147)."""
-    return F.timestamp_add("MONTH", F.lit(-months), ts)

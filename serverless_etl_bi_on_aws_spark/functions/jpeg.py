@@ -191,6 +191,16 @@ def _blocks_from_gray(pixels: bytes, width: int, height: int) -> tuple[np.ndarra
     return blocks.astype(np.float64) - 128.0, bw, bh
 
 
+def _checked_quant(quant) -> np.ndarray:
+    """A caller's quant table as int32, or ValueError: it must be 8x8 with
+    entries in 1..255. A 0 divides by zero when quantizing, and the DQT
+    segment declares 8-bit precision, so >255 would wrap silently."""
+    q = np.asarray(quant)
+    if q.shape != (8, 8) or not ((q >= 1) & (q <= 255)).all():
+        raise ValueError(f"quant table must be 8x8 with entries in 1..255: {q!r}")
+    return q.astype(np.int32)
+
+
 def encode_jpeg_gray(
     pixels: bytes, width: int, height: int, quant: np.ndarray | None = None
 ) -> bytes:
@@ -210,7 +220,7 @@ def encode_jpeg_gray(
     flips ``np.round`` (measured: ~2 coefficients per frame across the
     whole fixture family) — so the faster contraction would change
     encoded bytes."""
-    q = STD_LUMA_QUANT if quant is None else np.asarray(quant, dtype=np.int32)
+    q = STD_LUMA_QUANT if quant is None else _checked_quant(quant)
     blocks, bw, bh = _blocks_from_gray(pixels, width, height)
     coef = np.einsum("ij,njk,lk->nil", DCT, blocks, DCT)
     quantized = np.round(coef / q).astype(np.int64)

@@ -486,8 +486,9 @@ def simhash_pairs_blocked(
 # Persisted SimHash index (round 15) — the TEXT member of the 64-bit
 # hamming index family, delegating to the modality-agnostic
 # operators/hash_index.py core exactly as image dHash and the audio
-# envelope do (build/probe/append/compact, pigeonhole blocking,
-# crash-ordering, idempotent markers — all shared). This closes the
+# envelope do (build/probe/append, pigeonhole blocking, crash-ordering,
+# idempotent markers — all shared; compaction is the core's
+# compact_hash_index). This closes the
 # incremental-dedup matrix: text near-dup now has BOTH index shapes
 # (MinHash-LSH in dedup_index.py for Jaccard semantics, SimHash here for
 # hamming semantics at 8 bytes/doc — the cheaper state when the corpus
@@ -579,17 +580,6 @@ def update_simhash_index(
     return update_hash_index(
         _simhashed(df, id_col, text_col, n), index_path, batch_id
     )
-
-
-def compact_simhash_index(
-    spark, index_path: str, target_file_bytes: int = 128 << 20
-) -> dict:
-    """Small-file/replay-dup compaction — delegates to the core."""
-    from serverless_etl_bi_on_aws_spark.operators.hash_index import (
-        compact_hash_index,
-    )
-
-    return compact_hash_index(spark, index_path, target_file_bytes)
 
 
 def minhash_similarity_join(
@@ -830,14 +820,6 @@ def _url_hashed(df: DataFrame, id_col: str, url_col: str) -> DataFrame:
         .filter(F.col("_canon").isNotNull())
         .select(id_col, F.xxhash64("_canon").alias("url_hash"))
     )
-
-
-def init_url_index(index_path: str, id_col: str = "doc_id") -> None:
-    """Create an EMPTY url index (meta only) — a streaming crawl-ingest
-    loop starts here."""
-    from serverless_etl_bi_on_aws_spark.operators.hash_index import init_hash_index
-
-    init_hash_index(index_path, id_col=id_col, hash_col="url_hash", n_blocks=1)
 
 
 def build_url_index(

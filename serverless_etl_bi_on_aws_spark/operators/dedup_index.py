@@ -60,7 +60,7 @@ from serverless_etl_bi_on_aws_spark.operators.dedup import (
     minhash_signatures,
 )
 from serverless_etl_bi_on_aws_spark.util import (
-    marker_exists,
+    append_once,
     read_marker,
     write_marker,
     writer_lease,
@@ -258,53 +258,29 @@ def update_index(
     docs, duplicates included (see module docstring: survivor-only
     indexing breaks chain equivalence with the one-shot rule).
 
-    Idempotent per ``batch_id`` (the streaming/cells.py epoch-guard
-    pattern): foreachBatch re-delivery of an already-applied batch is a
-    no-op, so ``foreachBatch(lambda df, eid: (dedup_against_index(...),
-    update_index(df, path, str(eid)))`` is replay-safe. The marker is
-    written LAST; a crash mid-append leaves a partial batch that the
+    Runs through :func:`util.append_once` (marker, lease, empty guard,
+    marker last), so ``foreachBatch(lambda df, eid:
+    (dedup_against_index(...), update_index(df, path, str(eid))))`` is
+    replay-safe. A crash mid-append leaves a partial batch that the
     replay re-appends in full — duplicate index rows are HARMLESS by
     construction (candidates are de-duplicated per pair and drop
     decisions depend on set membership, not multiplicity), which is what
     lets a plain-parquet append survive at-least-once delivery without a
-    transaction log. Returns True if the batch was applied, False if it
-    had been already.
-
-    Appends are serialized by the index's single-writer lease
-    (util.writer_lease): a second concurrent updater fails loudly with
-    LeaseHeldError instead of interleaving probe-then-append."""
-    marker = os.path.join(index_path, "_applied", batch_id)
-    if marker_exists(marker):
-        return False
-    with writer_lease(index_path, owner=f"update_index:{batch_id}"):
-        if marker_exists(marker):  # applied while we waited on the lease
-            return False
-        if new_docs.isEmpty():
-            # Round 17: an EMPTY batch (e.g. a curation micro-batch whose
-            # quality/DSIR gates rejected everything) must not reach
-            # _append_signatures — a zero-row partitionBy append creates
-            # the bands/ dir with a _SUCCESS but NO parquet footers, and
-            # every later probe's spark.read.parquet(bands) dies with
-            # UNABLE_TO_INFER_SCHEMA: one junk crawl hour would brick the
-            # index for good. The batch is still marked applied (its
-            # append is vacuously done), keeping replay a no-op.
-            write_marker(marker, {"batch_id": batch_id, "empty": True})
-            return True
-        meta = read_meta(index_path)
-        sigs = minhash_signatures(
+    transaction log. The empty guard runs on the computed signatures: an
+    empty batch and a batch whose texts are all sub-n-token both yield
+    zero signatures and are vacuously applied. Returns True if the batch
+    was applied, False if it had been already."""
+    meta = read_meta(index_path)
+    return append_once(
+        index_path,
+        batch_id,
+        "update_index",
+        # checkpointed: the empty guard and the append share one pass
+        lambda: minhash_signatures(
             new_docs, meta.id_col, text_col, meta.n, meta.num_hashes, meta.seed
-        ).localCheckpoint(eager=True)
-        if sigs.isEmpty():
-            # r17 ADVICE: a non-empty batch whose texts are ALL sub-n-token
-            # produces ZERO signatures — the same footer-less-bands hazard
-            # as the empty batch, which the isEmpty() guard above cannot
-            # see. Gate on the computed frame; the checkpoint keeps the
-            # guard + append one signature job, not two.
-            write_marker(marker, {"batch_id": batch_id, "empty": True})
-            return True
-        _append_signatures(sigs, meta, index_path)
-        write_marker(marker, {"batch_id": batch_id})
-    return True
+        ).localCheckpoint(eager=True),
+        lambda sigs: _append_signatures(sigs, meta, index_path),
+    )
 
 
 def compact_index(

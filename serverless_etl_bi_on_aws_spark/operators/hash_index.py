@@ -15,7 +15,7 @@ Layout (the operators/dedup_index.py shape, hash-sized):
     <index>/hashes/            (id, <hash_col>)         16 bytes/row
     <index>/blocks/block=<b>/  (key, id)                n_blocks rows/doc
     <index>/_meta.json         n_blocks, id_col, hash_col
-    <index>/_applied/<batch>   idempotence markers (util.write_marker)
+    <index>/_applied/<batch>   idempotence markers (util.append_once)
 
 Probe shape: candidates come from the (block, key) equi-join against
 the block-partitioned index. Every new row emits all ``n_blocks``
@@ -26,7 +26,7 @@ PAIRS fetch full hashes for the ``bit_count(xor)`` verify.
 Online rule: a new row is dropped iff within ``radius`` of ANY indexed
 row or a smaller-id row of the same batch. Appends write hashes before
 blocks (an unreplayed crash leaves an inert hash, never block rows whose
-candidates silently vanish) and are idempotent per batch id.
+candidates silently vanish) and run through ``util.append_once``.
 """
 
 from __future__ import annotations
@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from serverless_etl_bi_on_aws_spark.operators.dedup import hamming_pairs_blocked
 from serverless_etl_bi_on_aws_spark.util import (
-    marker_exists,
+    append_once,
     read_marker,
     write_marker,
     writer_lease,
@@ -175,33 +175,25 @@ def update_hash_index(
     batch_id: str,
 ) -> bool:
     """Append one batch's ``(id, hash)`` rows — ALL of them, duplicates
-    included (chain equivalence; see operators/dedup_index.py).
-    Idempotent per ``batch_id``; marker written LAST. Serialized by the
-    index's single-writer lease (util.writer_lease) — a second
-    concurrent updater fails loudly instead of interleaving."""
-    marker = os.path.join(index_path, "_applied", batch_id)
-    if marker_exists(marker):
-        return False
-    with writer_lease(index_path, owner=f"update_hash_index:{batch_id}"):
-        if marker_exists(marker):
-            return False
-        meta = read_hash_meta(index_path)
-        # NULL-hash rows (undecodable media, unparseable urls) can never
-        # match a probe — a NULL block key never equi-joins and a NULL
-        # hamming never passes the radius filter — so appending them only
-        # accumulates junk rows; drop them BEFORE the emptiness guard so a
-        # null-hash-only batch is vacuously applied too (r17 ADVICE).
-        appendable = new_hashed.select(
-            meta["id_col"], meta["hash_col"]
-        ).filter(F.col(meta["hash_col"]).isNotNull())
-        if appendable.isEmpty():
-            # an all-rejected batch must not create footer-less blocks/
-            # (the dedup_index.py round-17 fix); vacuously applied
-            write_marker(marker, {"batch_id": batch_id, "empty": True})
-            return True
-        _append(appendable, meta, index_path)
-        write_marker(marker, {"batch_id": batch_id})
-    return True
+    included (chain equivalence; see operators/dedup_index.py), through
+    :func:`util.append_once` (idempotent per ``batch_id``, lease-
+    serialized, marker last).
+
+    NULL-hash rows (undecodable media, unparseable urls) can never match
+    a probe — a NULL block key never equi-joins and a NULL hamming never
+    passes the radius filter — so they are dropped before the empty
+    guard: a NULL-hash-only batch is vacuously applied and never creates
+    a footer-less ``blocks/``."""
+    meta = read_hash_meta(index_path)
+    return append_once(
+        index_path,
+        batch_id,
+        "update_hash_index",
+        lambda: new_hashed.select(meta["id_col"], meta["hash_col"]).filter(
+            F.col(meta["hash_col"]).isNotNull()
+        ),
+        lambda rows: _append(rows, meta, index_path),
+    )
 
 
 def compact_hash_index(

@@ -54,7 +54,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from serverless_etl_bi_on_aws_spark.functions.text import token_count, tokens
-from serverless_etl_bi_on_aws_spark.util import read_marker, write_marker
+from serverless_etl_bi_on_aws_spark.util import append_once, read_marker, write_marker
 
 #: number of term-hash partitions in the persisted postings layout
 N_TERM_BUCKETS = 64
@@ -203,26 +203,25 @@ def update_bm25_index(
     cross-document state beyond those, so append + meta refresh IS the
     incremental algorithm).
 
-    Idempotent per ``batch_id``: a replay overwrites the same batch dir
-    with identical content and re-commits the same meta; an already-
-    applied batch short-circuits on its marker. Crash ordering: batch
-    dirs first, meta next, marker last — a crash anywhere is healed by
-    replaying. Doc ids must be NEW (dedup upstream — the bloom/url/hash
-    index family is the front for that); re-adding an existing id would
-    double-count it, same as any postings list."""
+    Runs through :func:`util.append_once`: idempotent per ``batch_id``
+    (an already-applied batch short-circuits on its marker; a replay
+    after a crash overwrites its own batch dir with identical content and
+    re-commits the same meta), serialized by the writer lease, and an
+    empty batch is marked applied without writing a batch dir. Crash
+    ordering: batch dirs first, meta next, marker last. Doc ids must be
+    NEW (dedup upstream — the bloom/url/hash index family is the front
+    for that); re-adding an existing id would double-count it, same as
+    any postings list. Returns the index meta."""
     if not batch_id or batch_id == "base":
         raise ValueError(f"batch_id must be a non-empty name != 'base', got {batch_id!r}")
-    meta = read_bm25_meta(index_path)
-    marker = os.path.join(index_path, "_applied", batch_id)
-    from serverless_etl_bi_on_aws_spark.util import marker_exists
+    id_col = read_bm25_meta(index_path)["id_col"]
 
-    if marker_exists(marker):
-        return meta
-    _write_batch(docs, index_path, batch_id, meta["id_col"], text_col)
-    meta = _refresh_meta(docs.sparkSession, index_path, meta["id_col"])
-    os.makedirs(os.path.dirname(marker), exist_ok=True)
-    write_marker(marker, {"batch": batch_id})
-    return meta
+    def append(rows: DataFrame) -> None:
+        _write_batch(rows, index_path, batch_id, id_col, text_col)
+        _refresh_meta(rows.sparkSession, index_path, id_col)
+
+    append_once(index_path, batch_id, "update_bm25_index", lambda: docs, append)
+    return read_bm25_meta(index_path)
 
 
 def read_bm25_meta(index_path: str) -> dict:

@@ -787,78 +787,57 @@ def update_ivf_index(
     measured, not guessed. The retrain itself (a fresh build_ivf_index
     over the compacted corpus) stays with the caller.
 
-    Idempotent per ``batch_id`` via the centralized commit markers
-    (marker written LAST, after corpus append and drift record; replays
-    of an applied batch are no-ops), and serialized by the index's
-    single-writer lease (util.writer_lease) — a second concurrent
-    updater fails loudly instead of interleaving. Returns True if the
-    batch was applied."""
-    import os
-
-    from serverless_etl_bi_on_aws_spark.util import marker_exists, writer_lease
-
-    marker = os.path.join(index_path, "_applied", batch_id)
-    if marker_exists(marker):
-        return False
-    with writer_lease(index_path, owner=f"update_ivf_index:{batch_id}"):
-        if marker_exists(marker):
-            return False
-        return _update_ivf_index_locked(
-            new_embeddings, index_path, batch_id, vec_col, marker
-        )
-
-
-def _update_ivf_index_locked(
-    new_embeddings: DataFrame,
-    index_path: str,
-    batch_id: str,
-    vec_col: str,
-    marker: str,
-) -> bool:
-    """Body of :func:`update_ivf_index`, run under the writer lease.
-    Assignment is the shared :func:`_assign_with_centroids` BLAS stage
-    over the mtime-cached centroid rows."""
+    Runs through :func:`util.append_once`: idempotent per ``batch_id``
+    (marker LAST, after the corpus append and the drift record), lease-
+    serialized, and an empty batch is vacuously applied with no drift
+    record. Returns True if the batch was applied."""
     import os
 
     import numpy as np
 
-    from serverless_etl_bi_on_aws_spark.util import read_marker, write_marker
+    from serverless_etl_bi_on_aws_spark.util import (
+        append_once,
+        read_marker,
+        write_marker,
+    )
 
     spark = new_embeddings.sparkSession
-    # corpus type discipline: cast the batch's vectors to the element
-    # type the corpus was built with (recorded in _meta.json) so every
-    # corpus file carries one schema; pre-round-11 indexes without the
-    # field keep the old behavior
-    meta = read_marker(os.path.join(index_path, "_meta.json")) or {}
-    vec_type = meta.get("vec_type")
-    if vec_type:
-        new_embeddings = new_embeddings.withColumn(
-            vec_col, F.col(vec_col).cast(f"array<{vec_type}>")
+
+    def assign() -> DataFrame:
+        # corpus type discipline: cast the batch's vectors to the element
+        # type the corpus was built with (recorded in _meta.json) so every
+        # corpus file carries one schema; pre-round-11 indexes without the
+        # field keep the old behavior
+        meta = read_marker(os.path.join(index_path, "_meta.json")) or {}
+        vecs = new_embeddings
+        if meta.get("vec_type"):
+            vecs = vecs.withColumn(
+                vec_col, F.col(vec_col).cast(f"array<{meta['vec_type']}>")
+            )
+        centers = _load_centroids(spark, index_path)
+        cmat = np.zeros((len(centers), len(centers[0]["centroid"])), dtype="float64")
+        for r in centers:
+            cmat[int(r["cluster"])] = r["centroid"]
+        # one Arrow pass, three consumers (empty guard, corpus write, drift
+        # agg): batches are small by the incremental contract, so pin it
+        return _assign_with_centroids(vecs, cmat, vec_col).localCheckpoint(eager=True)
+
+    def append(assigned: DataFrame) -> None:
+        (
+            assigned.drop("_dist2")
+            .write.mode("append")
+            .partitionBy("_cluster")
+            .parquet(os.path.join(index_path, "corpus"))
         )
-    centers = _load_centroids(spark, index_path)
-    cmat = np.zeros((len(centers), len(centers[0]["centroid"])), dtype="float64")
-    for r in centers:
-        cmat[int(r["cluster"])] = r["centroid"]
-    # one Arrow pass, two consumers (corpus write + drift agg): batches
-    # are small-per-batch by the incremental contract, so pin the pass
-    assigned = _assign_with_centroids(
-        new_embeddings, cmat, vec_col
-    ).localCheckpoint(eager=True)
-    (
-        assigned.drop("_dist2")
-        .write.mode("append")
-        .partitionBy("_cluster")
-        .parquet(os.path.join(index_path, "corpus"))
-    )
-    drift = assigned.agg(
-        F.count("*").alias("n"), F.sum("_dist2").alias("sum_dist2")
-    ).collect()[0]
-    write_marker(
-        os.path.join(index_path, "_drift", f"{batch_id}.json"),
-        {"n": int(drift["n"]), "sum_dist2": float(drift["sum_dist2"] or 0.0)},
-    )
-    write_marker(marker, {"batch_id": batch_id})
-    return True
+        drift = assigned.agg(
+            F.count("*").alias("n"), F.sum("_dist2").alias("sum_dist2")
+        ).collect()[0]
+        write_marker(
+            os.path.join(index_path, "_drift", f"{batch_id}.json"),
+            {"n": int(drift["n"]), "sum_dist2": float(drift["sum_dist2"] or 0.0)},
+        )
+
+    return append_once(index_path, batch_id, "update_ivf_index", assign, append)
 
 
 def ivf_drift_status(index_path: str, retrain_ratio: float = 2.0) -> dict:

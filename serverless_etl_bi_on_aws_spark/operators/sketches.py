@@ -26,9 +26,12 @@ coarse-grain query is a groupBy + ``hll_union_agg`` over rollup rows
 
 from __future__ import annotations
 
+import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, functions as F
+
+from serverless_etl_bi_on_aws_spark.util import append_once, read_marker, write_marker
 
 
 def hll_rollup(
@@ -160,13 +163,13 @@ def cms_estimate(
 
 
 # --------------------------------------------------------------------------
-# Persisted CMS — append-only batch dirs, the same layout discipline as
-# the bm25/hash index family: a replay OVERWRITES its own batch subdir
-# with identical content, so incremental maintenance is idempotent
-# WITHOUT markers even though sketch addition itself is not (the classic
-# double-count trap of at-least-once streaming into an additive sketch).
-# Reads merge at query time (one groupBy over <= batches*width*depth
-# cells — never data-sized).
+# Persisted CMS — one batch dir per batch id, appended through the shared
+# util.append_once protocol (marker, lease, empty guard, marker last):
+# sketch addition is not idempotent (the classic double-count trap of
+# at-least-once streaming into an additive sketch), so an applied batch
+# short-circuits on its marker, and a replay after a crash OVERWRITES its
+# own batch dir with identical content. Reads merge at query time (one
+# groupBy over <= batches*width*depth cells — never data-sized).
 # --------------------------------------------------------------------------
 
 
@@ -179,41 +182,48 @@ def write_cms_batch(
     depth: int = 5,
     weight_col: str | None = None,
 ) -> None:
-    """One batch's cells under ``batch=<id>`` (meta committed first on
-    the initial write; later batches must match its shape or fail
-    loudly — a silently mixed-shape sketch would estimate garbage)."""
-    import os
+    """One batch's cells under ``batch=<id>``. Under the writer lease the
+    first batch commits the meta; later batches must match its shape or
+    fail loudly — a silently mixed-shape sketch would estimate garbage."""
 
-    from serverless_etl_bi_on_aws_spark.util import read_marker, write_marker
-
-    meta_path = os.path.join(sketch_path, "_meta.json")
-    meta = read_marker(meta_path)
-    if meta is None:
-        _check_cms_params(width, depth)
-        os.makedirs(sketch_path, exist_ok=True)
-        write_marker(meta_path, {"width": width, "depth": depth, "key_col": key_col})
-    elif (meta["width"], meta["depth"]) != (width, depth):
-        raise ValueError(
-            f"sketch at {sketch_path} is {meta['width']}x{meta['depth']}, "
-            f"got {width}x{depth}"
+    def cells() -> DataFrame:
+        meta_path = os.path.join(sketch_path, "_meta.json")
+        meta = read_marker(meta_path)
+        if meta is None:
+            _check_cms_params(width, depth)
+            write_marker(meta_path, {"width": width, "depth": depth, "key_col": key_col})
+        elif (meta["width"], meta["depth"]) != (width, depth):
+            raise ValueError(
+                f"sketch at {sketch_path} is {meta['width']}x{meta['depth']}, "
+                f"got {width}x{depth}"
+            )
+        # <= width*depth rows, pinned: the guard and the write share one pass
+        return (
+            cms_build(df, key_col, width=width, depth=depth, weight_col=weight_col)
+            .drop("width", "depth")
+            .localCheckpoint(eager=True)
         )
-    cells = cms_build(df, key_col, width=width, depth=depth, weight_col=weight_col)
-    cells.drop("width", "depth").write.mode("overwrite").parquet(
-        os.path.join(sketch_path, f"batch={batch_id}")
+
+    append_once(
+        sketch_path,
+        batch_id,
+        "write_cms_batch",
+        cells,
+        lambda rows: rows.write.mode("overwrite").parquet(
+            os.path.join(sketch_path, f"batch={batch_id}")
+        ),
     )
 
 
 def read_cms(spark, sketch_path: str) -> DataFrame:
     """The merged sketch over every batch dir — exactly equal to a
     one-shot sketch of all the data (addition commutes)."""
-    import os
-
-    from serverless_etl_bi_on_aws_spark.util import read_marker
-
     meta = read_marker(os.path.join(sketch_path, "_meta.json"))
     if meta is None:
         raise FileNotFoundError(f"no cms meta at {sketch_path}")
-    cells = spark.read.parquet(sketch_path)
+    # declared, not inferred: a sketch whose batches were all empty has
+    # no batch dir to infer a schema from, and reads as the empty sketch
+    cells = spark.read.schema("row int, pos bigint, cnt bigint").parquet(sketch_path)
     return (
         cells.groupBy("row", "pos")
         .agg(F.sum("cnt").alias("cnt"))

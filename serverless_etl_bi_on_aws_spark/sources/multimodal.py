@@ -156,15 +156,6 @@ register_frame_decoder("video/mp4", _builtin_mp4_frames)
 register_frame_decoder("image/gif", _builtin_gif_frames)
 
 
-def _decode_image(payload: bytes, mime: str) -> tuple[int, int, bytes]:
-    """Dispatch a real-codec mime through the registry -> (width, height,
-    pixels row-major grayscale)."""
-    fn = IMAGE_DECODERS.get(mime)
-    if fn is None:
-        raise ValueError(f"no real decoder for mime {mime!r}")
-    return fn(payload)
-
-
 def _gradient_px(k: int, w: int, h: int, shift: int = 0) -> bytes:
     """Row-major ``(x*3 + y*5 + k + shift) % 256`` gradient pixels — the
     attach_* fixture family's shared generator, vectorized (round-18

@@ -40,6 +40,10 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 from serverless_etl_bi_on_aws_spark.operators.histogram import build_histogram_cells
+from serverless_etl_bi_on_aws_spark.streaming.launch import (
+    read_landing_zone,
+    start_foreach_batch,
+)
 from serverless_etl_bi_on_aws_spark.util import read_marker, write_marker
 
 
@@ -120,29 +124,21 @@ def start_histogram_cell_maintenance(
     ``cells_path`` becomes a generation-store root (read via
     :func:`read_cells_generation`), the rename-free object-store
     shape."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(source_dir)
-    )
 
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         batch_cells = build_histogram_cells(batch_df, value_col, grain, bin_width)
         fold = merge_cells_into_generations if generations else merge_cells_into_parquet
         fold(
             spark, batch_cells, cells_path, grain, epoch=(checkpoint_dir, epoch_id)
         )
 
-    writer = stream.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return start_foreach_batch(
+        read_landing_zone(spark, source_dir, schema),
+        apply_batch,
+        checkpoint_dir,
+        available_now,
+        processing_time,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
 
 
 def merge_cells_into_generations(

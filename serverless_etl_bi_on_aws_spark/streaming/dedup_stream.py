@@ -15,6 +15,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
+from serverless_etl_bi_on_aws_spark.streaming.launch import read_landing_zone
+
 
 def stream_dedup(
     spark: SparkSession,
@@ -29,9 +31,7 @@ def stream_dedup(
     of a key arriving within ``delay`` of each other are dropped (the
     streaming analog of the staging key-merge; late re-sends inside the
     horizon are absorbed exactly like the reference's window rewrite)."""
-    stream = getattr(
-        spark.readStream.schema(schema).option("pathGlobFilter", f"*.{fmt}"), fmt
-    )(source_dir)
+    stream = read_landing_zone(spark, source_dir, schema, fmt)
     return stream.withWatermark(watermark_col, delay).dropDuplicatesWithinWatermark(
         list(keys)
     )
@@ -51,9 +51,7 @@ def stream_session_windows(
     streaming twin of operators/sessionize.sessionize — same gap semantics,
     but sessions close when the watermark passes the gap, so state is
     bounded. Returns one row per closed session."""
-    stream = getattr(
-        spark.readStream.schema(schema).option("pathGlobFilter", f"*.{fmt}"), fmt
-    )(source_dir)
+    stream = read_landing_zone(spark, source_dir, schema, fmt)
     return (
         stream.withWatermark(ts_col, watermark)
         .groupBy(F.session_window(ts_col, gap).alias("sw"), F.col(user_col))

@@ -33,6 +33,10 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 from serverless_etl_bi_on_aws_spark.operators.merge import merge_upsert
+from serverless_etl_bi_on_aws_spark.streaming.launch import (
+    read_landing_zone,
+    start_foreach_batch,
+)
 
 
 def backfill(source_df: DataFrame, target_path: str) -> None:
@@ -191,15 +195,8 @@ def start_incremental_merge(
     widened ``schema`` and ``schema_evolution="evolve"``; the first merged
     batch then widens the target (pytest-pinned in test_merge_streaming).
     """
-    # pathGlobFilter: a landing zone accumulates manifests/notes/_SUCCESS
-    # markers; only files of the declared format participate (a stray
-    # readme.txt would otherwise fail the whole micro-batch — observed).
-    reader = spark.readStream.schema(schema).option("pathGlobFilter", f"*.{fmt}")
-    stream = getattr(reader, fmt)(source_dir)
 
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         if generations:
             merge_into_generation_target(
                 spark, batch_df, target_path, keys,
@@ -211,14 +208,13 @@ def start_incremental_merge(
                 schema_evolution=schema_evolution,
             )
 
-    writer = stream.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return start_foreach_batch(
+        read_landing_zone(spark, source_dir, schema, fmt),
+        apply_batch,
+        checkpoint_dir,
+        available_now,
+        processing_time,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
 
 
 def start_rollup_maintenance(
@@ -285,13 +281,9 @@ def start_rollup_maintenance(
     )
     from serverless_etl_bi_on_aws_spark.util import marker_exists, write_marker
 
-    reader = spark.readStream.schema(schema).option("pathGlobFilter", f"*.{fmt}")
-    stream = getattr(reader, fmt)(source_dir)
     fid = _rollup_file_id
 
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         with_src = batch_df.withColumn("_src", F.input_file_name())
         files = sorted(r[0] for r in with_src.select("_src").distinct().collect())
         cur = resolve_generation(rollup_path)
@@ -324,14 +316,13 @@ def start_rollup_maintenance(
             write_marker(os.path.join(stage, "_applied", fid(f)), {"file": f})
         commit_generation(rollup_path, gen, stage)
 
-    writer = stream.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return start_foreach_batch(
+        read_landing_zone(spark, source_dir, schema, fmt),
+        apply_batch,
+        checkpoint_dir,
+        available_now,
+        processing_time,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
 
 
 def _rollup_file_id(path: str) -> str:
@@ -455,12 +446,7 @@ def start_denorm_maintenance(
 
     from serverless_etl_bi_on_aws_spark.operators.denorm import upsert_sales_denorm
 
-    reader = spark.readStream.schema(schema).option("pathGlobFilter", f"*.{fmt}")
-    stream = getattr(reader, fmt)(source_dir)
-
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         from pyspark.sql import Window
 
         # latest-file-per-order: a backlog drain can batch two staged
@@ -486,11 +472,10 @@ def start_denorm_maintenance(
         )
         upsert_sales_denorm(spark, denorm_path, delta_orders, delta_li, part_df)
 
-    writer = stream.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return start_foreach_batch(
+        read_landing_zone(spark, source_dir, schema, fmt),
+        apply_batch,
+        checkpoint_dir,
+        available_now,
+        processing_time,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()

@@ -56,6 +56,10 @@ from serverless_etl_bi_on_aws_spark.operators.dedup_index import (
     dedup_against_index,
     update_index,
 )
+from serverless_etl_bi_on_aws_spark.streaming.launch import (
+    read_landing_zone,
+    start_foreach_batch,
+)
 from serverless_etl_bi_on_aws_spark.util import read_marker, write_marker
 
 #: per-weights-path validated num_buckets (selection.weights_num_buckets)
@@ -157,14 +161,9 @@ def start_incremental_dedup(
     :func:`checkpoint_instance_nonce` for why the path alone is not
     enough)."""
     ckpt = checkpoint_instance_nonce(checkpoint_dir)
-    reader = spark.readStream.schema(schema).option("pathGlobFilter", f"*.{fmt}")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = getattr(reader, fmt)(source_dir)
+    stream = read_landing_zone(spark, source_dir, schema, fmt, max_files_per_trigger)
 
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         apply_dedup_batch(
             spark,
             batch_df,
@@ -175,14 +174,9 @@ def start_incremental_dedup(
             text_col=text_col,
         )
 
-    writer = stream.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return start_foreach_batch(
+        stream, apply_batch, checkpoint_dir, available_now, processing_time
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
 
 
 def apply_curation_batch(
@@ -391,17 +385,11 @@ def start_incremental_curation(
     ``ivf_index_path``, semantically deduped as the fourth rung; with
     ``dsir_weights_path``, DSIR-selected toward a target distribution,
     see apply_curation_batch) — the q81 funnel as a running pipeline,
-    same trigger/checkpoint/batch-id discipline as
-    :func:`start_incremental_dedup`."""
+    with :func:`start_incremental_dedup`'s batch ids."""
     ckpt = checkpoint_instance_nonce(checkpoint_dir)
-    reader = spark.readStream.schema(schema).option("pathGlobFilter", f"*.{fmt}")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = getattr(reader, fmt)(source_dir)
+    stream = read_landing_zone(spark, source_dir, schema, fmt, max_files_per_trigger)
 
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         apply_curation_batch(
             spark,
             batch_df,
@@ -422,14 +410,9 @@ def start_incremental_curation(
             blocklist_terms_path=blocklist_terms_path,
         )
 
-    writer = stream.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return start_foreach_batch(
+        stream, apply_batch, checkpoint_dir, available_now, processing_time
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
 
 
 def start_warc_curation(
@@ -464,8 +447,8 @@ def start_warc_curation(
     gate. ``dsir_weights_path`` (round 16) threads the frozen-weights
     target-distribution rung through, same contract as
     :func:`apply_curation_batch` — so the crawl loop can select toward
-    a target domain while it dedups. Same trigger/checkpoint/batch-id
-    discipline as every other loop in this module."""
+    a target domain while it dedups. The source is ``stream_warc``, not
+    a landing-zone reader; the sink is the shared launcher."""
     from serverless_etl_bi_on_aws_spark.sources.warc import stream_warc
 
     ckpt = checkpoint_instance_nonce(checkpoint_dir)
@@ -483,8 +466,6 @@ def start_warc_curation(
     )
 
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         apply_curation_batch(
             spark,
             batch_df,
@@ -500,14 +481,9 @@ def start_warc_curation(
             dsir_min_milli=dsir_min_milli,
         )
 
-    writer = docs.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return start_foreach_batch(
+        docs, apply_batch, checkpoint_dir, available_now, processing_time
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
 
 
 def start_snapshot_curation_stream(
@@ -544,14 +520,9 @@ def start_snapshot_curation_stream(
     from serverless_etl_bi_on_aws_spark.operators.snapshot import mutate_snapshot
 
     ckpt = checkpoint_instance_nonce(checkpoint_dir)
-    reader = spark.readStream.schema(schema).option("pathGlobFilter", f"*.{fmt}")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = getattr(reader, fmt)(source_dir)
+    stream = read_landing_zone(spark, source_dir, schema, fmt, max_files_per_trigger)
 
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         with mutate_snapshot(
             family_root,
             ["corpus", "text_index"],
@@ -572,14 +543,9 @@ def start_snapshot_curation_stream(
                 html_col=html_col,
             )
 
-    writer = stream.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return start_foreach_batch(
+        stream, apply_batch, checkpoint_dir, available_now, processing_time
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
 
 
 def apply_image_dedup_batch(
@@ -769,13 +735,9 @@ def start_incremental_bloom_dedup(
     corpus). Batch ids fold the checkpoint instance nonce in, same as
     every loop in this module."""
     ckpt = checkpoint_instance_nonce(checkpoint_dir)
-    stream = getattr(
-        spark.readStream.schema(schema).option("pathGlobFilter", f"*.{fmt}"), fmt
-    )(source_dir)
+    stream = read_landing_zone(spark, source_dir, schema, fmt)
 
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         apply_bloom_dedup_batch(
             spark,
             batch_df,
@@ -786,14 +748,9 @@ def start_incremental_bloom_dedup(
             id_col=id_col,
         )
 
-    writer = stream.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return start_foreach_batch(
+        stream, apply_batch, checkpoint_dir, available_now, processing_time
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
 
 
 def start_cms_stream(
@@ -812,21 +769,17 @@ def start_cms_stream(
 ) -> StreamingQuery:
     """Maintain a persisted Count-Min sketch over a stream — frequency
     state without data-sized keys (the "which urls/terms are getting
-    hot" monitor beside the dedup loops). Each micro-batch writes its
-    cells under its own ``batch=`` dir, so at-least-once replays
-    OVERWRITE rather than double-count (sketches.write_cms_batch);
-    ``sketches.read_cms`` serves the merged sketch at any time, equal to
-    a one-shot sketch of everything drained so far."""
+    hot" monitor beside the dedup loops). Each micro-batch is one
+    marker-guarded ``sketches.write_cms_batch``, so at-least-once
+    replays never double-count; ``sketches.read_cms`` serves the merged
+    sketch at any time, equal to a one-shot sketch of everything drained
+    so far."""
     from serverless_etl_bi_on_aws_spark.operators.sketches import write_cms_batch
 
     ckpt = checkpoint_instance_nonce(checkpoint_dir)
-    stream = getattr(
-        spark.readStream.schema(schema).option("pathGlobFilter", f"*.{fmt}"), fmt
-    )(source_dir)
+    stream = read_landing_zone(spark, source_dir, schema, fmt)
 
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         write_cms_batch(
             batch_df,
             key_col,
@@ -837,11 +790,6 @@ def start_cms_stream(
             weight_col=weight_col,
         )
 
-    writer = stream.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return start_foreach_batch(
+        stream, apply_batch, checkpoint_dir, available_now, processing_time
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()

@@ -30,6 +30,10 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 from serverless_etl_bi_on_aws_spark.operators.scd import scd2_apply, scd2_init
+from serverless_etl_bi_on_aws_spark.streaming.launch import (
+    read_landing_zone,
+    start_foreach_batch,
+)
 
 
 def _swap_write(df: DataFrame, path: str) -> None:
@@ -150,25 +154,17 @@ def start_scd2_maintenance(
     :func:`apply_scd2_batch_generations` — ``dim_path`` becomes a
     generation-store root read via :func:`read_scd2_generation`, the
     rename-free object-store shape."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(source_dir)
-    )
 
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         if generations:
             apply_scd2_batch_generations(spark, batch_df, dim_path, keys, ts_col)
         else:
             apply_scd2_batch(spark, batch_df, dim_path, keys, ts_col)
 
-    writer = stream.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return start_foreach_batch(
+        read_landing_zone(spark, source_dir, schema),
+        apply_batch,
+        checkpoint_dir,
+        available_now,
+        processing_time,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()

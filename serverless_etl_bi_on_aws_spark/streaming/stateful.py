@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import StructType
 
+from serverless_etl_bi_on_aws_spark.streaming.launch import read_landing_zone
+
 
 def stream_user_running_totals(
     spark: SparkSession,
@@ -30,9 +32,7 @@ def stream_user_running_totals(
     """Streaming per-user lifetime counters: total events and summed value,
     carried across micro-batches (and across restarts, via the query
     checkpoint). Emits one row per user per batch in update mode."""
-    stream = getattr(
-        spark.readStream.schema(schema).option("pathGlobFilter", f"*.{fmt}"), fmt
-    )(source_dir)
+    stream = read_landing_zone(spark, source_dir, schema, fmt)
 
     def update(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState

@@ -31,6 +31,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import LongType, StructField, StructType
 
+from serverless_etl_bi_on_aws_spark.streaming.launch import (
+    read_landing_zone,
+    start_foreach_batch,
+)
+
 
 def start_takedown_stream(
     spark: SparkSession,
@@ -62,26 +67,22 @@ def start_takedown_stream(
 
     if schema is None:
         schema = StructType([StructField(id_col, LongType(), False)])
-    reader = spark.readStream.schema(schema).option("pathGlobFilter", f"*.{fmt}")
-    if max_files_per_trigger is not None:
-        # one request FILE per micro-batch = one snapshot commit per
-        # request — the cadence the retention knob (keep_n) is sized to
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = getattr(reader, fmt)(request_dir)
 
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        ids = batch_df.select(id_col).dropDuplicates()
-        if ids.isEmpty():
-            return
         forget_documents_versioned(
-            spark, family_root, ids, id_col=id_col, keep_n=keep_n
+            spark,
+            family_root,
+            batch_df.select(id_col).dropDuplicates(),
+            id_col=id_col,
+            keep_n=keep_n,
         )
 
-    writer = stream.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_dir
+    # max_files_per_trigger=1: one request FILE per micro-batch = one
+    # snapshot commit per request — the cadence keep_n is sized to
+    return start_foreach_batch(
+        read_landing_zone(spark, request_dir, schema, fmt, max_files_per_trigger),
+        apply_batch,
+        checkpoint_dir,
+        available_now,
+        processing_time,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()

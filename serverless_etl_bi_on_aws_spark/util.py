@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 
@@ -188,8 +189,8 @@ def commit_file(path: str, data: bytes) -> None:
 
 def write_marker(path: str, payload: dict | None = None) -> None:
     """Single swap point for every commit/applied marker in the engine
-    (index `_meta.json` and `_applied/<batch>` markers in
-    operators/dedup_index.py, the `_applied_epoch.json` high-water mark in
+    (index `_meta.json`, the `_applied/<batch>` markers of
+    :func:`append_once`, the `_applied_epoch.json` high-water mark in
     streaming/cells.py). Publishes through :func:`commit_file` — the
     single-object atomic-publish seam — so a reader never sees a torn
     marker and the object-store swap happens in exactly one place.
@@ -278,8 +279,8 @@ def writer_lease(root: str, owner: str = "writer", stale_after_s: float | None =
     fingerprint / IVF). Every probe is a read-only scan and needs no
     coordination, but two schedulers pointed at one index would race
     probe-then-append: each could admit the other's duplicates. This
-    context manager makes the mutating half (update_* appends, compact_*
-    rewrites) exclusive:
+    context manager makes the mutating half (batch appends, which take it
+    inside :func:`append_once`, and compact_* rewrites) exclusive:
 
         with writer_lease(index_path, owner="hourly-crawl"):
             ...appends/compaction...
@@ -396,3 +397,46 @@ def writer_lease_with_retry(
             return
 
     return _retrying()
+
+
+def append_once(
+    index_path: str,
+    batch_id: str,
+    owner: str,
+    prepare: Callable[[], DataFrame],
+    append: Callable[[DataFrame], None],
+) -> bool:
+    """Apply batch ``batch_id`` to the persisted index at ``index_path``
+    at most once — the one replay-safe append protocol of every index
+    (MinHash bands, the 64-bit hash family, IVF, BM25, Count-Min):
+
+    1. ``_applied/<batch_id>`` exists: return False, taking no lease.
+    2. Take :func:`writer_lease` (owner ``<owner>:<batch_id>``): a
+       concurrent writer fails with :class:`LeaseHeldError` instead of
+       interleaving its probe-then-append with ours.
+    3. Recheck the marker (applied while we waited).
+    4. ``rows = prepare()``, under the lease.
+    5. ``rows`` empty: mark ``{"empty": true}`` and return True, so no
+       zero-row write leaves a footer-less table dir that a later
+       ``spark.read.parquet`` cannot infer a schema from.
+    6. ``append(rows)``, then the marker LAST; return True.
+
+    A crash or a raising ``append`` leaves no marker, so the replay
+    re-applies the whole batch: ``append`` must tolerate re-running after
+    a partial run (overwrite its own batch dir, or append duplicates that
+    readers ignore and compaction purges). Markers go through
+    :func:`write_marker`/:func:`marker_exists`, so an installed
+    object-store backend covers them."""
+    marker = os.path.join(index_path, "_applied", batch_id)
+    if marker_exists(marker):
+        return False
+    with writer_lease(index_path, owner=f"{owner}:{batch_id}"):
+        if marker_exists(marker):
+            return False
+        rows = prepare()
+        if rows.isEmpty():
+            write_marker(marker, {"batch_id": batch_id, "empty": True})
+            return True
+        append(rows)
+        write_marker(marker, {"batch_id": batch_id})
+    return True

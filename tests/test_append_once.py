@@ -1,0 +1,77 @@
+"""util.append_once — the replay-safe batch-append protocol every
+persisted index shares (marker -> lease -> recheck -> prepare -> empty
+guard -> append -> marker last), tested directly with stub callbacks."""
+
+from __future__ import annotations
+
+import os
+
+import pytest
+
+from serverless_etl_bi_on_aws_spark.util import (
+    LeaseHeldError,
+    append_once,
+    lease_lock_path,
+    write_marker,
+    writer_lease,
+)
+
+
+def _marker(idx: str, batch: str) -> str:
+    return os.path.join(idx, "_applied", batch)
+
+
+def test_applied_marker_returns_false_without_taking_the_lease(tmp_path):
+    idx = str(tmp_path / "idx")
+    write_marker(_marker(idx, "b0"), {"batch_id": "b0"})
+    calls = []
+    # a held lease would raise if append_once tried to take it
+    with writer_lease(idx, owner="other-writer"):
+        assert append_once(idx, "b0", "t", lambda: calls.append("prepare"),
+                           lambda rows: calls.append("append")) is False
+    assert calls == []
+
+
+def test_held_lease_fails_loudly_and_marks_nothing(spark, tmp_path):
+    idx = str(tmp_path / "idx")
+    rows = spark.range(3)
+    with writer_lease(idx, owner="other-writer"):
+        with pytest.raises(LeaseHeldError):
+            append_once(idx, "b0", "t", lambda: rows, lambda r: None)
+    assert not os.path.exists(_marker(idx, "b0"))
+
+
+def test_raising_append_leaves_no_marker_and_releases_the_lease(spark, tmp_path):
+    idx = str(tmp_path / "idx")
+
+    def boom(rows):
+        raise RuntimeError("crash mid-append")
+
+    with pytest.raises(RuntimeError, match="mid-append"):
+        append_once(idx, "b0", "t", lambda: spark.range(3), boom)
+    assert not os.path.exists(_marker(idx, "b0"))
+    assert not os.path.exists(lease_lock_path(idx))
+    # the replay re-applies the whole batch, then marks it
+    seen = []
+    assert append_once(idx, "b0", "t", lambda: spark.range(3),
+                       lambda r: seen.append(r.count())) is True
+    assert seen == [3] and os.path.exists(_marker(idx, "b0"))
+    assert append_once(idx, "b0", "t", lambda: spark.range(3),
+                       lambda r: seen.append(r.count())) is False
+    assert seen == [3]
+
+
+def test_empty_or_null_only_prepare_is_vacuously_applied(spark, tmp_path):
+    from serverless_etl_bi_on_aws_spark.util import read_marker
+
+    idx = str(tmp_path / "idx")
+    null_only = spark.createDataFrame([(1, None), (2, None)], "id bigint, h bigint")
+    cases = {
+        "empty": lambda: spark.range(0),
+        "nulls": lambda: null_only.filter("h IS NOT NULL"),
+    }
+    for batch, prepare in cases.items():
+        assert append_once(idx, batch, "t", prepare,
+                           lambda r: pytest.fail("appended an empty batch")) is True
+        assert read_marker(_marker(idx, batch)) == {"batch_id": batch, "empty": True}
+    assert not os.path.exists(lease_lock_path(idx))

@@ -79,3 +79,45 @@ def test_ntz_fixture_normalized_to_timestamp(spark, tmp_path):
     assert got == want
     # event-time ops that reject NTZ must analyze and run
     assert df.groupBy(F.window("ts", "6 hours")).count().count() == 2
+
+
+def test_concurrent_cold_loads_share_one_frame_and_restore_conf(spark, tmp_path):
+    """Plans build on concurrent driver threads (test_plans runs 12): cold
+    loads of a TIMESTAMP(NANOS) table must not interleave the
+    session-global nanosAsLong set/unset (a read with the conf already
+    unset throws; an unset lost to a racing set leaks it), and every
+    thread must get the one cached DataFrame."""
+    import datetime
+    import sys
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from serverless_etl_bi_on_aws_spark import catalog
+
+    sf = str(tmp_path)
+    ts = [datetime.datetime(2001, 3, 1, 12, 0, 0, 123456)]
+    pq.write_table(
+        pa.table({"event_id": pa.array([1], pa.int64()),
+                  "ts": pa.array(ts, pa.timestamp("ns"))}),
+        f"{sf}/events.parquet",
+    )
+    catalog._TABLE_CACHE.clear()
+    start = threading.Barrier(8, timeout=60)
+
+    def load(_):
+        start.wait()
+        return catalog.load_table(spark, sf, "events")
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            frames = list(pool.map(load, range(8), timeout=120))
+    finally:
+        sys.setswitchinterval(interval)
+    assert all(df is frames[0] for df in frames)
+    assert spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None) is None
+    assert frames[0].schema["ts"].dataType.typeName() == "timestamp"

@@ -321,6 +321,31 @@ def test_jpeg_vectorized_entropy_encode_golden_bytes():
         assert hashlib.md5(enc).hexdigest() == md5, f"k={k}: encode bytes moved"
 
 
+def test_jpeg_encoder_rejects_out_of_range_quant():
+    """A caller quant table must be 8x8 with entries in 1..255: a 0 would
+    divide by zero, and 256 would wrap to 0 in the 8-bit DQT segment. A
+    valid table passed explicitly encodes the same bytes as the default."""
+    import numpy as np
+    import pytest
+
+    from serverless_etl_bi_on_aws_spark.functions.jpeg import (
+        STD_LUMA_QUANT,
+        encode_jpeg_gray,
+    )
+
+    px = bytes(range(256)) * 4  # 32x32
+    for bad in (0, 256):
+        q = np.array(STD_LUMA_QUANT)
+        q[3, 4] = bad
+        with pytest.raises(ValueError, match="1..255"):
+            encode_jpeg_gray(px, 32, 32, quant=q)
+    with pytest.raises(ValueError, match="8x8"):
+        encode_jpeg_gray(px, 32, 32, quant=np.ones((8, 7), dtype=np.int32))
+    assert encode_jpeg_gray(px, 32, 32, quant=STD_LUMA_QUANT.tolist()) == (
+        encode_jpeg_gray(px, 32, 32)
+    )
+
+
 def test_jpeg_decoder_rejects_trailing_entropy_and_bad_padding():
     """Round-18 ADVICE hardening: after the declared block grid decodes,
     only sub-byte 1-padding may remain — a stream with >=8 trailing

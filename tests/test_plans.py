@@ -37,7 +37,7 @@ def test_no_accidental_cartesian(spark):
     # Round 19: plans build CONCURRENTLY (guide §2.6 — overlap independent
     # jobs). Building all 133 queries runs their eager localCheckpoint /
     # count() fronts, which serialized was the suite's single slowest test
-    # (173 s); 6 driver threads overlap those independent jobs and the
+    # (173 s); 12 driver threads overlap those independent jobs and the
     # assertion set is unchanged.
     from concurrent.futures import ThreadPoolExecutor
 

@@ -213,3 +213,27 @@ def test_score_bounds_are_corpus_size_independent(spark):
     # the rare-term score saturates at the documented idf cap: capped
     # idf_k=1e7 bounds every term contribution regardless of N
     assert max(scores) <= 10_000_000 * 2200000 * 255 // 1000000
+
+
+def test_update_serialized_by_lease_and_empty_batch_marked_applied(spark, tmp_path):
+    """Every persisted-index append runs through util.append_once: a batch
+    arriving while another writer holds the index lease fails loudly (and
+    is not marked), and an empty batch writes no batch dir but is marked
+    applied, so its replay is a no-op."""
+    from serverless_etl_bi_on_aws_spark.operators.search import update_bm25_index
+    from serverless_etl_bi_on_aws_spark.util import LeaseHeldError, writer_lease
+
+    idx = str(tmp_path / "idx")
+    before = build_bm25_index(_corpus(spark).filter("doc_id < 3"), idx)
+    batch = _corpus(spark).filter("doc_id = 3")
+    with writer_lease(idx, owner="concurrent-writer"):
+        with pytest.raises(LeaseHeldError):
+            update_bm25_index(batch, idx, "b1")
+    assert not os.path.exists(os.path.join(idx, "_applied", "b1"))
+    assert update_bm25_index(batch, idx, "b1")["n_docs"] == 4
+
+    empty = spark.createDataFrame([], "doc_id bigint, text string")
+    assert update_bm25_index(empty, idx, "b2")["n_docs"] == 4
+    assert not os.path.exists(os.path.join(idx, "postings", "batch=b2"))
+    assert os.path.exists(os.path.join(idx, "_applied", "b2"))
+    assert before["id_col"] == read_bm25_meta(idx)["id_col"]

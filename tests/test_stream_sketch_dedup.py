@@ -138,7 +138,7 @@ def test_cms_stream_equals_batch_twin_and_replay(spark, tmp_path):
     true = {r.key: r.cnt for r in
             union.groupBy("key").agg(F.count("*").alias("cnt")).collect()}
     assert all(est[k] >= true[k] for k in true)
-    # replay a batch id directly: overwrite, not double-count
+    # replay an applied batch id directly: a marker no-op, not a double-count
     batches = sorted(
         (d for d in os.listdir(sk) if d.startswith("batch=")),
         key=lambda d: int(d.rsplit("-", 1)[1]),
@@ -160,3 +160,25 @@ def test_cms_batch_shape_mismatch_fails_loudly(spark, tmp_path):
     write_cms_batch(df, "key", sk, "b0", width=128, depth=4)
     with pytest.raises(ValueError, match="128x4"):
         write_cms_batch(df, "key", sk, "b1", width=256, depth=4)
+
+
+def test_cms_batch_serialized_by_writer_lease(spark, tmp_path):
+    """write_cms_batch runs through util.append_once: under a held lease
+    it fails loudly and commits nothing; once applied, a replay of the
+    same batch id is a marker no-op (sketch addition would double-count),
+    and an empty batch is marked applied without writing a batch dir."""
+    from serverless_etl_bi_on_aws_spark.util import LeaseHeldError, writer_lease
+
+    sk = str(tmp_path / "sk")
+    df = spark.createDataFrame([(1, "a"), (2, "a"), (3, "b")], "doc_id bigint, key string")
+    with writer_lease(sk, owner="concurrent-writer"):
+        with pytest.raises(LeaseHeldError):
+            write_cms_batch(df, "key", sk, "b0", width=64, depth=2)
+    assert not os.path.exists(os.path.join(sk, "_applied", "b0"))
+    write_cms_batch(df, "key", sk, "b0", width=64, depth=2)
+    write_cms_batch(df, "key", sk, "b0", width=64, depth=2)
+    write_cms_batch(df.limit(0), "key", sk, "b1", width=64, depth=2)
+    assert not os.path.exists(os.path.join(sk, "batch=b1"))
+    assert sorted(map(tuple, read_cms(spark, sk).collect())) == sorted(
+        map(tuple, cms_build(df, "key", width=64, depth=2).collect())
+    )
