@@ -34,12 +34,12 @@ plus diagnostic tiers (round-1 verdict asks #1/#4):
                    state, not a raw re-scan (README.md:100-107) — while
                    scaling.q1 grades the raw-scan engine comparison,
                    in contract since the round-13 cell-order fix
-                   (tools/ab_cell_order.py).
+                   (git show 663bcd2:tools/ab_cell_order.py).
                    The graded contract rows for the q3 WORKLOAD CLASS
                    (BI join+aggregate view) are bucketed_q3 (one-shot
                    co-located layout) and denorm_q3 (recurring,
                    incrementally maintained) — settled round 14
-                   (tools/ab_q3_settle.py): q3's irreducible read-time-
+                   (git show 663bcd2:tools/ab_q3_settle.py): q3's irreducible read-time-
                    join PREFIX (scan + orderkey exchange + hash
                    build/probe, before any attackable stage) measures
                    1.79x DuckDB's whole-query slope, leaving 0.021 s/sf
@@ -54,14 +54,14 @@ plus diagnostic tiers (round-1 verdict asks #1/#4):
                    MEASURED zero-change band of ~[2.5, 4.7]: two
                    back-to-back runs of this exact protocol in one r16
                    session graded 4.26 then 3.20 with zero plan change
-                   (tools/ab_r16_drift.py), and the same session's full
+                   (git show 663bcd2:tools/ab_r16_drift.py), and the same session's full
                    bench pass read 2.69 [2.49, 3.55] — swings that
                    contain both the r14 (3.66) and r15 (4.15) records,
                    so round-to-round moves of this row inside that band
                    are VM phase, not the engine.
                    The graded contract row for the q44 WORKLOAD CLASS
                    (vector similarity scan) is ivf_q44 — settled round
-                   15 (tools/ab_q44_settle.py): the raw row's graded
+                   15 (git show 663bcd2:tools/ab_q44_settle.py): the raw row's graded
                    ratio divides a ~11-14 ms/sf Spark slope by a
                    ~8 ms/sf DuckDB slope, both within single-cell VM
                    stall magnitude, and two same-session zero-change
@@ -83,7 +83,7 @@ plus diagnostic tiers (round-1 verdict asks #1/#4):
                    exchange AND dim probe paid once at ingest; interleaved
                    median-of-7 across sf1/sf10. GRADED CONTRACT ROW for
                    the q3 workload class (one-shot layout) since round
-                   14 — see the "scaling" note and tools/ab_q3_settle.py.
+                   14 — see the "scaling" note and git show 663bcd2:tools/ab_q3_settle.py.
     "denorm_q3"  — q3 over the pre-join denormalized fact
                    (operators/denorm.py, the reference's README.md:113
                    warehouse layout): scan + 42-group agg per query.
@@ -96,7 +96,7 @@ plus diagnostic tiers (round-1 verdict asks #1/#4):
                    (partition-pruned probe): GRADED CONTRACT ROW for
                    the q44 workload class since round 15, as denorm_q3
                    is for q3 and rollup_q1 for q1 (see the "scaling"
-                   note and tools/ab_q44_settle.py).
+                   note and git show 663bcd2:tools/ab_q44_settle.py).
 
 Timing protocol (mirrors BASELINE.md's warm-cache DuckDB measurement): each
 query executes once untimed (JIT, code cache, file listing), then the best
@@ -223,7 +223,7 @@ SCALING_EXTRA = {"q44": "q44_topk_cosine_arrow", "dedup": "q64_span_dedup_agg"}
 #: ~1.1 GB in 100 files. The round-3 single 8 MB override was sized for the
 #: sf1 tier's ABSOLUTE q1 (0.39s @ 16MB -> 0.27s @ 8MB then); the graded
 #: quantity since round 7 is the sf1 -> sf10 SLOPE, and the round-12
-#: split ladder (tools/ab_split_ladder.py, 7 paired reps per cell) shows
+#: split ladder (git show 663bcd2:tools/ab_split_ladder.py, 7 paired reps per cell) shows
 #: 8 MB actively inflates it — the sf10 scan becomes ~140 tasks (4+ waves
 #: on 32 cores; wave quantization and, on the Arrow path, per-task IPC
 #: ride the MARGINAL cost): q1 slope 0.060@8MB vs 0.057@32MB, q3
@@ -233,7 +233,7 @@ SCALING_EXTRA = {"q44": "q44_topk_cosine_arrow", "dedup": "q64_span_dedup_agg"}
 #: On a real cluster the 128 MB session default is correct — this is
 #: deployment sizing for the fixture.
 BIG_TIER_SPLIT_BYTES = 8 << 20  # historical (r3-r11); kept for the
-# round-11 reproduction tool (tools/ab_tier_order.py) and the ivf note
+# round-11 reproduction tool (git show 663bcd2:tools/ab_tier_order.py) and the ivf note
 _TIER_SPLIT_BYTES = {
     "sf1": 16 << 20,
     "scaling": 32 << 20,
@@ -466,9 +466,9 @@ def main() -> None:
     page-cache footprint per tier. Round 11's graded scaling tier ran
     3.66x DuckDB on q1 (0.170 s/sf) in its in-process slot after ~30
     queries of headline/LLM/sf1 history, while the identical tier
-    measured in isolation ran ~0.066 s/sf (tools/ab_q1_floor.py and
+    measured in isolation ran ~0.066 s/sf (git show 663bcd2:tools/ab_q1_floor.py and
     bench.py's own r11 note agree) — tier-order process state, not the
-    plan, was the difference (tools/ab_tier_order.py reproduces it
+    plan, was the difference (git show 663bcd2:tools/ab_tier_order.py reproduces it
     A/B). Subprocess isolation makes tier order structurally incapable
     of contaminating a measurement; the per-tier JVM startup (~10 s x 9
     tiers) is the price and is not timed.
@@ -786,7 +786,7 @@ def _scaling_tier(spark, sf01: str, sf1_dir: str, sf10_dir: str, reps: int = 13)
     structure, though, made every cell's timing include the OTHER
     queries' and the OTHER engine's cache/heap churn — measured on q1:
     slope 0.0658 s/sf isolated (13 paired reps — identical to
-    tools/ab_q1_floor.py's single-purpose ladder, 0.0653) vs
+    git show 663bcd2:tools/ab_q1_floor.py's single-purpose ladder, 0.0653) vs
     0.079-0.081 with q3/q44/DuckDB cells interleaved, a +21% systematic
     bias; DuckDB's own q1 slope likewise drops 0.0374 -> 0.0342 when
     isolated. Block separation measures each engine's own marginal
@@ -832,9 +832,10 @@ def _scaling_tier(spark, sf01: str, sf1_dir: str, sf10_dir: str, reps: int = 13)
     # FIRST (dict order) gave sf1 a cleaner slot than sf10 (post-gc
     # state + accumulated allocation debt land asymmetrically on the
     # paired cells) and inflated q1's paired slope ~30%: measured
-    # interleaved in one session (tools/ab_cell_order.py), 0.1-first
+    # interleaved in one session (git show 663bcd2:tools/ab_cell_order.py), 0.1-first
     # 0.081/0.077 s/sf vs paired-cells-first 0.061/0.058 — while the
-    # isolated 2-point protocol (ab_q1_floor, ab_split_ladder @32MB)
+    # isolated 2-point protocol (git show 663bcd2:tools/ab_q1_floor.py,
+    # git show 663bcd2:tools/ab_split_ladder.py @32MB)
     # has always measured 0.057-0.066. So: gc, then the PAIRED cells
     # (sf1 -> sf10, adjacent, sharing any VM phase), then sf0.1 last as
     # the absolute-time diagnostic it is. gc before EVERY cell measured
@@ -1026,7 +1027,7 @@ def _denorm_q3(spark, dirs: dict[str, str]) -> dict:
     reference's own answer to join cost (README.md:29/113: materialize the
     join away), the middle rung of the q3 layout ladder between q46's
     buckets (exchange paid at ingest, probe still per-query) and q47's
-    rollup (everything at ingest). tools/ab_q3_floor.py measured the
+    rollup (everything at ingest). git show 663bcd2:tools/ab_q3_floor.py measured the
     2M-entry broadcast probe + string agg as the LARGEST slope component
     (+0.29 s/sf of raw q3's 0.556) — this layout pays it once. Build cost
     reported (digest-cached); query-time slope scored like the other
@@ -1075,7 +1076,7 @@ def _ivf_q44(spark, dirs: dict[str, str]) -> dict:
     """The vector scan served from the PERSISTED IVF INDEX
     (operators/similarity.build_ivf_index / ivf_probe_topk) — the
     deployment answer for the q44 workload class, exactly as denorm_q3
-    is for q3: tools/ab_q44_ship.py measured the raw scan's residual
+    is for q3: git show 663bcd2:tools/ab_q44_ship.py measured the raw scan's residual
     slope as per-task Arrow IPC framing (batch size and float width
     rejected as levers), so the engine's answer is not to ship the
     whole corpus per query — the one-time clustering partitions it and

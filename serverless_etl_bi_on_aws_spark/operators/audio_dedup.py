@@ -17,9 +17,10 @@ Pairing reuses operators/dedup.hamming_pairs_blocked verbatim —
 pigeonhole block split, collision-only self-join, bit_count verify;
 nothing is all-pairs, and only (id, 64-bit hash) ever reaches an
 exchange. The incremental half (build/probe/append/compact against a
-persisted fingerprint index) lives below as thin wrappers over the
-modality-agnostic operators/hash_index.py core — the same one the image
-dHash index delegates to.
+persisted fingerprint index) is the modality-agnostic
+operators/hash_index.py core with the ``afp`` hasher
+(:func:`with_audio_fingerprint`) — the same core the image dHash index
+uses.
 """
 
 from __future__ import annotations
@@ -111,85 +112,3 @@ def audio_neardup_pairs(
     return hamming_pairs_blocked(
         hashed.select(id_col, "afp"), id_col, "afp", radius, n_blocks
     )
-
-
-# ---------------------------------------------------------------------------
-# Incremental audio dedup against a PERSISTED fingerprint index — thin
-# wrappers over operators/hash_index.py (the same core the image dHash
-# index uses); this module contributes only the decode+fingerprint stage.
-# ---------------------------------------------------------------------------
-
-from pyspark.sql import SparkSession, functions as F
-
-from serverless_etl_bi_on_aws_spark.operators.hash_index import (
-    build_hash_index,
-    compact_hash_index,
-    dropped_ids_against_index,
-    init_hash_index,
-    read_hash_meta,
-    update_hash_index,
-)
-
-
-def _hashed(df: DataFrame, id_col: str, media_col: str) -> DataFrame:
-    return (
-        with_audio_fingerprint(df, media_col=media_col)
-        .filter(F.col("afp").isNotNull())
-        .select(id_col, "afp")
-    )
-
-
-def init_afp_index(index_path: str, id_col: str = "doc_id", n_blocks: int = 8) -> None:
-    """Empty audio-fingerprint index (meta only) — the ingest-loop start."""
-    init_hash_index(index_path, id_col=id_col, hash_col="afp", n_blocks=n_blocks)
-
-
-def build_afp_index(
-    df: DataFrame,
-    index_path: str,
-    id_col: str = "doc_id",
-    media_col: str = "media",
-    n_blocks: int = 8,
-) -> None:
-    """One-time build: decode + fingerprint the starting corpus once."""
-    build_hash_index(
-        _hashed(df, id_col, media_col),
-        index_path,
-        id_col=id_col,
-        hash_col="afp",
-        n_blocks=n_blocks,
-    )
-
-
-def dedup_audio_against_index(
-    spark: SparkSession,
-    new_df: DataFrame,
-    index_path: str,
-    radius: int = 6,
-    media_col: str = "media",
-) -> DataFrame:
-    """Survivors of ``new_df`` under the online rule (within ``radius`` of
-    any indexed clip or a smaller-id clip of the same batch -> dropped;
-    NULL-fingerprint media always survive). Decode runs once, on the new
-    batch; composes with :func:`update_afp_index`."""
-    id_col = read_hash_meta(index_path)["id_col"]
-    new_hashed = _hashed(new_df, id_col, media_col).localCheckpoint(eager=True)
-    dropped = dropped_ids_against_index(spark, new_hashed, index_path, radius)
-    return new_df.join(dropped.select(F.col("_id").alias(id_col)), id_col, "left_anti")
-
-
-def update_afp_index(
-    new_df: DataFrame,
-    index_path: str,
-    batch_id: str,
-    media_col: str = "media",
-) -> bool:
-    """Append one batch's fingerprints (idempotent per batch id)."""
-    id_col = read_hash_meta(index_path)["id_col"]
-    return update_hash_index(_hashed(new_df, id_col, media_col), index_path, batch_id)
-
-
-def compact_afp_index(
-    spark: SparkSession, index_path: str, target_file_bytes: int = 128 << 20
-) -> dict[str, int]:
-    return compact_hash_index(spark, index_path, target_file_bytes)

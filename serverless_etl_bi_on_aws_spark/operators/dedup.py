@@ -441,7 +441,11 @@ def hamming_pairs_blocked(
     verify ``bit_count(xor) <= radius``. Returns (id_1, id_2, hamming)
     with id_1 < id_2. Shared by text SimHash (:func:`simhash_pairs_blocked`)
     and image perceptual hashes (operators/image_dedup.py)."""
-    assert radius <= n_blocks - 1, "pigeonhole guarantee needs radius <= blocks-1"
+    if radius > n_blocks - 1:
+        raise ValueError(
+            f"radius {radius} > n_blocks - 1 = {n_blocks - 1}: the pigeonhole "
+            "guarantee needs radius <= blocks-1"
+        )
     blocks = hashes.select(
         F.col(id_col).alias("_id"),
         F.col(hash_col).alias("_h"),
@@ -480,106 +484,6 @@ def simhash_pairs_blocked(
     it). Returns (id_1, id_2, hamming) with id_1 < id_2."""
     sh = simhash64(docs, id_col, text_col, n)
     return hamming_pairs_blocked(sh, id_col, "simhash", radius, n_blocks)
-
-
-# ---------------------------------------------------------------------------
-# Persisted SimHash index (round 15) — the TEXT member of the 64-bit
-# hamming index family, delegating to the modality-agnostic
-# operators/hash_index.py core exactly as image dHash and the audio
-# envelope do (build/probe/append, pigeonhole blocking, crash-ordering,
-# idempotent markers — all shared; compaction is the core's
-# compact_hash_index). This closes the
-# incremental-dedup matrix: text near-dup now has BOTH index shapes
-# (MinHash-LSH in dedup_index.py for Jaccard semantics, SimHash here for
-# hamming semantics at 8 bytes/doc — the cheaper state when the corpus
-# is too large to hold band tables).
-# ---------------------------------------------------------------------------
-
-
-def _simhashed(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
-    # docs shorter than n tokens produce NO shingles and therefore no
-    # hash row — they survive by definition and are never indexed (the
-    # NULL-dhash rule, text-shaped)
-    return simhash64(df, id_col, text_col, n)
-
-
-def init_simhash_index(
-    index_path: str, id_col: str = "doc_id", n_blocks: int = 8
-) -> None:
-    """Create an EMPTY text-SimHash index (meta only) — the streaming
-    ingest loop starts here."""
-    from serverless_etl_bi_on_aws_spark.operators.hash_index import init_hash_index
-
-    init_hash_index(index_path, id_col=id_col, hash_col="simhash", n_blocks=n_blocks)
-
-
-def build_simhash_index(
-    df: DataFrame,
-    index_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    n_blocks: int = 8,
-) -> None:
-    """One-time build over the starting corpus: hash once, persist
-    (id, simhash) + the block table. Appends belong to
-    :func:`update_simhash_index`."""
-    from serverless_etl_bi_on_aws_spark.operators.hash_index import build_hash_index
-
-    build_hash_index(
-        _simhashed(df, id_col, text_col, n),
-        index_path,
-        id_col=id_col,
-        hash_col="simhash",
-        n_blocks=n_blocks,
-    )
-
-
-def dedup_text_against_simhash_index(
-    spark,
-    new_df: DataFrame,
-    index_path: str,
-    radius: int = 7,
-    text_col: str = "text",
-    n: int = 3,
-) -> DataFrame:
-    """Survivors of ``new_df`` under the online rule: drop a new doc iff
-    its SimHash is within hamming ``radius`` of ANY indexed doc or a
-    smaller-id doc of the same batch. Sub-``n``-token docs always
-    survive. The corpus side is two parquet scans (block-partitioned
-    candidate join + candidate-only hash fetch); text bodies never cross
-    an exchange."""
-    from serverless_etl_bi_on_aws_spark.operators.hash_index import (
-        dropped_ids_against_index,
-        read_hash_meta,
-    )
-
-    id_col = read_hash_meta(index_path)["id_col"]
-    hashed = _simhashed(new_df, id_col, text_col, n).localCheckpoint(eager=True)
-    dropped = dropped_ids_against_index(spark, hashed, index_path, radius)
-    return new_df.join(
-        dropped.select(F.col("_id").alias(id_col)), id_col, "left_anti"
-    )
-
-
-def update_simhash_index(
-    df: DataFrame,
-    index_path: str,
-    batch_id: str,
-    text_col: str = "text",
-    n: int = 3,
-) -> bool:
-    """Append a batch's hashes — idempotent per ``batch_id``, serialized
-    by the writer lease (the hash_index core's contract)."""
-    from serverless_etl_bi_on_aws_spark.operators.hash_index import (
-        read_hash_meta,
-        update_hash_index,
-    )
-
-    id_col = read_hash_meta(index_path)["id_col"]
-    return update_hash_index(
-        _simhashed(df, id_col, text_col, n), index_path, batch_id
-    )
 
 
 def minhash_similarity_join(
@@ -793,91 +697,4 @@ def dedup_by_canonical_url(
         withc.withColumn("_min_id", F.min(id_col).over(w))
         .filter(F.col(canon_col).isNull() | (F.col(id_col) == F.col("_min_id")))
         .drop("_min_id")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Incremental URL dedup against a PERSISTED index (round 14) — the fifth
-# member of the incremental family (text MinHash / image dHash / audio
-# envelope / embedding IVF), as thin wrappers over the modality-agnostic
-# operators/hash_index.py core. The fingerprint is xxhash64 of the
-# CANONICAL url (functions/url.canonicalize_url) at radius 0: url
-# identity is exact, so the probe is a single-key equi-join (n_blocks=1
-# — one 64-bit block, no pigeonhole fan-out) and the only caveat is the
-# negligible 2^-64 hash-collision odds every radius-0 member of the
-# family shares. Rows whose url fails to parse hash to NULL: they always
-# survive and are never indexed (the image family's undecodable-media
-# rule). Crash ordering, idempotent per-batch markers, and compaction
-# come from the shared core unchanged.
-# ---------------------------------------------------------------------------
-
-
-def _url_hashed(df: DataFrame, id_col: str, url_col: str) -> DataFrame:
-    from serverless_etl_bi_on_aws_spark.functions.url import canonicalize_url
-
-    return (
-        df.withColumn("_canon", canonicalize_url(url_col))
-        .filter(F.col("_canon").isNotNull())
-        .select(id_col, F.xxhash64("_canon").alias("url_hash"))
-    )
-
-
-def build_url_index(
-    df: DataFrame,
-    index_path: str,
-    id_col: str = "doc_id",
-    url_col: str = "url",
-) -> None:
-    """One-time build over the starting corpus; refuses to clobber an
-    existing index (appends belong to :func:`update_url_index`)."""
-    from serverless_etl_bi_on_aws_spark.operators.hash_index import build_hash_index
-
-    build_hash_index(
-        _url_hashed(df, id_col, url_col),
-        index_path,
-        id_col=id_col,
-        hash_col="url_hash",
-        n_blocks=1,
-    )
-
-
-def dedup_urls_against_index(
-    spark,
-    new_df: DataFrame,
-    index_path: str,
-    url_col: str = "url",
-) -> DataFrame:
-    """Survivors of ``new_df`` under the online rule: drop a new row iff
-    its CANONICAL url equals any indexed url's or a smaller-id batch
-    mate's. Unparseable urls always survive. Composes with
-    :func:`update_url_index` exactly like the text/image loops."""
-    from serverless_etl_bi_on_aws_spark.operators.hash_index import (
-        dropped_ids_against_index,
-        read_hash_meta,
-    )
-
-    id_col = read_hash_meta(index_path)["id_col"]
-    hashed = _url_hashed(new_df, id_col, url_col).localCheckpoint(eager=True)
-    dropped = dropped_ids_against_index(spark, hashed, index_path, radius=0)
-    return new_df.join(
-        dropped.select(F.col("_id").alias(id_col)), id_col, "left_anti"
-    )
-
-
-def update_url_index(
-    new_df: DataFrame,
-    index_path: str,
-    batch_id: str,
-    url_col: str = "url",
-) -> bool:
-    """Append one batch's canonical-url hashes — ALL parseable urls,
-    duplicates included (chain equivalence). Idempotent per batch id."""
-    from serverless_etl_bi_on_aws_spark.operators.hash_index import (
-        read_hash_meta,
-        update_hash_index,
-    )
-
-    id_col = read_hash_meta(index_path)["id_col"]
-    return update_hash_index(
-        _url_hashed(new_df, id_col, url_col), index_path, batch_id
     )

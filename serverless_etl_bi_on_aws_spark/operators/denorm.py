@@ -9,11 +9,11 @@ insert the staged batch). SURVEY.md §4 maps that to a materialized view,
 the middle rung of the engine's q3-shaped layout ladder:
 
     raw q3        every query pays scan + orderkey exchange + probe + agg
-                  (slope decomposition in tools/ab_q3_floor.py: the
+                  (slope decomposition in git show 663bcd2:tools/ab_q3_floor.py: the
                   exchange is +0.19 s/sf, the 2M-entry broadcast probe +
                   string agg +0.29 s/sf — the probe dominates and resists
                   per-query rewrites: dictionary-encoding the category
-                  was measured at only ~8% in tools/ab_q3_aggkeys.py)
+                  was measured at only ~8% in git show 663bcd2:tools/ab_q3_aggkeys.py)
     q46 buckets   exchange paid once at ingest; probe + agg still per query
     THIS          join AND probe paid once at ingest: the fact is stored
                   as (o_orderkey, category, order_year, _rev) partitioned
@@ -85,17 +85,20 @@ def denorm_rows(
     )
 
 
-def _write_partitioned(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+def _write_partitioned(df: DataFrame, path: str, dynamic: bool = False) -> None:
     """Write the denorm fact partitioned by ``order_year``, RANGE-split
     on (order_year, o_orderkey): each year's data spreads across
     ~defaultParallelism files instead of one-file-per-year (which was
     measured to cap the scan at one task per row group and tripled the
     bench `denorm_q3` slope), and within-file orderkey clustering gives
-    the upsert's key probe footer-stats skipping."""
+    the upsert's key probe footer-stats skipping. ``dynamic`` overwrites
+    only the years ``df`` holds — the per-write ``partitionOverwriteMode``
+    option, so the session conf is never touched."""
     n = df.sparkSession.sparkContext.defaultParallelism
     (
         df.repartitionByRange(n, F.col("order_year"), F.col("o_orderkey"))
-        .write.mode(mode)
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic" if dynamic else "static")
         .partitionBy("order_year")
         .parquet(path)
     )
@@ -189,12 +192,7 @@ def upsert_sales_denorm(
         .localCheckpoint(eager=True)
     )
     present = {int(r[0]) for r in merged.select("order_year").distinct().collect()}
-    prior = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        _write_partitioned(merged, path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prior)
+    _write_partitioned(merged, path, dynamic=True)
     # a touched year whose every row belonged to replaced orders emits no
     # merged rows, so dynamic overwrite never visits it — drop the stale dir
     for y in years:

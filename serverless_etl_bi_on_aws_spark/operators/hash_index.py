@@ -1,47 +1,134 @@
 """Persisted 64-bit hash index — the modality-agnostic core of the
 incremental near-dup family.
 
-Three operators in this repo reduce a payload to one 64-bit fingerprint
-whose hamming distance means "near-duplicate": text SimHash
-(operators/dedup.simhash64), image dHash (operators/image_dedup), audio
-energy-envelope (operators/audio_dedup). The persisted-index half —
-build / probe-new-batch / append / compact, with pigeonhole blocking,
-crash-ordering, idempotent markers — is IDENTICAL for all of them, so it
-lives here once, operating on plain ``(id, hash)`` frames; the modality
-modules contribute only their hasher and thin wrappers.
+Four hashers reduce a payload to one 64-bit fingerprint whose hamming
+distance means "near-duplicate" (or, at radius 0, identity): text
+SimHash (operators/dedup.simhash64), the canonical-url xxhash64
+(functions/url.canonicalize_url), image dHash (operators/image_dedup)
+and the audio energy envelope (operators/audio_dedup). The
+persisted-index half — build / probe-new-batch / append / compact, with
+pigeonhole blocking, crash-ordering, idempotent markers — is IDENTICAL
+for all of them, so it lives here once. The index records which hasher
+built it, so every probe and append hashes raw frames exactly as the
+build did; nothing is re-passed at a call site.
 
 Layout (the operators/dedup_index.py shape, hash-sized):
 
     <index>/hashes/            (id, <hash_col>)         16 bytes/row
     <index>/blocks/block=<b>/  (key, id)                n_blocks rows/doc
-    <index>/_meta.json         n_blocks, id_col, hash_col
+    <index>/_meta.json         {"n_blocks", "id_col", "hash_col",
+                                "hasher": {"kind", "source_col", params}}
     <index>/_applied/<batch>   idempotence markers (util.append_once)
+
+``hasher`` is one of :data:`HASHERS` — ``{"kind": "simhash",
+"source_col": "text", "n": 3}``, ``{"kind": "url", "source_col": "url"}``,
+``{"kind": "dhash", "source_col": "media"}``, ``{"kind": "afp",
+"source_col": "media"}``. A meta WITHOUT ``hasher`` is a pre-hashed
+index: its frames already carry ``(id_col, hash_col)`` and are projected
+onto them (the takedown and object-store paths use this contract).
 
 Probe shape: candidates come from the (block, key) equi-join against
 the block-partitioned index. Every new row emits all ``n_blocks``
 sub-keys, so the join touches every block partition — the real (and
 sufficient) guarantee is that the scan reads only the 24-byte
 (block, key, id) triples, never hashes or payloads, and only candidate
-PAIRS fetch full hashes for the ``bit_count(xor)`` verify.
+PAIRS fetch full hashes for the ``bit_count(xor)`` verify. The hasher
+runs once, on the new batch; indexed payloads are never re-hashed.
 Online rule: a new row is dropped iff within ``radius`` of ANY indexed
-row or a smaller-id row of the same batch. Appends write hashes before
-blocks (an unreplayed crash leaves an inert hash, never block rows whose
-candidates silently vanish) and run through ``util.append_once``.
+row or a smaller-id row of the same batch. NULL-hash rows (short docs,
+unparseable urls, undecodable media) always survive and are never
+indexed. Appends write hashes before blocks (an unreplayed crash leaves
+an inert hash, never block rows whose candidates silently vanish) and
+run through ``util.append_once``.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from serverless_etl_bi_on_aws_spark.operators.dedup import hamming_pairs_blocked
+from serverless_etl_bi_on_aws_spark.operators.dedup import (
+    hamming_pairs_blocked,
+    hash_block_expr,
+    simhash64,
+)
 from serverless_etl_bi_on_aws_spark.util import (
     append_once,
     read_marker,
     write_marker,
     writer_lease,
 )
+
+
+class Hasher(NamedTuple):
+    """One hasher kind: ``fn(df, id_col, source_col, **params)`` returns a
+    frame carrying ``(id_col, hash_col)``. NULL hashes are filtered after
+    it (:func:`_hashed_rows`); a kind whose hash of a NULL input is not
+    NULL (xxhash64) filters that input itself."""
+
+    hash_col: str
+    n_blocks: int
+    source_col: str
+    params: dict
+    fn: Callable[..., DataFrame]
+
+
+def _url_hash(df: DataFrame, id_col: str, source_col: str) -> DataFrame:
+    from serverless_etl_bi_on_aws_spark.functions.url import canonicalize_url
+
+    # xxhash64(NULL) is the seed, not NULL: unparseable urls filter first.
+    # url identity is exact, so the index is radius 0 over one 64-bit
+    # block (a single-key equi-join probe)
+    return (
+        df.withColumn("_canon", canonicalize_url(source_col))
+        .filter(F.col("_canon").isNotNull())
+        .select(id_col, F.xxhash64("_canon").alias("url_hash"))
+    )
+
+
+def _dhash(df: DataFrame, id_col: str, source_col: str) -> DataFrame:
+    from serverless_etl_bi_on_aws_spark.operators.image_dedup import with_dhash
+
+    return with_dhash(df, media_col=source_col)
+
+
+def _afp(df: DataFrame, id_col: str, source_col: str) -> DataFrame:
+    from serverless_etl_bi_on_aws_spark.operators.audio_dedup import (
+        with_audio_fingerprint,
+    )
+
+    return with_audio_fingerprint(df, media_col=source_col)
+
+
+#: The hasher kinds an index can record. Family modules are imported
+#: lazily inside each ``fn``: no import cycle, no registration step.
+#: simhash64 emits no row for a doc shorter than ``n`` tokens (no
+#: shingles): such docs always survive and are never indexed.
+HASHERS: dict[str, Hasher] = {
+    "simhash": Hasher("simhash", 8, "text", {"n": 3}, simhash64),
+    "url": Hasher("url_hash", 1, "url", {}, _url_hash),
+    "dhash": Hasher("dhash", 16, "media", {}, _dhash),
+    "afp": Hasher("afp", 8, "media", {}, _afp),
+}
+
+
+def _hasher_spec(hasher: str | dict) -> dict:
+    """``"dhash"`` or ``{"kind": "simhash", "n": 5, ...}`` -> the full
+    spec recorded in meta, defaults filled in; unknown kinds or params
+    raise ValueError."""
+    spec = {"kind": hasher} if isinstance(hasher, str) else dict(hasher)
+    kind = spec.pop("kind", None)
+    if kind not in HASHERS:
+        raise ValueError(f"unknown hasher kind {kind!r}; known: {sorted(HASHERS)}")
+    h = HASHERS[kind]
+    source_col = spec.pop("source_col", h.source_col)
+    unknown = set(spec) - set(h.params)
+    if unknown:
+        raise ValueError(f"hasher {kind!r} takes no params {sorted(unknown)}")
+    return {"kind": kind, "source_col": source_col, **h.params, **spec}
 
 
 def read_hash_meta(index_path: str) -> dict:
@@ -51,13 +138,23 @@ def read_hash_meta(index_path: str) -> dict:
     return meta
 
 
+def _hashed_rows(meta: dict, df: DataFrame) -> DataFrame:
+    """``(id_col, hash_col)`` rows of ``df`` with NULL hashes dropped:
+    hashed by the index's recorded hasher, or — for a meta without one —
+    projected from a frame that already carries both columns."""
+    id_col, hash_col = meta["id_col"], meta["hash_col"]
+    spec = meta.get("hasher")
+    if spec is not None:
+        params = {k: v for k, v in spec.items() if k not in ("kind", "source_col")}
+        df = HASHERS[spec["kind"]].fn(df, id_col, spec["source_col"], **params)
+    return df.select(id_col, hash_col).filter(F.col(hash_col).isNotNull())
+
+
 def hash_blocks(hashed: DataFrame, id_col: str, hash_col: str, n_blocks: int) -> DataFrame:
     """(_id, block, key): pigeonhole sub-blocks of a 64-bit hash. The
     split expression itself is :func:`operators.dedup.hash_block_expr` —
     the SAME object hamming_pairs_blocked uses — so index and probe block
     identically by construction."""
-    from serverless_etl_bi_on_aws_spark.operators.dedup import hash_block_expr
-
     return hashed.select(
         F.col(id_col).alias("_id"),
         F.explode(hash_block_expr(hash_col, n_blocks)).alias("_bk"),
@@ -79,33 +176,45 @@ def _append(hashed: DataFrame, meta: dict, index_path: str) -> None:
 def init_hash_index(
     index_path: str,
     id_col: str = "doc_id",
-    hash_col: str = "hash",
-    n_blocks: int = 16,
+    hash_col: str | None = None,
+    n_blocks: int | None = None,
+    hasher: str | dict | None = None,
 ) -> None:
     """Create an EMPTY index — meta only; the streaming ingest loops
     start here so the first micro-batch probes through the same path as
-    every later one (an empty corpus yields no candidates)."""
+    every later one (an empty corpus yields no candidates).
+
+    ``hasher`` names a :data:`HASHERS` kind (``"dhash"``) or a spec with
+    its params (``{"kind": "simhash", "n": 5}``); the kind fixes
+    ``hash_col`` and defaults ``n_blocks``. Without it the index holds
+    pre-hashed frames (``hash_col`` default ``"hash"``, 16 blocks)."""
     if os.path.exists(os.path.join(index_path, "_meta.json")):
         raise ValueError(f"index already exists at {index_path}")
+    meta = {"n_blocks": n_blocks or 16, "id_col": id_col, "hash_col": hash_col or "hash"}
+    if hasher is not None:
+        spec = _hasher_spec(hasher)
+        h = HASHERS[spec["kind"]]
+        if hash_col not in (None, h.hash_col):
+            raise ValueError(f"hasher {spec['kind']!r} writes {h.hash_col!r}, not {hash_col!r}")
+        meta.update(n_blocks=n_blocks or h.n_blocks, hash_col=h.hash_col, hasher=spec)
     os.makedirs(index_path, exist_ok=True)
-    write_marker(
-        os.path.join(index_path, "_meta.json"),
-        {"n_blocks": n_blocks, "id_col": id_col, "hash_col": hash_col},
-    )
+    write_marker(os.path.join(index_path, "_meta.json"), meta)
 
 
 def build_hash_index(
-    hashed: DataFrame,
+    df: DataFrame,
     index_path: str,
     id_col: str = "doc_id",
-    hash_col: str = "hash",
-    n_blocks: int = 16,
+    hash_col: str | None = None,
+    n_blocks: int | None = None,
+    hasher: str | dict | None = None,
 ) -> None:
-    """One-time build from an already-hashed ``(id, hash)`` frame (NULL
-    hashes must be filtered by the caller). Refuses to clobber."""
-    init_hash_index(index_path, id_col, hash_col, n_blocks)
+    """One-time build over the starting corpus (hashed once, by
+    ``hasher``; see :func:`init_hash_index`). Refuses to clobber;
+    appends belong to :func:`update_hash_index`."""
+    init_hash_index(index_path, id_col, hash_col, n_blocks, hasher)
     meta = read_hash_meta(index_path)
-    _append(hashed.select(id_col, hash_col), meta, index_path)
+    _append(_hashed_rows(meta, df), meta, index_path)
 
 
 def dropped_ids_against_index(
@@ -121,7 +230,11 @@ def dropped_ids_against_index(
     is consumed three times — localCheckpoint it if it is expensive."""
     meta = read_hash_meta(index_path)
     id_col, hash_col, n_blocks = meta["id_col"], meta["hash_col"], meta["n_blocks"]
-    assert radius <= n_blocks - 1, "pigeonhole guarantee needs radius <= blocks-1"
+    if radius > n_blocks - 1:
+        raise ValueError(
+            f"radius {radius} > n_blocks - 1 = {n_blocks - 1}: the pigeonhole "
+            "guarantee needs radius <= blocks-1"
+        )
     new_hashed = new_hashed.select(id_col, hash_col)
     new_blocks = hash_blocks(new_hashed, id_col, hash_col, n_blocks)
     hamming = F.bit_count(F.col("_h1").bitwiseXOR(F.col("_h2")))
@@ -169,29 +282,49 @@ def dropped_ids_against_index(
     return dup_vs_corpus.unionByName(within).distinct()
 
 
+def dedup_against_hash_index(
+    spark: SparkSession,
+    new_df: DataFrame,
+    index_path: str,
+    radius: int,
+) -> DataFrame:
+    """Survivors of the raw frame ``new_df`` under the online rule: drop a
+    row iff its hash (by the index's recorded hasher) is within hamming
+    ``radius`` of ANY indexed row or a smaller-id row of the same batch.
+    NULL-hash rows always survive.
+
+    Plan shape: the hasher (for media, the only decode stage) runs once,
+    on the new batch, and is localCheckpointed; the corpus side is two
+    parquet scans (the block-partitioned candidate join, then a hash
+    fetch for candidates only); the final anti-join carries dropped ids
+    only, so payloads never cross an exchange."""
+    meta = read_hash_meta(index_path)
+    id_col = meta["id_col"]
+    hashed = _hashed_rows(meta, new_df).localCheckpoint(eager=True)
+    dropped = dropped_ids_against_index(spark, hashed, index_path, radius)
+    return new_df.join(dropped.select(F.col("_id").alias(id_col)), id_col, "left_anti")
+
+
 def update_hash_index(
-    new_hashed: DataFrame,
+    new_df: DataFrame,
     index_path: str,
     batch_id: str,
 ) -> bool:
-    """Append one batch's ``(id, hash)`` rows — ALL of them, duplicates
-    included (chain equivalence; see operators/dedup_index.py), through
+    """Append one batch's hashes — ALL of them, duplicates included
+    (chain equivalence; see operators/dedup_index.py), through
     :func:`util.append_once` (idempotent per ``batch_id``, lease-
-    serialized, marker last).
+    serialized, marker last). ``new_df`` is raw, hashed as the build was.
 
-    NULL-hash rows (undecodable media, unparseable urls) can never match
-    a probe — a NULL block key never equi-joins and a NULL hamming never
-    passes the radius filter — so they are dropped before the empty
-    guard: a NULL-hash-only batch is vacuously applied and never creates
-    a footer-less ``blocks/``."""
+    NULL-hash rows can never match a probe — a NULL block key never
+    equi-joins and a NULL hamming never passes the radius filter — so
+    they are dropped before the empty guard: a NULL-hash-only batch is
+    vacuously applied and never creates a footer-less ``blocks/``."""
     meta = read_hash_meta(index_path)
     return append_once(
         index_path,
         batch_id,
         "update_hash_index",
-        lambda: new_hashed.select(meta["id_col"], meta["hash_col"]).filter(
-            F.col(meta["hash_col"]).isNotNull()
-        ),
+        lambda: _hashed_rows(meta, new_df),
         lambda rows: _append(rows, meta, index_path),
     )
 

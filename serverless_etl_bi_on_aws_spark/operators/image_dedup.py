@@ -18,11 +18,10 @@ on block collisions only, bit_count(xor) verify. Nothing is all-pairs.
 (Arrow batches; peak memory = one batch per core) and the only thing that
 ever reaches an exchange is (id, 64-bit hash) — 16 bytes/image, never a
 payload. The blocked self-join shuffles on (block, key), a uniform key by
-construction (hash bits). For incremental corpora the persisted-index
-half lives below (:func:`build_dhash_index` / :func:`dedup_images_
-against_index` / :func:`update_dhash_index` / :func:`compact_dhash_
-index`), probing exactly like operators/dedup_index.py probes MinHash
-bands.
+construction (hash bits). For incremental corpora the persisted index is
+operators/hash_index.py with the ``dhash`` hasher (:func:`with_dhash`):
+indexed images are never re-decoded, the probe's only decode stage runs
+on the new batch, and NULL-hash (undecodable) media always survive.
 """
 
 from __future__ import annotations
@@ -113,106 +112,3 @@ def image_neardup_pairs(
     return hamming_pairs_blocked(
         hashed.select(id_col, "dhash"), id_col, "dhash", radius, n_blocks
     )
-
-
-# ---------------------------------------------------------------------------
-# Incremental image dedup against a PERSISTED dHash index — thin wrappers
-# over the modality-agnostic operators/hash_index.py core (round-9
-# consolidation: text SimHash / image dHash / audio envelope share one
-# build/probe/append/compact implementation; this module contributes the
-# decode+hash stage). Indexed images are NEVER re-decoded: the probe's
-# only decode stage runs on the new batch (pytest-trapped). NULL-hash
-# media (undecodable) survive by definition and are not indexed.
-# ---------------------------------------------------------------------------
-
-import os as _os
-
-from pyspark.sql import SparkSession, functions as F
-
-from serverless_etl_bi_on_aws_spark.operators.hash_index import (
-    build_hash_index,
-    compact_hash_index,
-    dropped_ids_against_index,
-    init_hash_index,
-    read_hash_meta,
-    update_hash_index,
-)
-
-
-def _hashed(df: DataFrame, id_col: str, media_col: str) -> DataFrame:
-    return (
-        with_dhash(df, media_col=media_col)
-        .filter(F.col("dhash").isNotNull())
-        .select(id_col, "dhash")
-    )
-
-
-def init_dhash_index(
-    index_path: str, id_col: str = "doc_id", n_blocks: int = 16
-) -> None:
-    """Create an EMPTY image index (meta only) — the streaming image
-    ingest loop starts here; see hash_index.init_hash_index."""
-    init_hash_index(index_path, id_col=id_col, hash_col="dhash", n_blocks=n_blocks)
-
-
-def build_dhash_index(
-    df: DataFrame,
-    index_path: str,
-    id_col: str = "doc_id",
-    media_col: str = "media",
-    n_blocks: int = 16,
-) -> None:
-    """One-time build: decode + hash the starting corpus once, persist
-    (id, dhash) and the block table. Refuses to clobber an existing
-    index (appends belong to :func:`update_dhash_index`)."""
-    build_hash_index(
-        _hashed(df, id_col, media_col),
-        index_path,
-        id_col=id_col,
-        hash_col="dhash",
-        n_blocks=n_blocks,
-    )
-
-
-def dedup_images_against_index(
-    spark: SparkSession,
-    new_df: DataFrame,
-    index_path: str,
-    radius: int = 8,
-    media_col: str = "media",
-) -> DataFrame:
-    """Survivors of ``new_df`` under the online rule: drop a new image iff
-    its dHash is within hamming ``radius`` of ANY indexed image or a
-    smaller-id image of the same batch. NULL-hash (undecodable) media
-    always survive. Composes with :func:`update_dhash_index`.
-
-    Plan shape: ``with_dhash`` (the only decode stage) runs exactly once,
-    on the new batch; the corpus side is two parquet scans (the block-
-    partitioned candidate join, then a hash fetch for candidates only);
-    the final anti-join broadcasts dropped ids, so payloads never cross
-    an exchange."""
-    id_col = read_hash_meta(index_path)["id_col"]
-    new_hashed = _hashed(new_df, id_col, media_col).localCheckpoint(eager=True)
-    dropped = dropped_ids_against_index(spark, new_hashed, index_path, radius)
-    return new_df.join(dropped.select(F.col("_id").alias(id_col)), id_col, "left_anti")
-
-
-def update_dhash_index(
-    new_df: DataFrame,
-    index_path: str,
-    batch_id: str,
-    media_col: str = "media",
-) -> bool:
-    """Append one batch's hashes — ALL decodable images, duplicates
-    included (chain equivalence). Idempotent per ``batch_id``; NULL-hash
-    rows are skipped. compact via :func:`compact_dhash_index`."""
-    id_col = read_hash_meta(index_path)["id_col"]
-    return update_hash_index(_hashed(new_df, id_col, media_col), index_path, batch_id)
-
-
-def compact_dhash_index(
-    spark: SparkSession, index_path: str, target_file_bytes: int = 128 << 20
-) -> dict[str, int]:
-    """Maintenance: see hash_index.compact_hash_index (per-block rewrite,
-    replay-duplicate purge, markers untouched, probe results pinned)."""
-    return compact_hash_index(spark, index_path, target_file_bytes)

@@ -151,13 +151,9 @@ def upsert_pricing_rollup(
     # (On a cluster with a transactional table format this is the MERGE
     # INTO snapshot-isolation guarantee; plain parquet needs it by hand.)
     merged = merged.localCheckpoint(eager=True)
-    prior = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (merged.repartition(1, "ship_year").write.mode("overwrite")
-         .partitionBy("ship_year").parquet(rollup_path))
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prior)
+    (merged.repartition(1, "ship_year").write.mode("overwrite")
+     .option("partitionOverwriteMode", "dynamic")
+     .partitionBy("ship_year").parquet(rollup_path))
 
 
 def ensure_pricing_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:

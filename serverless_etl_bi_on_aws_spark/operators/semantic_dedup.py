@@ -27,7 +27,7 @@ parquet with the same centroid-pruning idea, and
 ingest pipeline — use THIS operator for one-shot corpus dedup and the
 index loop when batches arrive continuously.
 
-Measured A/B (tools/ab_semantic_tiles.py, replicated sf0.1 corpus,
+Measured A/B (git show 663bcd2:tools/ab_semantic_tiles.py, replicated sf0.1 corpus,
 cluster size held constant): at N=96k the pruned tiling runs 3.4-3.6x
 faster than the exact path and grows ~linearly where exact grows with
 its quadratic tile count; NEAR-DUPLICATE capture is 100% at both

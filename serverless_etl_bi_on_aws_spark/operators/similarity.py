@@ -65,7 +65,7 @@ def topk_cosine_arrow(
     corpora). Same results as the HOF path (float64 matmul vs float64
     fold agree to ~1e-15; ties broken by id in both).
 
-    Slope floor (tools/ab_q44_ship.py, 2026-08-13): the wire is already
+    Slope floor (git show 663bcd2:tools/ab_q44_ship.py, 2026-08-13): the wire is already
     float32 (fixture stores list<float>; Arrow ships it as-is), an
     identity mapInArrow costs the same as the full query, and the
     JVM-only unrolled-dot alternative is 4x SLOWER (per-element
@@ -719,7 +719,7 @@ def ivf_probe_topk(
     # partition pruning happens at the scan (the _cluster filter sits
     # below the Python stage in the plan); the pruned candidate set is
     # re-ranked by the Arrow/BLAS kernel, not the interpreted HOF cosine
-    # (measured 4x slower per row — tools/ab_q44_ship.py).
+    # (measured 4x slower per row — git show 663bcd2:tools/ab_q44_ship.py).
     cands = corpus.filter(F.col("_cluster").isin(probe)).drop("_cluster")
     return topk_cosine_arrow(
         cands, query_vec, k=k, id_col=id_col, vec_col=vec_col, dedup_ids=True
@@ -769,7 +769,7 @@ def update_ivf_index(
 ) -> bool:
     """Append a batch of new vectors to a persisted IVF index with ZERO
     KMeans refits (the incremental-index family: dedup_index.update_index
-    / image_dedup.update_dhash_index, applied to ANN) — the hourly-crawl
+    / hash_index.update_hash_index, applied to ANN) — the hourly-crawl
     shape for embeddings: clustering is paid once at build; each append
     only ASSIGNS new rows to the existing centroids and appends them to
     the corpus partitions, so probes keep pruning by partition and see
@@ -1222,8 +1222,8 @@ def dedup_embeddings_against_index(
 ) -> DataFrame:
     """Embedding near-dup survivors of a NEW batch against the persisted
     IVF index — the incremental-dedup family's fourth modality (text:
-    dedup_against_index; image: dedup_images_against_index; audio: the
-    same hash-index shape; embeddings: this). Composes with
+    dedup_against_index; image and audio: hash_index.dedup_against_hash_
+    index with the dhash/afp hasher; embeddings: this). Composes with
     :func:`update_ivf_index` for the ingest loop.
 
     Online rule: drop a new vector iff cosine >= ``threshold`` against

@@ -1141,7 +1141,7 @@ def _q46_bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     # v2 (round 7): the bucket build ALSO materializes the part attribute
     # (category) into the lineitem side — J2 as the reference's own
     # denormalization (README.md:113-115 pre-joins ORDER⋈PRODUCT into one
-    # DW table). tools/ab_q3_floor.py measured the per-query 2M-entry
+    # DW table). git show 663bcd2:tools/ab_q3_floor.py measured the per-query 2M-entry
     # broadcast probe at ~0.25 s/sf — the dominant residual cost of the
     # bucketed path — while the category column itself scans ~free
     # (42-value dictionary). The dim lookup is paid once at ingest; the
@@ -1205,7 +1205,7 @@ def q46_sales_by_category_bucketed(spark: SparkSession, sf_dir: str) -> DataFram
     (J2 denormalized into the bucketed fact, README.md:113-115), so the
     per-query plan is exactly the co-located join + aggregate — no
     2M-entry dim probe per query (measured ~0.25 s/sf of the old plan's
-    slope, tools/ab_q3_floor.py). Same oracle as q3 (layout cannot change
+    slope, git show 663bcd2:tools/ab_q3_floor.py). Same oracle as q3 (layout cannot change
     values).
 
     The bucket build is a write-ONCE step: tables/dirs are keyed on a digest
@@ -6116,9 +6116,9 @@ def q119_vocab_oov_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q120_simhash_index_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The persisted text-SimHash index under a driver value gate
-    (round 16 — operators/dedup.py build_simhash_index /
-    dedup_text_against_simhash_index, the 8-bytes/doc hamming member of
-    the incremental-index matrix; q76 is its MinHash-LSH Jaccard twin).
+    (round 16 — operators/hash_index.py with the ``simhash`` hasher, the
+    8-bytes/doc hamming member of the incremental-index matrix; q76 is
+    its MinHash-LSH Jaccard twin).
 
     The corpus splits at max(doc_id)//2 into a "seen" half (persisted
     as a block-partitioned SimHash index — digest-keyed build-once) and
@@ -6143,7 +6143,7 @@ def q120_simhash_index_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
       * twin_caught / control_kept — the planted cross-batch near-twin
         drops, the planted fresh doc survives (the two failure
         directions);
-      * replay_noop — update_simhash_index is marker-idempotent: the
+      * replay_noop — update_hash_index is marker-idempotent: the
         same batch id applies once (True) then no-ops (False), run on
         a per-call throwaway index so the shared probe index is never
         mutated.
@@ -6156,12 +6156,14 @@ def q120_simhash_index_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from serverless_etl_bi_on_aws_spark.operators.dedup import (
-        build_simhash_index,
-        dedup_text_against_simhash_index,
         hamming_pairs_blocked,
-        init_simhash_index,
         simhash64,
-        update_simhash_index,
+    )
+    from serverless_etl_bi_on_aws_spark.operators.hash_index import (
+        build_hash_index,
+        dedup_against_hash_index,
+        init_hash_index,
+        update_hash_index,
     )
     from serverless_etl_bi_on_aws_spark.util import artifact_dir, fixture_digest
 
@@ -6182,12 +6184,12 @@ def q120_simhash_index_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     b1 = docs.filter(F.col("doc_id") <= mid)
     b2 = docs.filter(F.col("doc_id") > mid)
 
-    digest = fixture_digest(sf_dir, ("documents",), version="shidx1")[:8]
+    digest = fixture_digest(sf_dir, ("documents",), version="shidx2")[:8]
     idx = artifact_dir(f"spark_graft_simhashidx_{digest}")
     if not os.path.exists(os.path.join(idx, "_meta.json")):
-        build_simhash_index(b1, idx, n_blocks=n_blocks)
+        build_hash_index(b1, idx, n_blocks=n_blocks, hasher="simhash")
 
-    surv2 = dedup_text_against_simhash_index(spark, b2, idx, radius=radius)
+    surv2 = dedup_against_hash_index(spark, b2, idx, radius)
     kept2 = surv2.select("doc_id").localCheckpoint(eager=True)
     dropped2 = b2.select("doc_id").join(kept2, "doc_id", "left_anti")
 
@@ -6202,9 +6204,9 @@ def q120_simhash_index_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # replay idempotence on a throwaway index (never the shared one)
     tmp_idx = os.path.join(tempfile.mkdtemp(prefix="q120_replay_"), "idx")
-    init_simhash_index(tmp_idx, n_blocks=n_blocks)
-    first = update_simhash_index(plant, tmp_idx, "b0")
-    second = update_simhash_index(plant, tmp_idx, "b0")
+    init_hash_index(tmp_idx, n_blocks=n_blocks, hasher="simhash")
+    first = update_hash_index(plant, tmp_idx, "b0")
+    second = update_hash_index(plant, tmp_idx, "b0")
 
     n_new = b2.agg(F.count("*").alias("n_new"))
     d_only = dropped2.join(oneshot2, "doc_id", "left_anti").agg(

@@ -9,11 +9,10 @@ from serverless_etl_bi_on_aws_spark.streaming.incremental import (  # noqa: F401
     start_rollup_maintenance,
 )
 from serverless_etl_bi_on_aws_spark.streaming.ingest_dedup import (  # noqa: F401
-    apply_afp_dedup_batch,
     apply_curation_batch,
     apply_dedup_batch,
     apply_embedding_dedup_batch,
-    apply_image_dedup_batch,
+    apply_hash_dedup_batch,
     start_incremental_curation,
     start_incremental_dedup,
 )

@@ -17,8 +17,9 @@ covered, pytest-pinned in tests/test_ingest_dedup.py):
     probe against an index the batch has not touched yet and overwrites
     the same partition with the identical result;
   * crash AFTER survivors commit, before/inside the index append — the
-    partition's ``_SUCCESS`` gates the write (survivors are NOT
-    recomputed: the index may already hold some of this batch's
+    partition's ``_SUCCESS`` gates the write
+    (:func:`util.write_survivors_once`, every loop's one gate; survivors
+    are NOT recomputed: the index may already hold some of this batch's
     signatures, and a recompute would see the batch as a duplicate of
     itself and emit an EMPTY partition — the one data-loss trap in this
     composition); ``update_index`` then re-appends, and its replay
@@ -41,6 +42,9 @@ the full-funnel variant (round 10): the q81 curation chain — quality
 gate, batch-local exact dedup, THEN the index probe — as a running
 pipeline, with the same crash-point discipline and the filter-first
 ordering that keeps rejected junk out of the index.
+:func:`apply_hash_dedup_batch` runs the same loop over any 64-bit hash
+index (SimHash, url, image dHash, audio fingerprint), hashing with the
+hasher the index recorded.
 """
 
 from __future__ import annotations
@@ -56,11 +60,20 @@ from serverless_etl_bi_on_aws_spark.operators.dedup_index import (
     dedup_against_index,
     update_index,
 )
+from serverless_etl_bi_on_aws_spark.operators.hash_index import (
+    dedup_against_hash_index,
+    update_hash_index,
+)
 from serverless_etl_bi_on_aws_spark.streaming.launch import (
     read_landing_zone,
     start_foreach_batch,
 )
-from serverless_etl_bi_on_aws_spark.util import read_marker, write_marker
+from serverless_etl_bi_on_aws_spark.util import (
+    read_marker,
+    write_marker,
+    write_survivors_once,
+    writer_lease,
+)
 
 #: per-weights-path validated num_buckets (selection.weights_num_buckets)
 #: — the weights table at a given path is frozen by the apply_curation_
@@ -128,12 +141,13 @@ def apply_dedup_batch(
     append signatures. Idempotent per ``batch_id`` (see module docstring
     for the per-crash-point argument). Exposed separately from the
     stream so tests (and batch schedulers) can drive replays directly."""
-    out = os.path.join(clean_dir, f"batch={batch_id}")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        survivors = dedup_against_index(
+    write_survivors_once(
+        clean_dir,
+        batch_id,
+        lambda: dedup_against_index(
             spark, batch_df, index_path, threshold=threshold, text_col=text_col
-        )
-        survivors.write.mode("overwrite").parquet(out)
+        ),
+    )
     update_index(batch_df, index_path, batch_id, text_col=text_col)
 
 
@@ -317,26 +331,28 @@ def apply_curation_batch(
         .filter(F.col(id_col) == F.col("_min_id"))
         .drop("_min_id")
     )
-    out = os.path.join(clean_dir, f"batch={batch_id}")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        survivors = dedup_against_index(
+
+    def survivors() -> DataFrame:
+        kept = dedup_against_index(
             spark, gated, index_path, threshold=threshold, text_col=text_col
         )
-        if ivf_index_path is not None:
-            from serverless_etl_bi_on_aws_spark.operators.similarity import (
-                dedup_embeddings_against_index,
-            )
+        if ivf_index_path is None:
+            return kept
+        from serverless_etl_bi_on_aws_spark.operators.similarity import (
+            dedup_embeddings_against_index,
+        )
 
-            survivors = dedup_embeddings_against_index(
-                spark,
-                survivors,
-                ivf_index_path,
-                threshold=semantic_threshold,
-                n_probe=n_probe,
-                id_col=id_col,
-                vec_col=embedding_col,
-            )
-        survivors.write.mode("overwrite").parquet(out)
+        return dedup_embeddings_against_index(
+            spark,
+            kept,
+            ivf_index_path,
+            threshold=semantic_threshold,
+            n_probe=n_probe,
+            id_col=id_col,
+            vec_col=embedding_col,
+        )
+
+    write_survivors_once(clean_dir, batch_id, survivors)
     update_index(gated, index_path, batch_id, text_col=text_col)
     if ivf_index_path is not None:
         from serverless_etl_bi_on_aws_spark.operators.similarity import (
@@ -548,63 +564,27 @@ def start_snapshot_curation_stream(
     )
 
 
-def apply_image_dedup_batch(
+def apply_hash_dedup_batch(
     spark: SparkSession,
     batch_df: DataFrame,
     index_path: str,
     clean_dir: str,
     batch_id: str,
-    radius: int = 8,
-    media_col: str = "media",
+    radius: int,
 ) -> None:
-    """The IMAGE twin of :func:`apply_dedup_batch` — identical crash-point
-    discipline (probe -> _SUCCESS-gated survivors write -> marker-gated
-    hash append), with the dHash index (operators/image_dedup.py) as the
-    corpus. Start from ``init_dhash_index``; survivors keep their media
-    payloads (the anti-join broadcasts dropped ids, payloads never
-    shuffle)."""
-    from serverless_etl_bi_on_aws_spark.operators.image_dedup import (
-        dedup_images_against_index,
-        update_dhash_index,
+    """The twin of :func:`apply_dedup_batch` for any 64-bit hash index
+    (operators/hash_index.py — SimHash, url, image dHash, audio
+    fingerprint): identical crash-point discipline (probe ->
+    _SUCCESS-gated survivors write -> marker-gated hash append), with the
+    hasher the index recorded at ``init_hash_index``. Survivors keep
+    their payloads (dropped ids go into the anti-join, payloads never
+    shuffle); NULL-hash (undecodable, unparseable) rows always survive."""
+    write_survivors_once(
+        clean_dir,
+        batch_id,
+        lambda: dedup_against_hash_index(spark, batch_df, index_path, radius),
     )
-
-    out = os.path.join(clean_dir, f"batch={batch_id}")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        survivors = dedup_images_against_index(
-            spark, batch_df, index_path, radius=radius, media_col=media_col
-        )
-        survivors.write.mode("overwrite").parquet(out)
-    update_dhash_index(batch_df, index_path, batch_id, media_col=media_col)
-
-
-def apply_afp_dedup_batch(
-    spark: SparkSession,
-    batch_df: DataFrame,
-    index_path: str,
-    clean_dir: str,
-    batch_id: str,
-    radius: int = 6,
-    media_col: str = "media",
-) -> None:
-    """The AUDIO twin of :func:`apply_dedup_batch` — identical crash-point
-    discipline (probe -> _SUCCESS-gated survivors write -> marker-gated
-    fingerprint append), with the energy-envelope fingerprint index
-    (operators/audio_dedup.py, hash_index-backed) as the corpus. Start
-    from ``init_afp_index``; survivors keep their media payloads
-    (dropped ids broadcast into the anti-join, payloads never shuffle);
-    NULL-fingerprint (corrupt/non-WAV) media always survive."""
-    from serverless_etl_bi_on_aws_spark.operators.audio_dedup import (
-        dedup_audio_against_index,
-        update_afp_index,
-    )
-
-    out = os.path.join(clean_dir, f"batch={batch_id}")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        survivors = dedup_audio_against_index(
-            spark, batch_df, index_path, radius=radius, media_col=media_col
-        )
-        survivors.write.mode("overwrite").parquet(out)
-    update_afp_index(batch_df, index_path, batch_id, media_col=media_col)
+    update_hash_index(batch_df, index_path, batch_id)
 
 
 def apply_embedding_dedup_batch(
@@ -635,9 +615,10 @@ def apply_embedding_dedup_batch(
         update_ivf_index,
     )
 
-    out = os.path.join(clean_dir, f"batch={batch_id}")
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        survivors = dedup_embeddings_against_index(
+    write_survivors_once(
+        clean_dir,
+        batch_id,
+        lambda: dedup_embeddings_against_index(
             spark,
             batch_df,
             index_path,
@@ -645,8 +626,8 @@ def apply_embedding_dedup_batch(
             n_probe=n_probe,
             id_col=id_col,
             vec_col=vec_col,
-        )
-        survivors.write.mode("overwrite").parquet(out)
+        ),
+    )
     update_ivf_index(batch_df, index_path, batch_id, vec_col=vec_col)
 
 
@@ -694,24 +675,22 @@ def apply_bloom_dedup_batch(
         _or_bits_into_index,
         dedup_against_bloom,
     )
-    from serverless_etl_bi_on_aws_spark.util import writer_lease
+
+    def survivors() -> DataFrame:
+        kept = dedup_against_bloom(batch_df, key_col, index_path)
+        if id_col is None:
+            return kept.dropDuplicates([key_col])
+        from pyspark.sql import Window
+
+        w = Window.partitionBy(key_col).orderBy(F.col(id_col))
+        return (
+            kept.withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") == 1)
+            .drop("__rn")
+        )
 
     with writer_lease(index_path, owner=f"bloom_dedup:{batch_id}"):
-        out = os.path.join(clean_dir, f"batch={batch_id}")
-        if not os.path.exists(os.path.join(out, "_SUCCESS")):
-            survivors = dedup_against_bloom(batch_df, key_col, index_path)
-            if id_col is not None:
-                from pyspark.sql import Window
-
-                w = Window.partitionBy(key_col).orderBy(F.col(id_col))
-                survivors = (
-                    survivors.withColumn("__rn", F.row_number().over(w))
-                    .filter(F.col("__rn") == 1)
-                    .drop("__rn")
-                )
-            else:
-                survivors = survivors.dropDuplicates([key_col])
-            survivors.write.mode("overwrite").parquet(out)
+        write_survivors_once(clean_dir, batch_id, survivors)
         # the unguarded core — this function already holds the lease
         _or_bits_into_index(batch_df, key_col, index_path)
 

@@ -440,3 +440,24 @@ def append_once(
         append(rows)
         write_marker(marker, {"batch_id": batch_id})
     return True
+
+
+def write_survivors_once(
+    clean_dir: str, batch_id: str, survivors: Callable[[], DataFrame]
+) -> bool:
+    """Write ``survivors()`` to ``clean_dir/batch=<batch_id>`` with
+    overwrite, unless that partition's ``_SUCCESS`` exists — the survivors
+    half of every ingest loop's replay protocol (probe -> this write ->
+    :func:`append_once`). Returns True iff it wrote.
+
+    On replay ``survivors`` is never called, so its frame is not even
+    planned: once the batch's own rows may be in the index, a recompute
+    would see the batch as a duplicate of itself and emit an EMPTY
+    partition. A crash before ``_SUCCESS`` recomputes against an index
+    the batch has not touched yet and overwrites the same partition with
+    the identical result."""
+    out = os.path.join(clean_dir, f"batch={batch_id}")
+    if os.path.exists(os.path.join(out, "_SUCCESS")):
+        return False
+    survivors().write.mode("overwrite").parquet(out)
+    return True

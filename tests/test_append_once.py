@@ -1,6 +1,8 @@
 """util.append_once — the replay-safe batch-append protocol every
 persisted index shares (marker -> lease -> recheck -> prepare -> empty
-guard -> append -> marker last), tested directly with stub callbacks."""
+guard -> append -> marker last) — and util.write_survivors_once, the
+``_SUCCESS``-gated survivors write every ingest loop shares, tested
+directly with stub callbacks."""
 
 from __future__ import annotations
 
@@ -13,6 +15,7 @@ from serverless_etl_bi_on_aws_spark.util import (
     append_once,
     lease_lock_path,
     write_marker,
+    write_survivors_once,
     writer_lease,
 )
 
@@ -75,3 +78,19 @@ def test_empty_or_null_only_prepare_is_vacuously_applied(spark, tmp_path):
                            lambda r: pytest.fail("appended an empty batch")) is True
         assert read_marker(_marker(idx, batch)) == {"batch_id": batch, "empty": True}
     assert not os.path.exists(lease_lock_path(idx))
+
+
+def test_replayed_batch_with_success_never_calls_survivors(spark, tmp_path):
+    clean = str(tmp_path / "clean")
+    assert write_survivors_once(clean, "b0", lambda: spark.range(3)) is True
+    assert os.path.exists(os.path.join(clean, "batch=b0", "_SUCCESS"))
+
+    def must_not_plan():
+        raise AssertionError("survivors planned on a committed replay")
+
+    assert write_survivors_once(clean, "b0", must_not_plan) is False
+    assert spark.read.parquet(os.path.join(clean, "batch=b0")).count() == 3
+    # a partition without _SUCCESS (crash mid-write) is overwritten
+    os.remove(os.path.join(clean, "batch=b0", "_SUCCESS"))
+    assert write_survivors_once(clean, "b0", lambda: spark.range(2)) is True
+    assert spark.read.parquet(os.path.join(clean, "batch=b0")).count() == 2

@@ -106,11 +106,11 @@ def test_incremental_audio_dedup_via_hash_index(spark, tmp_path):
     appends are idempotent, compaction preserves probe results."""
     import os
 
-    from serverless_etl_bi_on_aws_spark.operators.audio_dedup import (
-        build_afp_index,
-        compact_afp_index,
-        dedup_audio_against_index,
-        update_afp_index,
+    from serverless_etl_bi_on_aws_spark.operators.hash_index import (
+        build_hash_index,
+        compact_hash_index,
+        dedup_against_hash_index,
+        update_hash_index,
     )
 
     def wav(k, gain=1.0):
@@ -127,19 +127,19 @@ def test_incremental_audio_dedup_via_hash_index(spark, tmp_path):
         ],
     )
     idx = str(tmp_path / "afp")
-    build_afp_index(b1, idx)
+    build_hash_index(b1, idx, hasher="afp")
     survivors = {
-        r.doc_id for r in dedup_audio_against_index(spark, b2, idx, radius=6).collect()
+        r.doc_id for r in dedup_against_hash_index(spark, b2, idx, 6).collect()
     }
     assert survivors == {11, 13}
-    assert update_afp_index(b2, idx, "b2") is True
+    assert update_hash_index(b2, idx, "b2") is True
     n = spark.read.parquet(os.path.join(idx, "hashes")).count()
-    assert update_afp_index(b2, idx, "b2") is False
+    assert update_hash_index(b2, idx, "b2") is False
     assert spark.read.parquet(os.path.join(idx, "hashes")).count() == n
     # a third batch duplicating clip 11 (indexed via b2) is caught
     b3 = _media_df(spark, [(20, wav(9, gain=0.75), "audio/wav")])
-    assert dedup_audio_against_index(spark, b3, idx, radius=6).count() == 0
+    assert dedup_against_hash_index(spark, b3, idx, 6).count() == 0
     before = n
-    compact_afp_index(spark, idx)
+    compact_hash_index(spark, idx)
     assert spark.read.parquet(os.path.join(idx, "hashes")).count() == before
-    assert dedup_audio_against_index(spark, b3, idx, radius=6).count() == 0
+    assert dedup_against_hash_index(spark, b3, idx, 6).count() == 0

@@ -1360,10 +1360,10 @@ def test_incremental_url_dedup_loop(spark, tmp_path):
     a no-op (idempotent per batch id)."""
     import os
 
-    from serverless_etl_bi_on_aws_spark.operators.dedup import (
-        build_url_index,
-        dedup_urls_against_index,
-        update_url_index,
+    from serverless_etl_bi_on_aws_spark.operators.hash_index import (
+        build_hash_index,
+        dedup_against_hash_index,
+        update_hash_index,
     )
 
     corpus = spark.createDataFrame(
@@ -1374,7 +1374,7 @@ def test_incremental_url_dedup_loop(spark, tmp_path):
         "doc_id long, url string",
     )
     idx = str(tmp_path / "urlidx")
-    build_url_index(corpus, idx)
+    build_hash_index(corpus, idx, hasher="url")
 
     batch = spark.createDataFrame(
         [
@@ -1386,13 +1386,13 @@ def test_incremental_url_dedup_loop(spark, tmp_path):
         ],
         "doc_id long, url string",
     )
-    surv = dedup_urls_against_index(spark, batch, idx)
+    surv = dedup_against_hash_index(spark, batch, idx, 0)
     assert {r["doc_id"] for r in surv.select("doc_id").collect()} == {12, 14}
 
-    assert update_url_index(batch, idx, "b1") is True
+    assert update_hash_index(batch, idx, "b1") is True
     n_hashes = spark.read.parquet(os.path.join(idx, "hashes")).count()
     assert n_hashes == 2 + 4  # corpus + batch's parseable rows, NOT doc 14
-    assert update_url_index(batch, idx, "b1") is False  # replay no-op
+    assert update_hash_index(batch, idx, "b1") is False  # replay no-op
     assert spark.read.parquet(os.path.join(idx, "hashes")).count() == n_hashes
 
     # the indexed batch now shields a later re-submission
@@ -1400,8 +1400,51 @@ def test_incremental_url_dedup_loop(spark, tmp_path):
         [(20, "https://c.net/new/"), (21, "http://fresh.io/p")],
         "doc_id long, url string",
     )
-    surv2 = dedup_urls_against_index(spark, batch2, idx)
+    surv2 = dedup_against_hash_index(spark, batch2, idx, 0)
     assert {r["doc_id"] for r in surv2.select("doc_id").collect()} == {21}
+
+
+def test_hash_index_radius_and_hasher_checks_raise(spark, tmp_path):
+    """Caller input is checked with ValueError, not assert (which
+    ``python -O`` strips): a radius past the pigeonhole bound — equal to
+    ``n_blocks`` on a url index of one block — and an unknown hasher kind
+    or param."""
+    from serverless_etl_bi_on_aws_spark.operators.hash_index import (
+        dropped_ids_against_index,
+        init_hash_index,
+        read_hash_meta,
+    )
+
+    idx = str(tmp_path / "urlidx")
+    init_hash_index(idx, hasher="url")
+    assert read_hash_meta(idx)["n_blocks"] == 1
+    hashed = spark.createDataFrame([(1, 7)], "doc_id long, url_hash long")
+    with pytest.raises(ValueError, match="pigeonhole"):
+        dropped_ids_against_index(spark, hashed, idx, 1)
+    with pytest.raises(ValueError, match="unknown hasher kind"):
+        init_hash_index(str(tmp_path / "a"), hasher="md5")
+    with pytest.raises(ValueError, match="takes no params"):
+        init_hash_index(str(tmp_path / "b"), hasher={"kind": "url", "n": 3})
+
+
+def test_simhash_index_probe_uses_recorded_shingle_size(spark, tmp_path):
+    """The index records its hasher: built with SimHash ``n=5``, the
+    generic probe hashes new docs with ``n=5`` too, so exact copies of
+    indexed docs all drop — no ``n`` at the call site to get wrong."""
+    from serverless_etl_bi_on_aws_spark.operators.hash_index import (
+        build_hash_index,
+        dedup_against_hash_index,
+        read_hash_meta,
+    )
+
+    texts = [" ".join(f"d{k}w{i:03d}" for i in range(60)) for k in range(10)]
+    corpus = spark.createDataFrame(list(enumerate(texts)), "doc_id bigint, text string")
+    idx = str(tmp_path / "idx")
+    build_hash_index(corpus, idx, hasher={"kind": "simhash", "n": 5})
+    assert read_hash_meta(idx)["hasher"] == {"kind": "simhash", "source_col": "text", "n": 5}
+
+    copies = corpus.withColumn("doc_id", F.col("doc_id") + 100)
+    assert dedup_against_hash_index(spark, copies, idx, 7).count() == 0
 
 
 def test_cluster_safe_split_contract(spark):
@@ -1507,10 +1550,10 @@ def test_simhash_persisted_index_online_rule(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from serverless_etl_bi_on_aws_spark.operators.dedup import (
-        build_simhash_index,
-        dedup_text_against_simhash_index,
-        update_simhash_index,
+    from serverless_etl_bi_on_aws_spark.operators.hash_index import (
+        build_hash_index,
+        dedup_against_hash_index,
+        update_hash_index,
     )
 
     base = " ".join(f"tok{i:03d}" for i in range(150))
@@ -1519,7 +1562,7 @@ def test_simhash_persisted_index_online_rule(spark, tmp_path):
         [(1, base), (2, other)], "doc_id bigint, text string"
     )
     idx = str(tmp_path / "idx")
-    build_simhash_index(corpus, idx)
+    build_hash_index(corpus, idx, hasher="simhash")
 
     near = base.replace("tok005", "tok999")          # tiny edit -> hamming-close
     fresh = " ".join(f"new{i:03d}" for i in range(150))
@@ -1527,34 +1570,34 @@ def test_simhash_persisted_index_online_rule(spark, tmp_path):
         [(10, near), (11, fresh), (12, "too short")],
         "doc_id bigint, text string",
     )
-    surv = dedup_text_against_simhash_index(spark, batch, idx, radius=7)
+    surv = dedup_against_hash_index(spark, batch, idx, 7)
     assert sorted(r.doc_id for r in surv.collect()) == [11, 12]
 
     # append the survivors; a batch-mate near-dup pair collapses to min id
-    assert update_simhash_index(surv, idx, "b1") is True
-    assert update_simhash_index(surv, idx, "b1") is False  # replay no-op
+    assert update_hash_index(surv, idx, "b1") is True
+    assert update_hash_index(surv, idx, "b1") is False  # replay no-op
     batch2 = spark.createDataFrame(
         [(20, fresh.replace("new001", "new888")),     # near-dup of indexed 11
          (21, " ".join(f"pair{i:03d}" for i in range(40))),
          (22, " ".join(f"pair{i:03d}" for i in range(40)))],  # exact batch-mate
         "doc_id bigint, text string",
     )
-    surv2 = dedup_text_against_simhash_index(spark, batch2, idx, radius=7)
+    surv2 = dedup_against_hash_index(spark, batch2, idx, 7)
     assert sorted(r.doc_id for r in surv2.collect()) == [21]
 
     # incremental state == a one-shot build over everything admitted
-    update_simhash_index(surv2, idx, "b2")
+    update_hash_index(surv2, idx, "b2")
     oneshot = str(tmp_path / "one")
     admitted = corpus.unionByName(surv).unionByName(surv2)
-    build_simhash_index(admitted, oneshot)
+    build_hash_index(admitted, oneshot, hasher="simhash")
     probe = spark.createDataFrame(
         [(90, near), (91, " ".join(f"probe{i:03d}" for i in range(150)))],
         "doc_id bigint, text string",
     )
     a = sorted(r.doc_id for r in
-               dedup_text_against_simhash_index(spark, probe, idx).collect())
+               dedup_against_hash_index(spark, probe, idx, 7).collect())
     b = sorted(r.doc_id for r in
-               dedup_text_against_simhash_index(spark, probe, oneshot).collect())
+               dedup_against_hash_index(spark, probe, oneshot, 7).collect())
     assert a == b == [91]
     assert os.path.exists(os.path.join(idx, "_applied", "b2"))
 

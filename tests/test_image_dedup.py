@@ -142,10 +142,10 @@ def test_incremental_image_dedup_equals_oneshot(spark, tmp_path, monkeypatch):
     once, on the new batch)."""
     from serverless_etl_bi_on_aws_spark.functions.png import encode_png
     from serverless_etl_bi_on_aws_spark.operators import image_dedup as idd
-    from serverless_etl_bi_on_aws_spark.operators.image_dedup import (
-        build_dhash_index,
-        dedup_images_against_index,
-        update_dhash_index,
+    from serverless_etl_bi_on_aws_spark.operators.hash_index import (
+        build_hash_index,
+        dedup_against_hash_index,
+        update_hash_index,
     )
 
     # batch 1: images 0..5 (distinct patterns); batch 2: 10..15 where
@@ -163,7 +163,7 @@ def test_incremental_image_dedup_equals_oneshot(spark, tmp_path, monkeypatch):
     ]
     b1, b2 = _media_df_ids(spark, b1_rows), _media_df_ids(spark, b2_rows)
     idx = str(tmp_path / "idx")
-    build_dhash_index(b1, idx)
+    build_hash_index(b1, idx, hasher="dhash")
 
     # one-shot rule over the union: drop j iff exists i<j within radius
     union = _media_df_ids(spark, b1_rows + b2_rows)
@@ -179,7 +179,7 @@ def test_incremental_image_dedup_equals_oneshot(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(idd, "with_dhash", counting)
     survivors = {
-        r.doc_id for r in dedup_images_against_index(spark, b2, idx, radius=8).collect()
+        r.doc_id for r in dedup_against_hash_index(spark, b2, idx, 8).collect()
     }
     assert len(calls) == 1, f"indexed images re-decoded: {len(calls)} with_dhash calls"
     monkeypatch.undo()
@@ -192,10 +192,10 @@ def test_incremental_image_dedup_equals_oneshot(spark, tmp_path, monkeypatch):
     # append is idempotent per batch id; NULL-hash rows are not indexed
     import os
 
-    assert update_dhash_index(b2, idx, "b2") is True
+    assert update_hash_index(b2, idx, "b2") is True
     n_hashes = spark.read.parquet(os.path.join(idx, "hashes")).count()
     assert n_hashes == len(b1_rows) + len(b2_rows) - 1  # 14 not indexed
-    assert update_dhash_index(b2, idx, "b2") is False
+    assert update_hash_index(b2, idx, "b2") is False
     assert spark.read.parquet(os.path.join(idx, "hashes")).count() == n_hashes
 
     # a third batch re-rendering batch-2's image 12/13 pattern is caught
@@ -203,9 +203,9 @@ def test_incremental_image_dedup_equals_oneshot(spark, tmp_path, monkeypatch):
     b3 = _media_df_ids(
         spark, [(20, encode_png(_render(40, 24, 48), 24, 48), "image/png")]
     )
-    assert dedup_images_against_index(spark, b3, idx, radius=8).count() == 0
+    assert dedup_against_hash_index(spark, b3, idx, 8).count() == 0
     with pytest.raises(ValueError):
-        build_dhash_index(b3, idx)  # clobber refusal
+        build_hash_index(b3, idx, hasher="dhash")  # clobber refusal
 
 
 @pytest.mark.slow  # round-19 tiering: >=10 s integration test
@@ -216,11 +216,11 @@ def test_compact_dhash_index_purges_replay_and_keeps_results(spark, tmp_path):
     import os
 
     from serverless_etl_bi_on_aws_spark.functions.png import encode_png
-    from serverless_etl_bi_on_aws_spark.operators.image_dedup import (
-        build_dhash_index,
-        compact_dhash_index,
-        dedup_images_against_index,
-        update_dhash_index,
+    from serverless_etl_bi_on_aws_spark.operators.hash_index import (
+        build_hash_index,
+        compact_hash_index,
+        dedup_against_hash_index,
+        update_hash_index,
     )
 
     b1 = _media_df_ids(
@@ -237,17 +237,17 @@ def test_compact_dhash_index_purges_replay_and_keeps_results(spark, tmp_path):
          (21, encode_png(_render(70, 24, 24), 24, 24), "image/png")],
     )
     idx = str(tmp_path / "idx")
-    build_dhash_index(b1, idx)
-    assert update_dhash_index(b2, idx, "b2")
+    build_hash_index(b1, idx, hasher="dhash")
+    assert update_hash_index(b2, idx, "b2")
     os.remove(os.path.join(idx, "_applied", "b2"))
-    assert update_dhash_index(b2, idx, "b2")  # crash replay: duplicates
+    assert update_hash_index(b2, idx, "b2")  # crash replay: duplicates
     n_docs = spark.read.parquet(os.path.join(idx, "hashes")).select("doc_id").distinct().count()
     assert spark.read.parquet(os.path.join(idx, "hashes")).count() > n_docs
 
-    before = {r.doc_id for r in dedup_images_against_index(spark, probe, idx).collect()}
-    files = compact_dhash_index(spark, idx)
+    before = {r.doc_id for r in dedup_against_hash_index(spark, probe, idx, 8).collect()}
+    files = compact_hash_index(spark, idx)
     assert all(n == 1 for n in files.values())
     assert spark.read.parquet(os.path.join(idx, "hashes")).count() == n_docs
-    assert not update_dhash_index(b2, idx, "b2")  # marker survived
-    after = {r.doc_id for r in dedup_images_against_index(spark, probe, idx).collect()}
+    assert not update_hash_index(b2, idx, "b2")  # marker survived
+    after = {r.doc_id for r in dedup_against_hash_index(spark, probe, idx, 8).collect()}
     assert after == before == {21}  # 20 chains to 11 via the index

@@ -129,7 +129,7 @@ def test_apply_dedup_batch_replay_points(spark, tmp_path):
 
 def test_apply_image_dedup_batch_loop(spark, tmp_path):
     """Image twin of the ingest loop: two batches through
-    apply_image_dedup_batch (starting from an EMPTY index) equal the
+    apply_hash_dedup_batch (starting from an EMPTY dHash index) equal the
     one-shot image pair rule over the union; replay of an applied batch
     is a no-op; the crash-between-write-and-append replay keeps the
     survivors partition intact."""
@@ -138,13 +138,13 @@ def test_apply_image_dedup_batch_loop(spark, tmp_path):
     from pyspark.sql.types import LongType, StructField, StructType
 
     from serverless_etl_bi_on_aws_spark.functions.png import encode_png
+    from serverless_etl_bi_on_aws_spark.operators.hash_index import init_hash_index
     from serverless_etl_bi_on_aws_spark.operators.image_dedup import (
         image_neardup_pairs,
-        init_dhash_index,
     )
     from serverless_etl_bi_on_aws_spark.sources.multimodal import MEDIA_STRUCT
     from serverless_etl_bi_on_aws_spark.streaming.ingest_dedup import (
-        apply_image_dedup_batch,
+        apply_hash_dedup_batch,
     )
 
     def pat(cx, cy, k):
@@ -183,9 +183,9 @@ def test_apply_image_dedup_batch_loop(spark, tmp_path):
     b1, b2 = mk(b1_rows), mk(b2_rows)
     idx = str(tmp_path / "idx")
     clean = str(tmp_path / "clean")
-    init_dhash_index(idx)
-    apply_image_dedup_batch(spark, b1, idx, clean, "b0")
-    apply_image_dedup_batch(spark, b2, idx, clean, "b1")
+    init_hash_index(idx, hasher="dhash")
+    apply_hash_dedup_batch(spark, b1, idx, clean, "b0", 8)
+    apply_hash_dedup_batch(spark, b2, idx, clean, "b1", 8)
 
     got = {r.doc_id for r in spark.read.parquet(clean).select("doc_id").collect()}
     union = mk(b1_rows + b2_rows)
@@ -196,13 +196,13 @@ def test_apply_image_dedup_batch_loop(spark, tmp_path):
 
     # replay of an applied batch: byte-stable
     n1 = spark.read.parquet(os.path.join(clean, "batch=b1")).count()
-    apply_image_dedup_batch(spark, b2, idx, clean, "b1")
+    apply_hash_dedup_batch(spark, b2, idx, clean, "b1", 8)
     assert spark.read.parquet(os.path.join(clean, "batch=b1")).count() == n1
 
     # crash between write and append marker: survivors must not be
     # recomputed against the self-contaminated index
     os.remove(os.path.join(idx, "_applied", "b1"))
-    apply_image_dedup_batch(spark, b2, idx, clean, "b1")
+    apply_hash_dedup_batch(spark, b2, idx, clean, "b1", 8)
     assert spark.read.parquet(os.path.join(clean, "batch=b1")).count() == n1
 
 
@@ -288,7 +288,8 @@ def test_compactors_noop_on_empty_index(spark, tmp_path):
 
 def test_apply_afp_dedup_batch_loop(spark, tmp_path):
     """AUDIO twin of the ingest loop (round-9 verdict #4): two batches
-    through apply_afp_dedup_batch (starting from an EMPTY index) equal
+    through apply_hash_dedup_batch (starting from an EMPTY audio-
+    fingerprint index) equal
     the one-shot audio pair rule over the union; corrupt payloads
     (NULL fingerprint) always survive; replay of an applied batch is a
     no-op; the crash-between-write-and-append replay keeps the
@@ -300,11 +301,11 @@ def test_apply_afp_dedup_batch_loop(spark, tmp_path):
     from serverless_etl_bi_on_aws_spark.functions.wav import encode_wav_pcm16
     from serverless_etl_bi_on_aws_spark.operators.audio_dedup import (
         audio_neardup_pairs,
-        init_afp_index,
     )
+    from serverless_etl_bi_on_aws_spark.operators.hash_index import init_hash_index
     from serverless_etl_bi_on_aws_spark.sources.multimodal import MEDIA_STRUCT
     from serverless_etl_bi_on_aws_spark.streaming.ingest_dedup import (
-        apply_afp_dedup_batch,
+        apply_hash_dedup_batch,
     )
 
     def program(k, n=4000):
@@ -345,9 +346,9 @@ def test_apply_afp_dedup_batch_loop(spark, tmp_path):
     b1, b2 = mk(b1_rows), mk(b2_rows)
     idx = str(tmp_path / "afp_idx")
     clean = str(tmp_path / "clean")
-    init_afp_index(idx)
-    apply_afp_dedup_batch(spark, b1, idx, clean, "b0")
-    apply_afp_dedup_batch(spark, b2, idx, clean, "b1")
+    init_hash_index(idx, hasher="afp")
+    apply_hash_dedup_batch(spark, b1, idx, clean, "b0", 6)
+    apply_hash_dedup_batch(spark, b2, idx, clean, "b1", 6)
 
     got = {r.doc_id for r in spark.read.parquet(clean).select("doc_id").collect()}
     union = mk(b1_rows + b2_rows)
@@ -357,13 +358,13 @@ def test_apply_afp_dedup_batch_loop(spark, tmp_path):
     assert 10 not in got and 12 not in got and 13 in got and 14 in got
 
     n1 = spark.read.parquet(os.path.join(clean, "batch=b1")).count()
-    apply_afp_dedup_batch(spark, b2, idx, clean, "b1")  # full replay: no-op
+    apply_hash_dedup_batch(spark, b2, idx, clean, "b1", 6)  # full replay: no-op
     assert spark.read.parquet(os.path.join(clean, "batch=b1")).count() == n1
 
     # crash between survivors commit and index marker: survivors must
     # NOT be recomputed against the self-contaminated index
     os.remove(os.path.join(idx, "_applied", "b1"))
-    apply_afp_dedup_batch(spark, b2, idx, clean, "b1")
+    apply_hash_dedup_batch(spark, b2, idx, clean, "b1", 6)
     assert spark.read.parquet(os.path.join(clean, "batch=b1")).count() == n1
 
 

@@ -1,10 +1,10 @@
 """t2 correctness: every oracle-checkable query in plans/queries.py must
-match its DuckDB twin at sf0.01 — same row count, same column names, same
-values (order-insensitive, like the driver's hash compare)."""
+match its DuckDB twin at sf0.01 — same row count, same column names, no
+dtype drift, same values (order-insensitive, like the driver's hash
+compare). The comparator is tools/compare_oracle.py's, shared with the
+oracle sweep and the benchmark."""
 
 from __future__ import annotations
-
-import math
 
 import pytest
 
@@ -12,33 +12,13 @@ from serverless_etl_bi_on_aws_spark.plans.oracles import EXTRA_ORACLE_SQL, ORACL
 from serverless_etl_bi_on_aws_spark.plans.queries import EXTRA_QUERIES, QUERIES
 
 from tests.conftest import SF_CORRECT, SF_SMOKE
+from tools.compare_oracle import dtype_drift, rowset
 
 # the pytest gate covers the DRIVER surface and the consolidated
 # off-driver tier identically (round 7: the driver checks 50 entries;
 # EXTRA holds the twins whose window slot was consolidated away)
 ORACLE_SQL = {**ORACLE_SQL, **EXTRA_ORACLE_SQL}
 QUERIES = {**QUERIES, **EXTRA_QUERIES}
-
-
-def _canon(value):
-    """Canonicalize a cell for cross-engine comparison."""
-    if value is None:
-        return None
-    if isinstance(value, float):
-        if math.isnan(value):
-            return "nan"
-        # the queries round explicitly; this only collapses -0.0 vs 0.0
-        return value + 0.0
-    if hasattr(value, "isoformat"):  # date/datetime
-        return value.isoformat()
-    return value
-
-
-def _rowset(cols, rows):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted(
-        tuple(_canon(r[i]) for i in order) for r in rows
-    ), [cols[i] for i in order]
 
 
 # The multi-snapshot stream/takedown/index verify queries execute dozens
@@ -72,9 +52,12 @@ def test_query_matches_oracle(spark, duck, name):
     drows = rel.fetchall()
 
     assert sorted(scols) == sorted(dcols), f"{name}: column names differ"
+    stypes = [f.dataType.simpleString() for f in sdf.schema.fields]
+    drift = dtype_drift(scols, stypes, dcols, rel.types)
+    assert not drift, f"{name}: dtype drift {drift}"
     assert len(srows) == len(drows), f"{name}: row count {len(srows)} != {len(drows)}"
-    s_set, _ = _rowset(scols, [tuple(r) for r in srows])
-    d_set, _ = _rowset(dcols, drows)
+    s_set = rowset(scols, [tuple(r) for r in srows])
+    d_set = rowset(dcols, drows)
     mismatches = [
         (a, b) for a, b in zip(s_set, d_set) if a != b
     ]

@@ -73,7 +73,10 @@ def test_upsert_equals_full_rebuild(spark):
             for y in (1995, 1996, 1998)
             if os.path.exists(os.path.join(path, f"ship_year={y}"))
         }
+        mode_conf = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
         upsert_pricing_rollup(spark, path, delta)
+        # dynamic overwrite is a per-write option: the session conf stays
+        assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == mode_conf
 
         merged = spark.read.parquet(path)
         full = build_pricing_rollup(li)
@@ -200,7 +203,9 @@ def test_denorm_upsert_equals_full_rebuild(spark):
             .unionByName(mod1_li)
             .unionByName(li.filter(lkey == m2))
         )
+        mode_conf = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
         upsert_sales_denorm(spark, path, b1_orders, b1_li, part)
+        assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == mode_conf
         assert os.path.exists(os.path.join(path, "order_year=2099"))
         for y, mtime in pre.items():
             assert os.path.getmtime(os.path.join(path, f"order_year={y}")) == mtime
