@@ -12,8 +12,11 @@ and "event" tables is just ``df.join``.
 from __future__ import annotations
 
 import threading
+from contextlib import nullcontext
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from serverless_etl_bi_on_aws_spark.util import scoped_conf
 
 #: Every fixture table the driver generates (TESTDATA.md). The first seven are
 #: the transactional star schema (README.md:113-114's customer/orders/product
@@ -38,12 +41,13 @@ TABLES: tuple[str, ...] = (
 #: and schema across queries instead of re-reading footers per query build.
 _TABLE_CACHE: dict[tuple[int, str, str], DataFrame] = {}
 
-#: Serializes cache misses and every set/restore of the session-global
-#: ``nanosAsLong`` conf. Plans build on concurrent driver threads: without
-#: it, two cold loads of a ns-timestamp table interleave their set/unset,
-#: so one read runs with the conf already unset (PARQUET_TYPE_ILLEGAL) or
-#: the conf leaks as "true".
+#: Serializes cache misses: plans build on concurrent driver threads, and
+#: two cold loads of one table must share one frame. A cold load's
+#: ``nanosAsLong`` set/restore (``util.scoped_conf``) takes the conf lock
+#: inside this one; the lock order is always this lock, then the conf lock.
 _LOAD_LOCK = threading.Lock()
+
+_NANOS_KEY = "spark.sql.legacy.parquet.nanosAsLong"
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -91,16 +95,8 @@ def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFra
     # time (schema conversion), so it is restored immediately: a later raw
     # spark.read.parquet of nanos data in the same session fails loudly
     # instead of silently yielding bigint columns.
-    nanos_key = "spark.sql.legacy.parquet.nanosAsLong"
-    prior = spark.conf.get(nanos_key, None)
-    spark.conf.set(nanos_key, "true")
-    try:
+    with scoped_conf(spark, _NANOS_KEY, "true"):
         df = spark.read.parquet(path)
-    finally:
-        if prior is None:
-            spark.conf.unset(nanos_key)
-        else:
-            spark.conf.set(nanos_key, prior)
     for col in ns_cols:
         df = df.withColumn(col, F.timestamp_micros(F.expr(f"`{col}` div 1000")))
     return _normalize_event_time(df)
@@ -155,23 +151,12 @@ def register_as_catalog_tables(
     reads don't need it); such columns surface as epoch-nanos bigint in this
     raw-catalog path — the curated path (:func:`load_table`) rebuilds them
     as timestamps."""
-    nanos_key = "spark.sql.legacy.parquet.nanosAsLong"
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {database}")
     for name in tables:
         path = f"{sf_dir}/{name}.parquet"
-        needs_nanos = bool(_ns_timestamp_cols(path))
-        with _LOAD_LOCK:
-            prior = spark.conf.get(nanos_key, None) if needs_nanos else None
-            if needs_nanos:
-                spark.conf.set(nanos_key, "true")
-            try:
-                spark.sql(
-                    f"CREATE TABLE IF NOT EXISTS {database}.{name} USING parquet "
-                    f"LOCATION '{path}'"
-                )
-            finally:
-                if needs_nanos:
-                    if prior is None:
-                        spark.conf.unset(nanos_key)
-                    else:
-                        spark.conf.set(nanos_key, prior)
+        nanos = _ns_timestamp_cols(path)
+        with scoped_conf(spark, _NANOS_KEY, "true") if nanos else nullcontext():
+            spark.sql(
+                f"CREATE TABLE IF NOT EXISTS {database}.{name} USING parquet "
+                f"LOCATION '{path}'"
+            )

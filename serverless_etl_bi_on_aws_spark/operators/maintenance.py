@@ -21,10 +21,11 @@ micro-batch of streaming/incremental.py is a new file):
     once; pytest checks the actual parquet footer stats, not just the
     plan.
 
-Both rewrites are write-new-then-swap (same atomicity protocol as
-streaming/incremental.py). At 100 TB run them per partition (compact
-only partitions whose file count drifted — the manifest/file listing
-tells you which), never the whole table.
+Both rewrites are write-new-then-swap: the new copy is written aside and
+swapped in by two renames (:func:`_swap_in`), which put the old tree back
+if the second one fails. At 100 TB run them per partition (compact only
+partitions whose file count drifted — the manifest/file listing tells
+you which), never the whole table.
 """
 
 from __future__ import annotations
@@ -36,6 +37,8 @@ import uuid
 
 from pyspark.sql import SparkSession, functions as F
 
+from serverless_etl_bi_on_aws_spark.util import scoped_conf
+
 
 def _dir_bytes(path: str) -> int:
     total = 0
@@ -44,6 +47,21 @@ def _dir_bytes(path: str) -> int:
             if not f.startswith(("_", ".")):
                 total += os.path.getsize(os.path.join(root, f))
     return total
+
+
+def _swap_in(tmp: str, path: str) -> None:
+    """Replace directory ``path`` with ``tmp``: move ``path`` aside, move
+    ``tmp`` in, drop the old tree. If the second rename fails, the old
+    tree goes back to ``path`` before the error propagates."""
+    old = f"{path}.__old__{uuid.uuid4().hex[:8]}"
+    os.rename(path, old)
+    try:
+        os.rename(tmp, path)
+    except OSError:
+        os.rename(old, path)
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    shutil.rmtree(old, ignore_errors=True)
 
 
 def zorder_key(
@@ -209,20 +227,11 @@ def compact_parquet(
     # INT96 would silently destroy stats-based skipping on every time
     # column, the exact thing this module exists to create. Rewrites
     # always emit INT64 micros (what Iceberg/Delta write).
-    ts_conf = "spark.sql.parquet.outputTimestampType"
-    prev_ts = spark.conf.get(ts_conf, None)
-    spark.conf.set(ts_conf, "TIMESTAMP_MICROS")
-    try:
+    with scoped_conf(
+        spark, "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
+    ):
         writer.parquet(tmp)
-    finally:
-        if prev_ts is None:
-            spark.conf.unset(ts_conf)
-        else:
-            spark.conf.set(ts_conf, prev_ts)
-    old = f"{path}.__old__{uuid.uuid4().hex[:8]}"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
+    _swap_in(tmp, path)
     return sum(
         1
         for f in os.listdir(path)
@@ -246,10 +255,7 @@ def rewrite_without_keys(spark: SparkSession, path: str, keys, key_col: str) -> 
         return 0
     tmp = f"{path}.__new__{uuid.uuid4().hex[:8]}"
     kept.write.mode("overwrite").parquet(tmp)
-    old = f"{path}.__old__{uuid.uuid4().hex[:8]}"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
+    _swap_in(tmp, path)
     return before - after
 
 

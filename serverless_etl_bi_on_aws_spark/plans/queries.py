@@ -6561,8 +6561,8 @@ def q124_rolling_activity_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q125_generation_merge_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The EP1 streaming staging merge over the GENERATION+POINTER store
     (round 17, verdict ask #1 — streaming/incremental.
-    start_incremental_merge(generations=True), r16's rename-free
-    convergence, until now pytest-only): landing files drain through
+    start_incremental_merge, r16's rename-free convergence, until now
+    pytest-only): landing files drain through
     checkpointed foreachBatch and each micro-batch commits a new
     generation via the pointer PUT — the 100 TB object-store shape of
     q9's swap merge. Value-oracled with q9's own arithmetic:
@@ -6577,8 +6577,8 @@ def q125_generation_merge_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
         pre-merge backfill exactly (keep_n=2 retention);
       * replay: restarting the drained stream against its checkpoint
         re-delivers nothing — generation seq and counts unchanged (the
-        exactly-once-per-file property the in-place swap also relies
-        on, now visible as "no empty commit").
+        exactly-once-per-file property, visible as "no empty
+        commit").
 
     Scale shape: each micro-batch pays one anti-join + union write of
     the target (broadcast staging keys under the merge's size gate);
@@ -6630,7 +6630,6 @@ def q125_generation_merge_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
                 keys=["o_orderkey"],
                 schema=base.schema,
                 checkpoint_dir=ckpt,
-                generations=True,
             )
             q.awaitTermination()
 

@@ -5,9 +5,10 @@ The reference's merge protocol is staging-table + delete-matching + insert
 first-class equivalent is a lakehouse table format (Delta/Iceberg) whose
 ``MERGE INTO`` is atomic via the transaction log. This container image
 ships neither the delta-spark package nor its jars, so the engine gates the
-format behind an import-try and falls back to the engine's own
-write-new-then-swap parquet merge (streaming/incremental.py) — same
-delete-matching semantics, directory-swap atomicity instead of a log.
+format behind an import-try and falls back to the engine's own parquet
+merge into a generation store (streaming/incremental.py) — same
+delete-matching semantics, a pointer-marker commit instead of a log. Read
+a fallback target with ``read_generation_target``.
 
 Nothing else in the engine imports delta; this module is the single seam
 where a deployment with the jars present upgrades the merge path.
@@ -21,7 +22,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 
 from serverless_etl_bi_on_aws_spark.streaming.incremental import (
-    merge_into_parquet_target,
+    merge_into_generation_target,
 )
 
 
@@ -43,7 +44,7 @@ def merge_upsert_target(
 
     Uses Delta ``MERGE INTO`` (whenMatched update / whenNotMatched insert)
     when the format is available; otherwise the engine's idempotent
-    anti-join + union + swap parquet merge. Returns which path ran
+    anti-join + union merge into a parquet generation store. Returns which path ran
     ("delta" | "parquet") so callers/tests can see the gate's decision.
     """
     if delta_available():  # pragma: no cover - jars absent in this image
@@ -63,5 +64,5 @@ def merge_upsert_target(
         )
         return "delta"
 
-    merge_into_parquet_target(spark, staging, target_path, keys)
+    merge_into_generation_target(spark, staging, target_path, keys)
     return "parquet"

@@ -2,9 +2,9 @@
 Data Pipeline + Lambda + Glue orchestration (SURVEY.md §2.9 ST1-ST5)."""
 
 from serverless_etl_bi_on_aws_spark.streaming.incremental import (  # noqa: F401
-    backfill,
+    merge_into_generation_target,
+    read_generation_target,
     start_incremental_merge,
-    merge_into_parquet_target,
     start_denorm_maintenance,
     start_rollup_maintenance,
 )

@@ -14,18 +14,21 @@ extracting the whole window hourly and relying on the key-merge to dedup;
 the same property holds here because the merge is idempotent on keys.
 
 Target-table atomicity: with no transaction-log format in the image (Delta/
-Iceberg jars absent), the target is a parquet directory swapped atomically
-via rename — the classic write-new-then-swap protocol. At 100 TB deploy the
-identical ``foreachBatch`` body over Delta's ``MERGE INTO`` (or pair
-``merge_upsert`` with dynamic partition overwrite) instead of a full-dir
-swap; the operator algebra is unchanged.
+Iceberg jars absent), the target is an ``operators/snapshot.py`` generation
+store. Each merge writes the whole next table under a never-before-visible
+generation name and publishes it with one pointer-marker commit, so a
+reader sees the old table or the new one, and a crash at any point leaves
+the old generation live for the replay. This module owns the ``<gen>/data``
+layout: the cell fold (streaming/cells.py) and the SCD2 fold
+(streaming/scd_stream.py) publish through the same writer, and
+:func:`read_generation_target` is the one reader. At 100 TB run the
+identical ``foreachBatch`` body over Delta's ``MERGE INTO`` (new files plus
+a log commit: the same shape); the operator algebra is unchanged.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -33,46 +36,41 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 from serverless_etl_bi_on_aws_spark.operators.merge import merge_upsert
+from serverless_etl_bi_on_aws_spark.operators.snapshot import (
+    GEN_POINTER,
+    begin_generation,
+    commit_generation,
+    resolve_generation,
+)
 from serverless_etl_bi_on_aws_spark.streaming.launch import (
     read_landing_zone,
     start_foreach_batch,
 )
+from serverless_etl_bi_on_aws_spark.util import read_marker, write_marker
 
 
-def backfill(source_df: DataFrame, target_path: str) -> None:
-    """ST1 (README.md:55, 141): one-time historical load — plain overwrite
-    write of the full extract."""
-    source_df.write.mode("overwrite").parquet(target_path)
+def _live_data(root: str) -> str | None:
+    """The live generation's table directory, or None before the first
+    commit."""
+    cur = resolve_generation(root)
+    return os.path.join(cur, "data") if cur else None
 
 
-def merge_into_parquet_target(
-    spark: SparkSession,
-    staging: DataFrame,
-    target_path: str,
-    keys: Sequence[str],
-    schema_evolution: str = "error",
+def _publish_generation(
+    root: str, df: DataFrame, markers: dict[str, dict] | None = None
 ) -> None:
-    """ST4 (README.md:67-70): the 4-step Redshift staging merge against a
-    parquet target directory, with write-new-then-swap atomicity.
-
-    Idempotent: re-applying the same staging batch yields a byte-identical
-    table (anti-join removes exactly the staged keys each time).
-    ``schema_evolution`` is merge_upsert's drift policy ("error" |
-    "evolve" | "target") — with "evolve", a source batch that gained a
-    column widens the target on this merge (the crawler-re-run semantic,
-    README.md:83/127), and one that lost a column null-fills it.
-    """
-    if not os.path.exists(target_path):
-        staging.write.mode("overwrite").parquet(target_path)
-        return
-    final = spark.read.parquet(target_path)
-    merged = merge_upsert(final, staging, keys, schema_evolution=schema_evolution)
-    tmp = f"{target_path}.__new__{uuid.uuid4().hex[:8]}"
-    merged.write.mode("overwrite").parquet(tmp)
-    old = f"{target_path}.__old__{uuid.uuid4().hex[:8]}"
-    os.rename(target_path, old)
-    os.rename(tmp, target_path)
-    shutil.rmtree(old, ignore_errors=True)
+    """The one writer of a maintained whole-table target: begin a
+    generation, write ``df`` to ``<stage>/data``, write each marker file
+    inside ``data`` (so it commits with the rows), then commit the
+    pointer. A crash before the pointer write leaves the previous
+    generation live and the stage as garbage for the next commit's
+    sweep."""
+    gen, stage = begin_generation(root)
+    data_dir = os.path.join(stage, "data")
+    df.write.mode("overwrite").parquet(data_dir)
+    for name, payload in (markers or {}).items():
+        write_marker(os.path.join(data_dir, name), payload)
+    commit_generation(root, gen, stage)
 
 
 def merge_into_generation_target(
@@ -81,68 +79,44 @@ def merge_into_generation_target(
     root: str,
     keys: Sequence[str],
     schema_evolution: str = "error",
-    keep_n: int = 2,
 ) -> None:
-    """ST4 over the GENERATION+POINTER store (round 16 — the SURVEY §7.1
-    convergence): the identical 4-step staging merge, but the target is
-    an ``operators/snapshot.py`` generation store instead of an
-    in-place-swapped directory. The merged table writes under a
-    never-before-visible generation name and the COMMIT is the KB
-    pointer marker through ``util.write_marker`` — the one pattern of
-    :func:`merge_into_parquet_target` that does NOT translate to an
-    object store (in-place rename) is gone; this is the shape the swap
-    path converges on at 100 TB (and what Delta/Iceberg MERGE INTO do
-    under the hood: new files + a log/pointer commit).
+    """ST4 (README.md:67-70): the 4-step Redshift staging merge against a
+    generation-store target. The first commit onto an empty ``root`` is
+    the ST1 backfill (README.md:55, 141); every later one publishes
+    ``merge_upsert(live, staging)`` as the next generation.
 
-    Extra properties the swap path cannot give:
-      * readers that resolved before the merge keep reading their
-        (retained, ``keep_n``) generation — no read-under-swap window;
-      * a crash anywhere before the pointer write leaves the old
-        generation live and the stage as garbage for the next commit's
-        sweep — never a half-table;
-      * time travel across the last ``keep_n`` merges for free.
+    Idempotent: re-applying the same staging batch commits a
+    content-identical generation (the anti-join removes exactly the
+    staged keys each time), so a replay after a crash anywhere in the
+    publish converges. ``schema_evolution`` is merge_upsert's drift
+    policy ("error" | "evolve" | "target") — with "evolve", a source
+    batch that gained a column widens the target on this merge (the
+    crawler-re-run semantic, README.md:83/127), and one that lost a
+    column null-fills it.
 
-    Read the live table with :func:`read_generation_target`. Idempotent
-    like the swap variant: re-merging the same staging batch commits a
-    content-identical new generation."""
-    from serverless_etl_bi_on_aws_spark.operators.snapshot import (
-        begin_generation,
-        commit_generation,
-        resolve_generation,
-    )
-
-    cur = resolve_generation(root)
-    gen, stage = begin_generation(root)
-    data_dir = os.path.join(stage, "data")
-    if cur is None:
-        staging.write.mode("overwrite").parquet(data_dir)
-    else:
-        final = spark.read.parquet(os.path.join(cur, "data"))
-        merged = merge_upsert(
-            final, staging, keys, schema_evolution=schema_evolution
+    Readers that resolved before the merge keep reading their retained
+    generation, and the previous table stays readable through
+    :func:`read_generation_target` ``back=1``."""
+    live = _live_data(root)
+    if live is not None:
+        staging = merge_upsert(
+            spark.read.parquet(live), staging, keys,
+            schema_evolution=schema_evolution,
         )
-        merged.write.mode("overwrite").parquet(data_dir)
-    commit_generation(root, gen, stage, keep_n=keep_n)
+    _publish_generation(root, staging)
 
 
 def read_generation_target(
     spark: SparkSession, root: str, back: int = 0
 ) -> DataFrame:
-    """Reader half of :func:`merge_into_generation_target`: the live
-    generation's table, resolved through the pointer marker.
+    """The reader of every generation-store target this package
+    maintains (merge, cell fold, SCD2): the live generation's table,
+    resolved through the pointer marker.
 
-    ``back=k`` (round 17) time-travels k commits: the pointer marker
-    carries the history of previously-live generations, and the newest
-    ``keep_n`` of them survive GC — so ``back=1`` under the default
-    ``keep_n=2`` reads the table exactly as it was before the last
-    merge (the free time-travel property the in-place swap cannot
-    give). Raises when ``back`` exceeds the retained history."""
-    from serverless_etl_bi_on_aws_spark.operators.snapshot import (
-        GEN_POINTER,
-        resolve_generation,
-    )
-    from serverless_etl_bi_on_aws_spark.util import read_marker
-
+    ``back=k`` time-travels k commits: the pointer marker carries the
+    history of previously-live generations, and the newest two survive
+    GC — so ``back=1`` reads the table exactly as it was before the
+    last commit. Raises when ``back`` exceeds the retained history."""
     if back < 0:
         raise ValueError(f"back must be >= 0, got {back}")
     if back:
@@ -156,10 +130,10 @@ def read_generation_target(
         return spark.read.parquet(
             os.path.join(root, history[back - 1], "data")
         )
-    cur = resolve_generation(root)
-    if cur is None:
+    live = _live_data(root)
+    if live is None:
         raise FileNotFoundError(f"no committed generation under {root}")
-    return spark.read.parquet(os.path.join(cur, "data"))
+    return spark.read.parquet(live)
 
 
 def start_incremental_merge(
@@ -173,17 +147,17 @@ def start_incremental_merge(
     processing_time: str = "1 hour",
     fmt: str = "parquet",
     schema_evolution: str = "error",
-    generations: bool = False,
+    generations: bool = True,
 ) -> StreamingQuery:
     """ST2+ST3+ST4 in one query: watch ``source_dir`` for new files (the
     Lambda-trigger analog — checkpointed, each file processed exactly once,
     README.md:128's recompute-avoidance for free) and merge every
-    micro-batch into the target keyed on ``keys``.
+    micro-batch into the generation-store target at ``target_path`` with
+    :func:`merge_into_generation_target` (read it with
+    :func:`read_generation_target`).
 
-    ``generations=True`` (round 16) routes each micro-batch through
-    :func:`merge_into_generation_target` — ``target_path`` becomes a
-    generation-store root (read via :func:`read_generation_target`),
-    retiring the in-place directory swap: the object-store-correct loop.
+    ``generations`` only accepts ``True``: the in-place rename-swap merge
+    it used to select is gone, and ``False`` raises ``ValueError``.
 
     ``available_now=True`` = drain-everything-then-stop (the hourly batch
     cadence, ST2, run from any scheduler); ``False`` = stay up with a
@@ -195,18 +169,17 @@ def start_incremental_merge(
     widened ``schema`` and ``schema_evolution="evolve"``; the first merged
     batch then widens the target (pytest-pinned in test_merge_streaming).
     """
+    if not generations:
+        raise ValueError(
+            "start_incremental_merge(generations=False): the in-place "
+            "rename-swap merge was removed; targets are generation stores"
+        )
 
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if generations:
-            merge_into_generation_target(
-                spark, batch_df, target_path, keys,
-                schema_evolution=schema_evolution,
-            )
-        else:
-            merge_into_parquet_target(
-                spark, batch_df, target_path, keys,
-                schema_evolution=schema_evolution,
-            )
+        merge_into_generation_target(
+            spark, batch_df, target_path, keys,
+            schema_evolution=schema_evolution,
+        )
 
     return start_foreach_batch(
         read_landing_zone(spark, source_dir, schema, fmt),
@@ -265,20 +238,15 @@ def start_rollup_maintenance(
     generation is retained through one further commit so in-flight
     readers finish on a complete immutable tree. A pre-round-12
     in-place rollup is migrated in as generation 1 on its first batch."""
-    import os
-
     from pyspark.sql import functions as F
 
     from serverless_etl_bi_on_aws_spark.operators.rollup import (
         build_pricing_rollup,
         upsert_pricing_rollup,
     )
-    from serverless_etl_bi_on_aws_spark.operators.snapshot import (
-        begin_generation,
-        commit_generation,
-        link_tree,
-        resolve_generation,
-    )
+    from serverless_etl_bi_on_aws_spark.operators.snapshot import link_tree
+    # util's write_marker is looked up per call so a crash can be
+    # injected before the _applied markers (test_merge_streaming)
     from serverless_etl_bi_on_aws_spark.util import marker_exists, write_marker
 
     fid = _rollup_file_id
@@ -337,8 +305,6 @@ def rollup_data_path(rollup_path: str) -> str:
     ``rollup_path`` itself for a pre-round-12 in-place layout. Always
     read the maintained rollup through this — the root dir holds the
     pointer and generation dirs, not one parquet table."""
-    from serverless_etl_bi_on_aws_spark.operators.snapshot import resolve_generation
-
     return resolve_generation(rollup_path) or rollup_path
 
 
@@ -367,10 +333,9 @@ def rollup_integrity_status(rollup_path: str) -> dict:
     dirty rollup is a rebuild (it is derived state). Driver-side JSON
     reads only — no Spark job."""
     import glob
-    import os
 
     from serverless_etl_bi_on_aws_spark.operators.snapshot import stale_stages
-    from serverless_etl_bi_on_aws_spark.util import marker_exists, read_marker
+    from serverless_etl_bi_on_aws_spark.util import marker_exists
 
     live = rollup_data_path(rollup_path)
     suspect: list[str] = []

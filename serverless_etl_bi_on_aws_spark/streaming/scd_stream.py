@@ -14,15 +14,13 @@ checkpoint guarantees each file applies once.
 
 Scale notes: the per-ts driver loop is bounded by the number of change
 waves inside one micro-batch (normally 1); each application joins only
-the OPEN slice. Target atomicity is the write-new-then-swap protocol
-shared with streaming/incremental.py and streaming/cells.py.
+the OPEN slice. The dimension is an ``operators/snapshot.py`` generation
+store published through streaming/incremental.py's writer, shared with the
+incremental merge and the cell fold; read it with ``read_generation_target``.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
-import uuid
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -30,49 +28,14 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 from serverless_etl_bi_on_aws_spark.operators.scd import scd2_apply, scd2_init
+from serverless_etl_bi_on_aws_spark.streaming.incremental import (
+    _live_data,
+    _publish_generation,
+)
 from serverless_etl_bi_on_aws_spark.streaming.launch import (
     read_landing_zone,
     start_foreach_batch,
 )
-
-
-def _swap_write(df: DataFrame, path: str) -> None:
-    tmp = f"{path}.__new__{uuid.uuid4().hex[:8]}"
-    df.write.mode("overwrite").parquet(tmp)
-    if os.path.exists(path):
-        old = f"{path}.__old__{uuid.uuid4().hex[:8]}"
-        os.rename(path, old)
-        os.rename(tmp, path)
-        shutil.rmtree(old, ignore_errors=True)
-    else:
-        os.rename(tmp, path)
-
-
-def apply_scd2_batch(
-    spark: SparkSession,
-    batch_df: DataFrame,
-    dim_path: str,
-    keys: Sequence[str],
-    ts_col: str,
-) -> None:
-    """Fold one update batch into the persisted dimension, one
-    ``scd2_apply`` per distinct effective timestamp, ascending."""
-    ts_values = [
-        r[0]
-        for r in batch_df.select(ts_col).distinct().orderBy(ts_col).collect()
-    ]
-    if not ts_values:
-        return
-    if os.path.exists(dim_path):
-        dim = spark.read.parquet(dim_path)
-    else:
-        first = batch_df.filter(F.col(ts_col) == ts_values[0]).drop(ts_col)
-        dim = scd2_init(first, F.lit(ts_values[0]))
-        ts_values = ts_values[1:]
-    for ts in ts_values:
-        wave = batch_df.filter(F.col(ts_col) == ts).drop(ts_col)
-        dim = scd2_apply(dim, wave, keys, F.lit(ts)).localCheckpoint(eager=True)
-    _swap_write(dim, dim_path)
 
 
 def apply_scd2_batch_generations(
@@ -81,36 +44,25 @@ def apply_scd2_batch_generations(
     root: str,
     keys: Sequence[str],
     ts_col: str,
-    keep_n: int = 2,
 ) -> None:
-    """The generation-store twin of :func:`apply_scd2_batch` (round 16
-    — SURVEY §7.1 convergence, same shape as the incremental-merge and
-    cell-fold twins): the updated dimension writes under a
-    never-before-visible generation name and commits via the pointer
-    marker — rename-free at the commit layer (pointer PUT). With an
-    object-store backend installed the whole protocol is rename-free:
-    begin_generation stages directly under the final name (round 17);
-    in POSIX mode staging uses one fresh-name (never in-place) rename
-    as the fast path. Replay
-    safety needs no epoch mark here: ``scd2_apply`` is key-idempotent
-    (a re-applied wave at the same effective ts is a no-op), the same
-    property the swap path relies on. Read the live dimension with
-    :func:`read_scd2_generation`."""
-    from serverless_etl_bi_on_aws_spark.operators.snapshot import (
-        begin_generation,
-        commit_generation,
-        resolve_generation,
-    )
+    """Fold one update batch into the persisted dimension, one
+    ``scd2_apply`` per distinct effective timestamp, ascending, and
+    publish the result as the next generation of ``root``. The first
+    wave ever seen bootstraps the dimension (scd2_init).
 
+    Replay safety needs no epoch mark here: ``scd2_apply`` is
+    key-idempotent (a re-applied wave at the same effective ts is a
+    no-op), and a crash before the pointer commit leaves the previous
+    dimension live."""
     ts_values = [
         r[0]
         for r in batch_df.select(ts_col).distinct().orderBy(ts_col).collect()
     ]
     if not ts_values:
         return
-    cur = resolve_generation(root)
-    if cur is not None:
-        dim = spark.read.parquet(os.path.join(cur, "data"))
+    live = _live_data(root)
+    if live is not None:
+        dim = spark.read.parquet(live)
     else:
         first = batch_df.filter(F.col(ts_col) == ts_values[0]).drop(ts_col)
         dim = scd2_init(first, F.lit(ts_values[0]))
@@ -118,21 +70,7 @@ def apply_scd2_batch_generations(
     for ts in ts_values:
         wave = batch_df.filter(F.col(ts_col) == ts).drop(ts_col)
         dim = scd2_apply(dim, wave, keys, F.lit(ts)).localCheckpoint(eager=True)
-    gen, stage = begin_generation(root)
-    dim.write.mode("overwrite").parquet(os.path.join(stage, "data"))
-    commit_generation(root, gen, stage, keep_n=keep_n)
-
-
-def read_scd2_generation(spark: SparkSession, root: str) -> DataFrame:
-    """Live dimension of a generation-backed SCD2 target."""
-    from serverless_etl_bi_on_aws_spark.operators.snapshot import (
-        resolve_generation,
-    )
-
-    cur = resolve_generation(root)
-    if cur is None:
-        raise FileNotFoundError(f"no committed dimension generation under {root}")
-    return spark.read.parquet(os.path.join(cur, "data"))
+    _publish_generation(root, dim)
 
 
 def start_scd2_maintenance(
@@ -145,21 +83,13 @@ def start_scd2_maintenance(
     ts_col: str = "effective_ts",
     available_now: bool = True,
     processing_time: str = "1 hour",
-    generations: bool = False,
 ) -> StreamingQuery:
     """Watch ``source_dir`` for update files (rows: keys + attrs +
-    ``ts_col``) and keep the SCD2 dimension at ``dim_path`` current.
-    The FIRST wave ever seen bootstraps the dimension (scd2_init).
-    ``generations=True`` (round 16) folds through
-    :func:`apply_scd2_batch_generations` — ``dim_path`` becomes a
-    generation-store root read via :func:`read_scd2_generation`, the
-    rename-free object-store shape."""
+    ``ts_col``) and keep the SCD2 dimension in the generation store at
+    ``dim_path`` current through :func:`apply_scd2_batch_generations`."""
 
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if generations:
-            apply_scd2_batch_generations(spark, batch_df, dim_path, keys, ts_col)
-        else:
-            apply_scd2_batch(spark, batch_df, dim_path, keys, ts_col)
+        apply_scd2_batch_generations(spark, batch_df, dim_path, keys, ts_col)
 
     return start_foreach_batch(
         read_landing_zone(spark, source_dir, schema),

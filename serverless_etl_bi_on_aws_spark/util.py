@@ -4,7 +4,9 @@ from __future__ import annotations
 
 import hashlib
 import os
+import threading
 from collections.abc import Callable
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 
@@ -75,6 +77,30 @@ def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     return df
 
 
+#: Held while any :func:`scoped_conf` block runs: session conf is global
+#: to the session, and plans build on concurrent driver threads.
+_CONF_LOCK = threading.RLock()
+
+
+@contextmanager
+def scoped_conf(spark, key: str, value: str):
+    """Set the session conf ``key`` to ``value`` for the block, then
+    restore the prior value (unset it if there was none). For the confs
+    Spark has no per-read/per-write option for. The whole block holds
+    one module lock, so two threads never interleave their set and
+    restore. Callers that also take their own lock take it first."""
+    with _CONF_LOCK:
+        prior = spark.conf.get(key, None)
+        spark.conf.set(key, value)
+        try:
+            yield
+        finally:
+            if prior is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, prior)
+
+
 #: The installed object-store backend, or None for the POSIX default.
 #: :func:`commit_file` (overwrite PUT) and :func:`create_exclusive_marker`
 #: (conditional PUT) are the engine's only two single-object commit
@@ -122,8 +148,6 @@ class FakeObjectStoreBackend:
     the seam was actually exercised."""
 
     def __init__(self) -> None:
-        import threading
-
         self._mutex = threading.Lock()
         self.puts = 0
         self.cas_puts = 0
@@ -301,10 +325,9 @@ def writer_lease(root: str, owner: str = "writer", stale_after_s: float | None =
     succeed (the window is the remove/create gap); on an object store
     the generation-match precondition closes even that. Choose
     ``stale_after_s`` >> the batch cadence, never comparable to it."""
-    import contextlib
     import time
 
-    @contextlib.contextmanager
+    @contextmanager
     def _lease():
         lock = lease_lock_path(root)
         payload = {"owner": owner, "pid": os.getpid(), "acquired_unix": time.time()}
@@ -372,10 +395,9 @@ def writer_lease_with_retry(
     throw()")``, masking the real error (round-11 ADVICE). The lease is
     now entered in a retry loop BEFORE the single yield; a body
     exception propagates untouched (after the lock is released)."""
-    import contextlib
     import time
 
-    @contextlib.contextmanager
+    @contextmanager
     def _retrying():
         deadline = time.monotonic() + float(wait_s)
         delay = float(poll_s)

@@ -157,7 +157,11 @@ def test_delta_gate_fallback_merge(spark, tmp_path):
     )
     which = delta_gate.merge_upsert_target(spark, staged, target, ["k"])
     assert which == "parquet"
-    rows = {(r.k, r.v) for r in spark.read.parquet(target).collect()}
+    from serverless_etl_bi_on_aws_spark.streaming.incremental import (
+        read_generation_target,
+    )
+
+    rows = {(r.k, r.v) for r in read_generation_target(spark, target).collect()}
     assert rows == {(i, "old") for i in range(5)} | {(i, "new") for i in range(5, 15)}
 
 

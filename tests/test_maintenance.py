@@ -380,3 +380,64 @@ def test_zorder_working_columns_never_clobber_input(spark, tmp_path):
     assert a == b
     with _pytest.raises(ValueError, match="already exists"):
         zorder_key(spark, df, ["id", "k"], out_col="_zkey")
+
+
+def test_compaction_writes_int64_timestamps_and_restores_conf(spark, tmp_path):
+    """compact_parquet rewrites timestamps as INT64 micros (INT96 carries
+    no min/max stats) through a scoped session conf: with the conf unset
+    and with it preset to INT96, the session conf is unchanged after the
+    compaction and every rewritten footer stores ``ts`` as INT64."""
+    import datetime as dt
+
+    import pyarrow.parquet as pq
+
+    key = "spark.sql.parquet.outputTimestampType"
+    prior = spark.conf.get(key, None)
+    df = spark.createDataFrame(
+        [(i, dt.datetime(2024, 1, 1 + i % 28, i % 24)) for i in range(200)],
+        ["id", "ts"],
+    )
+    try:
+        for preset in (None, "INT96"):
+            if preset is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, preset)
+            path = str(tmp_path / f"ts_{preset}")
+            df.repartition(4).write.mode("overwrite").parquet(path)
+            compact_parquet(spark, path, target_file_bytes=1 << 30)
+            assert spark.conf.get(key, None) == preset
+            files = [f for f in os.listdir(path) if f.endswith(".parquet")]
+            assert files
+            for f in files:
+                schema = pq.ParquetFile(os.path.join(path, f)).schema
+                assert schema.column(schema.names.index("ts")).physical_type == "INT64"
+            assert spark.read.parquet(path).count() == 200
+    finally:
+        if prior is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prior)
+
+
+def test_compaction_swap_failure_restores_original(spark, tmp_path, monkeypatch):
+    """If moving the compacted copy into place fails, the original table
+    goes back to ``path`` (all rows still readable), the compacted copy
+    is dropped, and the error propagates."""
+    import pytest
+
+    path = str(tmp_path / "t")
+    spark.range(100).repartition(5).write.parquet(path)
+    real_rename = os.rename
+
+    def rename(src, dst):
+        if ".__new__" in str(src):
+            raise OSError("injected rename failure")
+        return real_rename(src, dst)
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "rename", rename)
+        with pytest.raises(OSError, match="injected rename failure"):
+            compact_parquet(spark, path, target_file_bytes=1 << 30)
+    assert sorted(r.id for r in spark.read.parquet(path).collect()) == list(range(100))
+    assert sorted(os.listdir(tmp_path)) == ["t"]

@@ -4,6 +4,8 @@ merge-upsert correctness + idempotence, the streaming file-source merge
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from serverless_etl_bi_on_aws_spark.catalog import load_table
@@ -11,8 +13,8 @@ from serverless_etl_bi_on_aws_spark.operators.merge import merge_upsert
 from serverless_etl_bi_on_aws_spark.streaming.funnel import stream_funnel_window_counts
 from serverless_etl_bi_on_aws_spark.plans.queries import QUERIES
 from serverless_etl_bi_on_aws_spark.streaming.incremental import (
-    backfill,
-    merge_into_parquet_target,
+    merge_into_generation_target,
+    read_generation_target,
     start_incremental_merge,
 )
 
@@ -20,6 +22,44 @@ from tests.conftest import SF_SMOKE
 
 CUT_HIST = "2001-05-01"
 CUT_STAGE = "2001-02-01"  # overlaps history by 3 months (README.md:60 window)
+
+
+def crash_replay_each_rename(monkeypatch, setup, publish, check) -> int:
+    """Crash one publish at each of its renames in turn, then replay it.
+
+    For k = 1, 2, ...: ``setup(k)`` builds a fresh target, ``publish(k)``
+    runs with the k-th ``os.rename``/``os.replace`` call raising, the
+    same ``publish(k)`` runs again with the real calls, and ``check(k)``
+    asserts the result. Stops at the first k the publish never reaches
+    and returns the number of crash points exercised."""
+    real = {"rename": os.rename, "replace": os.replace}
+    k = 1
+    while True:
+        setup(k)
+        calls = [0]
+
+        def failing(name):
+            def call(*args, **kwargs):
+                calls[0] += 1
+                if calls[0] == k:
+                    raise OSError(f"injected crash at rename {k}")
+                return real[name](*args, **kwargs)
+
+            return call
+
+        with monkeypatch.context() as m:
+            m.setattr(os, "rename", failing("rename"))
+            m.setattr(os, "replace", failing("replace"))
+            try:
+                publish(k)
+            except Exception as e:  # noqa: BLE001 - streams wrap the OSError
+                assert f"injected crash at rename {k}" in str(e), e
+            else:
+                assert calls[0] < k
+                return k - 1
+        publish(k)
+        check(k)
+        k += 1
 
 
 def _split_orders(spark):
@@ -58,17 +98,13 @@ def test_merge_upsert_idempotent(spark):
 def test_parquet_target_merge_roundtrip(spark, tmp_path):
     target = str(tmp_path / "dwh_orders")
     _, hist, stage = _split_orders(spark)
-    backfill(hist, target)
-    merge_into_parquet_target(spark, stage, target, ["o_orderkey"])
-    # materialize before the next merge: the swap protocol replaces the
-    # files underneath, so a lazy plan over the old listing would die with
-    # FILE_NOT_EXIST (exactly why production pairs this with a snapshotting
-    # table format / partition overwrite — documented in incremental.py)
-    after = sorted(map(tuple, spark.read.parquet(target).collect()))
+    merge_into_generation_target(spark, hist, target, ["o_orderkey"])  # backfill
+    merge_into_generation_target(spark, stage, target, ["o_orderkey"])
+    after = sorted(map(tuple, read_generation_target(spark, target).collect()))
     assert len(after) == load_table(spark, SF_SMOKE, "orders").count()
     # replay the same staging batch: identical table (ST4 idempotence)
-    merge_into_parquet_target(spark, stage, target, ["o_orderkey"])
-    again = sorted(map(tuple, spark.read.parquet(target).collect()))
+    merge_into_generation_target(spark, stage, target, ["o_orderkey"])
+    again = sorted(map(tuple, read_generation_target(spark, target).collect()))
     assert after == again
 
 
@@ -114,11 +150,11 @@ def test_streaming_file_merge_end_to_end(spark, tmp_path):
         q.awaitTermination(120)
 
     drain()
-    assert spark.read.parquet(target).count() == hist.count()
+    assert read_generation_target(spark, target).count() == hist.count()
 
     stage.coalesce(1).write.mode("overwrite").parquet(str(src / "batch2"))
     drain()
-    after = spark.read.parquet(target)
+    after = read_generation_target(spark, target)
     assert after.count() == orders.count()
     staged_keys = {r.o_orderkey for r in stage.select("o_orderkey").collect()}
     sample = after.filter(F.col("o_orderkey").isin(list(staged_keys)[:50])).collect()
@@ -126,7 +162,7 @@ def test_streaming_file_merge_end_to_end(spark, tmp_path):
     assert all(abs(r.o_totalprice - (orig[r.o_orderkey] + 1.0)) < 1e-9 for r in sample)
 
     drain()  # no new files -> no change
-    assert spark.read.parquet(target).count() == orders.count()
+    assert read_generation_target(spark, target).count() == orders.count()
 
 
 def test_stream_funnel_window_counts(spark, tmp_path):
@@ -255,7 +291,7 @@ def test_streaming_merge_schema_evolution_restart(spark, tmp_path):
         spark, str(src / "*"), target, ["o_orderkey"], orders.schema, ckpt
     )
     q.awaitTermination(120)
-    assert "o_channel" not in spark.read.parquet(target).columns
+    assert "o_channel" not in read_generation_target(spark, target).columns
 
     wider = stage.withColumn("o_channel", F.lit("web"))
     wider.coalesce(1).write.mode("overwrite").parquet(str(src / "batch2"))
@@ -269,7 +305,7 @@ def test_streaming_merge_schema_evolution_restart(spark, tmp_path):
     )
     q2.awaitTermination(120)
 
-    after = spark.read.parquet(target)
+    after = read_generation_target(spark, target)
     assert "o_channel" in after.columns
     assert after.count() == orders.count()
     staged_keys = stage.select("o_orderkey")
@@ -359,7 +395,7 @@ def test_streaming_histogram_cells_match_batch_build(spark, tmp_path):
     drain()
     got = {
         (str(r["day"]), r["event_type"], r["bin_id"]): r["n"]
-        for r in spark.read.parquet(cells_path).collect()
+        for r in read_generation_target(spark, cells_path).collect()
     }
     want = {
         (str(r["day"]), r["event_type"], r["bin_id"]): r["n"]
@@ -372,12 +408,12 @@ def test_streaming_histogram_cells_match_batch_build(spark, tmp_path):
     drain()
     again = {
         (str(r["day"]), r["event_type"], r["bin_id"]): r["n"]
-        for r in spark.read.parquet(cells_path).collect()
+        for r in read_generation_target(spark, cells_path).collect()
     }
     assert again == want
     # quantiles served from the maintained cells == batch quantiles
     maintained = histogram_quantiles(
-        spark.read.parquet(cells_path), ["event_type"], 5.0
+        read_generation_target(spark, cells_path), ["event_type"], 5.0
     )
     direct = histogram_quantiles(
         build_histogram_cells(events, "value", ["event_type"], 5.0),
@@ -393,38 +429,38 @@ def test_streaming_histogram_cells_match_batch_build(spark, tmp_path):
 def test_cell_merge_epoch_replay_is_noop(spark, tmp_path):
     """foreachBatch is at-least-once; the additive cell fold is made
     idempotent per (checkpoint, epoch): re-folding the SAME epoch after
-    a simulated crash-between-swap-and-commit changes nothing, the next
+    a simulated crash-between-publish-and-commit changes nothing, the next
     epoch folds normally, and a NEW checkpoint id resets the mark."""
     from serverless_etl_bi_on_aws_spark.streaming.cells import (
-        merge_cells_into_parquet,
+        merge_cells_into_generations,
     )
 
     cells_path = str(tmp_path / "cells")
     batch = spark.createDataFrame(
         [("A", 0, 3), ("B", 1, 2)], ["event_type", "bin_id", "n"]
     )
-    merge_cells_into_parquet(spark, batch, cells_path, ["event_type"],
-                             epoch=("ck1", 0))
+    merge_cells_into_generations(spark, batch, cells_path, ["event_type"],
+                                 epoch=("ck1", 0))
     once = {(r["event_type"], r["bin_id"]): r["n"]
-            for r in spark.read.parquet(cells_path).collect()}
+            for r in read_generation_target(spark, cells_path).collect()}
     assert once == {("A", 0): 3, ("B", 1): 2}
     # replayed epoch 0: no double-count
-    merge_cells_into_parquet(spark, batch, cells_path, ["event_type"],
-                             epoch=("ck1", 0))
+    merge_cells_into_generations(spark, batch, cells_path, ["event_type"],
+                                 epoch=("ck1", 0))
     again = {(r["event_type"], r["bin_id"]): r["n"]
-             for r in spark.read.parquet(cells_path).collect()}
+             for r in read_generation_target(spark, cells_path).collect()}
     assert again == once
     # epoch 1 folds in
-    merge_cells_into_parquet(spark, batch, cells_path, ["event_type"],
-                             epoch=("ck1", 1))
+    merge_cells_into_generations(spark, batch, cells_path, ["event_type"],
+                                 epoch=("ck1", 1))
     two = {(r["event_type"], r["bin_id"]): r["n"]
-           for r in spark.read.parquet(cells_path).collect()}
+           for r in read_generation_target(spark, cells_path).collect()}
     assert two == {("A", 0): 6, ("B", 1): 4}
     # different checkpoint id: epoch numbering restarts, fold applies
-    merge_cells_into_parquet(spark, batch, cells_path, ["event_type"],
-                             epoch=("ck2", 0))
+    merge_cells_into_generations(spark, batch, cells_path, ["event_type"],
+                                 epoch=("ck2", 0))
     three = {(r["event_type"], r["bin_id"]): r["n"]
-             for r in spark.read.parquet(cells_path).collect()}
+             for r in read_generation_target(spark, cells_path).collect()}
     assert three == {("A", 0): 9, ("B", 1): 6}
 
 
@@ -816,35 +852,27 @@ def test_rollup_crash_window_is_closed(spark, tmp_path, monkeypatch):
 
 def test_generation_merge_matches_swap_merge(spark, tmp_path):
     """Round 16 (SURVEY 7.1 convergence): merge_into_generation_target
-    is the rename-free twin of the parquet swap merge — same 4-step
-    staging-merge semantics, the commit is a pointer marker. Content
-    must match the swap path batch-for-batch, replay must be
-    idempotent, and a reader resolved BEFORE a merge keeps its
-    (retained) generation — the no-read-under-swap property the
-    in-place path cannot give."""
-    import os
-
+    is the staging merge over a generation store — same 4-step
+    staging-merge semantics as the batch twin merge_upsert, the commit
+    is a pointer marker. Content must match the batch twin, replay must
+    be idempotent, and a reader resolved BEFORE a merge keeps its
+    (retained) generation — no read-under-swap window."""
     from serverless_etl_bi_on_aws_spark.operators.snapshot import (
         resolve_generation,
     )
-    from serverless_etl_bi_on_aws_spark.streaming.incremental import (
-        merge_into_generation_target,
-        read_generation_target,
-    )
 
     orders, hist, stage = _split_orders(spark)
-    swap_target = str(tmp_path / "swap")
     gen_root = str(tmp_path / "gens")
 
-    merge_into_parquet_target(spark, hist, swap_target, ["o_orderkey"])
     merge_into_generation_target(spark, hist, gen_root, ["o_orderkey"])
     old_gen = resolve_generation(gen_root)
     old_reader = spark.read.parquet(os.path.join(old_gen, "data"))
 
-    merge_into_parquet_target(spark, stage, swap_target, ["o_orderkey"])
     merge_into_generation_target(spark, stage, gen_root, ["o_orderkey"])
 
-    want = sorted(map(repr, spark.read.parquet(swap_target).collect()))
+    want = sorted(
+        map(repr, merge_upsert(hist, stage, ["o_orderkey"]).collect())
+    )
     got = sorted(map(repr, read_generation_target(spark, gen_root).collect()))
     assert got == want
     # the pre-merge reader still resolves its old generation (keep_n=2)
@@ -933,49 +961,44 @@ def test_generation_merge_streaming_end_to_end(spark, tmp_path):
 
 def test_generation_cell_fold_matches_swap_fold(spark, tmp_path):
     """Round 16 (SURVEY 7.1 convergence, cells): the generation-backed
-    fold is the rename-free twin of merge_cells_into_parquet — same
+    fold equals a one-shot cell build over every batch it applied —
     epoch-idempotent additive semantics, the commit is a pointer
     marker, the epoch mark rides inside the generation so data and
     mark still commit together."""
-    from serverless_etl_bi_on_aws_spark.streaming.cells import (
-        merge_cells_into_generations,
-        merge_cells_into_parquet,
-        read_cells_generation,
-    )
-
-    batch = spark.createDataFrame(
-        [("A", 0, 3), ("B", 1, 2)], ["event_type", "bin_id", "n"]
-    )
-    swap = str(tmp_path / "swap")
-    root = str(tmp_path / "gens")
-
-    def swap_cells():
-        return {
-            (r["event_type"], r["bin_id"]): r["n"]
-            for r in spark.read.parquet(swap).collect()
-        }
-
-    def gen_cells():
-        return {
-            (r["event_type"], r["bin_id"]): r["n"]
-            for r in read_cells_generation(spark, root).collect()
-        }
-
-    for ep in (("ck1", 0), ("ck1", 0), ("ck1", 1), ("ck2", 0)):
-        merge_cells_into_parquet(spark, batch, swap, ["event_type"], epoch=ep)
-        merge_cells_into_generations(spark, batch, root, ["event_type"], epoch=ep)
-        assert gen_cells() == swap_cells()
-    assert gen_cells() == {("A", 0): 9, ("B", 1): 6}
-
-
-def test_generation_cell_stream_end_to_end(spark, tmp_path):
-    """start_histogram_cell_maintenance(generations=True): drained
-    generations-backed cells equal the one-shot batch build."""
     from serverless_etl_bi_on_aws_spark.operators.histogram import (
         build_histogram_cells,
     )
     from serverless_etl_bi_on_aws_spark.streaming.cells import (
-        read_cells_generation,
+        merge_cells_into_generations,
+    )
+
+    raw = spark.createDataFrame(
+        [("A", 1.0)] * 3 + [("B", 6.0)] * 2, ["event_type", "value"]
+    )
+    batch = build_histogram_cells(raw, "value", ["event_type"], 5.0)
+    root = str(tmp_path / "gens")
+
+    def cells(df):
+        return {(r["event_type"], r["bin_id"]): r["n"] for r in df.collect()}
+
+    applied = None
+    for ep, fresh in ((("ck1", 0), True), (("ck1", 0), False),
+                      (("ck1", 1), True), (("ck2", 0), True)):
+        merge_cells_into_generations(spark, batch, root, ["event_type"], epoch=ep)
+        if fresh:
+            applied = raw if applied is None else applied.unionByName(raw)
+        want = build_histogram_cells(applied, "value", ["event_type"], 5.0)
+        assert cells(read_generation_target(spark, root)) == cells(want)
+    assert cells(read_generation_target(spark, root)) == {("A", 0): 9, ("B", 1): 6}
+
+
+def test_generation_cell_stream_end_to_end(spark, tmp_path):
+    """start_histogram_cell_maintenance: drained generation-backed cells
+    equal the one-shot batch build."""
+    from serverless_etl_bi_on_aws_spark.operators.histogram import (
+        build_histogram_cells,
+    )
+    from serverless_etl_bi_on_aws_spark.streaming.cells import (
         start_histogram_cell_maintenance,
     )
 
@@ -996,12 +1019,11 @@ def test_generation_cell_stream_end_to_end(spark, tmp_path):
         value_col="value",
         grain=["day", "event_type"],
         bin_width=5.0,
-        generations=True,
     )
     q.awaitTermination(120)
     got = {
         (str(r["day"]), r["event_type"], r["bin_id"]): r["n"]
-        for r in read_cells_generation(spark, root).collect()
+        for r in read_generation_target(spark, root).collect()
     }
     want = {
         (str(r["day"]), r["event_type"], r["bin_id"]): r["n"]
@@ -1010,3 +1032,112 @@ def test_generation_cell_stream_end_to_end(spark, tmp_path):
         ).collect()
     }
     assert got == want
+
+
+def test_incremental_merge_crash_replay_converges(spark, tmp_path, monkeypatch):
+    """A 1,000-row target and one 15-row staging batch (5 updates, 10
+    new keys) through the default streaming merge: the staging batch's
+    publish crashes at each of its renames in turn, the stream restarts
+    on its checkpoint and re-delivers the batch, and the table equals
+    the batch twin ``merge_upsert(hist, stage)`` (1,010 rows) every
+    time. An in-place directory swap fails this: a crash between its
+    two renames leaves no target, and the replay keeps 15 rows."""
+    import shutil
+
+    hist = spark.range(1000).select(
+        F.col("id").alias("k"), (F.col("id") * 1.0).alias("v")
+    )
+    stage = spark.range(995, 1010).select(
+        F.col("id").alias("k"), F.lit(-1.0).alias("v")
+    )
+    want = sorted(map(tuple, merge_upsert(hist, stage, ["k"]).collect()))
+    assert len(want) == 1010
+    land = tmp_path / "land"
+
+    def drain(target, ckpt):
+        start_incremental_merge(
+            spark, str(land / "*"), target, ["k"], hist.schema, ckpt
+        ).awaitTermination(120)
+
+    hist.coalesce(1).write.parquet(str(land / "b1"))
+    drain(str(tmp_path / "t0"), str(tmp_path / "c0"))  # the backfill
+    stage.coalesce(1).write.parquet(str(land / "b2"))
+
+    def setup(k):
+        shutil.copytree(tmp_path / "t0", tmp_path / f"t{k}")
+        shutil.copytree(tmp_path / "c0", tmp_path / f"c{k}")
+
+    def check(k):
+        got = read_generation_target(spark, str(tmp_path / f"t{k}")).collect()
+        assert sorted(map(tuple, got)) == want, (
+            f"crash at rename {k}: {len(got)} of {len(want)} rows"
+        )
+
+    points = crash_replay_each_rename(
+        monkeypatch,
+        setup,
+        lambda k: drain(str(tmp_path / f"t{k}"), str(tmp_path / f"c{k}")),
+        check,
+    )
+    assert points >= 2  # the generation rename and the pointer replace
+
+
+def test_cell_fold_crash_replay_converges(spark, tmp_path, monkeypatch):
+    """The cell fold's publish crashes at each of its renames (the
+    generation rename, the epoch mark, the pointer) and the same epoch
+    replays: the cells equal a one-shot build over both batches — the
+    crashed epoch is neither lost nor counted twice."""
+    import shutil
+
+    from serverless_etl_bi_on_aws_spark.operators.histogram import (
+        build_histogram_cells,
+    )
+    from serverless_etl_bi_on_aws_spark.streaming.cells import (
+        merge_cells_into_generations,
+    )
+
+    cols = ["event_type", "value"]
+    raw1 = spark.createDataFrame([("A", 1.0), ("A", 2.0), ("B", 6.0)], cols)
+    raw2 = spark.createDataFrame([("A", 3.0), ("B", 7.0), ("C", 11.0)], cols)
+
+    def cells(df):
+        return {(r["event_type"], r["bin_id"]): r["n"] for r in df.collect()}
+
+    def fold(raw, k, epoch):
+        merge_cells_into_generations(
+            spark,
+            build_histogram_cells(raw, "value", ["event_type"], 5.0),
+            str(tmp_path / f"cells{k}"),
+            ["event_type"],
+            epoch=("ck", epoch),
+        )
+
+    want = cells(
+        build_histogram_cells(raw1.unionByName(raw2), "value", ["event_type"], 5.0)
+    )
+
+    def check(k):
+        got = cells(read_generation_target(spark, str(tmp_path / f"cells{k}")))
+        assert got == want, f"crash at rename {k}"
+
+    fold(raw1, 0, 0)
+    points = crash_replay_each_rename(
+        monkeypatch,
+        lambda k: shutil.copytree(tmp_path / "cells0", tmp_path / f"cells{k}"),
+        lambda k: fold(raw2, k, 1),
+        check,
+    )
+    assert points >= 3  # generation rename, epoch mark, pointer
+
+
+def test_incremental_merge_rejects_swap_path(spark, tmp_path):
+    """``generations=False`` named the removed in-place swap merge; it
+    fails loudly instead of silently publishing a generation store."""
+    import pytest
+
+    _, hist, _ = _split_orders(spark)
+    with pytest.raises(ValueError, match="rename-swap merge was removed"):
+        start_incremental_merge(
+            spark, str(tmp_path / "land"), str(tmp_path / "t"), ["o_orderkey"],
+            hist.schema, str(tmp_path / "ckpt"), generations=False,
+        )

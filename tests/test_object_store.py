@@ -10,11 +10,12 @@ the existing crash/replay suites over it, so the design note is a
 verified contract: the protocols' ordering/idempotence/lease invariants
 hold with object-store primitives alone.
 
-Out of scope, stated plainly: the in-place parquet directory swaps
-(streaming/cells.py, streaming/incremental.py, operators/maintenance.py
-— the POSIX fallback path) rely on rename by design; their object-store
-answer is the snapshot/manifest generation family (operators/snapshot.py,
-whose pointer commits DO route through this seam and ARE re-run here).
+Out of scope, stated plainly: the in-place parquet directory swaps of
+operators/maintenance.py rely on rename by design; their object-store
+answer is hosting them in the snapshot/manifest generation family
+(operators/snapshot.py, whose pointer commits DO route through this seam
+and ARE re-run here). The streaming maintenance targets (merge, cells,
+SCD2) publish through that generation store directly.
 """
 
 from __future__ import annotations
@@ -145,7 +146,7 @@ def test_merge_streaming_epoch_replay_over_object_store(spark, tmp_path, fake_st
 
 
 def test_generation_merge_over_object_store(spark, tmp_path, fake_store):
-    """The round-16 swap-merge convergence runs rename-free END TO END
+    """The round-16 generation merge runs rename-free END TO END
     at the commit layer: the staging-merge's only publish is the
     generation POINTER marker (overwrite PUT) — content, pre-merge
     reader retention, and replay idempotence all hold over the

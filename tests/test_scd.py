@@ -92,6 +92,9 @@ def test_streaming_scd2_matches_sequential_batch_twin(spark, tmp_path):
     replay adds nothing."""
     import datetime as dt
 
+    from serverless_etl_bi_on_aws_spark.streaming.incremental import (
+        read_generation_target,
+    )
     from serverless_etl_bi_on_aws_spark.streaming.scd_stream import (
         start_scd2_maintenance,
     )
@@ -123,7 +126,7 @@ def test_streaming_scd2_matches_sequential_batch_twin(spark, tmp_path):
     drop2.coalesce(1).write.mode("overwrite").parquet(str(src / "d2"))
     drain()
 
-    got = sorted(map(repr, spark.read.parquet(dim_path).collect()))
+    got = sorted(map(repr, read_generation_target(spark, dim_path).collect()))
     # sequential twin
     from serverless_etl_bi_on_aws_spark.operators.scd import scd2_apply, scd2_init
 
@@ -139,31 +142,42 @@ def test_streaming_scd2_matches_sequential_batch_twin(spark, tmp_path):
     want = sorted(map(repr, dim.collect()))
     assert got == want
     # id 2 carries three versions: [TS0,TS1), [TS1,TS2), open at TS2
-    vers = spark.read.parquet(dim_path).filter(F.col("id") == 2)
+    vers = read_generation_target(spark, dim_path).filter(F.col("id") == 2)
     assert sorted((str(r["valid_from"]), str(r["valid_to"])) for r in vers.collect()) == [
         ("2024-01-01 00:00:00", "2024-02-01 00:00:00"),
         ("2024-02-01 00:00:00", "2024-03-01 00:00:00"),
         ("2024-03-01 00:00:00", "None"),
     ]
     drain()  # replay: no new files, dimension unchanged
-    assert sorted(map(repr, spark.read.parquet(dim_path).collect())) == want
+    assert sorted(map(repr, read_generation_target(spark, dim_path).collect())) == want
+
+
+def _sequential_twin(first, waves, ts_col="effective_ts"):
+    """The batch twin of the streaming SCD2 fold: scd2_init on the first
+    wave, then one scd2_apply per later wave, in order."""
+    dim = scd2_init(first.drop(ts_col), F.lit(first.first()[ts_col]))
+    for wave in waves:
+        ts = wave.first()[ts_col]
+        dim = scd2_apply(dim, wave.drop(ts_col), ["id"], F.lit(ts))
+    return dim
 
 
 def test_scd2_generation_fold_matches_swap_fold(spark, tmp_path):
     """Round 16 (SURVEY 7.1 convergence, SCD2): the generation-backed
-    dimension fold equals the in-place-swap fold batch-for-batch, a
-    re-applied wave is a no-op (scd2_apply key-idempotence carries
-    over), and a reader resolved before a fold keeps its retained
-    generation."""
+    dimension fold equals the sequential scd2_init/scd2_apply twin
+    batch-for-batch, a re-applied wave is a no-op (scd2_apply
+    key-idempotence carries over), and a reader resolved before a fold
+    keeps its retained generation."""
     import datetime as dt
 
     from serverless_etl_bi_on_aws_spark.operators.snapshot import (
         resolve_generation,
     )
+    from serverless_etl_bi_on_aws_spark.streaming.incremental import (
+        read_generation_target,
+    )
     from serverless_etl_bi_on_aws_spark.streaming.scd_stream import (
-        apply_scd2_batch,
         apply_scd2_batch_generations,
-        read_scd2_generation,
     )
 
     TS0 = dt.datetime(2024, 1, 1)
@@ -171,38 +185,40 @@ def test_scd2_generation_fold_matches_swap_fold(spark, tmp_path):
     cols = ["id", "name", "amount", "effective_ts"]
     b1 = spark.createDataFrame([(1, "a", 10.0, TS0), (2, "b", 20.0, TS0)], cols)
     b2 = spark.createDataFrame([(2, "B", 20.0, TS1), (3, "c", 30.0, TS1)], cols)
-    swap = str(tmp_path / "swap")
     root = str(tmp_path / "gens")
 
-    apply_scd2_batch(spark, b1, swap, ["id"], "effective_ts")
     apply_scd2_batch_generations(spark, b1, root, ["id"], "effective_ts")
     gen_before = resolve_generation(root)
     old_reader = spark.read.parquet(f"{gen_before}/data")
+    assert sorted(map(repr, old_reader.collect())) == sorted(
+        map(repr, _sequential_twin(b1, []).collect())
+    )
 
-    apply_scd2_batch(spark, b2, swap, ["id"], "effective_ts")
     apply_scd2_batch_generations(spark, b2, root, ["id"], "effective_ts")
 
-    want = sorted(map(repr, spark.read.parquet(swap).collect()))
-    got = sorted(map(repr, read_scd2_generation(spark, root).collect()))
+    want = sorted(map(repr, _sequential_twin(b1, [b2]).collect()))
+    got = sorted(map(repr, read_generation_target(spark, root).collect()))
     assert got == want
     # the pre-fold reader still resolves its retained generation
-    # (keep_n=2: readers must finish within ONE further commit)
+    # (readers must finish within ONE further commit)
     assert sorted(map(repr, old_reader.collect())) != want
     assert old_reader.count() == 2
     # replayed wave: key-idempotent no-op (content-identical generation)
     apply_scd2_batch_generations(spark, b2, root, ["id"], "effective_ts")
-    again = sorted(map(repr, read_scd2_generation(spark, root).collect()))
+    again = sorted(map(repr, read_generation_target(spark, root).collect()))
     assert again == want
 
 
 @pytest.mark.slow  # round-19 tiering: >=10 s integration test
 def test_scd2_generation_stream_end_to_end(spark, tmp_path):
-    """start_scd2_maintenance(generations=True) drains to the same
-    history as the swap-backed stream."""
+    """start_scd2_maintenance drains two landed drops into the same
+    history as the sequential batch twin."""
     import datetime as dt
 
+    from serverless_etl_bi_on_aws_spark.streaming.incremental import (
+        read_generation_target,
+    )
     from serverless_etl_bi_on_aws_spark.streaming.scd_stream import (
-        read_scd2_generation,
         start_scd2_maintenance,
     )
 
@@ -214,26 +230,62 @@ def test_scd2_generation_stream_end_to_end(spark, tmp_path):
     src = tmp_path / "updates"
     src.mkdir()
     root = str(tmp_path / "dimgens")
-    swap = str(tmp_path / "dimswap")
 
-    def drain(path, generations):
-        from serverless_etl_bi_on_aws_spark.streaming.scd_stream import (
-            start_scd2_maintenance,
-        )
-
+    def drain():
         q = start_scd2_maintenance(
-            spark, str(src / "*"), path, ["id"], drop1.schema,
-            str(tmp_path / ("ck_g" if generations else "ck_s")),
-            generations=generations,
+            spark, str(src / "*"), root, ["id"], drop1.schema,
+            str(tmp_path / "ck_g"),
         )
         q.awaitTermination(120)
 
     drop1.coalesce(1).write.mode("overwrite").parquet(str(src / "d1"))
-    drain(swap, False)
-    drain(root, True)
+    drain()
     drop2.coalesce(1).write.mode("overwrite").parquet(str(src / "d2"))
-    drain(swap, False)
-    drain(root, True)
-    want = sorted(map(repr, spark.read.parquet(swap).collect()))
-    got = sorted(map(repr, read_scd2_generation(spark, root).collect()))
+    drain()
+    want = sorted(map(repr, _sequential_twin(drop1, [drop2]).collect()))
+    got = sorted(map(repr, read_generation_target(spark, root).collect()))
     assert got == want
+
+
+@pytest.mark.slow  # >=10 s integration test: five two-wave SCD2 folds
+def test_scd2_fold_crash_replay_converges(spark, tmp_path, monkeypatch):
+    """The SCD2 fold's publish of a two-wave batch crashes at each of its
+    renames in turn and the same batch replays: the dimension equals
+    the sequential scd2_apply twin — no lost wave, no doubled version."""
+    import datetime as dt
+    import shutil
+
+    from serverless_etl_bi_on_aws_spark.streaming.incremental import (
+        read_generation_target,
+    )
+    from serverless_etl_bi_on_aws_spark.streaming.scd_stream import (
+        apply_scd2_batch_generations,
+    )
+    from tests.test_merge_streaming import crash_replay_each_rename
+
+    TS0 = dt.datetime(2024, 1, 1)
+    TS1 = dt.datetime(2024, 2, 1)
+    TS2 = dt.datetime(2024, 3, 1)
+    cols = ["id", "name", "amount", "effective_ts"]
+    b1 = spark.createDataFrame([(1, "a", 10.0, TS0), (2, "b", 20.0, TS0)], cols)
+    w1 = spark.createDataFrame([(2, "B", 20.0, TS1), (3, "c", 30.0, TS1)], cols)
+    w2 = spark.createDataFrame([(1, "A", 11.0, TS2)], cols)
+    want = sorted(map(repr, _sequential_twin(b1, [w1, w2]).collect()))
+
+    def apply(batch, k):
+        apply_scd2_batch_generations(
+            spark, batch, str(tmp_path / f"dim{k}"), ["id"], "effective_ts"
+        )
+
+    def check(k):
+        got = read_generation_target(spark, str(tmp_path / f"dim{k}")).collect()
+        assert sorted(map(repr, got)) == want, f"crash at rename {k}"
+
+    apply(b1, 0)
+    points = crash_replay_each_rename(
+        monkeypatch,
+        lambda k: shutil.copytree(tmp_path / "dim0", tmp_path / f"dim{k}"),
+        lambda k: apply(w1.unionByName(w2), k),
+        check,
+    )
+    assert points >= 2  # the generation rename and the pointer replace
