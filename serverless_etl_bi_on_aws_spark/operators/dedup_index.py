@@ -31,25 +31,35 @@ forgets B and would let C through.
 Index layout (two tables — NOT one banded table carrying signatures,
 which would store each 128-long signature ``bands`` times over):
 
-    <index>/bands/band=<b>/  (bucket BIGINT, doc id)   3 longs x bands/doc
-    <index>/sigs/            (doc id, sig ARRAY<BIGINT>)   num_hashes/doc
+    <index>/bands/           (band INT, bucket BIGINT, doc id)   bands rows/doc
+    <index>/sigs/            (doc id, sig ARRAY<BIGINT>)         1 row/doc
     <index>/_meta.json       n, num_hashes, bands, seed — probes must
                              hash identically to the build or buckets are
                              meaningless; validated on every probe.
 
-100 TB shape: the probe shuffles ONLY the new batch (corpus side is
-bucket-joined storage); every new doc emits a bucket for ALL ``bands``
-bands, so the probe join touches every band partition — the real (and
-sufficient) guarantee is that the scan reads only the 3-long
-(band, bucket, id) triples, never signatures, and the candidate pair
-set — not the corpus — flows into the signature-compare join. Appends grow the index linearly (no rewrite). On a real cluster,
-bucketBy(bucket) the band partitions to make the probe join
-exchange-free on the index side.
+Each append writes one file set per table. ``bands`` is flat, not
+partitioned by band: every new doc emits a bucket for ALL ``bands``
+bands, so every probe touches every band and a band partitioning would
+prune nothing — it only multiplied the files per append by ``bands``.
+
+Per batch the ingest loop (streaming/ingest_dedup.py) signs the batch
+ONCE: :func:`batch_signatures` is a memoized, checkpointed signature
+frame that the loop hands to both :func:`dedup_against_index` and
+:func:`update_index`. Called standalone, each computes its own.
+
+100 TB shape: the probe shuffles ONLY the new batch's banded rows
+against the scanned (band, bucket, id) triples — never signatures —
+and the candidate pair set, not the corpus, flows into the signature
+fetch. Appends grow the index linearly (no rewrite). On a real cluster,
+bucketBy(bucket) the band table to make the probe join exchange-free on
+the index side.
 """
 
 from __future__ import annotations
 
+import functools
 import os
+from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -93,8 +103,8 @@ def read_meta(index_path: str) -> IndexMeta:
 
 def _has_parquet_files(path: str) -> bool:
     """True iff ``path`` holds at least one parquet data file (any
-    depth — bands/ is hive-partitioned). A directory containing only
-    _SUCCESS/markers is NOT a readable table."""
+    depth — the hash index's blocks/ is hive-partitioned). A directory
+    containing only _SUCCESS/markers is NOT a readable table."""
     for dirpath, _dirnames, filenames in os.walk(path):
         if any(f.endswith(".parquet") for f in filenames):
             return True
@@ -102,23 +112,43 @@ def _has_parquet_files(path: str) -> bool:
 
 
 def _append_signatures(sigs: DataFrame, meta: IndexMeta, index_path: str) -> None:
-    """Persist (sigs, bands) for one batch of signatures. Append-only —
-    the index grows linearly with the corpus, nothing is rewritten.
+    """Persist (sigs, bands) for one batch of signatures, one file set
+    per table. Append-only — the index grows linearly with the corpus,
+    nothing is rewritten.
 
     Write ORDER matters for crash safety: sigs first, bands second. A
     crash between the two writes that is never replayed leaves a sig
     with no band rows — inert (never a candidate, same as pre-append).
     The reverse order would leave band rows whose doc has no sig, and
-    those candidates silently vanish from dup_vs_corpus's inner join
-    with idx_sigs: duplicates missed with no error (round-8 ADVICE)."""
+    those candidates silently vanish from the probe's inner join with
+    the indexed sigs: duplicates missed with no error."""
     sigs.write.mode("append").parquet(os.path.join(index_path, "sigs"))
-    banded = band_buckets(sigs, meta.bands, meta.rows, id_col=meta.id_col)
     (
-        banded.select("band", "bucket", F.col("_id").alias(meta.id_col))
+        band_buckets(sigs, meta.bands, meta.rows, id_col=meta.id_col)
+        .select("band", "bucket", F.col("_id").alias(meta.id_col))
         .write.mode("append")
-        .partitionBy("band")
         .parquet(os.path.join(index_path, "bands"))
     )
+
+
+def batch_signatures(
+    new_docs: DataFrame, index_path: str, text_col: str = "text"
+) -> Callable[[], DataFrame]:
+    """A zero-argument, memoized source of ``new_docs``' signatures under
+    the index's meta: the first call signs the batch and checkpoints it,
+    later calls return the same frame. Nothing is read or computed until
+    a consumer calls it, so a loop whose probe and append both no-op on
+    replay signs nothing. Pass it as ``signatures=`` to
+    :func:`dedup_against_index` and :func:`update_index` to sign a batch
+    once for both."""
+
+    def sign() -> DataFrame:
+        meta = read_meta(index_path)
+        return minhash_signatures(
+            new_docs, meta.id_col, text_col, meta.n, meta.num_hashes, meta.seed
+        ).localCheckpoint(eager=True)
+
+    return functools.cache(sign)
 
 
 def build_minhash_index(
@@ -173,79 +203,66 @@ def dedup_against_index(
     index_path: str,
     threshold: float = 0.5,
     text_col: str = "text",
+    signatures: Callable[[], DataFrame] | None = None,
 ) -> DataFrame:
     """Survivors of ``new_docs`` under the online rule: drop a new doc iff
     its estimated Jaccard >= ``threshold`` against ANY indexed doc or any
     SMALLER-ID doc of the same batch. Returns ``new_docs`` rows minus the
     drops; composes with :func:`update_index` for the ingest loop.
+    ``signatures`` (a :func:`batch_signatures` memo) supplies the batch's
+    signatures; without it they are computed here.
 
-    Plan shape: corpus signatures are READ (two parquet scans: the
-    band-pruned bucket join, then a semi-joined sig fetch for candidates
-    only) — corpus text is never re-shingled; ``minhash_signatures`` runs
-    exactly once, on the new batch (pytest-trapped, the KMeans-refit trap
-    pattern)."""
+    Plan shape: ONE (band, bucket) join finds every candidate pair. Its
+    junior side is the batch's banded rows; its senior side is the
+    indexed band rows (flagged indexed) plus the batch's own banded rows,
+    and a pair is kept if the senior is indexed or has the smaller id.
+    Band exchanges carry ids only (a sig-carrying banded join would
+    ship each 128-long signature x bands); signatures are
+    then fetched for candidate pairs only, keyed on (id, indexed) so an
+    indexed id equal to a batch id never borrows the other's signature.
+    Corpus text is never re-shingled; ``minhash_signatures`` runs
+    exactly once, on the new batch (pytest-trapped, the KMeans-refit
+    trap pattern)."""
     meta = read_meta(index_path)
     id_col = meta.id_col
-    new_sigs = minhash_signatures(
-        new_docs, id_col, text_col, meta.n, meta.num_hashes, meta.seed
-    ).localCheckpoint(eager=True)  # 2 consumers (corpus + within-batch join)
+    new_sigs = (signatures or batch_signatures(new_docs, index_path, text_col))()
     new_banded = band_buckets(new_sigs, meta.bands, meta.rows, id_col=id_col)
 
-    # --- vs corpus: band-bucket candidates, then signature compare.
+    def senior(df: DataFrame, indexed: bool, col: str, *cols: str) -> DataFrame:
+        return df.select(
+            *cols, F.col(col).alias("_senior"), F.lit(indexed).alias("_indexed")
+        )
+
+    seniors = senior(new_banded, False, "_id", "band", "bucket")
+    senior_sigs = senior(new_sigs, False, id_col, "sig")
     # A just-initialized index (init_minhash_index) has no bands/sigs
-    # dirs yet — an empty corpus contributes no candidates. The check is
+    # dirs yet — an empty corpus contributes no seniors. The check is
     # for actual parquet FOOTERS, not the directory (round 17): a dir
     # holding only _SUCCESS — a pre-fix empty append, or a crash between
     # mkdir and the first data file — is an empty corpus, not a readable
-    # table, and spark.read.parquet on it throws UNABLE_TO_INFER_SCHEMA. ---
+    # table, and spark.read.parquet on it throws UNABLE_TO_INFER_SCHEMA.
     if _has_parquet_files(os.path.join(index_path, "bands")):
         idx_bands = spark.read.parquet(os.path.join(index_path, "bands"))
         idx_sigs = spark.read.parquet(os.path.join(index_path, "sigs"))
-        cand = (
-            new_banded.join(
-                idx_bands.select("band", "bucket", F.col(id_col).alias("_old")), ["band", "bucket"]
-            )
-            .select("_id", "_old")
-            .dropDuplicates(["_id", "_old"])
-        )
-        dup_vs_corpus = (
-            cand.join(idx_sigs.select(F.col(id_col).alias("_old"), F.col("sig").alias("_s2")), "_old")
-            .join(new_sigs.select(F.col(id_col).alias("_id"), F.col("sig").alias("_s1")), "_id")
-            .filter(est_jaccard("_s1", "_s2", meta.num_hashes) >= threshold)
-            .select("_id")
-            .distinct()
-        )
-    else:
-        dup_vs_corpus = new_sigs.select(F.col(id_col).alias("_id")).limit(0)
+        seniors = senior(idx_bands, True, id_col, "band", "bucket").unionByName(seniors)
+        senior_sigs = senior(idx_sigs, True, id_col, "sig").unionByName(senior_sigs)
 
-    # --- within batch: same shape as the corpus path (round-8 verdict #4:
-    # ids-only across the (band, bucket) exchange — the old self-join on a
-    # sig-carrying frame shipped each 128-long signature x bands on BOTH
-    # sides); signatures are fetched for candidate pairs only ---
-    within_cand = (
-        new_banded.alias("a")
-        .join(new_banded.alias("b"), ["band", "bucket"])
-        .filter(F.col("a._id") > F.col("b._id"))  # b is senior
-        .select(F.col("a._id").alias("_id"), F.col("b._id").alias("_senior"))
-        .dropDuplicates(["_id", "_senior"])
+    cand = (
+        new_banded.join(seniors, ["band", "bucket"])
+        .filter(F.col("_indexed") | (F.col("_senior") < F.col("_id")))
+        .select("_id", "_senior", "_indexed")
+        .dropDuplicates()
     )
-    within = (
-        within_cand.join(
-            new_sigs.select(F.col(id_col).alias("_id"), F.col("sig").alias("_s1")), "_id"
-        )
-        .join(
-            new_sigs.select(F.col(id_col).alias("_senior"), F.col("sig").alias("_s2")),
-            "_senior",
-        )
+    dropped = (
+        cand.join(senior_sigs.withColumnRenamed("sig", "_s2"), ["_senior", "_indexed"])
+        .join(new_sigs.select(F.col(id_col).alias("_id"), F.col("sig").alias("_s1")), "_id")
         .filter(est_jaccard("_s1", "_s2", meta.num_hashes) >= threshold)
-        .select("_id")
-        .distinct()
+        .select(F.col("_id").alias(id_col))
     )
-
-    dropped = dup_vs_corpus.unionByName(within).distinct()
-    return new_docs.join(
-        dropped.select(F.col("_id").alias(id_col)), id_col, "left_anti"
-    )
+    # the dropped ids are a subset of the batch's, so they broadcast: the
+    # batch rows (payloads included) never shuffle for the anti-join, and
+    # an anti-join needs no distinct keys
+    return new_docs.join(F.broadcast(dropped), id_col, "left_anti")
 
 
 def update_index(
@@ -253,10 +270,13 @@ def update_index(
     index_path: str,
     batch_id: str,
     text_col: str = "text",
+    signatures: Callable[[], DataFrame] | None = None,
 ) -> bool:
     """Append one batch's signatures to the index — ALL of the batch's
     docs, duplicates included (see module docstring: survivor-only
     indexing breaks chain equivalence with the one-shot rule).
+    ``signatures`` (a :func:`batch_signatures` memo, shared with the
+    probe) supplies them; without it they are computed here.
 
     Runs through :func:`util.append_once` (marker, lease, empty guard,
     marker last), so ``foreachBatch(lambda df, eid:
@@ -276,9 +296,7 @@ def update_index(
         batch_id,
         "update_index",
         # checkpointed: the empty guard and the append share one pass
-        lambda: minhash_signatures(
-            new_docs, meta.id_col, text_col, meta.n, meta.num_hashes, meta.seed
-        ).localCheckpoint(eager=True),
+        signatures or batch_signatures(new_docs, index_path, text_col),
         lambda sigs: _append_signatures(sigs, meta, index_path),
     )
 
@@ -292,8 +310,8 @@ def compact_index(
     (harmless to consumers — candidates are pair-deduped and drops are
     set-membership — but dead weight forever).
 
-    One compaction fixes both: each ``band=<b>`` partition is rewritten
-    to ~``target_file_bytes`` files, deduped on (bucket, id) and
+    One compaction fixes both: ``bands`` is rewritten to
+    ~``target_file_bytes`` files, deduped on (band, bucket, id) and
     range-clustered on ``bucket`` so a probe's bucket join skips files by
     footer stats; ``sigs`` is deduped on the id (signatures are
     deterministic per meta, so replay rows are exact duplicates). Every
@@ -302,32 +320,22 @@ def compact_index(
     changes layout, never which batches are applied, so it composes with
     concurrent :func:`dedup_against_index` readers and future
     :func:`update_index` appends. Probe results are identical before and
-    after (pytest-pinned). Returns per-table new file counts."""
+    after (pytest-pinned). Returns the new file count per table
+    (``{"bands": n, "sigs": n}``; empty for a just-initialized index)."""
     from serverless_etl_bi_on_aws_spark.operators.maintenance import compact_parquet
 
     meta = read_meta(index_path)
-    bands_root = os.path.join(index_path, "bands")
+    layout = {
+        "bands": dict(cluster_by="bucket", dedupe_on=["band", "bucket", meta.id_col]),
+        "sigs": dict(dedupe_on=[meta.id_col]),
+    }
     files = {}
     with writer_lease(index_path, owner="compact_index"):
         # a just-initialized index (init_minhash_index, no appends yet) has
         # neither table — nothing to compact, same grace dedup_against_index
         # extends to the empty-corpus probe (round-9 ADVICE)
-        if os.path.exists(bands_root):
-            for part in sorted(os.listdir(bands_root)):
-                if not part.startswith("band="):
-                    continue
-                files[f"bands/{part}"] = compact_parquet(
-                    spark,
-                    os.path.join(bands_root, part),
-                    target_file_bytes,
-                    cluster_by="bucket",
-                    dedupe_on=["bucket", meta.id_col],
-                )
-        if os.path.exists(os.path.join(index_path, "sigs")):
-            files["sigs"] = compact_parquet(
-                spark,
-                os.path.join(index_path, "sigs"),
-                target_file_bytes,
-                dedupe_on=[meta.id_col],
-            )
+        for table, kw in layout.items():
+            path = os.path.join(index_path, table)
+            if os.path.exists(path):
+                files[table] = compact_parquet(spark, path, target_file_bytes, **kw)
     return files

@@ -16,20 +16,23 @@ CURATION artifacts that merge never touches:
 
   * the curated corpus (``clean_dir/batch=<id>/`` hive partitions
     written by the ingest/curation loops),
-  * the persisted MinHash text index (``sigs/`` + ``bands/band=<b>/``),
+  * the persisted MinHash text index (``sigs/`` + the flat ``bands/``),
   * the persisted IVF embedding corpus (``corpus/_cluster=<c>/``).
 
-Scale shape: discovery of WHICH partitions hold the target ids is a
-column-pruned scan + semi-join emitting partition VALUES only (batch
-ids / band ids / cluster ids — maintenance-scale collects, like the
-centroid reads); ALL affected partitions of a table are then rewritten
-in ONE Spark pass (:func:`operators.maintenance.
+Scale shape: for a partitioned table (the corpus batches, hash-index
+blocks, IVF clusters), discovery of WHICH partitions hold the target ids
+is a column-pruned scan + semi-join emitting partition VALUES only
+(batch ids / block ids / cluster ids — maintenance-scale collects, like
+the centroid reads); ALL affected partitions are then rewritten in ONE
+Spark pass (:func:`operators.maintenance.
 rewrite_partitions_without_keys` — one anti-join, one partitioned
 write-aside, per-partition swap renames; round 12 — the previous
-per-partition loop paid one job launch per band/cluster, 32 sequential
-jobs for a single text takedown). Unpartitioned tables (sigs/hashes)
-use the single-dir :func:`~operators.maintenance.rewrite_without_keys`.
-Untouched partitions keep their files. Index rewrites run under the
+per-partition loop paid one job launch per partition). Untouched
+partitions keep their files. Unpartitioned tables (the MinHash index's
+sigs and bands, the hash index's hashes) use the single-dir
+:func:`~operators.maintenance.rewrite_without_keys`: one anti-join and
+one write-aside per table — every text takedown touches every band
+anyway, since each doc has a row in all of them. Index rewrites run under the
 single-writer lease (with the retrying acquisition, so a takedown
 serializes behind an in-flight append).
 Commit markers (``_applied``) are deliberately NOT touched: forgetting
@@ -38,7 +41,8 @@ and a re-submission of forgotten content arrives as a new batch with a
 new id.
 
 At 100 TB a takedown batch rewrites only the partitions the targets
-live in; batch many requests into one call (the ids ride a DataFrame)
+live in, plus the MinHash index's two flat tables whole; batch many
+requests into one call (the ids ride a DataFrame)
 rather than rewriting per request.
 """
 
@@ -169,7 +173,6 @@ def forget_from_minhash_index(
     out: dict = {
         "sigs_removed": 0,
         "bands_removed": 0,
-        "band_partitions": [],
         "shadows_swept": 0,
         "shadow_ids_sample": [],
     }
@@ -219,19 +222,9 @@ def forget_from_minhash_index(
                 spark, sigs_path, all_keys, meta.id_col
             )
         if os.path.isdir(bands_root):
-            bands = spark.read.parquet(bands_root)
-            affected = sorted(
-                r[0]
-                for r in bands.select(meta.id_col, "band")
-                .join(all_keys, meta.id_col, "left_semi")
-                .select("band")
-                .distinct()
-                .collect()
+            out["bands_removed"] = rewrite_without_keys(
+                spark, bands_root, all_keys, meta.id_col
             )
-            out["bands_removed"] = rewrite_partitions_without_keys(
-                spark, bands_root, "band", affected, all_keys, meta.id_col
-            )
-            out["band_partitions"] = [int(b) for b in affected]
     return out
 
 

@@ -44,6 +44,7 @@ run through ``util.append_once``.
 
 from __future__ import annotations
 
+import functools
 import os
 from collections.abc import Callable
 from typing import NamedTuple
@@ -148,6 +149,20 @@ def _hashed_rows(meta: dict, df: DataFrame) -> DataFrame:
         params = {k: v for k, v in spec.items() if k not in ("kind", "source_col")}
         df = HASHERS[spec["kind"]].fn(df, id_col, spec["source_col"], **params)
     return df.select(id_col, hash_col).filter(F.col(hash_col).isNotNull())
+
+
+def batch_hashes(df: DataFrame, index_path: str) -> Callable[[], DataFrame]:
+    """A zero-argument, memoized source of ``df``'s ``(id, hash)`` rows
+    under the index's recorded hasher: the first call hashes the batch
+    and checkpoints it, later calls return the same frame; nothing runs
+    until a consumer calls it. Pass it as ``hashed=`` to
+    :func:`dedup_against_hash_index` and :func:`update_hash_index` to
+    hash (for media, decode) a batch once for both."""
+    return functools.cache(
+        lambda: _hashed_rows(read_hash_meta(index_path), df).localCheckpoint(
+            eager=True
+        )
+    )
 
 
 def hash_blocks(hashed: DataFrame, id_col: str, hash_col: str, n_blocks: int) -> DataFrame:
@@ -287,21 +302,22 @@ def dedup_against_hash_index(
     new_df: DataFrame,
     index_path: str,
     radius: int,
+    hashed: Callable[[], DataFrame] | None = None,
 ) -> DataFrame:
     """Survivors of the raw frame ``new_df`` under the online rule: drop a
     row iff its hash (by the index's recorded hasher) is within hamming
     ``radius`` of ANY indexed row or a smaller-id row of the same batch.
-    NULL-hash rows always survive.
+    NULL-hash rows always survive. ``hashed`` (a :func:`batch_hashes`
+    memo) supplies the batch's hashes; without it they are computed here.
 
     Plan shape: the hasher (for media, the only decode stage) runs once,
     on the new batch, and is localCheckpointed; the corpus side is two
     parquet scans (the block-partitioned candidate join, then a hash
     fetch for candidates only); the final anti-join carries dropped ids
     only, so payloads never cross an exchange."""
-    meta = read_hash_meta(index_path)
-    id_col = meta["id_col"]
-    hashed = _hashed_rows(meta, new_df).localCheckpoint(eager=True)
-    dropped = dropped_ids_against_index(spark, hashed, index_path, radius)
+    id_col = read_hash_meta(index_path)["id_col"]
+    rows = (hashed or batch_hashes(new_df, index_path))()
+    dropped = dropped_ids_against_index(spark, rows, index_path, radius)
     return new_df.join(dropped.select(F.col("_id").alias(id_col)), id_col, "left_anti")
 
 
@@ -309,11 +325,14 @@ def update_hash_index(
     new_df: DataFrame,
     index_path: str,
     batch_id: str,
+    hashed: Callable[[], DataFrame] | None = None,
 ) -> bool:
     """Append one batch's hashes — ALL of them, duplicates included
     (chain equivalence; see operators/dedup_index.py), through
     :func:`util.append_once` (idempotent per ``batch_id``, lease-
-    serialized, marker last). ``new_df`` is raw, hashed as the build was.
+    serialized, marker last). ``new_df`` is raw, hashed as the build was;
+    ``hashed`` (a :func:`batch_hashes` memo, shared with the probe)
+    supplies the hashes, else they are computed here.
 
     NULL-hash rows can never match a probe — a NULL block key never
     equi-joins and a NULL hamming never passes the radius filter — so
@@ -324,7 +343,7 @@ def update_hash_index(
         index_path,
         batch_id,
         "update_hash_index",
-        lambda: _hashed_rows(meta, new_df),
+        hashed or batch_hashes(new_df, index_path),
         lambda rows: _append(rows, meta, index_path),
     )
 

@@ -2410,7 +2410,7 @@ def q76_incremental_dedup_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     b1 = docs.filter(F.col("doc_id") <= mid)
     b2 = docs.filter(F.col("doc_id") > mid)
 
-    digest = fixture_digest(sf_dir, ("documents",), version="didx1")[:8]
+    digest = fixture_digest(sf_dir, ("documents",), version="didx2")[:8]
     idx = artifact_dir(f"spark_graft_dedupidx_{digest}")
     if not os.path.exists(os.path.join(idx, "_meta.json")):
         build_minhash_index(b1, idx)

@@ -33,9 +33,13 @@ online rule the one-shot equivalence proof in test_dedup_index relies on.
 
 Start from :func:`operators.dedup_index.init_minhash_index` (an empty
 index) so the first micro-batch runs the identical path as every later
-one. At 100 TB this loop is the same shape per batch: the probe shuffles
-only the batch, the corpus side stays partition-pruned parquet scans,
-and the appends grow the index linearly between compactions.
+one. Each batch is signed ONCE: the loop builds one memoized,
+checkpointed signature frame (:func:`operators.dedup_index.
+batch_signatures`) that the probe and the append share, and that a
+replay whose steps both no-op never computes. At 100 TB this loop is
+the same shape per batch: the probe shuffles only the batch against
+column-pruned scans of the corpus's (band, bucket, id) triples, and the
+appends grow the index linearly between compactions.
 
 :func:`apply_curation_batch` / :func:`start_incremental_curation` are
 the full-funnel variant (round 10): the q81 curation chain — quality
@@ -57,10 +61,12 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 from serverless_etl_bi_on_aws_spark.operators.dedup_index import (
+    batch_signatures,
     dedup_against_index,
     update_index,
 )
 from serverless_etl_bi_on_aws_spark.operators.hash_index import (
+    batch_hashes,
     dedup_against_hash_index,
     update_hash_index,
 )
@@ -138,17 +144,20 @@ def apply_dedup_batch(
     text_col: str = "text",
 ) -> None:
     """One micro-batch of the ingest loop: probe -> write survivors ->
-    append signatures. Idempotent per ``batch_id`` (see module docstring
-    for the per-crash-point argument). Exposed separately from the
-    stream so tests (and batch schedulers) can drive replays directly."""
+    append signatures, the batch signed once for both. Idempotent per
+    ``batch_id`` (see module docstring for the per-crash-point
+    argument). Exposed separately from the stream so tests (and batch
+    schedulers) can drive replays directly."""
+    sigs = batch_signatures(batch_df, index_path, text_col)
     write_survivors_once(
         clean_dir,
         batch_id,
         lambda: dedup_against_index(
-            spark, batch_df, index_path, threshold=threshold, text_col=text_col
+            spark, batch_df, index_path, threshold=threshold, text_col=text_col,
+            signatures=sigs,
         ),
     )
-    update_index(batch_df, index_path, batch_id, text_col=text_col)
+    update_index(batch_df, index_path, batch_id, text_col=text_col, signatures=sigs)
 
 
 def start_incremental_dedup(
@@ -332,9 +341,12 @@ def apply_curation_batch(
         .drop("_min_id")
     )
 
+    sigs = batch_signatures(gated, index_path, text_col)
+
     def survivors() -> DataFrame:
         kept = dedup_against_index(
-            spark, gated, index_path, threshold=threshold, text_col=text_col
+            spark, gated, index_path, threshold=threshold, text_col=text_col,
+            signatures=sigs,
         )
         if ivf_index_path is None:
             return kept
@@ -353,7 +365,7 @@ def apply_curation_batch(
         )
 
     write_survivors_once(clean_dir, batch_id, survivors)
-    update_index(gated, index_path, batch_id, text_col=text_col)
+    update_index(gated, index_path, batch_id, text_col=text_col, signatures=sigs)
     if ivf_index_path is not None:
         from serverless_etl_bi_on_aws_spark.operators.similarity import (
             update_ivf_index,
@@ -578,13 +590,18 @@ def apply_hash_dedup_batch(
     _SUCCESS-gated survivors write -> marker-gated hash append), with the
     hasher the index recorded at ``init_hash_index``. Survivors keep
     their payloads (dropped ids go into the anti-join, payloads never
-    shuffle); NULL-hash (undecodable, unparseable) rows always survive."""
+    shuffle); NULL-hash (undecodable, unparseable) rows always survive.
+    The batch is hashed once (for media, decoded once): one
+    :func:`operators.hash_index.batch_hashes` memo feeds both steps."""
+    hashed = batch_hashes(batch_df, index_path)
     write_survivors_once(
         clean_dir,
         batch_id,
-        lambda: dedup_against_hash_index(spark, batch_df, index_path, radius),
+        lambda: dedup_against_hash_index(
+            spark, batch_df, index_path, radius, hashed=hashed
+        ),
     )
-    update_hash_index(batch_df, index_path, batch_id)
+    update_hash_index(batch_df, index_path, batch_id, hashed=hashed)
 
 
 def apply_embedding_dedup_batch(

@@ -115,6 +115,25 @@ def test_update_index_idempotent_per_batch(spark, tmp_path):
         build_minhash_index(b2, idx)  # clobber refusal
 
 
+def test_band_table_is_flat(spark, tmp_path):
+    """Every probe touches every band, so ``bands/`` is one flat table of
+    (band, bucket, id) rows: appends add file sets, never band=
+    partition directories."""
+    import os
+
+    docs = load_table(spark, SF, "documents").select("doc_id", "text").limit(90)
+    idx = str(tmp_path / "idx")
+    build_minhash_index(docs.filter(F.col("doc_id") % 4 == 0), idx)
+    for r in (1, 2, 3):
+        assert update_index(docs.filter(F.col("doc_id") % 4 == r), idx, f"b{r}")
+    bands_dir = os.path.join(idx, "bands")
+    assert not any(name.startswith("band=") for name in os.listdir(bands_dir))
+    bands = spark.read.parquet(bands_dir)
+    assert dict(bands.dtypes) == {"band": "int", "bucket": "bigint", "doc_id": "bigint"}
+    n_docs = spark.read.parquet(os.path.join(idx, "sigs")).count()
+    assert bands.count() == n_docs * read_meta(idx).bands
+
+
 def test_empty_batch_does_not_brick_index(spark, tmp_path):
     """Round 17 (found live): an EMPTY batch — e.g. a curation
     micro-batch whose gates rejected everything — used to reach
@@ -269,11 +288,12 @@ def test_compact_index_bounds_files_and_purges_replay_duplicates(spark, tmp_path
     assert spark.read.parquet(os.path.join(idx, "sigs")).count() > n_docs_indexed
 
     files = compact_index(spark, idx)
+    assert set(files) == {"bands", "sigs"}
     # duplicates purged: sigs rows == distinct docs; bands rows distinct
     assert spark.read.parquet(os.path.join(idx, "sigs")).count() == n_docs_indexed
     bands = spark.read.parquet(os.path.join(idx, "bands"))
     assert bands.count() == bands.dropDuplicates(["band", "bucket", "doc_id"]).count()
-    # file count bounded: one file per band partition + one for sigs here
+    # file count bounded: one file per table here
     assert all(n == 1 for n in files.values())
     # markers survive: a replayed batch is still a no-op, meta still reads
     assert not update_index(b1, idx, "batch-1")

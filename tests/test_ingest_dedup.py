@@ -1226,3 +1226,75 @@ def test_curation_batch_blocklist_rung(spark, tmp_path):
         spark, docs, idx, clean, "b0", blocklist_terms_path=terms_path
     )
     assert spark.read.parquet(clean).count() == 2
+
+
+def _two_docs_and_a_copy(spark):
+    """Docs 1 and 2 pass the quality gate and differ; doc 3 copies doc 1."""
+    voc = ["river", "granite", "lantern", "orchard", "harbor", "meadow"]
+    mk = lambda i: " ".join(voc[(i + j) % 6] + f"{i}w{j}" for j in range(40))
+    return spark.createDataFrame(
+        [(1, mk(1)), (2, mk(2)), (3, mk(1))], "doc_id bigint, text string"
+    )
+
+
+@pytest.mark.parametrize("loop", ["apply_dedup_batch", "apply_curation_batch"])
+def test_ingest_loops_sign_each_batch_once(spark, tmp_path, monkeypatch, loop):
+    """The probe and the append share one signature frame: a fresh batch
+    is signed once; a replay after a crash between the survivors write
+    and the index marker is signed once, for the append alone; a full
+    replay signs nothing."""
+    from serverless_etl_bi_on_aws_spark.operators import dedup_index as di
+    from serverless_etl_bi_on_aws_spark.streaming import ingest_dedup
+
+    calls = []
+    real = di.minhash_signatures
+
+    def counting(*a, **k):
+        calls.append(1)
+        return real(*a, **k)
+
+    monkeypatch.setattr(di, "minhash_signatures", counting)
+    apply = getattr(ingest_dedup, loop)
+    b = _two_docs_and_a_copy(spark)
+    idx = str(tmp_path / "idx")
+    clean = str(tmp_path / "clean")
+    init_minhash_index(idx)
+
+    def signs(bid):
+        calls.clear()
+        apply(spark, b, idx, clean, bid)
+        return len(calls)
+
+    assert signs("s-0") == 1  # fresh batch
+    surv = {r.doc_id for r in spark.read.parquet(clean).select("doc_id").collect()}
+    assert surv == {1, 2}  # the within-batch copy drops
+    os.remove(os.path.join(idx, "_applied", "s-0"))
+    assert signs("s-0") == 1  # _SUCCESS holds, the append re-signs
+    assert signs("s-0") == 0  # full replay
+
+
+def test_hash_loop_hashes_each_batch_once(spark, tmp_path, monkeypatch):
+    """apply_hash_dedup_batch hashes a fresh batch once — for media
+    hashers that is one decode — and the probe and the append share it."""
+    from serverless_etl_bi_on_aws_spark.operators import hash_index as hi
+    from serverless_etl_bi_on_aws_spark.streaming.ingest_dedup import (
+        apply_hash_dedup_batch,
+    )
+
+    calls = []
+    h = hi.HASHERS["simhash"]
+
+    def counting(*a, **k):
+        calls.append(1)
+        return h.fn(*a, **k)
+
+    monkeypatch.setitem(hi.HASHERS, "simhash", h._replace(fn=counting))
+    b = _two_docs_and_a_copy(spark)
+    idx = str(tmp_path / "idx")
+    clean = str(tmp_path / "clean")
+    hi.init_hash_index(idx, hasher="simhash")
+    apply_hash_dedup_batch(spark, b, idx, clean, "h-0", 3)
+    assert len(calls) == 1
+    surv = {r.doc_id for r in spark.read.parquet(clean).select("doc_id").collect()}
+    assert surv == {1, 2}
+    assert spark.read.parquet(os.path.join(idx, "hashes")).count() == 3
