@@ -1103,6 +1103,7 @@ def _ivf_q44(spark, dirs: dict[str, str]) -> dict:
         compact_ivf_index,
         ivf_probe_topk,
     )
+    from serverless_etl_bi_on_aws_spark.operators.snapshot import current_generation
     from serverless_etl_bi_on_aws_spark.util import artifact_dir, fixture_digest
 
     out: dict = {"build_sec": {}, "probe_sec": {}, "n_clusters": 32, "n_probe": 4}
@@ -1115,9 +1116,9 @@ def _ivf_q44(spark, dirs: dict[str, str]) -> dict:
                 float(x)
                 for x in emb.filter(F.col("vec_id") == 0).select("embedding").head()[0]
             ]
-            digest = fixture_digest(sf_dir, ("embeddings",))[:8]
+            digest = fixture_digest(sf_dir, ("embeddings",), version="ivf2")[:8]
             path = artifact_dir(f"spark_graft_ivf44_{digest}")
-            pre_built = os.path.exists(os.path.join(path, "_meta.json"))
+            pre_built = current_generation(path) is not None
             t0 = time.perf_counter()
             if not pre_built:
                 build_ivf_index(

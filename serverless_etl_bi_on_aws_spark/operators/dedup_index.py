@@ -28,14 +28,28 @@ invisible (pytest + q76 oracle-pinned). Indexing only survivors would
 break chain equivalence: with A ~ B ~ C but A !~ C, a survivor-only index
 forgets B and would let C through.
 
-Index layout (two tables — NOT one banded table carrying signatures,
-which would store each 128-long signature ``bands`` times over):
+Index layout — the root is a generation store (operators/snapshot.py);
+each generation holds two tables (NOT one banded table carrying
+signatures, which would store each 128-long signature ``bands`` times
+over) and the meta:
 
-    <index>/bands/           (band INT, bucket BIGINT, doc id)   bands rows/doc
-    <index>/sigs/            (doc id, sig ARRAY<BIGINT>)         1 row/doc
-    <index>/_meta.json       n, num_hashes, bands, seed — probes must
-                             hash identically to the build or buckets are
-                             meaningless; validated on every probe.
+    <index>/_current.json         pointer to the live generation
+    <index>/gen-<seq>-<nonce>/
+        bands/           (band INT, bucket BIGINT, doc id)   bands rows/doc
+        sigs/            (doc id, sig ARRAY<BIGINT>)         1 row/doc
+        _meta.json       n, num_hashes, bands, seed — probes must hash
+                         identically to the build or buckets are
+                         meaningless; validated on every probe.
+    <index>/_applied/<batch>      idempotence markers (util.append_once)
+
+Build and init commit generation 1: the pointer present means the build
+is complete. Appends write into the live generation under the writer
+lease; a probe resolves the pointer once. Compaction and takedown
+rewrite a private hardlinked stage and publish it with one pointer
+commit (snapshot.staged_rewrite), so a reader — or a process killed
+mid-rewrite — sees the whole old index or the whole new one.
+``_applied`` sits at the root because no rewrite changes which batches
+are applied.
 
 Each append writes one file set per table. ``bands`` is flat, not
 partitioned by band: every new doc emits a bucket for ALL ``bands``
@@ -69,12 +83,12 @@ from serverless_etl_bi_on_aws_spark.operators.dedup import (
     est_jaccard,
     minhash_signatures,
 )
-from serverless_etl_bi_on_aws_spark.util import (
-    append_once,
-    read_marker,
-    write_marker,
-    writer_lease,
+from serverless_etl_bi_on_aws_spark.operators.snapshot import (
+    current_generation,
+    live_generation,
+    staged_rewrite,
 )
+from serverless_etl_bi_on_aws_spark.util import append_once, read_marker, write_marker
 
 
 @dataclass(frozen=True)
@@ -90,15 +104,28 @@ class IndexMeta:
         return self.num_hashes // self.bands
 
 
-def _write_meta(index_path: str, meta: IndexMeta) -> None:
-    write_marker(os.path.join(index_path, "_meta.json"), meta.__dict__)
+def _meta_at(gen: str) -> IndexMeta:
+    d = read_marker(os.path.join(gen, "_meta.json"))
+    if d is None:
+        raise FileNotFoundError(f"no index meta at {gen}")
+    return IndexMeta(**d)
 
 
 def read_meta(index_path: str) -> IndexMeta:
-    d = read_marker(os.path.join(index_path, "_meta.json"))
-    if d is None:
-        raise FileNotFoundError(f"no index meta at {index_path}")
-    return IndexMeta(**d)
+    return _meta_at(live_generation(index_path))
+
+
+def _create(index_path: str, meta: IndexMeta, sigs: DataFrame | None = None) -> None:
+    """Commit generation 1 — meta plus, for a build, the starting
+    corpus's signatures. Refuses to clobber an existing index."""
+    if current_generation(index_path) is not None:
+        raise ValueError(
+            f"index already exists at {index_path}; use update_index to append"
+        )
+    with staged_rewrite(index_path, owner="create_minhash_index") as (_live, stage):
+        if sigs is not None:
+            _append_signatures(sigs, meta, stage)
+        write_marker(os.path.join(stage, "_meta.json"), meta.__dict__)
 
 
 def _has_parquet_files(path: str) -> bool:
@@ -111,7 +138,7 @@ def _has_parquet_files(path: str) -> bool:
     return False
 
 
-def _append_signatures(sigs: DataFrame, meta: IndexMeta, index_path: str) -> None:
+def _append_signatures(sigs: DataFrame, meta: IndexMeta, gen: str) -> None:
     """Persist (sigs, bands) for one batch of signatures, one file set
     per table. Append-only — the index grows linearly with the corpus,
     nothing is rewritten.
@@ -122,12 +149,12 @@ def _append_signatures(sigs: DataFrame, meta: IndexMeta, index_path: str) -> Non
     The reverse order would leave band rows whose doc has no sig, and
     those candidates silently vanish from the probe's inner join with
     the indexed sigs: duplicates missed with no error."""
-    sigs.write.mode("append").parquet(os.path.join(index_path, "sigs"))
+    sigs.write.mode("append").parquet(os.path.join(gen, "sigs"))
     (
         band_buckets(sigs, meta.bands, meta.rows, id_col=meta.id_col)
         .select("band", "bucket", F.col("_id").alias(meta.id_col))
         .write.mode("append")
-        .parquet(os.path.join(index_path, "bands"))
+        .parquet(os.path.join(gen, "bands"))
     )
 
 
@@ -161,18 +188,13 @@ def build_minhash_index(
     bands: int = 32,
     seed: int = 42,
 ) -> None:
-    """One-time build: signature + band tables for the starting corpus.
-    Refuses to clobber an existing index (appends belong to
-    :func:`update_index`)."""
-    if os.path.exists(os.path.join(index_path, "_meta.json")):
-        raise ValueError(
-            f"index already exists at {index_path}; use update_index to append"
-        )
-    os.makedirs(index_path, exist_ok=True)
+    """One-time build: signature + band tables for the starting corpus,
+    committed as generation 1. Refuses to clobber an existing index
+    (appends belong to :func:`update_index`)."""
     meta = IndexMeta(n=n, num_hashes=num_hashes, bands=bands, seed=seed, id_col=id_col)
-    sigs = minhash_signatures(docs, id_col, text_col, n, num_hashes, seed)
-    _append_signatures(sigs, meta, index_path)
-    _write_meta(index_path, meta)  # written LAST: meta present == build complete
+    _create(
+        index_path, meta, minhash_signatures(docs, id_col, text_col, n, num_hashes, seed)
+    )
 
 
 def init_minhash_index(
@@ -188,10 +210,7 @@ def init_minhash_index(
     micro-batch runs the same probe-then-append path as every later one
     (a probe against an empty corpus simply yields no corpus candidates);
     a separate bootstrap path would need its own replay guard."""
-    if os.path.exists(os.path.join(index_path, "_meta.json")):
-        raise ValueError(f"index already exists at {index_path}")
-    os.makedirs(index_path, exist_ok=True)
-    _write_meta(
+    _create(
         index_path,
         IndexMeta(n=n, num_hashes=num_hashes, bands=bands, seed=seed, id_col=id_col),
     )
@@ -223,7 +242,8 @@ def dedup_against_index(
     Corpus text is never re-shingled; ``minhash_signatures`` runs
     exactly once, on the new batch (pytest-trapped, the KMeans-refit
     trap pattern)."""
-    meta = read_meta(index_path)
+    live = live_generation(index_path)
+    meta = _meta_at(live)
     id_col = meta.id_col
     new_sigs = (signatures or batch_signatures(new_docs, index_path, text_col))()
     new_banded = band_buckets(new_sigs, meta.bands, meta.rows, id_col=id_col)
@@ -241,9 +261,9 @@ def dedup_against_index(
     # holding only _SUCCESS — a pre-fix empty append, or a crash between
     # mkdir and the first data file — is an empty corpus, not a readable
     # table, and spark.read.parquet on it throws UNABLE_TO_INFER_SCHEMA.
-    if _has_parquet_files(os.path.join(index_path, "bands")):
-        idx_bands = spark.read.parquet(os.path.join(index_path, "bands"))
-        idx_sigs = spark.read.parquet(os.path.join(index_path, "sigs"))
+    if _has_parquet_files(os.path.join(live, "bands")):
+        idx_bands = spark.read.parquet(os.path.join(live, "bands"))
+        idx_sigs = spark.read.parquet(os.path.join(live, "sigs"))
         seniors = senior(idx_bands, True, id_col, "band", "bucket").unionByName(seniors)
         senior_sigs = senior(idx_sigs, True, id_col, "sig").unionByName(senior_sigs)
 
@@ -297,7 +317,8 @@ def update_index(
         "update_index",
         # checkpointed: the empty guard and the append share one pass
         signatures or batch_signatures(new_docs, index_path, text_col),
-        lambda sigs: _append_signatures(sigs, meta, index_path),
+        # resolved under append_once's lease: no rewrite can commit between
+        lambda sigs: _append_signatures(sigs, meta, live_generation(index_path)),
     )
 
 
@@ -314,9 +335,10 @@ def compact_index(
     ~``target_file_bytes`` files, deduped on (band, bucket, id) and
     range-clustered on ``bucket`` so a probe's bucket join skips files by
     footer stats; ``sigs`` is deduped on the id (signatures are
-    deterministic per meta, so replay rows are exact duplicates). Every
-    rewrite is write-new-then-swap (operators/maintenance.py), and the
-    ``_meta.json`` / ``_applied`` markers are untouched — compaction
+    deterministic per meta, so replay rows are exact duplicates). Both
+    tables are rewritten from the live generation into one staged
+    generation and published with one pointer commit
+    (snapshot.staged_rewrite); ``_applied`` is untouched — compaction
     changes layout, never which batches are applied, so it composes with
     concurrent :func:`dedup_against_index` readers and future
     :func:`update_index` appends. Probe results are identical before and
@@ -330,12 +352,14 @@ def compact_index(
         "sigs": dict(dedupe_on=[meta.id_col]),
     }
     files = {}
-    with writer_lease(index_path, owner="compact_index"):
+    with staged_rewrite(index_path, owner="compact_index") as (live, stage):
         # a just-initialized index (init_minhash_index, no appends yet) has
         # neither table — nothing to compact, same grace dedup_against_index
         # extends to the empty-corpus probe (round-9 ADVICE)
         for table, kw in layout.items():
-            path = os.path.join(index_path, table)
-            if os.path.exists(path):
-                files[table] = compact_parquet(spark, path, target_file_bytes, **kw)
+            src = os.path.join(live, table)
+            if os.path.exists(src):
+                files[table] = compact_parquet(
+                    spark, src, os.path.join(stage, table), target_file_bytes, **kw
+                )
     return files

@@ -19,26 +19,31 @@ CURATION artifacts that merge never touches:
   * the persisted MinHash text index (``sigs/`` + the flat ``bands/``),
   * the persisted IVF embedding corpus (``corpus/_cluster=<c>/``).
 
-Scale shape: for a partitioned table (the corpus batches, hash-index
-blocks, IVF clusters), discovery of WHICH partitions hold the target ids
-is a column-pruned scan + semi-join emitting partition VALUES only
-(batch ids / block ids / cluster ids — maintenance-scale collects, like
-the centroid reads); ALL affected partitions are then rewritten in ONE
-Spark pass (:func:`operators.maintenance.
-rewrite_partitions_without_keys` — one anti-join, one partitioned
-write-aside, per-partition swap renames; round 12 — the previous
-per-partition loop paid one job launch per partition). Untouched
+Scale shape: for a partitioned table (the corpus batches, IVF
+clusters), discovery of WHICH partitions hold the target ids is a
+column-pruned scan + semi-join emitting partition VALUES only (batch ids
+/ cluster ids — maintenance-scale collects, like the centroid reads),
+and only those partitions are rewritten, in ONE Spark pass. Untouched
 partitions keep their files. Unpartitioned tables (the MinHash index's
-sigs and bands, the hash index's hashes) use the single-dir
-:func:`~operators.maintenance.rewrite_without_keys`: one anti-join and
-one write-aside per table — every text takedown touches every band
-anyway, since each doc has a row in all of them. Index rewrites run under the
-single-writer lease (with the retrying acquisition, so a takedown
-serializes behind an in-flight append).
-Commit markers (``_applied``) are deliberately NOT touched: forgetting
-content is not un-applying batches — a replayed batch must still no-op,
-and a re-submission of forgotten content arrives as a new batch with a
-new id.
+sigs and flat bands, the hash index's hashes and flat blocks) are
+rewritten whole by :func:`~operators.maintenance.rewrite_without_keys`
+— every takedown touches every band and block anyway, since each doc
+has a row in all of them.
+
+Publishing: every index takedown is one staged rewrite
+(operators/snapshot.staged_rewrite, under the retrying writer lease, so
+a takedown serializes behind an in-flight append): it reads the live
+generation, overwrites only the changed tables or ``_cluster=``
+partitions in a private hardlinked stage, and commits with one pointer
+write — a reader, or a process killed mid-takedown, sees the whole
+index before or after. The curated corpus stays a plain
+directory, rewritten per partition by
+:func:`~operators.maintenance.rewrite_partitions_without_keys`; host it
+in a snapshot family (:func:`forget_documents_versioned`) for the same
+guarantee. Commit markers (``_applied``) are deliberately NOT touched:
+forgetting content is not un-applying batches — a replayed batch must
+still no-op, and a re-submission of forgotten content arrives as a new
+batch with a new id.
 
 At 100 TB a takedown batch rewrites only the partitions the targets
 live in, plus the MinHash index's two flat tables whole; batch many
@@ -49,6 +54,7 @@ rather than rewriting per request.
 from __future__ import annotations
 
 import os
+import shutil
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -57,7 +63,10 @@ from serverless_etl_bi_on_aws_spark.operators.maintenance import (
     rewrite_partitions_without_keys,
     rewrite_without_keys,
 )
-from serverless_etl_bi_on_aws_spark.util import writer_lease_with_retry
+from serverless_etl_bi_on_aws_spark.operators.snapshot import (
+    live_generation,
+    staged_rewrite,
+)
 
 #: Shadow sweeps report a COUNT plus a bounded id sample, never the full
 #: id list: a single takedown whose content was mass-replicated could
@@ -157,34 +166,30 @@ def forget_from_minhash_index(
     as the dedup probe. Targets per call should be takedown-batch
     sized (they broadcast into the sweep).
 
-    Runs under the retrying single-writer lease. Returns per-table
-    removed-row counts plus the swept shadow ids."""
+    One staged rewrite under the retrying single-writer lease. Returns
+    per-table removed-row counts plus the swept shadow ids."""
     from serverless_etl_bi_on_aws_spark.operators.dedup import est_jaccard
     from serverless_etl_bi_on_aws_spark.operators.dedup_index import read_meta
 
     meta = read_meta(index_path)
-    _sigs = os.path.join(index_path, "sigs")
-    id_type = (
-        spark.read.parquet(_sigs).schema[meta.id_col].dataType
-        if os.path.isdir(_sigs)
-        else None
+    key_df = _ids_df(
+        spark, ids, meta.id_col, _id_type(spark, index_path, "sigs", meta.id_col)
     )
-    key_df = _ids_df(spark, ids, meta.id_col, id_type)
     out: dict = {
         "sigs_removed": 0,
         "bands_removed": 0,
         "shadows_swept": 0,
         "shadow_ids_sample": [],
     }
-    with writer_lease_with_retry(
+    with staged_rewrite(
         index_path, owner="forget_from_minhash_index", wait_s=60.0
-    ):
-        sigs_path = os.path.join(index_path, "sigs")
-        bands_root = os.path.join(index_path, "bands")
+    ) as (live, stage):
+        sigs_path = os.path.join(live, "sigs")
+        bands_path = os.path.join(live, "bands")
         all_keys = key_df
-        if os.path.isdir(sigs_path) and os.path.isdir(bands_root):
+        if os.path.isdir(sigs_path) and os.path.isdir(bands_path):
             sigs = spark.read.parquet(sigs_path)
-            bands = spark.read.parquet(bands_root)
+            bands = spark.read.parquet(bands_path)
             tb = (
                 bands.join(key_df, meta.id_col, "left_semi")
                 .select("band", "bucket")
@@ -207,25 +212,36 @@ def forget_from_minhash_index(
                 .join(key_df, meta.id_col, "left_anti")
                 .distinct()
             )
-            # materialize BEFORE the rewrites swap the dirs this plan
-            # reads (and so count/sample/union evaluate the plan once)
-            shadows = shadows.localCheckpoint(eager=True)
-            out["shadows_swept"] = shadows.count()
-            out["shadow_ids_sample"] = sorted(
-                r[0] for r in shadows.limit(SHADOW_SAMPLE_ROWS).collect()
-            )
-            all_keys = key_df.unionByName(shadows).distinct().localCheckpoint(
-                eager=True
-            )
-        if os.path.isdir(sigs_path):
-            out["sigs_removed"] = rewrite_without_keys(
-                spark, sigs_path, all_keys, meta.id_col
-            )
-        if os.path.isdir(bands_root):
-            out["bands_removed"] = rewrite_without_keys(
-                spark, bands_root, all_keys, meta.id_col
-            )
+            all_keys = _sweep_shadows(out, key_df, shadows)
+        for table in ("sigs", "bands"):
+            if os.path.isdir(os.path.join(live, table)):
+                out[f"{table}_removed"] = rewrite_without_keys(
+                    spark,
+                    os.path.join(live, table),
+                    os.path.join(stage, table),
+                    all_keys,
+                    meta.id_col,
+                )
     return out
+
+
+def _id_type(spark: SparkSession, index_path: str, table: str, id_col: str):
+    """The id column's type in the live ``table`` of an index (None
+    before its first append)."""
+    path = os.path.join(live_generation(index_path), table)
+    return spark.read.parquet(path).schema[id_col].dataType if os.path.isdir(path) else None
+
+
+def _sweep_shadows(out: dict, key_df: DataFrame, shadows: DataFrame) -> DataFrame:
+    """Record the shadow count and id sample in ``out``; return the
+    targets plus the shadows, checkpointed (the count, the sample and
+    the rewrites evaluate the sweep once)."""
+    shadows = shadows.localCheckpoint(eager=True)
+    out["shadows_swept"] = shadows.count()
+    out["shadow_ids_sample"] = sorted(
+        r[0] for r in shadows.limit(SHADOW_SAMPLE_ROWS).collect()
+    )
+    return key_df.unionByName(shadows).distinct().localCheckpoint(eager=True)
 
 
 def forget_from_hash_index(
@@ -239,31 +255,24 @@ def forget_from_hash_index(
     (an identical image/audio payload hashes identically, so the
     gated-but-dropped shadow rows the loops index are exactly the
     equal-hash rows); within-radius hamming shadows are the policy
-    composition — probe first, pass the ids. Runs under the retrying
-    single-writer lease; ``_applied`` markers stay."""
+    composition — probe first, pass the ids. One staged rewrite of
+    ``hashes`` and ``blocks`` under the retrying single-writer lease;
+    ``_applied`` markers stay."""
     from serverless_etl_bi_on_aws_spark.operators.hash_index import read_hash_meta
 
     meta = read_hash_meta(index_path)
     id_col, hash_col = meta["id_col"], meta["hash_col"]
-    _hashes = os.path.join(index_path, "hashes")
-    id_type = (
-        spark.read.parquet(_hashes).schema[id_col].dataType
-        if os.path.isdir(_hashes)
-        else None
-    )
-    key_df = _ids_df(spark, ids, id_col, id_type)
+    key_df = _ids_df(spark, ids, id_col, _id_type(spark, index_path, "hashes", id_col))
     out: dict = {
         "hashes_removed": 0,
         "blocks_removed": 0,
-        "block_partitions": [],
         "shadows_swept": 0,
         "shadow_ids_sample": [],
     }
-    with writer_lease_with_retry(
+    with staged_rewrite(
         index_path, owner="forget_from_hash_index", wait_s=60.0
-    ):
-        hashes_path = os.path.join(index_path, "hashes")
-        blocks_root = os.path.join(index_path, "blocks")
+    ) as (live, stage):
+        hashes_path = os.path.join(live, "hashes")
         all_keys = key_df
         if sweep_exact_twins and os.path.isdir(hashes_path):
             hashes = spark.read.parquet(hashes_path)
@@ -278,40 +287,24 @@ def forget_from_hash_index(
                 .join(key_df, id_col, "left_anti")
                 .distinct()
             )
-            shadows = shadows.localCheckpoint(eager=True)
-            out["shadows_swept"] = shadows.count()
-            out["shadow_ids_sample"] = sorted(
-                r[0] for r in shadows.limit(SHADOW_SAMPLE_ROWS).collect()
-            )
-            all_keys = key_df.unionByName(shadows).distinct().localCheckpoint(
-                eager=True
-            )
-        if os.path.isdir(hashes_path):
-            out["hashes_removed"] = rewrite_without_keys(
-                spark, hashes_path, all_keys, id_col
-            )
-        if os.path.isdir(blocks_root):
-            blocks = spark.read.parquet(blocks_root)
-            affected = sorted(
-                r[0]
-                for r in blocks.select(id_col, "block")
-                .join(all_keys, id_col, "left_semi")
-                .select("block")
-                .distinct()
-                .collect()
-            )
-            out["blocks_removed"] = rewrite_partitions_without_keys(
-                spark, blocks_root, "block", affected, all_keys, id_col
-            )
-            out["block_partitions"] = [int(b) for b in affected]
+            all_keys = _sweep_shadows(out, key_df, shadows)
+        for table in ("hashes", "blocks"):
+            if os.path.isdir(os.path.join(live, table)):
+                out[f"{table}_removed"] = rewrite_without_keys(
+                    spark,
+                    os.path.join(live, table),
+                    os.path.join(stage, table),
+                    all_keys,
+                    id_col,
+                )
     return out
 
 
 def forget_from_ivf_index(
     spark: SparkSession, index_path: str, ids, sweep_exact_twins: bool = True
 ) -> dict:
-    """Remove the target vectors from a persisted IVF corpus, under the
-    retrying single-writer lease. Like the text index, removal is
+    """Remove the target vectors from a persisted IVF corpus, as one
+    staged rewrite under the retrying single-writer lease. Like the text index, removal is
     CONTENT-level by default: the embedding ingest loop appends the
     whole gated batch, so a dropped duplicate leaves a shadow row with
     the byte-identical vector that would keep shielding the content;
@@ -325,18 +318,17 @@ def forget_from_ivf_index(
     Centroids, drift records, and ``_applied`` markers stay — removing
     rows never moves centroids, and batch replays must remain no-ops.
     Affected ``_cluster=`` partitions are discovered by a pruned
-    semi-join (partition values only) and rewritten in place."""
-    from serverless_etl_bi_on_aws_spark.util import read_marker
+    semi-join (partition values only); in the staged generation exactly
+    those partition directories are replaced by their kept rows."""
+    from serverless_etl_bi_on_aws_spark.operators.similarity import _ivf_live
 
-    meta = read_marker(os.path.join(index_path, "_meta.json"))
-    if meta is None:
-        raise FileNotFoundError(
-            f"no _meta.json at {index_path}; rebuild with build_ivf_index"
-        )
+    live, meta = _ivf_live(index_path)
     id_col, vec_col = meta["id_col"], meta["vec_col"]
-    corpus_root = os.path.join(index_path, "corpus")
     key_df = _ids_df(
-        spark, ids, id_col, spark.read.parquet(corpus_root).schema[id_col].dataType
+        spark,
+        ids,
+        id_col,
+        spark.read.parquet(os.path.join(live, "corpus")).schema[id_col].dataType,
     )
     out: dict = {
         "rows_removed": 0,
@@ -344,10 +336,10 @@ def forget_from_ivf_index(
         "shadows_swept": 0,
         "shadow_ids_sample": [],
     }
-    with writer_lease_with_retry(
+    with staged_rewrite(
         index_path, owner="forget_from_ivf_index", wait_s=60.0
-    ):
-        corpus = spark.read.parquet(corpus_root)
+    ) as (live, stage):
+        corpus = spark.read.parquet(os.path.join(live, "corpus"))
         all_keys = key_df
         if sweep_exact_twins:
             tvecs = (
@@ -365,14 +357,7 @@ def forget_from_ivf_index(
                 .join(key_df, id_col, "left_anti")
                 .distinct()
             )
-            shadows = shadows.localCheckpoint(eager=True)
-            out["shadows_swept"] = shadows.count()
-            out["shadow_ids_sample"] = sorted(
-                r[0] for r in shadows.limit(SHADOW_SAMPLE_ROWS).collect()
-            )
-            all_keys = key_df.unionByName(shadows).distinct().localCheckpoint(
-                eager=True
-            )
+            all_keys = _sweep_shadows(out, key_df, shadows)
         affected = sorted(
             r[0]
             for r in corpus.select(id_col, "_cluster")
@@ -381,10 +366,18 @@ def forget_from_ivf_index(
             .distinct()
             .collect()
         )
-        out["rows_removed"] = rewrite_partitions_without_keys(
-            spark, corpus_root, "_cluster", affected, all_keys, id_col
-        )
+        scoped = corpus.filter(F.col("_cluster").isin(affected))
+        kept = scoped.join(all_keys, id_col, "left_anti")
+        out["rows_removed"] = scoped.count() - kept.count()
         out["cluster_partitions"] = [int(c) for c in affected]
+        if out["rows_removed"]:
+            # ``kept`` reads the live generation, never the stage it
+            # replaces; a cluster whose rows all went simply disappears
+            for c in affected:
+                shutil.rmtree(os.path.join(stage, "corpus", f"_cluster={c}"))
+            kept.write.mode("append").partitionBy("_cluster").parquet(
+                os.path.join(stage, "corpus")
+            )
     return out
 
 

@@ -12,13 +12,16 @@ for all of them, so it lives here once. The index records which hasher
 built it, so every probe and append hashes raw frames exactly as the
 build did; nothing is re-passed at a call site.
 
-Layout (the operators/dedup_index.py shape, hash-sized):
+Layout (the operators/dedup_index.py shape, hash-sized — a generation
+store whose generations hold the tables and the meta):
 
-    <index>/hashes/            (id, <hash_col>)         16 bytes/row
-    <index>/blocks/block=<b>/  (key, id)                n_blocks rows/doc
-    <index>/_meta.json         {"n_blocks", "id_col", "hash_col",
-                                "hasher": {"kind", "source_col", params}}
-    <index>/_applied/<batch>   idempotence markers (util.append_once)
+    <index>/_current.json       pointer to the live generation
+    <index>/gen-<seq>-<nonce>/
+        hashes/                 (id, <hash_col>)         16 bytes/row
+        blocks/                 (block, key, id)         n_blocks rows/doc
+        _meta.json              {"n_blocks", "id_col", "hash_col",
+                                 "hasher": {"kind", "source_col", params}}
+    <index>/_applied/<batch>    idempotence markers (util.append_once)
 
 ``hasher`` is one of :data:`HASHERS` — ``{"kind": "simhash",
 "source_col": "text", "n": 3}``, ``{"kind": "url", "source_col": "url"}``,
@@ -28,18 +31,21 @@ index: its frames already carry ``(id_col, hash_col)`` and are projected
 onto them (the takedown and object-store paths use this contract).
 
 Probe shape: candidates come from the (block, key) equi-join against
-the block-partitioned index. Every new row emits all ``n_blocks``
-sub-keys, so the join touches every block partition — the real (and
-sufficient) guarantee is that the scan reads only the 24-byte
-(block, key, id) triples, never hashes or payloads, and only candidate
-PAIRS fetch full hashes for the ``bit_count(xor)`` verify. The hasher
+the flat ``blocks`` table. Every new row emits all ``n_blocks``
+sub-keys, so the join touches every block — a ``block`` partitioning
+would prune nothing and only multiply files per append. The scan reads
+only the 24-byte (block, key, id) triples, never hashes or payloads,
+and only candidate PAIRS fetch full hashes for the ``bit_count(xor)``
+verify. The hasher
 runs once, on the new batch; indexed payloads are never re-hashed.
 Online rule: a new row is dropped iff within ``radius`` of ANY indexed
 row or a smaller-id row of the same batch. NULL-hash rows (short docs,
 unparseable urls, undecodable media) always survive and are never
-indexed. Appends write hashes before blocks (an unreplayed crash leaves
-an inert hash, never block rows whose candidates silently vanish) and
-run through ``util.append_once``.
+indexed. Appends write hashes before blocks into the live generation
+(an unreplayed crash leaves an inert hash, never block rows whose
+candidates silently vanish) and run through ``util.append_once``;
+compaction and takedown publish a staged generation
+(snapshot.staged_rewrite).
 """
 
 from __future__ import annotations
@@ -56,12 +62,12 @@ from serverless_etl_bi_on_aws_spark.operators.dedup import (
     hash_block_expr,
     simhash64,
 )
-from serverless_etl_bi_on_aws_spark.util import (
-    append_once,
-    read_marker,
-    write_marker,
-    writer_lease,
+from serverless_etl_bi_on_aws_spark.operators.snapshot import (
+    current_generation,
+    live_generation,
+    staged_rewrite,
 )
+from serverless_etl_bi_on_aws_spark.util import append_once, read_marker, write_marker
 
 
 class Hasher(NamedTuple):
@@ -132,11 +138,15 @@ def _hasher_spec(hasher: str | dict) -> dict:
     return {"kind": kind, "source_col": source_col, **h.params, **spec}
 
 
-def read_hash_meta(index_path: str) -> dict:
-    meta = read_marker(os.path.join(index_path, "_meta.json"))
+def _hash_meta_at(gen: str) -> dict:
+    meta = read_marker(os.path.join(gen, "_meta.json"))
     if meta is None:
-        raise FileNotFoundError(f"no hash index meta at {index_path}")
+        raise FileNotFoundError(f"no hash index meta at {gen}")
     return meta
+
+
+def read_hash_meta(index_path: str) -> dict:
+    return _hash_meta_at(live_generation(index_path))
 
 
 def _hashed_rows(meta: dict, df: DataFrame) -> DataFrame:
@@ -176,15 +186,14 @@ def hash_blocks(hashed: DataFrame, id_col: str, hash_col: str, n_blocks: int) ->
     ).select("_id", "_bk.block", "_bk.key")
 
 
-def _append(hashed: DataFrame, meta: dict, index_path: str) -> None:
+def _append(hashed: DataFrame, meta: dict, gen: str) -> None:
     id_col, hash_col, n_blocks = meta["id_col"], meta["hash_col"], meta["n_blocks"]
-    hashed.write.mode("append").parquet(os.path.join(index_path, "hashes"))
+    hashed.write.mode("append").parquet(os.path.join(gen, "hashes"))
     (
         hash_blocks(hashed, id_col, hash_col, n_blocks)
         .select("block", "key", F.col("_id").alias(id_col))
         .write.mode("append")
-        .partitionBy("block")
-        .parquet(os.path.join(index_path, "blocks"))
+        .parquet(os.path.join(gen, "blocks"))
     )
 
 
@@ -203,8 +212,10 @@ def init_hash_index(
     its params (``{"kind": "simhash", "n": 5}``); the kind fixes
     ``hash_col`` and defaults ``n_blocks``. Without it the index holds
     pre-hashed frames (``hash_col`` default ``"hash"``, 16 blocks)."""
-    if os.path.exists(os.path.join(index_path, "_meta.json")):
-        raise ValueError(f"index already exists at {index_path}")
+    _create(index_path, _new_meta(id_col, hash_col, n_blocks, hasher))
+
+
+def _new_meta(id_col, hash_col, n_blocks, hasher) -> dict:
     meta = {"n_blocks": n_blocks or 16, "id_col": id_col, "hash_col": hash_col or "hash"}
     if hasher is not None:
         spec = _hasher_spec(hasher)
@@ -212,8 +223,18 @@ def init_hash_index(
         if hash_col not in (None, h.hash_col):
             raise ValueError(f"hasher {spec['kind']!r} writes {h.hash_col!r}, not {hash_col!r}")
         meta.update(n_blocks=n_blocks or h.n_blocks, hash_col=h.hash_col, hasher=spec)
-    os.makedirs(index_path, exist_ok=True)
-    write_marker(os.path.join(index_path, "_meta.json"), meta)
+    return meta
+
+
+def _create(index_path: str, meta: dict, df: DataFrame | None = None) -> None:
+    """Commit generation 1 — meta plus, for a build, ``df``'s hashes.
+    Refuses to clobber an existing index."""
+    if current_generation(index_path) is not None:
+        raise ValueError(f"index already exists at {index_path}")
+    with staged_rewrite(index_path, owner="create_hash_index") as (_live, stage):
+        if df is not None:
+            _append(_hashed_rows(meta, df), meta, stage)
+        write_marker(os.path.join(stage, "_meta.json"), meta)
 
 
 def build_hash_index(
@@ -227,9 +248,7 @@ def build_hash_index(
     """One-time build over the starting corpus (hashed once, by
     ``hasher``; see :func:`init_hash_index`). Refuses to clobber;
     appends belong to :func:`update_hash_index`."""
-    init_hash_index(index_path, id_col, hash_col, n_blocks, hasher)
-    meta = read_hash_meta(index_path)
-    _append(_hashed_rows(meta, df), meta, index_path)
+    _create(index_path, _new_meta(id_col, hash_col, n_blocks, hasher), df)
 
 
 def dropped_ids_against_index(
@@ -243,7 +262,8 @@ def dropped_ids_against_index(
     caller anti-joins against its original frame (keeping payload columns
     out of every exchange). ``new_hashed`` should be small-per-batch and
     is consumed three times — localCheckpoint it if it is expensive."""
-    meta = read_hash_meta(index_path)
+    live = live_generation(index_path)
+    meta = _hash_meta_at(live)
     id_col, hash_col, n_blocks = meta["id_col"], meta["hash_col"], meta["n_blocks"]
     if radius > n_blocks - 1:
         raise ValueError(
@@ -262,9 +282,9 @@ def dropped_ids_against_index(
         _has_parquet_files,
     )
 
-    if _has_parquet_files(os.path.join(index_path, "blocks")):
-        idx_blocks = spark.read.parquet(os.path.join(index_path, "blocks"))
-        idx_hashes = spark.read.parquet(os.path.join(index_path, "hashes"))
+    if _has_parquet_files(os.path.join(live, "blocks")):
+        idx_blocks = spark.read.parquet(os.path.join(live, "blocks"))
+        idx_hashes = spark.read.parquet(os.path.join(live, "hashes"))
     else:
         idx_blocks = new_blocks.select("block", "key", F.col("_id").alias(id_col)).limit(0)
         idx_hashes = new_hashed.limit(0)
@@ -312,7 +332,7 @@ def dedup_against_hash_index(
 
     Plan shape: the hasher (for media, the only decode stage) runs once,
     on the new batch, and is localCheckpointed; the corpus side is two
-    parquet scans (the block-partitioned candidate join, then a hash
+    parquet scans (the (block, key) candidate join, then a hash
     fetch for candidates only); the final anti-join carries dropped ids
     only, so payloads never cross an exchange."""
     id_col = read_hash_meta(index_path)["id_col"]
@@ -344,41 +364,32 @@ def update_hash_index(
         batch_id,
         "update_hash_index",
         hashed or batch_hashes(new_df, index_path),
-        lambda rows: _append(rows, meta, index_path),
+        # resolved under append_once's lease: no rewrite can commit between
+        lambda rows: _append(rows, meta, live_generation(index_path)),
     )
 
 
 def compact_hash_index(
     spark: SparkSession, index_path: str, target_file_bytes: int = 128 << 20
 ) -> dict[str, int]:
-    """Per-block-partition compaction: dedupe replay rows on (key, id),
-    range-cluster on ``key`` for footer-stats skipping; hashes dedupe on
-    the id. Markers untouched; probe results identical before/after."""
+    """Compact both tables into one staged generation: ``blocks``
+    deduped on (block, key, id) and range-clustered on ``key`` for
+    footer-stats skipping, ``hashes`` deduped on the id. ``_applied``
+    untouched; probe results identical before/after. Returns the new
+    file count per table (empty for a just-initialized index)."""
     from serverless_etl_bi_on_aws_spark.operators.maintenance import compact_parquet
 
-    meta = read_hash_meta(index_path)
-    id_col = meta["id_col"]
+    id_col = read_hash_meta(index_path)["id_col"]
+    layout = {
+        "blocks": dict(cluster_by="key", dedupe_on=["block", "key", id_col]),
+        "hashes": dict(dedupe_on=[id_col]),
+    }
     files = {}
-    blocks_root = os.path.join(index_path, "blocks")
-    with writer_lease(index_path, owner="compact_hash_index"):
-        # a just-initialized index (init_hash_index, no appends yet) has
-        # neither table — nothing to compact (round-9 ADVICE)
-        if os.path.exists(blocks_root):
-            for part in sorted(os.listdir(blocks_root)):
-                if not part.startswith("block="):
-                    continue
-                files[f"blocks/{part}"] = compact_parquet(
-                    spark,
-                    os.path.join(blocks_root, part),
-                    target_file_bytes,
-                    cluster_by="key",
-                    dedupe_on=["key", id_col],
+    with staged_rewrite(index_path, owner="compact_hash_index") as (live, stage):
+        for table, kw in layout.items():
+            src = os.path.join(live, table)
+            if os.path.exists(src):
+                files[table] = compact_parquet(
+                    spark, src, os.path.join(stage, table), target_file_bytes, **kw
                 )
-        if os.path.exists(os.path.join(index_path, "hashes")):
-            files["hashes"] = compact_parquet(
-                spark,
-                os.path.join(index_path, "hashes"),
-                target_file_bytes,
-                dedupe_on=[id_col],
-            )
     return files

@@ -21,11 +21,14 @@ micro-batch of streaming/incremental.py is a new file):
     once; pytest checks the actual parquet footer stats, not just the
     plan.
 
-Both rewrites are write-new-then-swap: the new copy is written aside and
-swapped in by two renames (:func:`_swap_in`), which put the old tree back
-if the second one fails. At 100 TB run them per partition (compact only
-partitions whose file count drifted — the manifest/file listing tells
-you which), never the whole table.
+Both rewrites are writers from a source directory to a destination:
+they never write the table they read. Publishing the result is the
+caller's job — the persisted indexes overwrite the table inside a
+staged generation (operators/snapshot.staged_rewrite) and commit it
+with one pointer write, so a reader, or a process killed mid-rewrite,
+sees the whole old table or the whole new one. At 100 TB run them per
+partition (compact only partitions whose file count drifted — the
+manifest/file listing tells you which), never the whole table.
 """
 
 from __future__ import annotations
@@ -47,21 +50,6 @@ def _dir_bytes(path: str) -> int:
             if not f.startswith(("_", ".")):
                 total += os.path.getsize(os.path.join(root, f))
     return total
-
-
-def _swap_in(tmp: str, path: str) -> None:
-    """Replace directory ``path`` with ``tmp``: move ``path`` aside, move
-    ``tmp`` in, drop the old tree. If the second rename fails, the old
-    tree goes back to ``path`` before the error propagates."""
-    old = f"{path}.__old__{uuid.uuid4().hex[:8]}"
-    os.rename(path, old)
-    try:
-        os.rename(tmp, path)
-    except OSError:
-        os.rename(old, path)
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
-    shutil.rmtree(old, ignore_errors=True)
 
 
 def zorder_key(
@@ -165,14 +153,15 @@ def zorder_key(
 
 def compact_parquet(
     spark: SparkSession,
-    path: str,
+    src: str,
+    dst: str,
     target_file_bytes: int = 128 << 20,
     cluster_by: str | list[str] | None = None,
     dedupe_on: list[str] | None = None,
     bloom_cols: dict[str, int] | None = None,
 ) -> int:
-    """Rewrite the parquet directory at ``path`` into
-    ``ceil(current_bytes / target_file_bytes)`` files; returns the new
+    """Rewrite the parquet directory ``src`` into ``dst`` (overwritten)
+    as ``ceil(src_bytes / target_file_bytes)`` files; returns the new
     file count. With ``cluster_by`` a COLUMN NAME, files are
     range-clustered on that column (near-disjoint per-file min/max ->
     stats-based skipping); with a LIST of columns, files are Z-ORDER
@@ -194,8 +183,9 @@ def compact_parquet(
     on by default)."""
     if target_file_bytes <= 0:
         raise ValueError("target_file_bytes must be positive")
-    n_files = max(1, math.ceil(_dir_bytes(path) / target_file_bytes))
-    df = spark.read.parquet(path)
+    _check_distinct(src, dst)
+    n_files = max(1, math.ceil(_dir_bytes(src) / target_file_bytes))
+    df = spark.read.parquet(src)
     if dedupe_on is not None:
         df = df.dropDuplicates(dedupe_on)
     if isinstance(cluster_by, (list, tuple)):
@@ -215,7 +205,6 @@ def compact_parquet(
         )
     else:
         out = df.repartition(n_files)
-    tmp = f"{path}.__new__{uuid.uuid4().hex[:8]}"
     writer = out.write.mode("overwrite")
     for col, ndv in (bloom_cols or {}).items():
         writer = writer.option(f"parquet.bloom.filter.enabled#{col}", "true")
@@ -230,32 +219,40 @@ def compact_parquet(
     with scoped_conf(
         spark, "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
     ):
-        writer.parquet(tmp)
-    _swap_in(tmp, path)
+        writer.parquet(dst)
     return sum(
         1
-        for f in os.listdir(path)
+        for f in os.listdir(dst)
         if f.endswith(".parquet") and not f.startswith(("_", "."))
     )
 
 
-def rewrite_without_keys(spark: SparkSession, path: str, keys, key_col: str) -> int:
-    """Write-new-then-swap rewrite of one parquet directory dropping
-    every row whose ``key_col`` appears in ``keys`` (a DataFrame whose
-    first column holds the keys) — the takedown primitive shared by
-    :mod:`operators.forget`. Same atomicity as :func:`compact_parquet`
-    (build the filtered copy aside, two renames); an anti-join does the
-    drop, so the data never routes through the driver. Returns the
-    number of rows removed (two maintenance-scale counts)."""
-    df = spark.read.parquet(path)
+def _check_distinct(src: str, dst: str) -> None:
+    if os.path.abspath(src) == os.path.abspath(dst):
+        raise ValueError(
+            f"{dst} is both the source and the destination; an overwrite "
+            "would delete the rows it reads"
+        )
+
+
+def rewrite_without_keys(
+    spark: SparkSession, src: str, dst: str, keys, key_col: str
+) -> int:
+    """Write ``src``'s rows into ``dst`` (overwritten) minus every row
+    whose ``key_col`` appears in ``keys`` (a DataFrame whose first
+    column holds the keys) — the takedown primitive shared by
+    :mod:`operators.forget`. An anti-join does the drop, so the data
+    never routes through the driver. Returns the number of rows removed
+    (two maintenance-scale counts); when none is, ``dst`` is not
+    written (a staged ``dst`` already holds ``src``'s files)."""
+    _check_distinct(src, dst)
+    df = spark.read.parquet(src)
     key_df = keys.select(F.col(keys.columns[0]).alias(key_col)).dropDuplicates()
     kept = df.join(key_df, key_col, "left_anti")
     before, after = df.count(), kept.count()
     if before == after:
         return 0
-    tmp = f"{path}.__new__{uuid.uuid4().hex[:8]}"
-    kept.write.mode("overwrite").parquet(tmp)
-    _swap_in(tmp, path)
+    kept.write.mode("overwrite").parquet(dst)
     return before - after
 
 
@@ -330,7 +327,10 @@ def rewrite_partitions_without_keys(
     affected partition directory is then swap-renamed (a partition whose
     rows were ALL removed simply disappears, like hive). Untouched
     partitions keep their files. Same driver-side counts; returns rows
-    removed.
+    removed. The write-aside copy and the set-aside old partitions live
+    in SIBLINGS of ``root`` (``<root>.__new__<nonce>``,
+    ``<root>.__old__<nonce>``), never inside it, so a reader of ``root``
+    never lists them as partitions, not even after a kill.
 
     Crash exposure matches the sequential loop it replaces (some
     partitions swapped, some not, mid-loop) — callers needing atomicity
@@ -369,13 +369,15 @@ def rewrite_partitions_without_keys(
     # below would silently delete them (round-12 ADVICE, data loss).
     tmp_dirs = _hive_partition_dirs(tmp, part_col)
     root_dirs = _hive_partition_dirs(root, part_col)
+    old_root = f"{root}.__old__{nonce}"
+    os.makedirs(old_root)
     for v in vals + ([None] if has_null else []):
         sv = _HIVE_NULL_PART if v is None else str(v)
         pdir = os.path.join(
             root, root_dirs.get(sv, f"{part_col}={_escape_part_value(sv)}")
         )
         nname = tmp_dirs.pop(sv, None)
-        old = f"{pdir}.__old__{nonce}"
+        old = os.path.join(old_root, os.path.basename(pdir))
         # the partitioned write leaves _SUCCESS at the tmp ROOT only;
         # preserve a pre-existing per-partition commit sentinel (the
         # curation loop's replay gate keys on it) across the swap
@@ -398,7 +400,7 @@ def rewrite_partitions_without_keys(
             os.makedirs(pdir, exist_ok=True)
             with open(os.path.join(pdir, "_SUCCESS"), "w"):
                 pass
-        shutil.rmtree(old, ignore_errors=True)
+    shutil.rmtree(old_root, ignore_errors=True)
     if tmp_dirs:
         # kept-row output exists for a partition we could not match back
         # to a requested value — installing nothing and sweeping tmp

@@ -10,6 +10,23 @@ Two tiers:
     bucket predicate prunes the scan to ~candidates/2^bits of the data;
     persist the bucketed table sorted by bucket id to turn the probe into a
     partition-pruned lookup.
+
+The persisted IVF index (:func:`build_ivf_index`) is a generation store
+(operators/snapshot.py):
+
+    <index>/_current.json          pointer to the live generation
+    <index>/gen-<seq>-<nonce>/
+        corpus/_cluster=<c>/       vectors partitioned by cluster id
+        centroids/                 (cluster INT, centroid ARRAY<DOUBLE>)
+        _drift/<batch>.json        per-append (n, sum_dist2)
+        _meta.json                 build state (n_rows, build_distortion)
+    <index>/_applied/<batch>       idempotence markers (util.append_once)
+
+Build commits generation 1; appends write into the live generation
+under the writer lease; compaction, takedown and retrain rewrite a
+private hardlinked stage and publish it with one pointer commit
+(snapshot.staged_rewrite). A retrain does not carry ``_drift``, so its
+drift baseline resets by construction.
 """
 
 from __future__ import annotations
@@ -556,9 +573,11 @@ def build_ivf_index(
 ) -> None:
     """One-time IVF index build: the persisted half of the build/probe
     split (round-6 verdict #7 — :func:`topk_cosine_ivf` re-fit KMeans per
-    call, which a repeated-query workload cannot afford).
+    call, which a repeated-query workload cannot afford). Commits the
+    next generation of ``index_path`` (generation 1 for a new index; a
+    rebuild carries no ``_drift``).
 
-    Writes two artifacts under ``index_path``:
+    Writes two artifacts into the generation:
       * ``corpus/`` — the embedding table + its cluster assignment,
         PARTITIONED BY the cluster id, so a probe is literal partition
         pruning (only n_probe/n_clusters of the files are listed/read);
@@ -591,6 +610,27 @@ def build_ivf_index(
     ``build_distortion`` is then measured by one extra columnar pass
     over the written corpus (the fit summary's trainingCost only
     covers the sample)."""
+    from serverless_etl_bi_on_aws_spark.operators.snapshot import staged_rewrite
+
+    with staged_rewrite(
+        index_path, owner="build_ivf_index", exclude=("_drift",)
+    ) as (_live, stage):
+        _write_ivf(
+            embeddings, stage, n_clusters, seed, vec_col, id_col, fit_sample_rows
+        )
+
+
+def _write_ivf(
+    embeddings: DataFrame,
+    gen: str,
+    n_clusters: int,
+    seed: int,
+    vec_col: str,
+    id_col: str,
+    fit_sample_rows: int | None,
+) -> None:
+    """The one IVF writer of build and retrain: fit, assign, and
+    overwrite ``corpus``, ``centroids`` and ``_meta.json`` in ``gen``."""
     import os
 
     from pyspark.ml.clustering import KMeans
@@ -599,7 +639,7 @@ def build_ivf_index(
     from serverless_etl_bi_on_aws_spark.util import write_marker
 
     spark = embeddings.sparkSession
-    corpus_path = os.path.join(index_path, "corpus")
+    corpus_path = os.path.join(gen, "corpus")
     if fit_sample_rows is None:
         feat = embeddings.withColumn("_features", array_to_vector(F.col(vec_col)))
         model = KMeans(k=n_clusters, seed=seed, featuresCol="_features").fit(feat)
@@ -633,9 +673,9 @@ def build_ivf_index(
     rows = [(int(i), c) for i, c in enumerate(centers)]
     spark.createDataFrame(rows, "cluster int, centroid array<double>").coalesce(
         1
-    ).write.mode("overwrite").parquet(os.path.join(index_path, "centroids"))
+    ).write.mode("overwrite").parquet(os.path.join(gen, "centroids"))
     write_marker(
-        os.path.join(index_path, "_meta.json"),
+        os.path.join(gen, "_meta.json"),
         {
             "n_clusters": int(len(centers)),
             "dim": int(len(centers[0])),
@@ -654,21 +694,37 @@ def build_ivf_index(
     )
 
 
-#: collected centroid rows per (index path, centroids-dir mtime): the
-#: probe's only driver-side read is n_clusters rows, but re-reading the
-#: parquet per call still costs a full job's fixed machinery (~0.1-0.3 s
-#: on the bench VM) — pure noise for a repeated-query workload. The
-#: mtime key self-invalidates on rebuild/retrain (both replace the
-#: centroids directory wholesale); compaction and appends never touch it.
+#: collected centroid rows per (centroids dir, its mtime): the probe's
+#: only driver-side read is n_clusters rows, but re-reading the parquet
+#: per call still costs a full job's fixed machinery (~0.1-0.3 s on the
+#: bench VM) — pure noise for a repeated-query workload. Every rebuild or
+#: retrain commits a new generation, so a new directory, and the key
+#: self-invalidates; appends never touch the centroids.
 _CENTROID_CACHE: dict = {}
 
 
-def _load_centroids(spark, index_path: str):
+def _ivf_live(index_path: str) -> tuple[str, dict]:
+    """The live generation of an IVF index and its meta."""
     import os
 
-    cdir = os.path.join(index_path, "centroids")
+    from serverless_etl_bi_on_aws_spark.operators.snapshot import live_generation
+    from serverless_etl_bi_on_aws_spark.util import read_marker
+
+    live = live_generation(index_path)
+    meta = read_marker(os.path.join(live, "_meta.json"))
+    if meta is None:
+        raise FileNotFoundError(
+            f"no _meta.json in {live}; rebuild with build_ivf_index"
+        )
+    return live, meta
+
+
+def _load_centroids(spark, live: str):
+    import os
+
+    cdir = os.path.join(live, "centroids")
     try:
-        key = (os.path.abspath(index_path), os.path.getmtime(cdir))
+        key = (os.path.abspath(cdir), os.path.getmtime(cdir))
     except OSError:
         key = None
     if key is not None and key in _CENTROID_CACHE:
@@ -692,7 +748,7 @@ def ivf_probe_topk(
 ) -> DataFrame:
     """Probe half of the persisted IVF index: choose the ``n_probe``
     centroids nearest the query (centroids are n_clusters rows — the one
-    acceptable driver-side read, mtime-cached per index), then scan ONLY
+    acceptable driver-side read, cached per generation), then scan ONLY
     those partitions of the corpus (``_cluster IN probes`` prunes at file
     listing, visible as PartitionFilters in the plan) and exact-rerank by
     cosine. Zero KMeans fits per query — pytest-pinned (test_asof_ivf).
@@ -706,7 +762,10 @@ def ivf_probe_topk(
     rows — exact for identical-row duplicates, no candidate exchange."""
     import os
 
-    centers = _load_centroids(spark, index_path)
+    from serverless_etl_bi_on_aws_spark.operators.snapshot import live_generation
+
+    live = live_generation(index_path)
+    centers = _load_centroids(spark, live)
 
     def dist2(c) -> float:
         return sum((float(a) - float(b)) ** 2 for a, b in zip(c, query_vec))
@@ -715,7 +774,7 @@ def ivf_probe_topk(
         int(r["cluster"])
         for r in sorted(centers, key=lambda r: dist2(r["centroid"]))[:n_probe]
     ]
-    corpus = spark.read.parquet(os.path.join(index_path, "corpus"))
+    corpus = spark.read.parquet(os.path.join(live, "corpus"))
     # partition pruning happens at the scan (the _cluster filter sits
     # below the Python stage in the plan); the pruned candidate set is
     # re-ranked by the Arrow/BLAS kernel, not the interpreted HOF cosine
@@ -795,26 +854,21 @@ def update_ivf_index(
 
     import numpy as np
 
-    from serverless_etl_bi_on_aws_spark.util import (
-        append_once,
-        read_marker,
-        write_marker,
-    )
+    from serverless_etl_bi_on_aws_spark.util import append_once, write_marker
 
     spark = new_embeddings.sparkSession
 
+    # both callbacks run under append_once's lease, so they resolve the
+    # same live generation: no rewrite can commit between them
     def assign() -> DataFrame:
         # corpus type discipline: cast the batch's vectors to the element
         # type the corpus was built with (recorded in _meta.json) so every
-        # corpus file carries one schema; pre-round-11 indexes without the
-        # field keep the old behavior
-        meta = read_marker(os.path.join(index_path, "_meta.json")) or {}
-        vecs = new_embeddings
-        if meta.get("vec_type"):
-            vecs = vecs.withColumn(
-                vec_col, F.col(vec_col).cast(f"array<{meta['vec_type']}>")
-            )
-        centers = _load_centroids(spark, index_path)
+        # corpus file carries one schema
+        live, meta = _ivf_live(index_path)
+        vecs = new_embeddings.withColumn(
+            vec_col, F.col(vec_col).cast(f"array<{meta['vec_type']}>")
+        )
+        centers = _load_centroids(spark, live)
         cmat = np.zeros((len(centers), len(centers[0]["centroid"])), dtype="float64")
         for r in centers:
             cmat[int(r["cluster"])] = r["centroid"]
@@ -823,17 +877,18 @@ def update_ivf_index(
         return _assign_with_centroids(vecs, cmat, vec_col).localCheckpoint(eager=True)
 
     def append(assigned: DataFrame) -> None:
+        live, _meta = _ivf_live(index_path)
         (
             assigned.drop("_dist2")
             .write.mode("append")
             .partitionBy("_cluster")
-            .parquet(os.path.join(index_path, "corpus"))
+            .parquet(os.path.join(live, "corpus"))
         )
         drift = assigned.agg(
             F.count("*").alias("n"), F.sum("_dist2").alias("sum_dist2")
         ).collect()[0]
         write_marker(
-            os.path.join(index_path, "_drift", f"{batch_id}.json"),
+            os.path.join(live, "_drift", f"{batch_id}.json"),
             {"n": int(drift["n"]), "sum_dist2": float(drift["sum_dist2"] or 0.0)},
         )
 
@@ -859,15 +914,8 @@ def ivf_drift_status(index_path: str, retrain_ratio: float = 2.0) -> dict:
     import json
     import os
 
-    from serverless_etl_bi_on_aws_spark.util import read_marker
-
-    meta = read_marker(os.path.join(index_path, "_meta.json"))
-    if meta is None:
-        raise FileNotFoundError(
-            f"no _meta.json at {index_path}; rebuild with build_ivf_index "
-            "(pre-round-10 indexes recorded no build distortion)"
-        )
-    drift_dir = os.path.join(index_path, "_drift")
+    live, meta = _ivf_live(index_path)
+    drift_dir = os.path.join(live, "_drift")
     n_app, sum_d2 = 0, 0.0
     if os.path.isdir(drift_dir):
         for name in os.listdir(drift_dir):
@@ -914,176 +962,51 @@ def retrain_ivf_index(
 ) -> None:
     """Act on :func:`ivf_drift_status`'s recommendation: re-fit KMeans
     over the CURRENT corpus (build rows + every appended batch), rewrite
-    the cluster-partitioned corpus and centroids in place, and reset the
-    drift baseline — the one deliberate KMeans fit in the index's life
-    after its build. ``fit_sample_rows`` bounds that fit exactly as in
+    the cluster-partitioned corpus and centroids, and reset the drift
+    baseline — the one deliberate KMeans fit in the index's life after
+    its build. ``fit_sample_rows`` bounds that fit exactly as in
     :func:`build_ivf_index` — at 100 TB a drift-triggered retrain should
     re-place centroids from a sample, not re-run distributed ML over
     the whole corpus (round-10 verdict #2).
 
-    Protocol (write-new-then-swap, under the single-writer lease):
-      1. read the whole corpus (dropping the stale ``_cluster`` dirs and
-         deduping crash-replayed rows on the id — a retrain is also the
-         natural compaction point),
-      2. build a fresh COMPLETE index at ``<index>.__retrain__<nonce>``
-         via :func:`build_ivf_index` (new centroids, new partitioning,
-         new ``_meta.json`` whose build_distortion is the NEW baseline),
-         including a copy of the ``_applied`` batch markers — every
-         appended batch's vectors are IN the retrained corpus, so a
-         replayed ``update_ivf_index`` of an old batch must stay a
-         no-op; ``_drift`` records are NOT carried (they measured
-         distance to the OLD centroids),
-      3. swap via TWO whole-directory renames:
-         ``index -> <index>.__old__<nonce>``, then ``tmp -> index``.
-
-    Atomicity contract (round-10 ADVICE — the previous per-entry swap
-    left probes a wide missing-corpus window and a crash dismembered
-    the index across three dirs): each rename is atomic, so a probe
-    observes the complete old index, the complete new index, or — in
-    the two-rename gap, syscalls wide — a missing directory, which
-    fails LOUDLY and is retryable. The gap stays LEASE-PROTECTED
-    (round-11 ADVICE): the lock lives at the swap-surviving sibling
-    path (util.lease_lock_path), not inside the directory being
-    renamed, so a concurrent writer in the gap gets LeaseHeldError
-    instead of re-creating the index path as a lock-only skeleton.
-    A crash inside the gap leaves the complete old index intact at
-    ``.__old__<nonce>``; :func:`recover_ivf_index` restores it (and
-    tests pin that path)."""
+    One staged rewrite (snapshot.staged_rewrite, under the writer lease
+    with ``lease_wait_s`` of retry): the whole live corpus is read,
+    deduped on the id (a retrain is also the natural compaction point)
+    and written by the build's own writer into a stage that does not
+    carry ``_drift`` — those records measured distance to the OLD
+    centroids, so the new ``_meta.json``'s build_distortion is the new
+    baseline. ``_applied`` stays at the index root, so a replayed
+    ``update_ivf_index`` of an old batch (whose vectors ARE in the
+    retrained corpus) stays a no-op. The pointer commit publishes the
+    new index whole; a crash anywhere before it leaves the old one
+    live."""
     import os
-    import shutil
-    import uuid
 
-    from serverless_etl_bi_on_aws_spark.util import (
-        read_marker,
-        writer_lease_with_retry,
-    )
+    from serverless_etl_bi_on_aws_spark.operators.snapshot import staged_rewrite
 
-    meta = read_marker(os.path.join(index_path, "_meta.json"))
-    if meta is None:
-        raise FileNotFoundError(f"no _meta.json at {index_path}; cannot retrain")
+    _, meta = _ivf_live(index_path)
     id_col, vec_col = meta["id_col"], meta["vec_col"]
-    # lease_wait_s=0 degenerates to the bare fail-loud lease; a positive
-    # wait lets a scheduled maintenance job serialize behind an in-flight
-    # append instead of dying (round-10 verdict #7 ergonomics)
-    with writer_lease_with_retry(
-        index_path, owner="retrain_ivf_index", wait_s=lease_wait_s
-    ):
+    with staged_rewrite(
+        index_path,
+        owner="retrain_ivf_index",
+        wait_s=lease_wait_s,
+        exclude=("_drift",),
+    ) as (live, stage):
         corpus = (
-            spark.read.parquet(os.path.join(index_path, "corpus"))
+            spark.read.parquet(os.path.join(live, "corpus"))
             .drop("_cluster")
             .dropDuplicates([id_col])
-            .localCheckpoint(eager=True)  # snapshot: we rewrite the source dirs
+            .localCheckpoint(eager=True)  # one dedupe for the fit and the assign
         )
-        nonce = uuid.uuid4().hex[:8]
-        tmp = f"{index_path}.__retrain__{nonce}"
-        build_ivf_index(
+        _write_ivf(
             corpus,
-            tmp,
-            n_clusters=int(n_clusters or meta["n_clusters"]),
-            seed=int(seed if seed is not None else meta["seed"]),
-            vec_col=vec_col,
-            id_col=id_col,
-            fit_sample_rows=fit_sample_rows,
+            stage,
+            int(n_clusters or meta["n_clusters"]),
+            int(seed if seed is not None else meta["seed"]),
+            vec_col,
+            id_col,
+            fit_sample_rows,
         )
-        applied = os.path.join(index_path, "_applied")
-        if os.path.isdir(applied):
-            shutil.copytree(applied, os.path.join(tmp, "_applied"))
-        old = f"{index_path}.__old__{nonce}"
-        os.rename(index_path, old)
-        try:
-            os.rename(tmp, index_path)
-        except OSError:
-            os.rename(old, index_path)  # restore, then fail loudly
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
-        shutil.rmtree(old, ignore_errors=True)
-
-
-def recover_ivf_index(index_path: str, stale_after_s: float | None = None) -> dict:
-    """Crash recovery for :func:`retrain_ivf_index`'s two-rename swap: if
-    the canonical index is missing (or damaged) and a ``.__old__<nonce>``
-    sibling exists (crash in the rename gap), restore the complete old
-    index and remove any leftover ``.__retrain__<nonce>`` build.
-    Idempotent; safe to run when nothing is wrong (it then only sweeps
-    orphaned siblings of a COMPLETED swap).
-
-    Round-11 ADVICE hardening — all work happens UNDER the single-writer
-    lease, which now lives at the swap-surviving sibling path
-    (util.lease_lock_path), so a LIVE retrain mid-gap still holds it and
-    this janitor skips instead of racing the swap or deleting the
-    writer's in-progress build. A retrain that CRASHED mid-gap leaves
-    that lease behind; pass ``stale_after_s`` (writer_lease's stale-break
-    rule — choose it >> the longest plausible retrain) so the janitor can
-    break a dead writer's lease; with the default ``None`` a held lease
-    always reports ``skipped``. Further hardening, same review:
-
-      * restore picks the NEWEST ``.__old__`` by mtime (nonces are
-        random hex, so the previous lexicographic pick could restore a
-        stale snapshot when several leftovers accumulated);
-      * strays are swept ONLY when the canonical index is verified
-        COMPLETE (``_meta.json`` + ``corpus/`` present) — never delete
-        the only complete copies next to a skeleton;
-      * an EXISTING-but-incomplete canonical dir (external damage, or a
-        pre-fix writer's lock-only skeleton) is moved aside to
-        ``.__damaged__<nonce>`` — reported, never destroyed — before the
-        restore;
-      * the restore rename is guarded against a peer janitor having
-        already restored (re-checked under the lease; FileNotFoundError
-        re-verified rather than propagated).
-
-    Returns ``{"restored": bool, "removed": [siblings...]}`` plus
-    ``skipped`` when a live writer held the lease and ``damaged`` when
-    an incomplete canonical dir was moved aside."""
-    import glob
-    import os
-    import shutil
-    import uuid
-
-    from serverless_etl_bi_on_aws_spark.util import LeaseHeldError, writer_lease
-
-    def _complete(p: str) -> bool:
-        return os.path.isfile(os.path.join(p, "_meta.json")) and os.path.isdir(
-            os.path.join(p, "corpus")
-        )
-
-    def _olds() -> list[str]:
-        # newest LAST, by mtime (lexicographic nonce order is meaningless)
-        return sorted(glob.glob(f"{index_path}.__old__*"), key=os.path.getmtime)
-
-    out: dict = {"restored": False, "removed": []}
-    if not _olds() and not glob.glob(f"{index_path}.__retrain__*"):
-        return out  # nothing to recover or sweep
-    try:
-        with writer_lease(
-            index_path, owner="recover_ivf_index", stale_after_s=stale_after_s
-        ):
-            olds = _olds()  # re-list under the lease: a peer may have recovered
-            if olds and not _complete(index_path):
-                if os.path.isdir(index_path):
-                    damaged = f"{index_path}.__damaged__{uuid.uuid4().hex[:8]}"
-                    os.rename(index_path, damaged)
-                    out["damaged"] = os.path.basename(damaged)
-                newest = olds[-1]
-                try:
-                    os.rename(newest, index_path)
-                    out["restored"] = True
-                except FileNotFoundError:
-                    # a peer beat us to the restore between the glob and
-                    # the rename; fine iff the canonical index is back
-                    if not _complete(index_path):
-                        raise
-                # a pre-fix crashed writer's in-dir lock is void
-                legacy_lock = os.path.join(index_path, "_writer.lock")
-                if os.path.exists(legacy_lock):
-                    os.remove(legacy_lock)
-            if _complete(index_path):
-                strays = _olds() + sorted(glob.glob(f"{index_path}.__retrain__*"))
-                for stray in strays:
-                    shutil.rmtree(stray, ignore_errors=True)
-                    out["removed"].append(os.path.basename(stray))
-    except LeaseHeldError:
-        out["skipped"] = "writer lease held; strays may belong to a live retrain"
-    return out
 
 
 def compact_ivf_index(
@@ -1099,45 +1022,35 @@ def compact_ivf_index(
     corpus append and the marker leaves replayed duplicate vectors that
     (unlike the set-membership dedup probes) would eat top-k slots.
 
-    Per-cluster-partition rewrite via the shared write-new-then-swap
-    (operators/maintenance.compact_parquet): dedupe on the id column from
-    ``_meta.json``, range-cluster on it for footer-stats skipping.
-    ``_meta.json`` / ``_applied`` / ``_drift`` markers and ``centroids/``
-    are untouched — compaction changes layout, never which batches are
-    applied or where centroids sit, so probe results are identical before
-    and after (pytest-pinned in test_asof_ivf). Returns per-partition new
-    file counts."""
+    One staged rewrite (snapshot.staged_rewrite): each live
+    ``_cluster=`` partition is compacted into the stage
+    (operators/maintenance.compact_parquet), deduped on the id column
+    from ``_meta.json`` and range-clustered on it for footer-stats
+    skipping. ``_meta.json``, ``_drift`` and ``centroids/`` are carried
+    as hardlinks and ``_applied`` is untouched — compaction changes
+    layout, never which batches are applied or where centroids sit, so
+    probe results are identical before and after (pytest-pinned in
+    test_asof_ivf). Returns per-partition new file counts."""
     import os
 
     from serverless_etl_bi_on_aws_spark.operators.maintenance import compact_parquet
-    from serverless_etl_bi_on_aws_spark.util import read_marker
+    from serverless_etl_bi_on_aws_spark.operators.snapshot import staged_rewrite
 
-    meta = read_marker(os.path.join(index_path, "_meta.json"))
-    if meta is None:
-        # mirror ivf_drift_status (round-10 ADVICE): guessing the id
-        # column on a pre-meta index either crashes mid-rewrite or
-        # dedupes on the wrong column — fail loudly instead.
-        raise FileNotFoundError(
-            f"no _meta.json at {index_path}; rebuild with build_ivf_index "
-            "before compacting (pre-round-10 indexes recorded no id column)"
-        )
-    id_col = meta["id_col"]
-    corpus_root = os.path.join(index_path, "corpus")
+    id_col = _ivf_live(index_path)[1]["id_col"]
     files: dict[str, int] = {}
-    if not os.path.isdir(corpus_root):
-        return files
-    from serverless_etl_bi_on_aws_spark.util import writer_lease_with_retry
-
     # lease_wait_s=0 == the bare fail-loud lease (see retrain_ivf_index)
-    with writer_lease_with_retry(
+    with staged_rewrite(
         index_path, owner="compact_ivf_index", wait_s=lease_wait_s
-    ):
-        for part in sorted(os.listdir(corpus_root)):
+    ) as (live, stage):
+        corpus_root = os.path.join(live, "corpus")
+        parts = sorted(os.listdir(corpus_root)) if os.path.isdir(corpus_root) else []
+        for part in parts:
             if not part.startswith("_cluster="):
                 continue
             files[f"corpus/{part}"] = compact_parquet(
                 spark,
                 os.path.join(corpus_root, part),
+                os.path.join(stage, "corpus", part),
                 target_file_bytes,
                 cluster_by=id_col,
                 dedupe_on=[id_col],
@@ -1154,18 +1067,15 @@ def run_ivf_maintenance(
     lease_wait_s: float = 60.0,
     n_clusters: int | None = None,
     seed: int | None = None,
-    recover_stale_after_s: float | None = None,
 ) -> dict:
     """ONE maintenance cycle for a persisted IVF index — the janitor job
     a scheduler runs between ingest batches, composing the maintenance
     family in its operational order:
 
-      1. :func:`recover_ivf_index` — restore a half-swapped index left
-         by a crashed retrain (no-op when healthy);
-      2. :func:`compact_ivf_index` — bound small-file growth, purge
+      1. :func:`compact_ivf_index` — bound small-file growth, purge
          crash-replay duplicate rows;
-      3. :func:`ivf_drift_status` — the MEASURED retrain signal;
-      4. :func:`retrain_ivf_index` iff recommended — with
+      2. :func:`ivf_drift_status` — the MEASURED retrain signal;
+      3. :func:`retrain_ivf_index` iff recommended — with
          ``fit_sample_rows`` so the re-fit is sample-bounded (the
          100 TB posture: a drift trigger must not cost a full-corpus
          distributed ML fit).
@@ -1177,21 +1087,16 @@ def run_ivf_maintenance(
     ingest append that lands mid-cycle is correct (appends assign to
     whatever centroids exist; the next cycle measures their drift).
 
-    Returns the cycle report: ``{recovered, compacted_files, drift,
-    retrained, post_drift?}`` — a scheduler logs it; ``retrained`` False
-    with a healthy ``drift`` is the common steady-state outcome.
-    ``recover_stale_after_s`` passes through to :func:`recover_ivf_index`
-    so the janitor can break a CRASHED retrain's leftover lease (the
-    sibling lock survives the writer's death by design); choose it >>
-    the longest plausible retrain, or leave ``None`` to never break."""
+    Returns the cycle report: ``{compacted_files, drift, retrained,
+    post_drift?}`` — a scheduler logs it; ``retrained`` False with a
+    healthy ``drift`` is the common steady-state outcome. Each step is
+    one staged rewrite, so a crash anywhere leaves a whole index live
+    and there is nothing to recover."""
     report: dict = {
-        "recovered": recover_ivf_index(
-            index_path, stale_after_s=recover_stale_after_s
+        "compacted_files": compact_ivf_index(
+            spark, index_path, target_file_bytes, lease_wait_s=lease_wait_s
         )
     }
-    report["compacted_files"] = compact_ivf_index(
-        spark, index_path, target_file_bytes, lease_wait_s=lease_wait_s
-    )
     st = ivf_drift_status(index_path, retrain_ratio=retrain_ratio)
     report["drift"] = st
     if st["retrain_recommended"]:
@@ -1260,7 +1165,10 @@ def dedup_embeddings_against_index(
         StructType,
     )
 
-    centers = _load_centroids(spark, index_path)
+    from serverless_etl_bi_on_aws_spark.operators.snapshot import live_generation
+
+    live = live_generation(index_path)
+    centers = _load_centroids(spark, live)
     n_clusters = len(centers)
     n_probe = min(n_probe, n_clusters)
     cmat = np.zeros((n_clusters, len(centers[0]["centroid"])), dtype="float64")
@@ -1310,7 +1218,7 @@ def dedup_embeddings_against_index(
 
     new_probes = valid.mapInArrow(probes, schema=probe_schema)
 
-    corpus = spark.read.parquet(os.path.join(index_path, "corpus"))
+    corpus = spark.read.parquet(os.path.join(live, "corpus"))
     # partition pruning: only clusters some new vector probes are read.
     # The probe list is computed per-batch executor-side, so prune with
     # the distinct probed clusters (n_probe x batch distinct values — a

@@ -34,14 +34,20 @@ copy / manifest reuse, exactly how Iceberg/Delta snapshots share
 unchanged data files; the pointer swap maps to the conditional-PUT
 commit documented on util.write_marker / create_exclusive_marker).
 
-Composition: EVERY in-place artifact mutator in the repo runs unchanged
-against a ``mutate_snapshot`` staged clone — the takedown
-(forget_documents_versioned), the IVF janitor (run_ivf_maintenance),
-and the INGEST loop itself (``with mutate_snapshot(family, [...]) as
-st: apply_curation_batch(spark, batch, st["text_index"],
-st["corpus"], bid)`` — pytest-pinned: each batch flips corpus + index
-atomically and the loop's replay markers ride the clones, so a
-re-applied batch stays a no-op in the next transition).
+Composition: every persisted index (MinHash, hash, IVF) is itself a
+generation store, and every index mutator — compaction, takedown, IVF
+retrain — is one :func:`staged_rewrite`: it reads the live generation,
+overwrites only the tables it changes in a private hardlinked stage,
+and publishes with one pointer commit. The same mutators run unchanged
+against a ``mutate_snapshot`` staged clone (the clone holds a nested
+index store, whose inner commit stays private until the manifest
+commits) — the takedown (forget_documents_versioned), the IVF janitor
+(run_ivf_maintenance), and the INGEST loop itself (``with
+mutate_snapshot(family, [...]) as st: apply_curation_batch(spark,
+batch, st["text_index"], st["corpus"], bid)`` — pytest-pinned: each
+batch flips corpus + index atomically and the loop's replay markers
+ride the clones, so a re-applied batch stays a no-op in the next
+transition).
 
 Retention contract: commit keeps the ``keep_n`` newest snapshots on
 disk (default 2 — the previous generation survives one further commit),
@@ -65,7 +71,7 @@ import glob
 import os
 import shutil
 import uuid
-from contextlib import contextmanager
+from contextlib import contextmanager, nullcontext
 
 from serverless_etl_bi_on_aws_spark.util import (
     create_exclusive_marker,
@@ -96,6 +102,15 @@ def resolve_generation(root: str) -> str | None:
     return os.path.join(root, gen) if gen else None
 
 
+def live_generation(root: str) -> str:
+    """:func:`resolve_generation` for a store that must exist (a built
+    index): raises FileNotFoundError when no generation has committed."""
+    live = resolve_generation(root)
+    if live is None:
+        raise FileNotFoundError(f"no committed generation at {root}")
+    return live
+
+
 def _gen_seq(gen: str) -> int:
     try:
         return int(gen.split("-")[1])
@@ -109,10 +124,8 @@ def link_tree(src: str, dst: str, exclude_top: tuple[str, ...] = ()) -> None:
     writer in this repo because parquet/marker writers only ever CREATE
     new files or REPLACE names — nothing opens an existing data file for
     in-place write, so a linked inode is immutable in practice.
-    ``exclude_top`` skips top-level entries by name prefix — the legacy
-    in-place-layout migration clones a store root into a stage dir that
-    lives INSIDE it and must not recurse into itself (or into committed
-    generations / the pointer)."""
+    ``exclude_top`` skips top-level entries by name prefix (the IVF
+    build and retrain do not carry ``_drift``)."""
     for dirpath, dirnames, filenames in os.walk(src):
         rel = os.path.relpath(dirpath, src)
         if rel == ".":
@@ -146,8 +159,7 @@ def begin_generation(root: str, base_seq: int | None = None) -> tuple[str, str]:
     direct-name stage looks exactly like a committed-but-never-referenced
     orphan and the next commit's sweep removes it. POSIX mode keeps the
     ``.__stage__`` prefix + rename fast path (an in-flight stage is
-    lexically distinguishable, which the legacy-migration excludes rely
-    on)."""
+    lexically distinguishable)."""
     from serverless_etl_bi_on_aws_spark.util import object_store_backend
 
     if base_seq is None:
@@ -225,6 +237,11 @@ def _sweep_store(root: str, keep_gens: set, min_age_s: float = 0.0) -> None:
             if not os.path.exists(path[: -len(".__lock__")]):
                 _remove_any(path)
             continue
+        if ".__tmp__" in entry:
+            # a pointer write killed between its temp write and its
+            # os.replace (util.commit_file); the committed pointer is whole
+            _remove_any(path)
+            continue
         if not (
             (entry.startswith("gen-") and entry not in keep_gens)
             or entry.startswith(".__stage__")
@@ -247,6 +264,45 @@ def _remove_any(path: str) -> None:
             os.remove(path)
         except OSError:
             pass
+
+
+def _stage_from(
+    root: str, src: str | None, base_seq: int | None = None, exclude=()
+) -> tuple[str, str]:
+    """Begin the next generation of ``root`` and hardlink-clone ``src``
+    (a committed generation; None starts empty) into its stage."""
+    gen, stage = begin_generation(root, base_seq=base_seq)
+    if src is not None:
+        link_tree(src, stage, exclude_top=tuple(exclude))
+    return gen, stage
+
+
+@contextmanager
+def staged_rewrite(
+    root: str, owner: str | None = None, wait_s: float = 0.0, exclude=()
+):
+    """The one rewrite path of a generation store: take the writer lease
+    (``owner``, retrying up to ``wait_s``; ``owner=None`` takes none,
+    for a caller that is its own serialization, like one streaming
+    query), resolve the live generation, hardlink-clone it (minus the
+    top-level names in ``exclude``) into a fresh stage, and yield
+    ``(live, stage)`` — ``live`` is None before the first commit. A
+    clean exit commits the stage with one pointer write; an exception
+    commits nothing, and the next commit sweeps the stage.
+
+    Read from ``live``; overwrite in ``stage`` only the tables you
+    change (Spark's overwrite unlinks the stage's hardlinks, never the
+    live files). Never read from a stage path you overwrite."""
+    lease = (
+        writer_lease_with_retry(root, owner=owner, wait_s=wait_s)
+        if owner is not None
+        else nullcontext()
+    )
+    with lease:
+        live = resolve_generation(root)
+        gen, stage = _stage_from(root, live, exclude=exclude)
+        yield live, stage
+        commit_generation(root, gen, stage)
 
 
 def stale_stages(root: str) -> list[str]:
@@ -280,10 +336,7 @@ def init_snapshot_family(family_root: str, artifacts: dict[str, str | None]) -> 
     gens: dict[str, str] = {}
     for name, src in artifacts.items():
         root = os.path.join(family_root, name)
-        os.makedirs(root, exist_ok=True)
-        gen, stage = begin_generation(root, base_seq=0)
-        if src is not None:
-            link_tree(src, stage)
+        gen, stage = _stage_from(root, src, base_seq=0)
         os.rename(stage, os.path.join(root, gen))
         gens[name] = gen
     _commit_manifest(family_root, 1, gens)
@@ -451,7 +504,8 @@ def mutate_snapshot(
     ``{name: staged_path}`` — a private hardlink-clone of each named
     artifact's current generation; run any in-place mutators against
     those paths (forget_*, retrain_ivf_index, compaction — they all
-    operate on a directory). On clean exit every staged clone commits
+    operate on a directory; an index clone is a nested generation
+    store, and its own staged rewrite commits inside the clone). On clean exit every staged clone commits
     as its artifact's next generation and a new manifest naming ALL
     current generations (mutated + carried) is written LAST — the one
     atomic step readers observe. On exception nothing commits; the
@@ -481,9 +535,9 @@ def mutate_snapshot(
             if name not in gens:
                 raise KeyError(f"artifact {name!r} not in snapshot manifest")
             root = os.path.join(family_root, name)
-            gen, stage = begin_generation(root, base_seq=_gen_seq(gens[name]))
-            link_tree(os.path.join(root, gens[name]), stage)
-            staged[name] = (gen, stage)
+            staged[name] = _stage_from(
+                root, os.path.join(root, gens[name]), base_seq=_gen_seq(gens[name])
+            )
         yield {name: stage for name, (gen, stage) in staged.items()}
         for name, (gen, stage) in staged.items():
             os.rename(stage, os.path.join(family_root, name, gen))
@@ -499,7 +553,10 @@ def _parquet_datasets(path: str) -> dict[str, str]:
     dataset (top-level part files, or hive ``col=value`` partition
     dirs), else one entry per immediate subdirectory that holds parquet
     anywhere beneath it (the index artifacts' ``sigs``/``bands`` /
-    ``corpus``/``centroids`` layout)."""
+    ``corpus``/``centroids`` layout). An artifact that is itself a
+    generation store (every persisted index) resolves to its live
+    generation first."""
+    path = resolve_generation(path) or path
     try:
         entries = [e for e in os.listdir(path) if not e.startswith((".", "_"))]
     except FileNotFoundError:

@@ -2403,6 +2403,7 @@ def q76_incremental_dedup_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_minhash_index,
         dedup_against_index,
     )
+    from serverless_etl_bi_on_aws_spark.operators.snapshot import current_generation
     from serverless_etl_bi_on_aws_spark.util import artifact_dir, fixture_digest
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -2410,9 +2411,9 @@ def q76_incremental_dedup_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     b1 = docs.filter(F.col("doc_id") <= mid)
     b2 = docs.filter(F.col("doc_id") > mid)
 
-    digest = fixture_digest(sf_dir, ("documents",), version="didx2")[:8]
+    digest = fixture_digest(sf_dir, ("documents",), version="didx3")[:8]
     idx = artifact_dir(f"spark_graft_dedupidx_{digest}")
-    if not os.path.exists(os.path.join(idx, "_meta.json")):
+    if current_generation(idx) is None:
         build_minhash_index(b1, idx)
 
     surv2 = dedup_against_index(spark, b2, idx, threshold=0.5)
@@ -2653,8 +2654,7 @@ def q18_ann_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     run ZERO KMeans fits (pytest-pinned) and the probe is partition
     pruning, the 100 TB shape. The exact twin runs on the q44 Arrow/BLAS
     path."""
-    import os
-
+    from serverless_etl_bi_on_aws_spark.operators.snapshot import current_generation
     from serverless_etl_bi_on_aws_spark.util import artifact_dir, fixture_digest
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -2677,12 +2677,9 @@ def q18_ann_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "cosine")
         .localCheckpoint(eager=True)
     )
-    digest = fixture_digest(sf_dir, ("embeddings",), version="ivf1")[:8]
+    digest = fixture_digest(sf_dir, ("embeddings",), version="ivf2")[:8]
     idx = artifact_dir(f"spark_graft_ivf_{digest}")
-    if not (
-        os.path.exists(os.path.join(idx, "corpus", "_SUCCESS"))
-        and os.path.exists(os.path.join(idx, "centroids", "_SUCCESS"))
-    ):
+    if current_generation(idx) is None:
         build_ivf_index(pool, idx, n_clusters=16, seed=42)
     ivf = (
         ivf_probe_topk(spark, idx, qvec, k=10, n_probe=4)
@@ -3289,14 +3286,15 @@ def q83_forget_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
       * re-admission: the forgotten texts resubmitted as fresh ids are
         ADMITTED by the index probe (the defining forget-vs-dedup
         semantic), while a copy of a SURVIVING doc still dedups;
-      * a full :func:`run_ivf_maintenance` janitor cycle (recover +
-        compact + drift [+ retrain]) over the post-takedown index, as a
-        second snapshot mutation, preserving the corpus row count.
+      * a full :func:`run_ivf_maintenance` janitor cycle (compact +
+        drift [+ retrain]) over the post-takedown index, as a second
+        snapshot mutation, preserving the corpus row count.
 
     Scale shape: discovery is semi-joins emitting partition values only;
-    every rewrite is partition-scoped write-new-then-swap behind the
-    family manifest; nothing here is fixture-sized at the driver beyond
-    the takedown batch itself (see forget.py's 100 TB notes)."""
+    every index rewrite is a staged generation of its index, published
+    behind the family manifest; nothing here is fixture-sized at the
+    driver beyond the takedown batch itself (see forget.py's 100 TB
+    notes)."""
     import shutil
     import tempfile
 
@@ -3316,6 +3314,7 @@ def q83_forget_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     from serverless_etl_bi_on_aws_spark.operators.snapshot import (
         init_snapshot_family,
         mutate_snapshot,
+        resolve_generation,
         snapshot_paths,
     )
 
@@ -3373,10 +3372,14 @@ def q83_forget_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_removed = rep["ivf_index"]["rows_removed"]
         gone = targets + [t + 100000 for t in targets]
         shadow_rows_left = (
-            spark.read.parquet(_os.path.join(live["text_index"], "sigs"))
+            spark.read.parquet(
+                _os.path.join(resolve_generation(live["text_index"]), "sigs")
+            )
             .filter(F.col("doc_id").isin(gone))
             .count()
-            + spark.read.parquet(_os.path.join(live["ivf_index"], "corpus"))
+            + spark.read.parquet(
+                _os.path.join(resolve_generation(live["ivf_index"]), "corpus")
+            )
             .filter(F.col("vec_id").isin(gone))
             .count()
         )
@@ -3401,7 +3404,9 @@ def q83_forget_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
                 spark, staged["ivf_index"], fit_sample_rows=60, lease_wait_s=5.0
             )
         ivf_after_maintenance = spark.read.parquet(
-            _os.path.join(snapshot_paths(family)["ivf_index"], "corpus")
+            _os.path.join(
+                resolve_generation(snapshot_paths(family)["ivf_index"]), "corpus"
+            )
         ).count()
 
         rows = [
@@ -3465,6 +3470,7 @@ def q84_takedown_stream_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from serverless_etl_bi_on_aws_spark.operators.snapshot import (
         init_snapshot_family,
+        resolve_generation,
         snapshot_history,
         snapshot_paths,
     )
@@ -3541,7 +3547,7 @@ def q84_takedown_stream_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
             return (
                 spark.read.parquet(p["corpus"]).count(),
                 spark.read.parquet(
-                    _os.path.join(p["text_index"], "sigs")
+                    _os.path.join(resolve_generation(p["text_index"]), "sigs")
                 ).count(),
             )
 
@@ -3634,11 +3640,12 @@ def q85_maintenance_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
         point lookup through the pushed-filter path returns exactly the
         fixture's row.
 
-    Scale shape: both rewrites are write-new-then-swap with one range
-    exchange each (zorder_key: one approxQuantile pass per column,
-    broadcast Bucketizer splits, codegen'd Morton interleave — no
-    window, no global sort); the footer audit is driver-side by design
-    (footers are KB-sized and file counts are maintenance-scale)."""
+    Scale shape: each rewrite writes a new directory from the previous
+    one, with one range exchange each (zorder_key: one approxQuantile
+    pass per column, broadcast Bucketizer splits, codegen'd Morton
+    interleave — no window, no global sort); the footer audit is
+    driver-side by design (footers are KB-sized and file counts are
+    maintenance-scale)."""
     import os as _os
     import shutil
     import tempfile
@@ -3696,28 +3703,31 @@ def q85_maintenance_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Morton curve's natural 4x4 block grid — 12/13 ragged files
         # measured ~50% per-dimension candidates vs ~40% at 16
         target = max(_dir_bytes(path) // 16, 1)
+        zpath = _os.path.join(scratch, "fact_z")
         n_files = compact_parquet(
-            spark, path, target_file_bytes=target, cluster_by=["x", "y"]
+            spark, path, zpath, target_file_bytes=target, cluster_by=["x", "y"]
         )
-        hit_x, nf = _candidates(path, "x")
-        hit_y, _ = _candidates(path, "y")
-        plain_bytes = _dir_bytes(path)
-        after = spark.read.parquet(path)
+        hit_x, nf = _candidates(zpath, "x")
+        hit_y, _ = _candidates(zpath, "y")
+        plain_bytes = _dir_bytes(zpath)
+        after = spark.read.parquet(zpath)
         rows_after, cents_after, xy_after = after.agg(
             F.count("*"), F.sum("cents"), F.sum(F.col("x") * 1000 + F.col("y"))
         ).head()
 
         # second rewrite: same clustering + a bloom sized for a planted
         # constant NDV (fixed, so the footprint margin holds at any sf)
+        bpath = _os.path.join(scratch, "fact_bloom")
         compact_parquet(
             spark,
-            path,
+            zpath,
+            bpath,
             target_file_bytes=target,
             cluster_by=["x", "y"],
             bloom_cols={"o_orderkey": 100000},
         )
-        bloom_growth = _dir_bytes(path) - plain_bytes
-        relu = spark.read.parquet(path)
+        bloom_growth = _dir_bytes(bpath) - plain_bytes
+        relu = spark.read.parquet(bpath)
         rows_bloom, cents_bloom = relu.agg(F.count("*"), F.sum("cents")).head()
         probe_key = synth.agg(F.min("o_orderkey")).head()[0]
         lookup_rows = relu.filter(F.col("o_orderkey") == probe_key).count()
@@ -4142,6 +4152,7 @@ def q90_snapshot_sql_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
         init_snapshot_family,
         mutate_snapshot,
         register_family_views,
+        snapshot_paths,
     )
 
     toks = [
@@ -4168,19 +4179,14 @@ def q90_snapshot_sql_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).head()[0]
 
         with mutate_snapshot(family, ["corpus"], owner="q90", keep_n=3) as st:
-            # distributed rewrite of the staged clone (r15 verdict style
-            # note: no collect/createDataFrame driver hop) — write the
-            # filtered frame beside the stage, then swap the PRIVATE
-            # staged dir (invisible until the manifest commits)
-            import shutil as _sh
-
-            kept = spark.read.parquet(st["corpus"]).filter(
+            # distributed rewrite (r15 verdict style note: no
+            # collect/createDataFrame driver hop): read the live
+            # generation, overwrite the PRIVATE staged clone (invisible
+            # until the manifest commits)
+            kept = spark.read.parquet(snapshot_paths(family)["corpus"]).filter(
                 ~F.col("doc_id").isin(targets)
             )
-            rewrite = st["corpus"] + ".__rewrite__"
-            kept.write.parquet(rewrite)
-            _sh.rmtree(st["corpus"])
-            _os.rename(rewrite, st["corpus"])
+            kept.write.mode("overwrite").parquet(st["corpus"])
 
         pinned_after = spark.sql(
             f"SELECT COUNT(*) FROM {pre['corpus']}"
@@ -4532,6 +4538,7 @@ def q95_snapshot_diff_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
         init_snapshot_family,
         mutate_snapshot,
         snapshot_diff,
+        snapshot_paths,
     )
 
     toks = [
@@ -4557,10 +4564,8 @@ def q95_snapshot_diff_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
             # note: no collect/createDataFrame driver hop): delete the
             # targets, edit the %9==1 rows, append two fresh docs — all
             # as engine expressions — then swap the PRIVATE staged dir
-            import shutil as _sh
-
             mutated = (
-                spark.read.parquet(st["corpus"])
+                spark.read.parquet(snapshot_paths(family)["corpus"])
                 .filter(~F.col("doc_id").isin(targets))
                 .select(
                     "doc_id",
@@ -4578,10 +4583,7 @@ def q95_snapshot_diff_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
                     )
                 )
             )
-            rewrite = st["corpus"] + ".__rewrite__"
-            mutated.write.parquet(rewrite)
-            _sh.rmtree(st["corpus"])
-            _os.rename(rewrite, st["corpus"])
+            mutated.write.mode("overwrite").parquet(st["corpus"])
 
         diff_rows = [
             (r.dataset, r.status, int(r.n_rows))
@@ -6165,6 +6167,7 @@ def q120_simhash_index_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
         init_hash_index,
         update_hash_index,
     )
+    from serverless_etl_bi_on_aws_spark.operators.snapshot import current_generation
     from serverless_etl_bi_on_aws_spark.util import artifact_dir, fixture_digest
 
     radius, n_blocks = 7, 8
@@ -6184,9 +6187,9 @@ def q120_simhash_index_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     b1 = docs.filter(F.col("doc_id") <= mid)
     b2 = docs.filter(F.col("doc_id") > mid)
 
-    digest = fixture_digest(sf_dir, ("documents",), version="shidx2")[:8]
+    digest = fixture_digest(sf_dir, ("documents",), version="shidx3")[:8]
     idx = artifact_dir(f"spark_graft_simhashidx_{digest}")
-    if not os.path.exists(os.path.join(idx, "_meta.json")):
+    if current_generation(idx) is None:
         build_hash_index(b1, idx, n_blocks=n_blocks, hasher="simhash")
 
     surv2 = dedup_against_hash_index(spark, b2, idx, radius)

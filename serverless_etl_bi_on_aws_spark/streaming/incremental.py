@@ -234,17 +234,17 @@ def start_rollup_maintenance(
     per-batch cost stays proportional to the delta (the object-store
     analog is manifest reuse — exactly a transactional table format's
     snapshot commit, which is the drop-in at 100 TB). Readers resolve
-    the live generation via :func:`rollup_data_path`; the previous
-    generation is retained through one further commit so in-flight
-    readers finish on a complete immutable tree. A pre-round-12
-    in-place rollup is migrated in as generation 1 on its first batch."""
+    the live generation via ``snapshot.resolve_generation``; the
+    previous generation is retained through one further commit so
+    in-flight readers finish on a complete immutable tree. The stream
+    is its own serialization, so the staged rewrite takes no lease."""
     from pyspark.sql import functions as F
 
     from serverless_etl_bi_on_aws_spark.operators.rollup import (
         build_pricing_rollup,
         upsert_pricing_rollup,
     )
-    from serverless_etl_bi_on_aws_spark.operators.snapshot import link_tree
+    from serverless_etl_bi_on_aws_spark.operators.snapshot import staged_rewrite
     # util's write_marker is looked up per call so a crash can be
     # injected before the _applied markers (test_merge_streaming)
     from serverless_etl_bi_on_aws_spark.util import marker_exists, write_marker
@@ -255,9 +255,6 @@ def start_rollup_maintenance(
         with_src = batch_df.withColumn("_src", F.input_file_name())
         files = sorted(r[0] for r in with_src.select("_src").distinct().collect())
         cur = resolve_generation(rollup_path)
-        if cur is None and os.path.exists(os.path.join(rollup_path, "_SUCCESS")):
-            cur = rollup_path  # legacy in-place layout: its first
-            # generational batch links the existing partitions/markers in
         todo = [
             f
             for f in files
@@ -267,22 +264,20 @@ def start_rollup_maintenance(
         if not todo:
             return
         delta = with_src.filter(F.col("_src").isin(todo)).drop("_src")
-        gen, stage = begin_generation(rollup_path)
-        if cur is None:
-            # bootstrap: first unapplied files ARE the rollup
-            (
-                build_pricing_rollup(delta)
-                .repartition(1, "ship_year")
-                .write.mode("overwrite")
-                .partitionBy("ship_year")
-                .parquet(stage)
-            )
-        else:
-            link_tree(cur, stage, exclude_top=("gen-", ".__stage__", "_current"))
-            upsert_pricing_rollup(spark, stage, delta)
-        for f in todo:
-            write_marker(os.path.join(stage, "_applied", fid(f)), {"file": f})
-        commit_generation(rollup_path, gen, stage)
+        with staged_rewrite(rollup_path) as (live, stage):
+            if live is None:
+                # bootstrap: first unapplied files ARE the rollup
+                (
+                    build_pricing_rollup(delta)
+                    .repartition(1, "ship_year")
+                    .write.mode("overwrite")
+                    .partitionBy("ship_year")
+                    .parquet(stage)
+                )
+            else:
+                upsert_pricing_rollup(spark, stage, delta)
+            for f in todo:
+                write_marker(os.path.join(stage, "_applied", fid(f)), {"file": f})
 
     return start_foreach_batch(
         read_landing_zone(spark, source_dir, schema, fmt),
@@ -297,66 +292,6 @@ def _rollup_file_id(path: str) -> str:
     import hashlib
 
     return hashlib.md5(path.encode()).hexdigest()[:16]
-
-
-def rollup_data_path(rollup_path: str) -> str:
-    """READER entry point for a maintained rollup: the live committed
-    generation under ``rollup_path`` (operators/snapshot.py pointer), or
-    ``rollup_path`` itself for a pre-round-12 in-place layout. Always
-    read the maintained rollup through this — the root dir holds the
-    pointer and generation dirs, not one parquet table."""
-    return resolve_generation(rollup_path) or rollup_path
-
-
-def rollup_integrity_status(rollup_path: str) -> dict:
-    """Integrity report for a maintained rollup.
-
-    Round-12 generational protocol: partition data and the batch's
-    ``_applied`` markers commit together in one atomic generation swap,
-    so the rounds-10/11 crash window no longer EXISTS — a crash at any
-    point leaves the previous generation live and the replay recomputes;
-    stranded ``.__stage__`` dirs are garbage (reported informationally
-    as ``stale_stages`` until the next commit sweeps them), never
-    partially-applied state.
-
-    Legacy in-place rollups (and legacy journals carried across the
-    migration) keep the round-10 detection semantics: a stranded
-    ``<rollup>.__journal__/<nonce>.json`` entry names files whose
-    additive merge may have committed without markers — checked against
-    the LIVE generation's markers, so an entry whose files all carry
-    markers (the batch provably committed fully; only the journal
-    removal crashed — round-11 ADVICE) is dropped rather than reported
-    as permanently dirty.
-
-    Returns ``{"clean": bool, "suspect_files": [...]}`` (+
-    ``stale_stages`` when crash leftovers are present); remedy for a
-    dirty rollup is a rebuild (it is derived state). Driver-side JSON
-    reads only — no Spark job."""
-    import glob
-
-    from serverless_etl_bi_on_aws_spark.operators.snapshot import stale_stages
-    from serverless_etl_bi_on_aws_spark.util import marker_exists
-
-    live = rollup_data_path(rollup_path)
-    suspect: list[str] = []
-    for jf in sorted(glob.glob(os.path.join(f"{rollup_path}.__journal__", "*.json"))):
-        rec = read_marker(jf)
-        files = rec.get("files", []) if rec else []
-        if files and all(
-            marker_exists(os.path.join(live, "_applied", _rollup_file_id(f)))
-            for f in files
-        ):
-            try:
-                os.remove(jf)  # every file marked: the batch fully committed
-            except FileNotFoundError:
-                pass
-            continue
-        suspect.extend(files)
-    out = {"clean": not suspect, "suspect_files": sorted(set(suspect))}
-    stages = stale_stages(rollup_path)
-    if stages:
-        out["stale_stages"] = stages
-    return out
 
 
 def start_denorm_maintenance(

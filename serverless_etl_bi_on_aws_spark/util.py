@@ -137,9 +137,12 @@ class FakeObjectStoreBackend:
     two commit primitives use ONLY the operations an object store has —
 
     * ``put``: unconditional overwrite (S3 PUT — atomic last-wins per
-      object on the real store; the double writes in place, which is
+      object on the real store; the double rewrites the file, which is
       exactly as strong as the tests need: the crash suites verify the
-      PROTOCOL's ordering/idempotence, not torn-read atomicity);
+      PROTOCOL's ordering/idempotence, not torn-read atomicity). It
+      unlinks the old file first: a key is its own object, so a PUT
+      must not write through a hardlink into another key that shares
+      its bytes (a generation store's hardlinked clone);
     * ``put_if_absent``: conditional PUT (S3 ``If-None-Match: *`` /
       GCS ``if-generation-match: 0``) — existence check + write under
       one mutex, the store-side atomicity the precondition provides.
@@ -157,6 +160,8 @@ class FakeObjectStoreBackend:
         d = os.path.dirname(path)
         if d:
             os.makedirs(d, exist_ok=True)  # key prefixes cost nothing
+        if os.path.lexists(path):
+            os.remove(path)
         with open(path, "wb") as f:
             f.write(data)
         self.puts += 1

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import os
+
 import duckdb
 import pytest
 
@@ -8,6 +10,55 @@ from serverless_etl_bi_on_aws_spark.session import get_spark
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
+
+
+def live_table(root: str, table: str) -> str:
+    """Path of ``table`` inside the live generation of a generation
+    store — how a test reads a persisted index's ``sigs``/``corpus``."""
+    from serverless_etl_bi_on_aws_spark.operators.snapshot import live_generation
+
+    return os.path.join(live_generation(root), table)
+
+
+def crash_replay_each_rename(monkeypatch, setup, publish, check, after_crash=None) -> int:
+    """Crash one publish at each of its renames in turn, then replay it.
+
+    For k = 1, 2, ...: ``setup(k)`` builds a fresh target, ``publish(k)``
+    runs with the k-th ``os.rename``/``os.replace`` call raising,
+    ``after_crash(k)`` (if given) inspects what the crash left, the same
+    ``publish(k)`` runs again with the real calls, and ``check(k)``
+    asserts the result. Stops at the first k the publish never reaches
+    and returns the number of crash points exercised."""
+    real = {"rename": os.rename, "replace": os.replace}
+    k = 1
+    while True:
+        setup(k)
+        calls = [0]
+
+        def failing(name):
+            def call(*args, **kwargs):
+                calls[0] += 1
+                if calls[0] == k:
+                    raise OSError(f"injected crash at rename {k}")
+                return real[name](*args, **kwargs)
+
+            return call
+
+        with monkeypatch.context() as m:
+            m.setattr(os, "rename", failing("rename"))
+            m.setattr(os, "replace", failing("replace"))
+            try:
+                publish(k)
+            except Exception as e:  # noqa: BLE001 - streams wrap the OSError
+                assert f"injected crash at rename {k}" in str(e), e
+            else:
+                assert calls[0] < k
+                return k - 1
+        if after_crash is not None:
+            after_crash(k)
+        publish(k)
+        check(k)
+        k += 1
 
 
 @pytest.fixture(scope="session")
@@ -58,3 +109,38 @@ def duck():
         )
     yield con
     con.close()
+
+
+def crash_each_rename_converges(monkeypatch, tmp_path, template, mutate, view) -> int:
+    """The crash contract of an index mutator. ``mutate(path)`` runs on a
+    fresh copy of the ``template`` index per crash point, crashing at
+    each ``os.rename``/``os.replace`` in turn (:func:`crash_replay_each_rename`).
+    After every crash a reader's ``view(path)`` equals the template's
+    (the before-index); the rerun's equals an uncrashed run's (the
+    after-index). Returns the number of crash points exercised."""
+    import shutil
+
+    before = view(template)
+    ref = str(tmp_path / "uncrashed")
+    shutil.copytree(template, ref)
+    mutate(ref)
+    after = view(ref)
+    assert after != before, "the mutator changed nothing the view can see"
+    paths: dict[int, str] = {}
+
+    def setup(k):
+        paths[k] = str(tmp_path / f"crash{k}")
+        shutil.copytree(template, paths[k])
+
+    def after_crash(k):
+        assert view(paths[k]) == before
+
+    def check(k):
+        assert view(paths[k]) == after
+        from serverless_etl_bi_on_aws_spark.operators.snapshot import stale_stages
+
+        assert stale_stages(paths[k]) == []
+
+    return crash_replay_each_rename(
+        monkeypatch, setup, lambda k: mutate(paths[k]), check, after_crash
+    )

@@ -15,7 +15,7 @@ from serverless_etl_bi_on_aws_spark.operators.similarity import (
     topk_cosine_ivf,
 )
 
-from tests.conftest import SF_CORRECT, SF_SMOKE
+from tests.conftest import SF_CORRECT, SF_SMOKE, crash_each_rename_converges, live_table
 
 
 
@@ -125,8 +125,8 @@ def test_persisted_ivf_probe_no_refit(spark, tmp_path, monkeypatch):
     # a corpus-sized k would allocate a k-sized top-k buffer (the exact
     # anti-pattern the operator exists to avoid; a k=10**9 variant of this
     # check OOM'd a 12g driver heap).
-    corpus = spark.read.parquet(f"{idx}/corpus")
-    centers = spark.read.parquet(f"{idx}/centroids").collect()
+    corpus = spark.read.parquet(live_table(idx, "corpus"))
+    centers = spark.read.parquet(live_table(idx, "centroids")).collect()
 
     def d2(c):
         return sum((float(a) - float(b)) ** 2 for a, b in zip(c, qvec))
@@ -264,9 +264,9 @@ def test_ivf_index_incremental_update(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(KMeans, "fit", boom)
     assert update_ivf_index(b2, idx, "b2") is True
-    n_rows = spark.read.parquet(os.path.join(idx, "corpus")).count()
+    n_rows = spark.read.parquet(live_table(idx, "corpus")).count()
     assert update_ivf_index(b2, idx, "b2") is False  # replay: no-op
-    assert spark.read.parquet(os.path.join(idx, "corpus")).count() == n_rows
+    assert spark.read.parquet(live_table(idx, "corpus")).count() == n_rows
     monkeypatch.undo()
 
     got = [
@@ -402,7 +402,7 @@ def test_ivf_compaction_drift_and_probe_dedup(spark, tmp_path, monkeypatch):
     # id, so it is overwritten identically, not double-counted)
     os.remove(os.path.join(idx, "_applied", "b0"))
     assert update_ivf_index(app, idx, "b0") is True
-    n_total = spark.read.parquet(os.path.join(idx, "corpus")).count()
+    n_total = spark.read.parquet(live_table(idx, "corpus")).count()
     n_unique = pool.count()
     assert n_total > n_unique
 
@@ -420,7 +420,7 @@ def test_ivf_compaction_drift_and_probe_dedup(spark, tmp_path, monkeypatch):
     # (b) compaction: unique rows, bounded files, probe-identical
     files = compact_ivf_index(spark, idx)
     assert files and all(n == 1 for n in files.values())
-    assert spark.read.parquet(os.path.join(idx, "corpus")).count() == n_unique
+    assert spark.read.parquet(live_table(idx, "corpus")).count() == n_unique
     assert os.path.exists(os.path.join(idx, "_applied", "b0"))
     post = ivf_probe_topk(spark, idx, qvec, k=10, n_probe=8).collect()
     assert [(r.vec_id, round(r.cosine, 6)) for r in post] == [
@@ -481,13 +481,13 @@ def test_ivf_retrain_resets_drift_and_stays_exact(spark, tmp_path):
     union = base.unionByName(shifted)
     n_unique = union.count()
     # (d) duplicates collapsed; (b) baseline reset over the full corpus
-    assert spark.read.parquet(os.path.join(idx, "corpus")).count() == n_unique
+    assert spark.read.parquet(live_table(idx, "corpus")).count() == n_unique
     st = ivf_drift_status(idx)
     assert st["appended_rows"] == 0 and st["drift_ratio"] == 0.0
     assert st["build_rows"] == n_unique and not st["retrain_recommended"]
     # (c) replayed old batch is still a marker no-op
     assert update_ivf_index(shifted, idx, "b-shift") is False
-    assert spark.read.parquet(os.path.join(idx, "corpus")).count() == n_unique
+    assert spark.read.parquet(live_table(idx, "corpus")).count() == n_unique
     # (a) probe over the retrained index == exact brute force
     got = [
         (r.vec_id, round(r.cosine, 6))
@@ -540,7 +540,7 @@ def test_ivf_sample_fit_build_and_retrain(spark, tmp_path, monkeypatch):
     build_ivf_index(pool, idx, n_clusters=8, seed=42, fit_sample_rows=bound)
 
     # full corpus assigned: every row is in exactly one cluster partition
-    assert spark.read.parquet(os.path.join(idx, "corpus")).count() == pool.count()
+    assert spark.read.parquet(live_table(idx, "corpus")).count() == pool.count()
     meta = ivf_drift_status(idx)
     assert meta["build_rows"] == pool.count()
     assert meta["build_distortion"] > 0  # measured over the full corpus
@@ -635,7 +635,6 @@ def test_run_ivf_maintenance_cycle(spark, tmp_path, monkeypatch):
     assert rep["drift"]["retrain_recommended"]
     assert rep["post_drift"]["appended_rows"] == 0
     assert rep["post_drift"]["build_rows"] == n_unique  # dups compacted
-    assert rep["recovered"] == {"restored": False, "removed": []}
     got = [
         (r.vec_id, round(r.cosine, 6))
         for r in ivf_probe_topk(spark, idx, qvec, k=10, n_probe=8).collect()
@@ -653,113 +652,30 @@ def test_run_ivf_maintenance_cycle(spark, tmp_path, monkeypatch):
 
 
 
-def test_ivf_recover_round12_hardening(spark, tmp_path):
-    """Round-11 ADVICE hardening on recover_ivf_index, pinned:
-
-    (a) restore picks the NEWEST .__old__ by mtime, not the
-        lexicographically-last nonce (random hex is not time-ordered);
-    (b) an existing-but-incomplete canonical dir (skeleton) next to a
-        complete .__old__ is moved aside to .__damaged__ — never
-        rmtree'd — and the complete copy is restored; strays are only
-        swept once the canonical index is verified complete;
-    (c) the retrain swap gap stays lease-protected: with the sibling
-        lock held, a second writer gets LeaseHeldError even while the
-        index directory is briefly absent (pre-fix, acquiring a lease
-        on the missing path CREATED it as a lock-only skeleton)."""
-    import os
-    import pathlib
-    import shutil
-
-    import pytest
-
-    from serverless_etl_bi_on_aws_spark.operators.similarity import (
-        build_ivf_index,
-        ivf_probe_topk,
-        recover_ivf_index,
-    )
-    from serverless_etl_bi_on_aws_spark.util import (
-        LeaseHeldError,
-        writer_lease,
-    )
-
-    emb = load_table(spark, SF_CORRECT, "embeddings").select("vec_id", "embedding")
-    qvec = [
-        float(x)
-        for x in emb.filter(F.col("vec_id") == 0).select("embedding").head()[0]
-    ]
-    idx = str(tmp_path / "ivf")
-    build_ivf_index(emb, idx, n_clusters=4, seed=42)
-    want = [
-        (r.vec_id, round(r.cosine, 6))
-        for r in ivf_probe_topk(spark, idx, qvec, k=5, n_probe=4).collect()
-    ]
-
-    # (a) two leftovers: __old__zz is a DECOY (lexicographically last,
-    # but older and incomplete); __old__aa is the real newest snapshot
-    decoy = f"{idx}.__old__zz"
-    pathlib.Path(decoy).mkdir()
-    os.utime(decoy, (1_000_000_000, 1_000_000_000))
-    os.rename(idx, f"{idx}.__old__aa")  # fresh mtime: the newest
-    st = recover_ivf_index(idx)
-    assert st["restored"] is True
-    got = [
-        (r.vec_id, round(r.cosine, 6))
-        for r in ivf_probe_topk(spark, idx, qvec, k=5, n_probe=4).collect()
-    ]
-    assert got == want  # the REAL snapshot came back, not the decoy
-    assert st["removed"] == ["ivf.__old__zz"]  # decoy swept after restore
-
-    # (b) skeleton canonical dir next to the complete copy: moved aside,
-    # restore proceeds, nothing complete is ever deleted
-    os.rename(idx, f"{idx}.__old__bb")
-    pathlib.Path(idx).mkdir()  # lock-only-skeleton analog: incomplete
-    st2 = recover_ivf_index(idx)
-    assert st2["restored"] is True and st2["damaged"].startswith("ivf.__damaged__")
-    assert os.path.isdir(f"{idx}{'.' + st2['damaged'].split('.', 1)[1]}")
-    got2 = [
-        (r.vec_id, round(r.cosine, 6))
-        for r in ivf_probe_topk(spark, idx, qvec, k=5, n_probe=4).collect()
-    ]
-    assert got2 == want
-    for leftover in list(pathlib.Path(str(tmp_path)).glob("ivf.__damaged__*")):
-        shutil.rmtree(leftover)
-
-    # (c) the swap gap is lease-protected: sibling lock survives the dir
-    # being renamed away, so a concurrent writer fails loudly and the
-    # index path is NOT re-created as a skeleton
-    with writer_lease(idx, owner="mid-swap-retrain"):
-        os.rename(idx, f"{idx}.__old__gap")
-        with pytest.raises(LeaseHeldError):
-            with writer_lease(idx, owner="hourly-append"):
-                pass
-        assert not os.path.exists(idx)  # no skeleton materialized
-        os.rename(f"{idx}.__old__gap", idx)
-
-
-
-def test_ivf_retrain_crash_recovery_and_meta_guards(spark, tmp_path):
+def test_ivf_retrain_crash_recovery_and_meta_guards(spark, tmp_path, monkeypatch):
     """Round-10 ADVICE trio on the index maintenance edges:
 
-    (a) retrain swap crash — a crash in the two-rename gap leaves the
-        COMPLETE old index at .__old__<nonce>; recover_ivf_index
-        restores it (probe works, markers intact, dead lease cleared)
-        and sweeps the leftover .__retrain__ build;
-    (b) compact_ivf_index on a pre-meta index fails loudly instead of
-        guessing the id column;
+    (a) retrain crash — a retrain that dies before its pointer commit
+        leaves the complete old index live (probe identical, markers
+        intact, lease released); its stage is garbage that the next
+        commit sweeps, so there is nothing to recover;
+    (b) compact_ivf_index on an index without its meta fails loudly
+        instead of guessing the id column;
     (c) ivf_drift_status with build_distortion == 0 (degenerate corpus
         of one repeated vector) reports infinite drift for appends that
         moved — the ratio criterion can fire, not only the row count."""
     import os
-    import shutil
 
+    from serverless_etl_bi_on_aws_spark.operators import snapshot
     from serverless_etl_bi_on_aws_spark.operators.similarity import (
         build_ivf_index,
         compact_ivf_index,
         ivf_drift_status,
         ivf_probe_topk,
-        recover_ivf_index,
+        retrain_ivf_index,
         update_ivf_index,
     )
+    from serverless_etl_bi_on_aws_spark.util import lease_lock_path
 
     emb = load_table(spark, SF_CORRECT, "embeddings").select("vec_id", "embedding")
     pool = emb.filter(F.col("vec_id") != 0)
@@ -775,63 +691,31 @@ def test_ivf_retrain_crash_recovery_and_meta_guards(spark, tmp_path):
         for r in ivf_probe_topk(spark, idx, qvec, k=5, n_probe=4).collect()
     ]
 
-    # (a) simulate the crash: first rename done (index moved aside; a
-    # legacy pre-round-12 in-dir lock rides along), second never
-    # happened, tmp build left over. The crashed writer's SIBLING lease
-    # lock (round-11 ADVICE: it survives the swap by design) is still
-    # held — so the janitor must SKIP by default and only proceed when
-    # told the lease is provably stale.
-    import pathlib
-    import time as _time
+    # (a) the retrain dies at its commit: the stage is complete, the
+    # pointer never moves
+    def dead_commit(*a, **kw):
+        raise RuntimeError("retrain died before its pointer commit")
 
-    from serverless_etl_bi_on_aws_spark.util import (
-        create_exclusive_marker,
-        lease_lock_path,
-    )
-
-    with open(os.path.join(idx, "_writer.lock"), "w") as f:
-        f.write("{}")
-    os.rename(idx, f"{idx}.__old__deadbeef")
-    pathlib.Path(f"{idx}.__retrain__deadbeef").mkdir()
-    assert create_exclusive_marker(lease_lock_path(idx), {"owner": "dead-retrain"})
-    st0 = recover_ivf_index(idx)
-    assert st0["restored"] is False and "skipped" in st0
-    assert os.path.isdir(f"{idx}.__old__deadbeef")  # nothing touched
-    past = _time.time() - 7200
-    os.utime(lease_lock_path(idx), (past, past))
-    st = recover_ivf_index(idx, stale_after_s=3600)
-    assert st["restored"] is True
-    assert "ivf.__retrain__deadbeef" in st["removed"]
-    assert not os.path.exists(f"{idx}.__old__deadbeef")
-    assert not os.path.exists(os.path.join(idx, "_writer.lock"))
-    assert not os.path.exists(lease_lock_path(idx))  # released on exit
+    live0 = snapshot.resolve_generation(idx)
+    monkeypatch.setattr(snapshot, "commit_generation", dead_commit)
+    with pytest.raises(RuntimeError, match="pointer commit"):
+        retrain_ivf_index(spark, idx, n_clusters=2)
+    monkeypatch.undo()
+    assert snapshot.resolve_generation(idx) == live0
+    assert snapshot.stale_stages(idx)  # the dead retrain's stage
+    assert not os.path.exists(lease_lock_path(idx))
+    assert os.path.exists(os.path.join(idx, "_applied", "noop-b"))
     after = [
         (r.vec_id, round(r.cosine, 6))
         for r in ivf_probe_topk(spark, idx, qvec, k=5, n_probe=4).collect()
     ]
     assert after == before
-    # idempotent when nothing is wrong
-    assert recover_ivf_index(idx) == {"restored": False, "removed": []}
-
-    # a LIVE writer's in-progress .__retrain__ build must not be swept
-    # as a stray (round-11 review: the janitor runs recovery every
-    # cycle, and a concurrent retrain's tmp looks identical to a
-    # crashed one's leftover — the lease disambiguates)
-    from serverless_etl_bi_on_aws_spark.util import writer_lease
-
-    pathlib.Path(f"{idx}.__retrain__live").mkdir()
-    with writer_lease(idx, owner="live-retrain"):
-        st_live = recover_ivf_index(idx)
-    assert st_live["removed"] == [] and "skipped" in st_live
-    assert os.path.isdir(f"{idx}.__retrain__live")
-    # lease released -> the stray is sweepable again
-    st_after = recover_ivf_index(idx)
-    assert st_after["removed"] == ["ivf.__retrain__live"]
+    retrain_ivf_index(spark, idx, n_clusters=2)
+    assert snapshot.stale_stages(idx) == []
+    assert ivf_drift_status(idx)["build_rows"] == pool.count()
 
     # (b) pre-meta index: loud refusal, nothing rewritten
-    import pytest
-
-    os.remove(os.path.join(idx, "_meta.json"))
+    os.remove(live_table(idx, "_meta.json"))
     with pytest.raises(FileNotFoundError, match="_meta.json"):
         compact_ivf_index(spark, idx)
 
@@ -851,10 +735,10 @@ def test_ivf_retrain_crash_recovery_and_meta_guards(spark, tmp_path):
     # pin the code path by forcing the recorded baseline to literal 0
     from serverless_etl_bi_on_aws_spark.util import read_marker, write_marker
 
-    meta2 = read_marker(os.path.join(idx2, "_meta.json"))
+    meta2 = read_marker(live_table(idx2, "_meta.json"))
     assert meta2["build_distortion"] < 1e-12
     meta2["build_distortion"] = 0.0
-    write_marker(os.path.join(idx2, "_meta.json"), meta2)
+    write_marker(live_table(idx2, "_meta.json"), meta2)
     shifted = one.select(
         (F.col("vec_id") + 500_000).alias("vec_id"),
         F.transform("embedding", lambda x: x + F.lit(9.0)).alias("embedding"),
@@ -864,3 +748,71 @@ def test_ivf_retrain_crash_recovery_and_meta_guards(spark, tmp_path):
     assert st2["build_distortion"] == 0.0
     assert st2["drift_ratio"] == float("inf")
     assert st2["retrain_recommended"]
+
+
+def _replayed_ivf(spark, tmp_path):
+    """A small IVF index with an appended batch replayed after a crash
+    (duplicate corpus rows, one drift record)."""
+    import os
+
+    from serverless_etl_bi_on_aws_spark.operators.similarity import (
+        build_ivf_index,
+        update_ivf_index,
+    )
+
+    emb = load_table(spark, SF_CORRECT, "embeddings").select("vec_id", "embedding")
+    idx = str(tmp_path / "template")
+    build_ivf_index(emb.filter(F.col("vec_id") < 150), idx, n_clusters=4, seed=42)
+    app = emb.filter((F.col("vec_id") >= 150) & (F.col("vec_id") < 200))
+    assert update_ivf_index(app, idx, "b1")
+    os.remove(os.path.join(idx, "_applied", "b1"))
+    assert update_ivf_index(app, idx, "b1")
+    return idx
+
+
+def _ivf_view(spark, idx):
+    """What a reader sees: corpus rows, cluster count, appended rows."""
+    from serverless_etl_bi_on_aws_spark.operators.similarity import ivf_drift_status
+
+    st = ivf_drift_status(idx)
+    corpus = spark.read.parquet(live_table(idx, "corpus"))
+    n_clusters = len(spark.read.parquet(live_table(idx, "centroids")).collect())
+    return corpus.count(), n_clusters, st["appended_rows"], st["build_rows"]
+
+
+def test_compact_ivf_index_crash_at_every_rename_converges(
+    spark, tmp_path, monkeypatch
+):
+    """compact_ivf_index compacts every _cluster= partition into one
+    staged generation: crashed at each os.rename/os.replace, a reader
+    sees the whole before-index, and the rerun converges."""
+    from serverless_etl_bi_on_aws_spark.operators.similarity import compact_ivf_index
+
+    points = crash_each_rename_converges(
+        monkeypatch,
+        tmp_path,
+        _replayed_ivf(spark, tmp_path),
+        lambda p: compact_ivf_index(spark, p),
+        lambda p: _ivf_view(spark, p),
+    )
+    assert points == 2
+
+
+def test_retrain_ivf_index_crash_at_every_rename_converges(
+    spark, tmp_path, monkeypatch
+):
+    """retrain_ivf_index writes corpus, centroids and meta into a stage
+    that carries no _drift: crashed at each os.rename/os.replace
+    (including the stage meta's own replace), a reader sees the whole
+    old index with its drift; the rerun converges to the retrained one
+    with the drift baseline reset."""
+    from serverless_etl_bi_on_aws_spark.operators.similarity import retrain_ivf_index
+
+    points = crash_each_rename_converges(
+        monkeypatch,
+        tmp_path,
+        _replayed_ivf(spark, tmp_path),
+        lambda p: retrain_ivf_index(spark, p, n_clusters=3, fit_sample_rows=100),
+        lambda p: _ivf_view(spark, p),
+    )
+    assert points == 3  # the stage meta, the stage rename, the pointer

@@ -16,6 +16,8 @@ from serverless_etl_bi_on_aws_spark.operators.audio_dedup import (
 )
 from serverless_etl_bi_on_aws_spark.sources.multimodal import MEDIA_STRUCT
 
+from tests.conftest import live_table
+
 
 def _program(k: int, n: int = 4000) -> np.ndarray:
     """Deterministic 'program material': a tone with a slowly wandering
@@ -133,13 +135,13 @@ def test_incremental_audio_dedup_via_hash_index(spark, tmp_path):
     }
     assert survivors == {11, 13}
     assert update_hash_index(b2, idx, "b2") is True
-    n = spark.read.parquet(os.path.join(idx, "hashes")).count()
+    n = spark.read.parquet(live_table(idx, "hashes")).count()
     assert update_hash_index(b2, idx, "b2") is False
-    assert spark.read.parquet(os.path.join(idx, "hashes")).count() == n
+    assert spark.read.parquet(live_table(idx, "hashes")).count() == n
     # a third batch duplicating clip 11 (indexed via b2) is caught
     b3 = _media_df(spark, [(20, wav(9, gain=0.75), "audio/wav")])
     assert dedup_against_hash_index(spark, b3, idx, 6).count() == 0
     before = n
     compact_hash_index(spark, idx)
-    assert spark.read.parquet(os.path.join(idx, "hashes")).count() == before
+    assert spark.read.parquet(live_table(idx, "hashes")).count() == before
     assert dedup_against_hash_index(spark, b3, idx, 6).count() == 0

@@ -27,7 +27,7 @@ from serverless_etl_bi_on_aws_spark.sources.multimodal import (
     sample_frames,
 )
 
-from tests.conftest import SF_CORRECT, SF_SMOKE
+from tests.conftest import SF_CORRECT, SF_SMOKE, live_table
 
 
 def _exact_pairs(spark, threshold=0.5):
@@ -1390,10 +1390,10 @@ def test_incremental_url_dedup_loop(spark, tmp_path):
     assert {r["doc_id"] for r in surv.select("doc_id").collect()} == {12, 14}
 
     assert update_hash_index(batch, idx, "b1") is True
-    n_hashes = spark.read.parquet(os.path.join(idx, "hashes")).count()
+    n_hashes = spark.read.parquet(live_table(idx, "hashes")).count()
     assert n_hashes == 2 + 4  # corpus + batch's parseable rows, NOT doc 14
     assert update_hash_index(batch, idx, "b1") is False  # replay no-op
-    assert spark.read.parquet(os.path.join(idx, "hashes")).count() == n_hashes
+    assert spark.read.parquet(live_table(idx, "hashes")).count() == n_hashes
 
     # the indexed batch now shields a later re-submission
     batch2 = spark.createDataFrame(

@@ -23,7 +23,7 @@ from serverless_etl_bi_on_aws_spark.operators.forget import (
 )
 from serverless_etl_bi_on_aws_spark.streaming.ingest_dedup import apply_curation_batch
 
-from conftest import SF_CORRECT
+from conftest import SF_CORRECT, crash_each_rename_converges, live_table
 
 
 # Round-19 test tiering (r18 verdict ask #2): this module is a multi-minute
@@ -73,9 +73,9 @@ def test_forget_text_then_resubmission_admitted(spark, tmp_path):
     assert rep["text_index"]["sigs_removed"] == 2
     assert rep["text_index"]["bands_removed"] > 0
     assert _clean_ids(spark, clean) == {2}
-    sigs = spark.read.parquet(os.path.join(idx, "sigs"))
+    sigs = spark.read.parquet(live_table(idx, "sigs"))
     assert sigs.filter(F.col("doc_id").isin([1, 10])).count() == 0
-    bands = spark.read.parquet(os.path.join(idx, "bands"))
+    bands = spark.read.parquet(live_table(idx, "bands"))
     assert bands.filter(F.col("doc_id").isin([1, 10])).count() == 0
 
     # the takedown semantic: a NEW copy of the forgotten content is
@@ -86,15 +86,15 @@ def test_forget_text_then_resubmission_admitted(spark, tmp_path):
     )
     apply_curation_batch(spark, b3, idx, clean, "fb-2")
     assert _clean_ids(spark, clean) == {2, 20}
-    n_sigs = spark.read.parquet(os.path.join(idx, "sigs")).count()
+    n_sigs = spark.read.parquet(live_table(idx, "sigs")).count()
     apply_curation_batch(spark, b3, idx, clean, "fb-2")  # replay no-op
-    assert spark.read.parquet(os.path.join(idx, "sigs")).count() == n_sigs
+    assert spark.read.parquet(live_table(idx, "sigs")).count() == n_sigs
 
     # a replay of the ORIGINAL batch (crash recovery) must NOT resurrect
     # the forgotten doc: the _SUCCESS gate and _applied marker both hold
     apply_curation_batch(spark, b1, idx, clean, "fb-0")
     assert _clean_ids(spark, clean) == {2, 20}
-    assert spark.read.parquet(os.path.join(idx, "sigs")).count() == n_sigs
+    assert spark.read.parquet(live_table(idx, "sigs")).count() == n_sigs
 
 
 def test_forget_hash_index_then_resubmission_admitted(spark, tmp_path):
@@ -130,7 +130,7 @@ def test_forget_hash_index_then_resubmission_admitted(spark, tmp_path):
     rep = forget_from_hash_index(spark, idx, [1])
     assert rep["shadows_swept"] == 1 and rep["shadow_ids_sample"] == [10]
     assert rep["hashes_removed"] == 2 and rep["blocks_removed"] > 0
-    hashes = spark.read.parquet(os.path.join(idx, "hashes"))
+    hashes = spark.read.parquet(live_table(idx, "hashes"))
     assert {r.doc_id for r in hashes.collect()} == {2}
 
     # takedown semantic: the hash is admissible again; unrelated dedup
@@ -179,12 +179,12 @@ def test_forget_embedding_then_resubmission_admitted(spark, tmp_path):
         == 0
     )
 
-    n0 = spark.read.parquet(os.path.join(idx, "corpus")).count()
+    n0 = spark.read.parquet(live_table(idx, "corpus")).count()
     rep = forget_from_ivf_index(spark, idx, [int(target.vec_id)])
     # content-level: the shadow's identical vector is swept too
     assert rep["shadows_swept"] == 1 and rep["shadow_ids_sample"] == [900_001]
     assert rep["rows_removed"] == 2 and len(rep["cluster_partitions"]) == 1
-    assert spark.read.parquet(os.path.join(idx, "corpus")).count() == n0 - 2
+    assert spark.read.parquet(live_table(idx, "corpus")).count() == n0 - 2
 
     # takedown semantic: the same content is admissible again, the
     # probe no longer surfaces the forgotten id, and the index keeps
@@ -277,3 +277,111 @@ def test_fuzzy_takedown_worklist_composes_with_forget(spark, tmp_path):
     forget_documents(spark, ids, clean_dir=clean)
     left = {r.doc_id for r in spark.read.parquet(clean).collect()}
     assert left == {3}
+
+
+def _index_view(spark, idx, *tables):
+    """What a reader of the index sees: per live table, its sorted id
+    column (a takedown changes exactly which ids remain)."""
+    out = []
+    for t in tables:
+        df = spark.read.parquet(live_table(idx, t))
+        id_col = "vec_id" if "vec_id" in df.columns else "doc_id"
+        out.append(sorted(r[0] for r in df.select(id_col).collect()))
+    return out
+
+
+def test_forget_minhash_index_crash_at_every_rename_converges(
+    spark, tmp_path, monkeypatch
+):
+    """forget_from_minhash_index publishes one staged generation: at each
+    crash point a reader sees the whole before-index (sigs and bands
+    together), and the rerun converges to the after-index."""
+    from serverless_etl_bi_on_aws_spark.operators.dedup_index import update_index
+    from serverless_etl_bi_on_aws_spark.operators.forget import (
+        forget_from_minhash_index,
+    )
+
+    idx = str(tmp_path / "template")
+    init_minhash_index(idx)
+    docs = spark.createDataFrame(
+        [(1, GOOD), (2, GOOD2), (10, GOOD)], "doc_id bigint, text string"
+    )
+    assert update_index(docs, idx, "b0")
+    points = crash_each_rename_converges(
+        monkeypatch,
+        tmp_path,
+        idx,
+        lambda p: forget_from_minhash_index(spark, p, [1]),
+        lambda p: _index_view(spark, p, "sigs", "bands"),
+    )
+    assert points == 2
+
+
+def test_forget_hash_index_crash_at_every_rename_converges(
+    spark, tmp_path, monkeypatch
+):
+    """forget_from_hash_index rewrites the flat blocks table whole, with
+    hashes, in one staged generation — crash contract as above."""
+    from serverless_etl_bi_on_aws_spark.operators.forget import (
+        forget_from_hash_index,
+    )
+    from serverless_etl_bi_on_aws_spark.operators.hash_index import (
+        init_hash_index,
+        update_hash_index,
+    )
+
+    idx = str(tmp_path / "template")
+    init_hash_index(idx)
+    rows = spark.createDataFrame(
+        [(1, 0x0123456789ABCDEF), (2, 0x0F0F0F0F0F0F0F0F), (10, 0x0123456789ABCDEF)],
+        "doc_id bigint, hash bigint",
+    )
+    assert update_hash_index(rows, idx, "hb-0")
+    points = crash_each_rename_converges(
+        monkeypatch,
+        tmp_path,
+        idx,
+        lambda p: forget_from_hash_index(spark, p, [1]),
+        lambda p: _index_view(spark, p, "hashes", "blocks"),
+    )
+    assert points == 2
+
+
+def test_forget_ivf_index_crash_at_every_rename_converges(
+    spark, tmp_path, monkeypatch
+):
+    """forget_from_ivf_index replaces only the affected _cluster=
+    partitions of the staged corpus — crash contract as above, and the
+    untouched partitions stay hardlinks of the live ones."""
+    from serverless_etl_bi_on_aws_spark.operators.similarity import build_ivf_index
+
+    emb = load_table(spark, SF_CORRECT, "embeddings").select("vec_id", "embedding")
+    idx = str(tmp_path / "template")
+    build_ivf_index(emb.filter(F.col("vec_id") < 200), idx, n_clusters=4, seed=42)
+    target = emb.filter(F.col("vec_id") < 200).orderBy("vec_id").head().vec_id
+    points = crash_each_rename_converges(
+        monkeypatch,
+        tmp_path,
+        idx,
+        lambda p: forget_from_ivf_index(spark, p, [int(target)]),
+        lambda p: _index_view(spark, p, "corpus"),
+    )
+    assert points == 2
+    from serverless_etl_bi_on_aws_spark.util import read_marker
+
+    done = str(tmp_path / "uncrashed")
+    live = live_table(done, "corpus")
+    prev = read_marker(os.path.join(done, "_current.json"))["history"][0]
+    old = os.path.join(done, prev, "corpus")
+    shared = [
+        part
+        for part in os.listdir(live)
+        if part.startswith("_cluster=")
+        and any(
+            f.endswith(".parquet")
+            and os.path.exists(os.path.join(old, part, f))
+            and os.path.samefile(os.path.join(live, part, f), os.path.join(old, part, f))
+            for f in os.listdir(os.path.join(live, part))
+        )
+    ]
+    assert len(shared) == 3  # the 3 clusters without the target: linked

@@ -16,6 +16,8 @@ from serverless_etl_bi_on_aws_spark.operators.image_dedup import (
 )
 from serverless_etl_bi_on_aws_spark.sources.multimodal import MEDIA_STRUCT
 
+from tests.conftest import live_table
+
 
 def _pat(cx: int, cy: int, k: int) -> int:
     return (
@@ -193,10 +195,10 @@ def test_incremental_image_dedup_equals_oneshot(spark, tmp_path, monkeypatch):
     import os
 
     assert update_hash_index(b2, idx, "b2") is True
-    n_hashes = spark.read.parquet(os.path.join(idx, "hashes")).count()
+    n_hashes = spark.read.parquet(live_table(idx, "hashes")).count()
     assert n_hashes == len(b1_rows) + len(b2_rows) - 1  # 14 not indexed
     assert update_hash_index(b2, idx, "b2") is False
-    assert spark.read.parquet(os.path.join(idx, "hashes")).count() == n_hashes
+    assert spark.read.parquet(live_table(idx, "hashes")).count() == n_hashes
 
     # a third batch re-rendering batch-2's image 12/13 pattern is caught
     # through the updated index (chain through an indexed duplicate)
@@ -241,13 +243,13 @@ def test_compact_dhash_index_purges_replay_and_keeps_results(spark, tmp_path):
     assert update_hash_index(b2, idx, "b2")
     os.remove(os.path.join(idx, "_applied", "b2"))
     assert update_hash_index(b2, idx, "b2")  # crash replay: duplicates
-    n_docs = spark.read.parquet(os.path.join(idx, "hashes")).select("doc_id").distinct().count()
-    assert spark.read.parquet(os.path.join(idx, "hashes")).count() > n_docs
+    n_docs = spark.read.parquet(live_table(idx, "hashes")).select("doc_id").distinct().count()
+    assert spark.read.parquet(live_table(idx, "hashes")).count() > n_docs
 
     before = {r.doc_id for r in dedup_against_hash_index(spark, probe, idx, 8).collect()}
     files = compact_hash_index(spark, idx)
     assert all(n == 1 for n in files.values())
-    assert spark.read.parquet(os.path.join(idx, "hashes")).count() == n_docs
+    assert spark.read.parquet(live_table(idx, "hashes")).count() == n_docs
     assert not update_hash_index(b2, idx, "b2")  # marker survived
     after = {r.doc_id for r in dedup_against_hash_index(spark, probe, idx, 8).collect()}
     assert after == before == {21}  # 20 chains to 11 via the index

@@ -19,6 +19,8 @@ from serverless_etl_bi_on_aws_spark.streaming.ingest_dedup import (
     start_incremental_dedup,
 )
 
+from tests.conftest import live_table
+
 
 # Round-19 test tiering (r18 verdict ask #2): this module is a multi-minute
 # crash/stream/snapshot integration suite — slow tier, excluded from the
@@ -104,12 +106,12 @@ def test_apply_dedup_batch_replay_points(spark, tmp_path):
 
     n0, n1 = rows("bid-0"), rows("bid-1")
     assert n0 > 0 and n1 > 0
-    n_sigs = spark.read.parquet(os.path.join(idx, "sigs")).count()
+    n_sigs = spark.read.parquet(live_table(idx, "sigs")).count()
 
     # (a) straight replay: fully idempotent
     apply_dedup_batch(spark, b2, idx, clean, "bid-1")
     assert rows("bid-1") == n1
-    assert spark.read.parquet(os.path.join(idx, "sigs")).count() == n_sigs
+    assert spark.read.parquet(live_table(idx, "sigs")).count() == n_sigs
 
     # (b) crash between survivors write and index marker: the index
     # already holds bid-1's signatures (appended before the crash), the
@@ -120,11 +122,11 @@ def test_apply_dedup_batch_replay_points(spark, tmp_path):
     assert rows("bid-1") == n1, "replay clobbered survivors with a self-dup probe"
     # the re-append added duplicate signature rows — harmless, and
     # exactly what compact_index purges
-    assert spark.read.parquet(os.path.join(idx, "sigs")).count() > n_sigs
+    assert spark.read.parquet(live_table(idx, "sigs")).count() > n_sigs
     from serverless_etl_bi_on_aws_spark.operators.dedup_index import compact_index
 
     compact_index(spark, idx)
-    assert spark.read.parquet(os.path.join(idx, "sigs")).count() == n_sigs
+    assert spark.read.parquet(live_table(idx, "sigs")).count() == n_sigs
 
 
 def test_apply_image_dedup_batch_loop(spark, tmp_path):
@@ -434,15 +436,15 @@ def test_apply_embedding_dedup_batch_loop(spark, tmp_path):
 
     # crash between survivors commit and index marker: replay re-appends
     # (duplicate corpus rows) but must NOT recompute survivors
-    n_corpus = spark.read.parquet(os.path.join(idx, "corpus")).count()
+    n_corpus = spark.read.parquet(live_table(idx, "corpus")).count()
     os.remove(os.path.join(idx, "_applied", "b0"))
     apply_embedding_dedup_batch(
         spark, batch, idx, clean, "b0", threshold=0.99, n_probe=8
     )
     assert spark.read.parquet(os.path.join(clean, "batch=b0")).count() == n1
-    assert spark.read.parquet(os.path.join(idx, "corpus")).count() > n_corpus
+    assert spark.read.parquet(live_table(idx, "corpus")).count() > n_corpus
     compact_ivf_index(spark, idx)
-    assert spark.read.parquet(os.path.join(idx, "corpus")).count() == n_corpus
+    assert spark.read.parquet(live_table(idx, "corpus")).count() == n_corpus
 
 
 def test_writer_lease_blocks_concurrent_updates(spark, tmp_path):
@@ -643,7 +645,7 @@ def test_streamed_curation_equals_batch_funnel_over_union(spark, tmp_path):
     want = _oneshot_ids(gated)
     assert got == want
     assert 0 < len(got) < gated.count() < docs.count()  # both gates fired
-    n_idx = spark.read.parquet(os.path.join(idx, "sigs")).count()
+    n_idx = spark.read.parquet(live_table(idx, "sigs")).count()
     assert n_idx == gated.count()  # nothing filtered was indexed
 
 
@@ -694,22 +696,22 @@ def test_apply_curation_batch_replay_points(spark, tmp_path):
     # batch 1: 10 is an exact CROSS-batch dup of 1 -> caught by the probe
     assert ids("cb-1") == {11}
     # only gated docs reached the index: 1 from b1; 10, 11 from b2
-    n_sigs = spark.read.parquet(os.path.join(idx, "sigs")).count()
+    n_sigs = spark.read.parquet(live_table(idx, "sigs")).count()
     assert n_sigs == 3
 
     # (a) full replay: no-op on both clean and index
     apply_curation_batch(spark, b2, idx, clean, "cb-1")
     assert ids("cb-1") == {11}
-    assert spark.read.parquet(os.path.join(idx, "sigs")).count() == n_sigs
+    assert spark.read.parquet(live_table(idx, "sigs")).count() == n_sigs
 
     # (b) crash between survivors write and index marker: _SUCCESS gate
     # must hold (a recompute would see cb-1 as a dup of itself)
     os.remove(os.path.join(idx, "_applied", "cb-1"))
     apply_curation_batch(spark, b2, idx, clean, "cb-1")
     assert ids("cb-1") == {11}, "replay clobbered survivors with a self-dup probe"
-    assert spark.read.parquet(os.path.join(idx, "sigs")).count() > n_sigs
+    assert spark.read.parquet(live_table(idx, "sigs")).count() > n_sigs
     compact_index(spark, idx)
-    assert spark.read.parquet(os.path.join(idx, "sigs")).count() == n_sigs
+    assert spark.read.parquet(live_table(idx, "sigs")).count() == n_sigs
 
 
 def test_curation_semantic_rung_stream_and_replay(spark, tmp_path):
@@ -802,32 +804,32 @@ def test_curation_semantic_rung_stream_and_replay(spark, tmp_path):
     # 10 dropped ONLY semantically; 11 unembedded passes; 12 reuses the
     # FILTERED doc's vector and must survive (5 never reached the corpus)
     assert ids("cb-1") == {11, 12}
-    n_sigs = spark.read.parquet(os.path.join(idx, "sigs")).count()
-    n_corp = spark.read.parquet(os.path.join(ivf, "corpus")).count()
+    n_sigs = spark.read.parquet(live_table(idx, "sigs")).count()
+    n_corp = spark.read.parquet(live_table(ivf, "corpus")).count()
     assert n_sigs == 5  # gated docs: 1,2,10,11,12
     assert n_corp == 6  # 2 seeds + e1,e2 (b1) + e1_near,e_low (b2); no doc-5 row
 
     # (a) full replay: no-op everywhere
     apply_curation_batch(spark, b2, idx, clean, "cb-1", **kw)
     assert ids("cb-1") == {11, 12}
-    assert spark.read.parquet(os.path.join(idx, "sigs")).count() == n_sigs
-    assert spark.read.parquet(os.path.join(ivf, "corpus")).count() == n_corp
+    assert spark.read.parquet(live_table(idx, "sigs")).count() == n_sigs
+    assert spark.read.parquet(live_table(ivf, "corpus")).count() == n_corp
     # (b) crash before the TEXT index marker: survivors gated, text sigs
     # re-append (purged by compaction), IVF marker still holds
     os.remove(os.path.join(idx, "_applied", "cb-1"))
     apply_curation_batch(spark, b2, idx, clean, "cb-1", **kw)
     assert ids("cb-1") == {11, 12}
-    assert spark.read.parquet(os.path.join(ivf, "corpus")).count() == n_corp
+    assert spark.read.parquet(live_table(ivf, "corpus")).count() == n_corp
     compact_index(spark, idx)
-    assert spark.read.parquet(os.path.join(idx, "sigs")).count() == n_sigs
+    assert spark.read.parquet(live_table(idx, "sigs")).count() == n_sigs
     # (c) crash before the IVF marker: survivors gated, corpus re-appends
     # (purged by compaction)
     os.remove(os.path.join(ivf, "_applied", "cb-1"))
     apply_curation_batch(spark, b2, idx, clean, "cb-1", **kw)
     assert ids("cb-1") == {11, 12}
-    assert spark.read.parquet(os.path.join(ivf, "corpus")).count() > n_corp
+    assert spark.read.parquet(live_table(ivf, "corpus")).count() > n_corp
     compact_ivf_index(spark, ivf)
-    assert spark.read.parquet(os.path.join(ivf, "corpus")).count() == n_corp
+    assert spark.read.parquet(live_table(ivf, "corpus")).count() == n_corp
 
     # --- the same two batches through the running stream ---
     s = tmp_path / "stream"
@@ -883,7 +885,7 @@ def test_apply_curation_batch_fully_filtered_batch(spark, tmp_path):
     out = os.path.join(clean, "batch=e-0")
     assert os.path.exists(os.path.join(out, "_SUCCESS"))
     assert spark.read.parquet(out).count() == 0
-    assert not os.path.exists(os.path.join(idx, "sigs"))  # marker-only
+    assert not os.path.exists(live_table(idx, "sigs"))  # marker-only
     apply_curation_batch(spark, b, idx, clean, "e-0")  # replay: no-op
     assert spark.read.parquet(out).count() == 0
     # the junk hour did not brick the index: a real batch flows through
@@ -893,7 +895,7 @@ def test_apply_curation_batch_fully_filtered_batch(spark, tmp_path):
     )
     apply_curation_batch(spark, good, idx, clean, "e-1")
     assert spark.read.parquet(os.path.join(clean, "batch=e-1")).count() == 1
-    assert spark.read.parquet(os.path.join(idx, "sigs")).count() == 1
+    assert spark.read.parquet(live_table(idx, "sigs")).count() == 1
 
 
 def test_replay_after_full_takedown_does_not_readmit(spark, tmp_path):
@@ -925,7 +927,16 @@ def test_replay_after_full_takedown_does_not_readmit(spark, tmp_path):
         spark, clean, "batch", ["bid-0"], keys, "doc_id"
     )
     assert removed == len(ids)
-    rewrite_without_keys(spark, os.path.join(idx, "sigs"), keys, "doc_id")
+    from serverless_etl_bi_on_aws_spark.operators.snapshot import staged_rewrite
+
+    with staged_rewrite(idx, owner="takedown") as (live, stage):
+        rewrite_without_keys(
+            spark,
+            os.path.join(live, "sigs"),
+            os.path.join(stage, "sigs"),
+            keys,
+            "doc_id",
+        )
 
     def clean_rows():
         from pyspark.errors import AnalysisException
@@ -1123,7 +1134,7 @@ def test_curation_stream_dsir_rung(spark, tmp_path):
     drain()
     got = {r.doc_id for r in spark.read.parquet(clean).select("doc_id").collect()}
     assert got == set(range(20))  # exactly the target-like population
-    n_idx = spark.read.parquet(os.path.join(idx, "sigs")).count()
+    n_idx = spark.read.parquet(live_table(idx, "sigs")).count()
     assert n_idx == 20  # DSIR-dropped docs never reached the index
     drain()  # no new files -> no change
     assert spark.read.parquet(clean).count() == 20
@@ -1221,7 +1232,7 @@ def test_curation_batch_blocklist_rung(spark, tmp_path):
         r.doc_id for r in spark.read.parquet(clean).select("doc_id").collect()
     }
     assert got == {1, 3}
-    assert spark.read.parquet(os.path.join(idx, "sigs")).count() == 2
+    assert spark.read.parquet(live_table(idx, "sigs")).count() == 2
     apply_curation_batch(  # replay: no-op
         spark, docs, idx, clean, "b0", blocklist_terms_path=terms_path
     )
@@ -1297,4 +1308,4 @@ def test_hash_loop_hashes_each_batch_once(spark, tmp_path, monkeypatch):
     assert len(calls) == 1
     surv = {r.doc_id for r in spark.read.parquet(clean).select("doc_id").collect()}
     assert surv == {1, 2}
-    assert spark.read.parquet(os.path.join(idx, "hashes")).count() == 3
+    assert spark.read.parquet(live_table(idx, "hashes")).count() == 3

@@ -31,9 +31,10 @@ def test_compaction_reduces_files_preserves_rows(spark, tmp_path):
         for f in os.listdir(path)
         if f.endswith(".parquet")
     )
-    after = compact_parquet(spark, path, target_file_bytes=total_bytes // 3)
+    out = str(tmp_path / "compacted")
+    after = compact_parquet(spark, path, out, target_file_bytes=total_bytes // 3)
     assert after < before and after <= 4
-    got = spark.read.parquet(path)
+    got = spark.read.parquet(out)
     assert got.count() == orders.count()
     # content identical — exact scaled-long sums (a double SUM would vary
     # with summation order across layouts; see the q1 money-sum notes)
@@ -53,26 +54,27 @@ def test_clustered_rewrite_makes_stats_skippable(spark, tmp_path):
     ).head()
     probe = (full_lo + full_hi) // 2
 
-    def n_candidate_files():
-        stats = file_column_stats(path, "o_orderkey")
+    def n_candidate_files(d):
+        stats = file_column_stats(d, "o_orderkey")
         assert all(lo is not None for _, lo, _ in stats)
         return sum(1 for _, lo, hi in stats if lo <= probe <= hi)
 
     before_files = sum(1 for f in os.listdir(path) if f.endswith(".parquet"))
-    assert n_candidate_files() == before_files  # round-robin: no pruning
+    assert n_candidate_files(path) == before_files  # round-robin: no pruning
     total_bytes = sum(
         os.path.getsize(os.path.join(path, f))
         for f in os.listdir(path)
         if f.endswith(".parquet")
     )
+    out = str(tmp_path / "clustered")
     n_after = compact_parquet(
-        spark, path, target_file_bytes=total_bytes // 8, cluster_by="o_orderkey"
+        spark, path, out, target_file_bytes=total_bytes // 8, cluster_by="o_orderkey"
     )
     assert n_after >= 4
     # range-partitioned files: the probe key lives in at most 2 files
     # (boundary keys can straddle one edge)
-    assert n_candidate_files() <= 2
-    assert spark.read.parquet(path).count() == orders.count()
+    assert n_candidate_files(out) <= 2
+    assert spark.read.parquet(out).count() == orders.count()
 
 
 def test_fully_emptied_partition_keeps_replay_gate(spark, tmp_path):
@@ -155,11 +157,11 @@ def test_zorder_clusters_both_columns(spark, tmp_path):
         if f.endswith(".parquet")
     )
 
-    def candidates(column):
+    def candidates(d, column):
         """Median candidate-file count over several point probes (a
         single probe is noisy: the exact mid-range point sits ON the
         Morton curve's major bit boundary, its worst case)."""
-        stats = file_column_stats(path, column)
+        stats = file_column_stats(d, column)
         assert stats and all(lo is not None for _, lo, _ in stats)
         los = [lo for _, lo, _ in stats]
         his = [hi for _, _, hi in stats]
@@ -175,9 +177,10 @@ def test_zorder_clusters_both_columns(spark, tmp_path):
     )
 
     # single-column clustering on custkey: totalprice spans every file
-    _compact(spark, path, target_file_bytes=total // 12, cluster_by="o_custkey")
-    hit_ck, n = candidates("o_custkey")
-    hit_tp, _ = candidates("o_totalprice")
+    ck = str(tmp_path / "orders_ck")
+    _compact(spark, path, ck, target_file_bytes=total // 12, cluster_by="o_custkey")
+    hit_ck, n = candidates(ck, "o_custkey")
+    hit_tp, _ = candidates(ck, "o_totalprice")
     assert n >= 8 and hit_ck <= 2
     assert hit_tp >= int(0.9 * n), "unclustered column should span ~every file"
 
@@ -185,18 +188,19 @@ def test_zorder_clusters_both_columns(spark, tmp_path):
     # (Morton alternation makes one dimension ~2x coarser than the
     # other, so the contract is "well under every file" per column,
     # not the single-column clustering's near-perfect pruning)
+    z = str(tmp_path / "orders_zz")
     _compact(
-        spark, path, target_file_bytes=total // 12,
+        spark, ck, z, target_file_bytes=total // 12,
         cluster_by=["o_custkey", "o_totalprice"],
     )
-    z_ck, nz = candidates("o_custkey")
-    z_tp, _ = candidates("o_totalprice")
+    z_ck, nz = candidates(z, "o_custkey")
+    z_tp, _ = candidates(z, "o_totalprice")
     assert nz >= 8
     assert z_ck <= int(0.7 * nz), f"custkey candidates {z_ck}/{nz}"
     assert z_tp <= int(0.7 * nz), f"totalprice candidates {z_tp}/{nz}"
     assert min(z_ck, z_tp) <= int(0.45 * nz), "one dimension must prune hard"
     # content preserved exactly
-    got = spark.read.parquet(path)
+    got = spark.read.parquet(z)
     orig = orders.select("o_orderkey", "o_custkey", "o_totalprice")
     assert got.count() == orig.count()
     a = got.agg(F.sum("o_orderkey"), F.sum("o_custkey")).head()
@@ -217,10 +221,10 @@ def test_bloom_filter_compaction(spark, tmp_path):
     )
     df.repartition(8).write.parquet(path)
 
-    def dir_bytes():
+    def dir_bytes(d):
         return sum(
-            os.path.getsize(os.path.join(path, f))
-            for f in os.listdir(path)
+            os.path.getsize(os.path.join(d, f))
+            for f in os.listdir(d)
             if f.endswith(".parquet")
         )
 
@@ -228,19 +232,19 @@ def test_bloom_filter_compaction(spark, tmp_path):
         compact_parquet as _compact,
     )
 
-    _compact(spark, path, target_file_bytes=1 << 30)
-    plain = dir_bytes()
-    probe = spark.read.parquet(path).filter(F.col("h") == 954).count()
+    plain_path, bloom_path = str(tmp_path / "plain"), str(tmp_path / "bloom")
+    _compact(spark, path, plain_path, target_file_bytes=1 << 30)
+    plain = dir_bytes(plain_path)
+    probe = spark.read.parquet(plain_path).filter(F.col("h") == 954).count()
 
-    df2 = spark.read.parquet(path)
-    df2.count()
     _compact(
-        spark, path, target_file_bytes=1 << 30, bloom_cols={"h": 200000}
+        spark, plain_path, bloom_path, target_file_bytes=1 << 30,
+        bloom_cols={"h": 200000},
     )
-    with_bloom = dir_bytes()
+    with_bloom = dir_bytes(bloom_path)
     # split-block bloom for 200k NDV at the default FPP is ~100-400 KB
     assert with_bloom - plain > 100_000, (plain, with_bloom)
-    got = spark.read.parquet(path)
+    got = spark.read.parquet(bloom_path)
     assert got.count() == 200000
     assert got.filter(F.col("h") == 954).count() == probe
 
@@ -267,15 +271,16 @@ def test_zorder_on_key_and_timestamp(spark, tmp_path):
         for f in os.listdir(path)
         if f.endswith(".parquet")
     )
+    out = str(tmp_path / "orders_zt_z")
     _compact(
-        spark, path, target_file_bytes=total // 12,
+        spark, path, out, target_file_bytes=total // 12,
         cluster_by=["o_custkey", "o_orderdate"],
     )
-    got = spark.read.parquet(path)
+    got = spark.read.parquet(out)
     assert set(got.columns) == {"o_orderkey", "o_custkey", "o_orderdate"}
     assert got.count() == orders.count()
     for col in ("o_custkey", "o_orderdate"):
-        stats = file_column_stats(path, col)
+        stats = file_column_stats(out, col)
         assert stats and all(lo is not None for _, lo, _ in stats)
         # clustered at all: not every file spans the full range
         los = [lo for _, lo, _ in stats]
@@ -372,8 +377,9 @@ def test_zorder_working_columns_never_clobber_input(spark, tmp_path):
         "cast(id + 1 as long) as __zb_k",
     )
     df.write.mode("overwrite").parquet(path)
-    _compact(spark, path, target_file_bytes=1 << 30, cluster_by=["id", "k"])
-    got = spark.read.parquet(path)
+    out = str(tmp_path / "clobber_z")
+    _compact(spark, path, out, target_file_bytes=1 << 30, cluster_by=["id", "k"])
+    got = spark.read.parquet(out)
     assert set(got.columns) == {"id", "k", "_zkey", "__zb_k"}
     a = got.agg(F.sum("_zkey"), F.sum("__zb_k")).head()
     b = df.agg(F.sum("_zkey"), F.sum("__zb_k")).head()
@@ -404,15 +410,16 @@ def test_compaction_writes_int64_timestamps_and_restores_conf(spark, tmp_path):
             else:
                 spark.conf.set(key, preset)
             path = str(tmp_path / f"ts_{preset}")
+            out = f"{path}_compacted"
             df.repartition(4).write.mode("overwrite").parquet(path)
-            compact_parquet(spark, path, target_file_bytes=1 << 30)
+            compact_parquet(spark, path, out, target_file_bytes=1 << 30)
             assert spark.conf.get(key, None) == preset
-            files = [f for f in os.listdir(path) if f.endswith(".parquet")]
+            files = [f for f in os.listdir(out) if f.endswith(".parquet")]
             assert files
             for f in files:
-                schema = pq.ParquetFile(os.path.join(path, f)).schema
+                schema = pq.ParquetFile(os.path.join(out, f)).schema
                 assert schema.column(schema.names.index("ts")).physical_type == "INT64"
-            assert spark.read.parquet(path).count() == 200
+            assert spark.read.parquet(out).count() == 200
     finally:
         if prior is None:
             spark.conf.unset(key)
@@ -420,24 +427,46 @@ def test_compaction_writes_int64_timestamps_and_restores_conf(spark, tmp_path):
             spark.conf.set(key, prior)
 
 
-def test_compaction_swap_failure_restores_original(spark, tmp_path, monkeypatch):
-    """If moving the compacted copy into place fails, the original table
-    goes back to ``path`` (all rows still readable), the compacted copy
-    is dropped, and the error propagates."""
+def test_compaction_refuses_to_overwrite_its_source(spark, tmp_path):
+    """compact_parquet writes ``dst`` from ``src``: an overwrite of the
+    directory it reads would delete the rows before reading them, so
+    src == dst refuses loudly and leaves the table whole."""
     import pytest
 
     path = str(tmp_path / "t")
     spark.range(100).repartition(5).write.parquet(path)
-    real_rename = os.rename
-
-    def rename(src, dst):
-        if ".__new__" in str(src):
-            raise OSError("injected rename failure")
-        return real_rename(src, dst)
-
-    with monkeypatch.context() as m:
-        m.setattr(os, "rename", rename)
-        with pytest.raises(OSError, match="injected rename failure"):
-            compact_parquet(spark, path, target_file_bytes=1 << 30)
+    with pytest.raises(ValueError, match="both the source and the destination"):
+        compact_parquet(spark, path, path, target_file_bytes=1 << 30)
     assert sorted(r.id for r in spark.read.parquet(path).collect()) == list(range(100))
-    assert sorted(os.listdir(tmp_path)) == ["t"]
+
+
+def test_killed_takedown_leaves_no_partition_dirs_inside_root(
+    spark, tmp_path, monkeypatch
+):
+    """rewrite_partitions_without_keys sets old partitions aside in a
+    SIBLING of the table root. With the set-aside tree surviving, as a
+    kill before its removal would leave it, a reader of the root still
+    sees exactly the kept rows, and the partition column keeps its
+    inferred int type (a ``<part>.__old__`` dir inside the root read as
+    extra rows and turned the column into a string)."""
+    import shutil
+
+    from serverless_etl_bi_on_aws_spark.operators.maintenance import (
+        rewrite_partitions_without_keys,
+    )
+
+    root = str(tmp_path / "clean")
+    spark.createDataFrame(
+        [(i, i % 2) for i in range(10)], "doc_id long, batch int"
+    ).write.partitionBy("batch").parquet(root)
+    keys = spark.createDataFrame([(0,), (1,)], "doc_id long")
+    monkeypatch.setattr(shutil, "rmtree", lambda *a, **kw: None)
+    removed = rewrite_partitions_without_keys(
+        spark, root, "batch", [0, 1], keys, "doc_id"
+    )
+    monkeypatch.undo()
+    assert removed == 2
+    assert any(".__old__" in n for n in os.listdir(tmp_path))  # it survived
+    got = spark.read.parquet(root)
+    assert dict(got.dtypes)["batch"] == "int"
+    assert sorted(r.doc_id for r in got.collect()) == list(range(2, 10))

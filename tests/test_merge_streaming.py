@@ -18,48 +18,10 @@ from serverless_etl_bi_on_aws_spark.streaming.incremental import (
     start_incremental_merge,
 )
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, crash_replay_each_rename
 
 CUT_HIST = "2001-05-01"
 CUT_STAGE = "2001-02-01"  # overlaps history by 3 months (README.md:60 window)
-
-
-def crash_replay_each_rename(monkeypatch, setup, publish, check) -> int:
-    """Crash one publish at each of its renames in turn, then replay it.
-
-    For k = 1, 2, ...: ``setup(k)`` builds a fresh target, ``publish(k)``
-    runs with the k-th ``os.rename``/``os.replace`` call raising, the
-    same ``publish(k)`` runs again with the real calls, and ``check(k)``
-    asserts the result. Stops at the first k the publish never reaches
-    and returns the number of crash points exercised."""
-    real = {"rename": os.rename, "replace": os.replace}
-    k = 1
-    while True:
-        setup(k)
-        calls = [0]
-
-        def failing(name):
-            def call(*args, **kwargs):
-                calls[0] += 1
-                if calls[0] == k:
-                    raise OSError(f"injected crash at rename {k}")
-                return real[name](*args, **kwargs)
-
-            return call
-
-        with monkeypatch.context() as m:
-            m.setattr(os, "rename", failing("rename"))
-            m.setattr(os, "replace", failing("replace"))
-            try:
-                publish(k)
-            except Exception as e:  # noqa: BLE001 - streams wrap the OSError
-                assert f"injected crash at rename {k}" in str(e), e
-            else:
-                assert calls[0] < k
-                return k - 1
-        publish(k)
-        check(k)
-        k += 1
 
 
 def _split_orders(spark):
@@ -631,8 +593,11 @@ def test_streaming_rollup_maintenance(spark, tmp_path):
         build_pricing_rollup,
         pricing_summary_from_rollup,
     )
+    from serverless_etl_bi_on_aws_spark.operators.snapshot import (
+        resolve_generation,
+        stale_stages,
+    )
     from serverless_etl_bi_on_aws_spark.streaming.incremental import (
-        rollup_data_path,
         start_rollup_maintenance,
     )
 
@@ -656,7 +621,7 @@ def test_streaming_rollup_maintenance(spark, tmp_path):
         q.awaitTermination(120)
 
     def rows():
-        live = spark.read.parquet(rollup_data_path(rollup))
+        live = spark.read.parquet(resolve_generation(rollup))
         cols = sorted(live.columns)
         return sorted(tuple(r) for r in live.select(*cols).collect())
 
@@ -681,68 +646,15 @@ def test_streaming_rollup_maintenance(spark, tmp_path):
 
     # and the maintained rollup serves q1 exactly
     got = pricing_summary_from_rollup(
-        spark.read.parquet(rollup_data_path(rollup)), "2001-06-01"
+        spark.read.parquet(resolve_generation(rollup)), "2001-06-01"
     )
     want_q1 = QUERIES["q1_pricing_summary"](spark, SF_SMOKE)
     assert sorted(tuple(r) for r in got.collect()) == sorted(
         tuple(r) for r in want_q1.collect()
     )
 
-    # happy-path drains leave no stranded journal entries
-    from serverless_etl_bi_on_aws_spark.streaming.incremental import (
-        rollup_integrity_status,
-    )
-
-    assert rollup_integrity_status(rollup) == {"clean": True, "suspect_files": []}
-
-
-def test_rollup_stranded_committed_journal_is_cleared(spark, tmp_path):
-    """Round-11 ADVICE: a crash AFTER a batch's last _applied marker but
-    BEFORE the journal removal strands an entry that no replay clears
-    (the early not-todo return exits before cleanup) — yet no double
-    count occurred. rollup_integrity_status must drop entries whose
-    files ALL carry markers (the batch provably committed fully) rather
-    than report the rollup permanently dirty; entries naming an
-    UNapplied file still report suspect."""
-    import glob as _glob
-    import os
-
-    from serverless_etl_bi_on_aws_spark.streaming.incremental import (
-        rollup_integrity_status,
-        start_rollup_maintenance,
-    )
-    from serverless_etl_bi_on_aws_spark.util import read_marker, write_marker
-
-    li = load_table(spark, SF_SMOKE, "lineitem")
-    land = tmp_path / "landing"
-    land.mkdir()
-    rollup = str(tmp_path / "rollup")
-    ckpt = str(tmp_path / "ckpt")
-    li.coalesce(1).write.mode("overwrite").parquet(str(land / "extract1"))
-    q = start_rollup_maintenance(spark, str(land / "*"), rollup, li.schema, ckpt)
-    q.awaitTermination(120)
-
-    # simulate the tail crash: a stranded journal entry naming exactly
-    # the files whose markers all committed (read back from the markers
-    # themselves so the path spelling matches input_file_name's)
-    from serverless_etl_bi_on_aws_spark.streaming.incremental import rollup_data_path
-
-    applied_files = [
-        read_marker(p)["file"]
-        for p in _glob.glob(os.path.join(rollup_data_path(rollup), "_applied", "*"))
-    ]
-    assert applied_files
-    jdir = f"{rollup}.__journal__"
-    write_marker(os.path.join(jdir, "deadbeef.json"), {"files": applied_files})
-    assert rollup_integrity_status(rollup) == {"clean": True, "suspect_files": []}
-    assert not _glob.glob(os.path.join(jdir, "*.json"))  # entry dropped
-
-    # an entry naming an unapplied file is a REAL suspect and stays
-    write_marker(
-        os.path.join(jdir, "dead2.json"), {"files": ["file:///land/extractX"]}
-    )
-    st = rollup_integrity_status(rollup)
-    assert not st["clean"] and st["suspect_files"] == ["file:///land/extractX"]
+    # happy-path drains leave no crash leftovers
+    assert stale_stages(rollup) == []
 
 
 def test_rollup_crash_window_is_closed(spark, tmp_path, monkeypatch):
@@ -750,8 +662,8 @@ def test_rollup_crash_window_is_closed(spark, tmp_path, monkeypatch):
     window is CLOSED, not merely detected — each batch's merged
     partitions and per-file markers commit together as one generation
     behind an atomic pointer swap, so a crash at ANY point followed by
-    a replay double-counts nothing and rollup_integrity_status reports
-    clean across every simulated crash site.
+    a replay double-counts nothing and leaves no stage behind, across
+    every simulated crash site.
 
     Crash A: before the batch's first _applied marker (stage built,
     nothing committed). Crash B: after the generation rename but before
@@ -761,10 +673,11 @@ def test_rollup_crash_window_is_closed(spark, tmp_path, monkeypatch):
     import serverless_etl_bi_on_aws_spark.operators.snapshot as snap
     import serverless_etl_bi_on_aws_spark.util as util
     from serverless_etl_bi_on_aws_spark.operators.rollup import build_pricing_rollup
-    from serverless_etl_bi_on_aws_spark.operators.snapshot import resolve_generation
+    from serverless_etl_bi_on_aws_spark.operators.snapshot import (
+        resolve_generation,
+        stale_stages,
+    )
     from serverless_etl_bi_on_aws_spark.streaming.incremental import (
-        rollup_data_path,
-        rollup_integrity_status,
         start_rollup_maintenance,
     )
 
@@ -788,7 +701,7 @@ def test_rollup_crash_window_is_closed(spark, tmp_path, monkeypatch):
             pass
 
     def rows():
-        live = spark.read.parquet(rollup_data_path(rollup))
+        live = spark.read.parquet(resolve_generation(rollup))
         cols = sorted(live.columns)
         return sorted(tuple(r) for r in live.select(*cols).collect())
 
@@ -811,11 +724,9 @@ def test_rollup_crash_window_is_closed(spark, tmp_path, monkeypatch):
     drain()
     monkeypatch.undo()
     assert resolve_generation(rollup) is None  # pointer never moved
-    st = rollup_integrity_status(rollup)
-    assert st["clean"] and st["suspect_files"] == []
     drain()  # replay
     assert rows() == want(b1)
-    assert rollup_integrity_status(rollup)["clean"]
+    assert stale_stages(rollup) == []
 
     # ---- crash B: generation renamed into place but the pointer swap
     # fails -> orphan generation, old one stays live; replay is exact
@@ -833,10 +744,9 @@ def test_rollup_crash_window_is_closed(spark, tmp_path, monkeypatch):
     drain()
     monkeypatch.undo()
     assert rows() == want(b1)  # old generation still live
-    assert rollup_integrity_status(rollup)["clean"]
     drain()  # replay
     assert rows() == want(li)  # exact: no double count anywhere
-    assert rollup_integrity_status(rollup) == {"clean": True, "suspect_files": []}
+    assert stale_stages(rollup) == []
     # exactly the live + previous generations remain; orphan swept
     gens = sorted(g for g in os.listdir(rollup) if g.startswith("gen-"))
     assert len(gens) == 2

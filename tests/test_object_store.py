@@ -10,12 +10,14 @@ the existing crash/replay suites over it, so the design note is a
 verified contract: the protocols' ordering/idempotence/lease invariants
 hold with object-store primitives alone.
 
-Out of scope, stated plainly: the in-place parquet directory swaps of
-operators/maintenance.py rely on rename by design; their object-store
-answer is hosting them in the snapshot/manifest generation family
-(operators/snapshot.py, whose pointer commits DO route through this seam
-and ARE re-run here). The streaming maintenance targets (merge, cells,
-SCD2) publish through that generation store directly.
+Every persisted index (MinHash, hash, IVF) and every streaming
+maintenance target (merge, cells, SCD2, rollup) is a generation store
+(operators/snapshot.py): their rewrites publish with a pointer commit,
+which routes through this seam and is re-run here. Out of scope, stated
+plainly: the curated corpus (``clean_dir``) stays a plain directory, and
+its takedown (operators/maintenance.rewrite_partitions_without_keys)
+swaps partition directories by rename; its object-store answer is
+hosting the corpus in a snapshot family.
 """
 
 from __future__ import annotations
@@ -25,6 +27,8 @@ import os
 import pytest
 
 from serverless_etl_bi_on_aws_spark import util
+
+from tests.conftest import live_table
 
 
 
@@ -181,12 +185,11 @@ def test_concurrent_mutator_crash_over_object_store(spark, tmp_path, fake_store)
 
 
 def test_compaction_snapshot_over_object_store(spark, tmp_path, fake_store):
-    """Round 17 (verdict ask #4): compact_parquet's rewrite, hosted in a
-    mutate_snapshot staged clone, is committed by pointer PUTs alone
+    """Round 17 (verdict ask #4): compact_parquet's rewrite into a
+    mutate_snapshot staged clone is committed by pointer PUTs alone
     over the double — the in-flight-reader / crash-commits-nothing
     suite re-runs green with object-store primitives at every commit
-    point (the rewrite's own renames touch only never-referenced stage
-    siblings; see the rename-free staging test above)."""
+    point."""
     from tests import test_snapshot as t
 
     t.test_compaction_composes_with_snapshot(spark, tmp_path / "a")
@@ -194,7 +197,7 @@ def test_compaction_snapshot_over_object_store(spark, tmp_path, fake_store):
 
 
 def test_ivf_retrain_snapshot_over_object_store(spark, tmp_path, fake_store):
-    """Round 17 (verdict ask #4): the IVF retrain's two-rename swap,
+    """Round 17 (verdict ask #4): the IVF retrain's staged rewrite,
     hosted in a mutate_snapshot staged clone, commits via pointer PUTs
     over the double — including the test's own pin that the LIVE
     generation is never a rename source."""
@@ -277,4 +280,4 @@ def test_null_hash_only_batch_is_vacuously_applied(spark, tmp_path):
     assert update_hash_index(nulls, idx, "b0") is False
     import os
 
-    assert not os.path.exists(os.path.join(idx, "blocks"))
+    assert not os.path.exists(live_table(idx, "blocks"))

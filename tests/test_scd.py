@@ -261,7 +261,7 @@ def test_scd2_fold_crash_replay_converges(spark, tmp_path, monkeypatch):
     from serverless_etl_bi_on_aws_spark.streaming.scd_stream import (
         apply_scd2_batch_generations,
     )
-    from tests.test_merge_streaming import crash_replay_each_rename
+    from tests.conftest import crash_replay_each_rename
 
     TS0 = dt.datetime(2024, 1, 1)
     TS1 = dt.datetime(2024, 2, 1)
