@@ -26,6 +26,7 @@ from serverless_etl_bi_on_aws_spark.operators.similarity import (  # noqa: F401
 )
 from serverless_etl_bi_on_aws_spark.operators.semantic_dedup import (  # noqa: F401
     cluster_assignments,
+    exact_and_clustered_pairs,
     semantic_dedup,
     semantic_neardup_pairs,
 )

@@ -40,13 +40,18 @@ Spark shape (all declarative until the per-tile BLAS kernel):
     identical machinery to the IVF index build (similarity.py:437); an
     existing IVF index's partition column can be reused as the cluster
     column via ``assignments=``.
-  * within-cluster pairs = the SAME block-pair tiling as the exact
-    operators, re-keyed by (cluster, bi, bj): per-cluster block counts
-    come from one tiny groupBy (K rows driver-side, like the centroid
-    read), every tile group holds two operand blocks, and the kernel is
-    the shared :func:`similarity._block_operands` + one matmul. A
-    cluster larger than ``block_rows`` therefore sub-tiles instead of
-    concentrating in one task — no single-task cluster bound.
+  * within-cluster pairs = the SAME tiler and threshold kernel as the
+    exact operator (similarity._tag_block_pairs + _pair_kernel), with
+    one tile group per cluster instead of one for the corpus: one
+    grouped count sizes every cluster's blocks (K rows driver-side, like
+    the centroid read), one broadcast dimension tags each row with the
+    (cluster, bi, bj) tiles of its own cluster, and every tile is one
+    matmul. A cluster larger than ``block_rows`` therefore sub-tiles
+    instead of concentrating in one task — no single-task cluster bound.
+  * verification = :func:`exact_and_clustered_pairs` runs the exact
+    and the clustered search as ONE tiled pass over the union of both
+    tilings (one sizing collect, one ``applyInPandas``), each pair set
+    still computed from its own tiles — q80's verifier shape.
   * survivor rule = the dominance rule, verbatim from
     ``dedup_by_cosine``: drop iff higher id of ANY over-threshold
     same-cluster pair — order-independent, one anti-join, no iteration.
@@ -56,7 +61,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from serverless_etl_bi_on_aws_spark.operators.similarity import _block_operands
+from serverless_etl_bi_on_aws_spark.operators.similarity import (
+    CLUSTERED,
+    EXACT,
+    _cosine_pair_search,
+    _exact_rows,
+)
 
 
 def cluster_assignments(
@@ -115,65 +125,22 @@ def cluster_assignments(
     )
 
 
-def _tag_cluster_block_pairs(
-    embeddings: DataFrame,
-    assignments: DataFrame,
-    id_col: str,
-    vec_col: str,
-    block_rows: int,
+def _cluster_rows(
+    embeddings: DataFrame, assignments: DataFrame, id_col: str, vec_col: str
 ) -> DataFrame:
-    """The block-pair tiling of similarity._tag_block_pairs, re-keyed by
-    cluster: rows join (cluster, bi, bj) tiles where bi <= bj index
-    blocks WITHIN the row's cluster. Per-cluster block counts are one
-    small aggregate collected driver-side (K rows — the same acceptable
-    driver read as the IVF centroid table); the expanded tile dimension
-    is broadcast. Replication per row is its own cluster's block count,
-    not the corpus's — that is the entire subquadratic claim."""
-    import math
-
-    spark = embeddings.sparkSession
-    src = (
+    """The clustered search's tiler input: one tile group per cluster.
+    The assignment join is inner, so unassigned vectors never enter."""
+    asg = assignments.select(
+        F.col(id_col).cast("bigint").alias("_id"),
+        F.col("_cluster").cast("bigint").alias("_g"),
+    )
+    return (
         embeddings.select(
             F.col(id_col).cast("bigint").alias("_id"), F.col(vec_col).alias("_vec")
         )
-        .join(
-            assignments.select(
-                F.col(id_col).cast("bigint").alias("_id"), "_cluster"
-            ),
-            "_id",
-        )
+        .join(asg, "_id")
+        .select(F.lit(CLUSTERED).alias("_set"), "_g", "_id", "_vec")
     )
-    counts = {
-        int(r["_cluster"]): int(r["n"])
-        for r in src.groupBy("_cluster").agg(F.count("*").alias("n")).collect()
-    }
-    pair_rows = []
-    blocks = {}
-    for c, n in counts.items():
-        nb = max(1, math.ceil(n / block_rows))
-        blocks[c] = nb
-        pair_rows.extend((c, i, j) for i in range(nb) for j in range(i, nb))
-    if not pair_rows:
-        return spark.createDataFrame(
-            [], "c int, bi int, bj int, _role int, _id bigint, _vec array<float>"
-        )
-    blk_dim = spark.createDataFrame(
-        [(c, nb) for c, nb in blocks.items()], "_cluster int, _nb int"
-    )
-    src = src.join(F.broadcast(blk_dim), "_cluster").withColumn(
-        "_blk", F.pmod(F.hash(F.col("_id")), F.col("_nb"))
-    )
-    pair_dim = spark.createDataFrame(pair_rows, "c int, bi int, bj int")
-    left = src.join(
-        F.broadcast(pair_dim),
-        (src["_cluster"] == pair_dim["c"]) & (src["_blk"] == pair_dim["bi"]),
-    ).withColumn("_role", F.lit(0))
-    off = pair_dim.filter(F.col("bi") != F.col("bj"))
-    right = src.join(
-        F.broadcast(off),
-        (src["_cluster"] == off["c"]) & (src["_blk"] == off["bj"]),
-    ).withColumn("_role", F.lit(1))
-    return left.unionByName(right).select("c", "bi", "bj", "_role", "_id", "_vec")
 
 
 def semantic_neardup_pairs(
@@ -202,46 +169,40 @@ def semantic_neardup_pairs(
         assignments = cluster_assignments(
             embeddings, n_clusters, seed, id_col, vec_col, fit_sample_rows
         )
-    tagged = _tag_cluster_block_pairs(
-        embeddings, assignments, id_col, vec_col, block_rows
+    rows = _cluster_rows(embeddings, assignments, id_col, vec_col)
+    return _cosine_pair_search(rows, threshold, block_rows).drop("_set")
+
+
+def exact_and_clustered_pairs(
+    embeddings: DataFrame,
+    threshold: float,
+    assignments: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    block_rows: int = 2048,
+) -> DataFrame:
+    """Both pair sets of the SemDeDup check in one tiled pass:
+    (pair_set, id_1, id_2, cosine) with ``pair_set`` "exact" for the
+    rows :func:`~serverless_etl_bi_on_aws_spark.operators.similarity.
+    neardup_cosine_pairs` returns and "clustered" for the rows
+    :func:`semantic_neardup_pairs` returns under ``assignments``.
+
+    The search runs over the union of the two tilings: one sizing
+    collect, one ``applyInPandas``. Each set is computed from its own
+    tiles — the clustered pairs are searched within clusters, never
+    filtered out of the exact ones — so checking clustered ⊆ exact
+    still tests the cluster tiling."""
+    rows = _exact_rows(embeddings, id_col, vec_col).unionByName(
+        _cluster_rows(embeddings, assignments, id_col, vec_col)
     )
-    th = float(threshold)
-
-    def group_pairs(pdf):
-        import numpy as np
-        import pandas as pd
-
-        empty = pd.DataFrame(
-            {
-                "id_1": pd.Series(dtype="int64"),
-                "id_2": pd.Series(dtype="int64"),
-                "_cos": pd.Series(dtype="float64"),
-            }
-        )
-        ops = _block_operands(pdf)
-        if ops is None:
-            return empty
-        lids, rids, lm, rm, diag = ops
-        sims = lm @ rm.T
-        mask = sims >= th
-        if diag:
-            mask &= lids[:, None] < rids[None, :]
-        ri, ci = np.nonzero(mask)
-        if len(ri) == 0:
-            return empty
-        a, b = lids[ri], rids[ci]
-        return pd.DataFrame(
-            {
-                "id_1": np.minimum(a, b),
-                "id_2": np.maximum(a, b),
-                "_cos": sims[ri, ci],
-            }
-        )
-
-    return (
-        tagged.groupBy("c", "bi", "bj")
-        .applyInPandas(group_pairs, schema="id_1 bigint, id_2 bigint, _cos double")
-        .select("id_1", "id_2", F.round("_cos", 6).alias("cosine"))
+    pairs = _cosine_pair_search(rows, threshold, block_rows)
+    return pairs.select(
+        F.when(F.col("_set") == EXACT, "exact")
+        .otherwise("clustered")
+        .alias("pair_set"),
+        "id_1",
+        "id_2",
+        "cosine",
     )
 
 

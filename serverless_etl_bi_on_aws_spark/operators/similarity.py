@@ -202,42 +202,81 @@ def with_lsh_bucket(
     return out
 
 
-def _tag_block_pairs(
-    embeddings: DataFrame,
-    id_col: str,
-    vec_col: str,
-    block_rows: int,
-    n_rows: int | None = None,
-) -> DataFrame:
-    """Shared scaffolding for exact all-pairs operators: hash-bucket the
-    corpus into B blocks of ~``block_rows`` rows and tag every row with the
-    unordered block pairs (bi <= bj) it participates in, in a left role
-    (its block is bi) or a right role (off-diagonal bj). Each (bi, bj)
-    group then holds exactly the two operand blocks for one matmul tile.
+#: The tile-group key of the cosine pair search is (``_set``, ``_g``):
+#: ``_set`` names the pair set a row searches in, ``_g`` its group within
+#: that set (0 for the exact search, the cluster id for the clustered one).
+EXACT, CLUSTERED = 0, 1
 
-    The driver never holds the corpus — its only action is a ``count()``
-    to size B (skipped when the caller passes ``n_rows``); replication
-    factor is B per row, the honest quadratic cost of exact all-pairs."""
-    import math
 
-    spark = embeddings.sparkSession
-    n = embeddings.count() if n_rows is None else n_rows
-    n_blocks = max(1, math.ceil(n / block_rows))
-    src = embeddings.select(
+def _exact_rows(embeddings: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """The exact search's tiler input: the whole corpus as one group."""
+    return embeddings.select(
+        F.lit(EXACT).alias("_set"),
+        F.lit(0).cast("bigint").alias("_g"),
         F.col(id_col).cast("bigint").alias("_id"),
         F.col(vec_col).alias("_vec"),
-        F.pmod(F.hash(F.col(id_col)), F.lit(n_blocks)).alias("_blk"),
     )
-    pair_rows = [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)]
-    pair_dim = spark.createDataFrame(pair_rows, "bi int, bj int")
-    left = src.join(F.broadcast(pair_dim), src["_blk"] == pair_dim["bi"]).withColumn(
-        "_role", F.lit(0)
+
+
+def _tag_block_pairs(
+    rows: DataFrame, block_rows: int, sizes: dict | None = None
+) -> DataFrame:
+    """The one tiler of the exact all-pairs operators. ``rows`` carries
+    (_set, _g, _id, _vec); each tile group (_set, _g) is hash-bucketed
+    into B_g blocks of ~``block_rows`` rows, and every row is tagged with
+    the unordered block pairs (bi <= bj) of its group it participates in,
+    in a left role (its block is bi) or a right role (off-diagonal bj).
+    Each (_set, _g, bi, bj) group then holds exactly the two operand
+    blocks for one matmul tile.
+
+    The driver never holds the corpus: its only action is one grouped
+    ``count()`` collect, one row per tile group, to size every B_g
+    (skipped when the caller passes ``sizes`` as {(_set, _g): rows}).
+    The block counts reach the rows through one broadcast dimension, and
+    each row explodes into its B_g tiles — replication is the row's own
+    group's block count, the honest quadratic cost of exact all-pairs
+    within a group."""
+    import math
+
+    import pyarrow as pa
+
+    if sizes is None:
+        counts = rows.groupBy("_set", "_g").count().collect()
+        sizes = {(int(s), int(g)): int(n) for s, g, n in counts}
+    keys = list(sizes)
+    # from an Arrow table the dimension is a local relation; from a list
+    # of tuples it would be a Python RDD, unpickled by Python workers
+    dim = rows.sparkSession.createDataFrame(
+        pa.table(
+            {
+                "_set": [s for s, _ in keys],
+                "_g": [g for _, g in keys],
+                "_nb": [max(1, math.ceil(sizes[k] / block_rows)) for k in keys],
+            }
+        ),
+        "_set int, _g bigint, _nb int",
     )
-    off_diag = pair_dim.filter(F.col("bi") != F.col("bj"))
-    right = src.join(F.broadcast(off_diag), src["_blk"] == off_diag["bj"]).withColumn(
-        "_role", F.lit(1)
+    blk, other = F.col("_blk"), F.col("_o")
+    return (
+        rows.join(F.broadcast(dim), ["_set", "_g"])
+        .select(
+            "_set",
+            "_g",
+            "_id",
+            "_vec",
+            F.pmod(F.hash(F.col("_id")), F.col("_nb")).alias("_blk"),
+            F.explode(F.sequence(F.lit(0), F.col("_nb") - 1)).alias("_o"),
+        )
+        .select(
+            "_set",
+            "_g",
+            F.least(blk, other).alias("bi"),
+            F.greatest(blk, other).alias("bj"),
+            (other < blk).cast("int").alias("_role"),
+            "_id",
+            "_vec",
+        )
     )
-    return left.unionByName(right).select("bi", "bj", "_role", "_id", "_vec")
 
 
 def _block_operands(pdf):
@@ -298,7 +337,9 @@ def pairwise_topk_blocked(
     """
     n = embeddings.count()
     per_row_k = max(1, min(k, n - 1))
-    tagged = _tag_block_pairs(embeddings, id_col, vec_col, block_rows, n_rows=n)
+    tagged = _tag_block_pairs(
+        _exact_rows(embeddings, id_col, vec_col), block_rows, {(EXACT, 0): n}
+    )
 
     def group_topk(pdf):
         import numpy as np
@@ -350,6 +391,57 @@ def pairwise_topk_blocked(
     )
 
 
+def _pair_kernel(threshold: float):
+    """The threshold kernel of every cosine pair search: one (_set, _g,
+    bi, bj) tile in, its (_set, id_1, id_2, _cos) pairs with cosine >=
+    ``threshold`` and id_1 < id_2 out — one BLAS matmul and a vectorized
+    ``nonzero`` over the tile."""
+    th = float(threshold)
+
+    def group_pairs(pdf):
+        import numpy as np
+        import pandas as pd
+
+        ops = _block_operands(pdf)
+        lids = rids = ri = ci = np.empty(0, dtype="int64")
+        sims = np.empty((0, 0))
+        if ops is not None:
+            lids, rids, lm, rm, diag = ops
+            sims = lm @ rm.T
+            mask = sims >= th
+            if diag:
+                mask &= lids[:, None] < rids[None, :]  # self + double-count
+            ri, ci = np.nonzero(mask)
+        a, b = lids[ri], rids[ci]
+        return pd.DataFrame(
+            {
+                "_set": np.full(len(ri), pdf["_set"].iat[0], dtype="int32"),
+                "id_1": np.minimum(a, b),
+                "id_2": np.maximum(a, b),
+                "_cos": sims[ri, ci],
+            }
+        )
+
+    return group_pairs
+
+
+def _cosine_pair_search(rows: DataFrame, threshold: float, block_rows: int) -> DataFrame:
+    """Every unordered pair with cosine >= ``threshold`` within each tile
+    group of ``rows`` (_set, _g, _id, _vec): one tiling
+    (:func:`_tag_block_pairs`), one ``applyInPandas`` over its tiles.
+    Returns (_set, id_1, id_2, cosine) with id_1 < id_2; searching the
+    union of two sets' rows computes each set from its own tiles."""
+    return (
+        _tag_block_pairs(rows, block_rows)
+        .groupBy("_set", "_g", "bi", "bj")
+        .applyInPandas(
+            _pair_kernel(threshold),
+            schema="_set int, id_1 bigint, id_2 bigint, _cos double",
+        )
+        .select("_set", "id_1", "id_2", F.round("_cos", 6).alias("cosine"))
+    )
+
+
 def neardup_cosine_pairs(
     embeddings: DataFrame,
     threshold: float = 0.4,
@@ -360,55 +452,20 @@ def neardup_cosine_pairs(
     """Embedding-cosine near-duplicate pairs (the X2 family's semantic
     tier): every unordered pair with cosine >= ``threshold``, via the same
     distributed block-pair matmul as :func:`pairwise_topk_blocked` — one
-    BLAS tile per block pair, a vectorized ``argwhere`` over the tile
-    instead of per-row top-k.
+    BLAS tile per block pair, a vectorized threshold mask over the tile
+    instead of per-row top-k. This is the one-group case of
+    :func:`_cosine_pair_search`; the cluster-pruned search
+    (operators/semantic_dedup.py) is its one-group-per-cluster case.
 
     Scale contract: exact all-pairs is quadratic by definition; at corpus
     scale, generate candidates with the banded MinHash-LSH / hyperplane-LSH
     operators and use this operator as the exact scorer over candidate
-    buckets (same group function, tagged by bucket instead of block).
+    buckets (same kernel, tagged by bucket instead of block).
 
     Returns (id_1, id_2, cosine) with id_1 < id_2.
     """
-    tagged = _tag_block_pairs(embeddings, id_col, vec_col, block_rows)
-    th = float(threshold)
-
-    def group_pairs(pdf):
-        import numpy as np
-        import pandas as pd
-
-        empty = pd.DataFrame(
-            {
-                "id_1": pd.Series(dtype="int64"),
-                "id_2": pd.Series(dtype="int64"),
-                "_cos": pd.Series(dtype="float64"),
-            }
-        )
-        ops = _block_operands(pdf)
-        if ops is None:
-            return empty
-        lids, rids, lm, rm, diag = ops
-        sims = lm @ rm.T
-        mask = sims >= th
-        if diag:
-            mask &= lids[:, None] < rids[None, :]  # self + double-count
-        ri, ci = np.nonzero(mask)
-        if len(ri) == 0:
-            return empty
-        a, b = lids[ri], rids[ci]
-        return pd.DataFrame(
-            {
-                "id_1": np.minimum(a, b),
-                "id_2": np.maximum(a, b),
-                "_cos": sims[ri, ci],
-            }
-        )
-
-    return (
-        tagged.groupBy("bi", "bj")
-        .applyInPandas(group_pairs, schema="id_1 bigint, id_2 bigint, _cos double")
-        .select("id_1", "id_2", F.round("_cos", 6).alias("cosine"))
-    )
+    rows = _exact_rows(embeddings, id_col, vec_col)
+    return _cosine_pair_search(rows, threshold, block_rows).drop("_set")
 
 
 def dedup_by_cosine(

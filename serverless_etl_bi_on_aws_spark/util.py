@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import socket
 import threading
 from collections.abc import Callable
 from contextlib import contextmanager
@@ -302,6 +303,23 @@ def create_exclusive_marker(path: str, payload: dict | None = None) -> bool:
     return True
 
 
+def _holder_is_dead(held: dict | None) -> bool:
+    """True iff a lease payload names this host and a pid that no longer
+    runs. A pid reused by a live process reads as alive: the lease then
+    stands, the safe direction."""
+    held = held or {}
+    pid = held.get("pid")
+    if held.get("host") != socket.gethostname() or not isinstance(pid, int):
+        return False
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return True
+    except PermissionError:  # alive, owned by another user
+        return False
+    return False
+
+
 def writer_lease(root: str, owner: str = "writer", stale_after_s: float | None = None):
     """Single-writer lease over an index directory — the concurrency
     story for the whole persisted-index family (MinHash / dHash / audio
@@ -323,8 +341,11 @@ def writer_lease(root: str, owner: str = "writer", stale_after_s: float | None =
     interleave.
 
     STALE-LEASE RULE: a writer that dies without cleanup leaves the lock
-    behind. The lock records owner/pid/acquisition time; an operator (or
-    a caller passing ``stale_after_s``) may break a lease older than the
+    behind. The lock records owner/host/pid/acquisition time. A lock that
+    names this host and a pid that no longer runs is broken on
+    acquisition (its holder was killed); a lock naming another host, no
+    pid, or a live pid (ours included) stands. An operator (or a caller
+    passing ``stale_after_s``) may also break a lease older than the
     longest plausible batch. Breaking is remove-then-recreate — on a
     local filesystem two simultaneous breakers can in principle both
     succeed (the window is the remove/create gap); on an object store
@@ -335,7 +356,12 @@ def writer_lease(root: str, owner: str = "writer", stale_after_s: float | None =
     @contextmanager
     def _lease():
         lock = lease_lock_path(root)
-        payload = {"owner": owner, "pid": os.getpid(), "acquired_unix": time.time()}
+        payload = {
+            "owner": owner,
+            "host": socket.gethostname(),
+            "pid": os.getpid(),
+            "acquired_unix": time.time(),
+        }
         if not create_exclusive_marker(lock, payload):
             held = read_marker(lock)
             age = None
@@ -343,9 +369,11 @@ def writer_lease(root: str, owner: str = "writer", stale_after_s: float | None =
                 age = time.time() - os.path.getmtime(lock)
             except OSError:
                 pass
-            if stale_after_s is not None and age is not None and age > stale_after_s:
+            if (
+                stale_after_s is not None and age is not None and age > stale_after_s
+            ) or _holder_is_dead(held):
                 try:
-                    os.remove(lock)  # break the documented-stale lease
+                    os.remove(lock)  # break the stale or dead holder's lease
                 except FileNotFoundError:
                     pass
                 if not create_exclusive_marker(lock, payload):

@@ -94,3 +94,44 @@ def test_replayed_batch_with_success_never_calls_survivors(spark, tmp_path):
     os.remove(os.path.join(clean, "batch=b0", "_SUCCESS"))
     assert write_survivors_once(clean, "b0", lambda: spark.range(2)) is True
     assert spark.read.parquet(os.path.join(clean, "batch=b0")).count() == 2
+
+
+class _Rows:
+    """Stands in for a prepared frame: append_once only asks isEmpty()."""
+
+    def isEmpty(self) -> bool:
+        return False
+
+
+def test_killed_holders_lease_is_broken_live_or_foreign_one_stands(tmp_path):
+    """A lock left by a writer that died on this host no longer wedges the
+    index: the next append breaks it. A lock naming a live pid (ours), no
+    pid, or another host still fails loudly and is left in place."""
+    import socket
+    import subprocess
+    import sys
+
+    from serverless_etl_bi_on_aws_spark.util import read_marker
+
+    idx = str(tmp_path / "idx")
+    lock = lease_lock_path(idx)
+    child = subprocess.Popen([sys.executable, "-c", ""])
+    child.wait()  # reaped: its pid no longer runs
+    host = socket.gethostname()
+    write_marker(lock, {"owner": "killed", "host": host, "pid": child.pid})
+    seen = []
+    assert append_once(idx, "b0", "t", _Rows, seen.append) is True
+    assert len(seen) == 1 and os.path.exists(_marker(idx, "b0"))
+    assert not os.path.exists(lock)
+
+    for held in (
+        {"owner": "live", "host": host, "pid": os.getpid()},
+        {"owner": "no-pid", "host": host},
+        {"owner": "elsewhere", "host": host + ".other", "pid": child.pid},
+    ):
+        write_marker(lock, held)
+        with pytest.raises(LeaseHeldError):
+            append_once(idx, "b1", "t", _Rows, seen.append)
+        assert read_marker(lock) == held
+        os.remove(lock)
+    assert len(seen) == 1 and not os.path.exists(_marker(idx, "b1"))

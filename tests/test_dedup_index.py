@@ -443,9 +443,9 @@ def test_compact_index_sigkill_at_every_rename_converges(spark, tmp_path):
     process runs compact_index and SIGKILLs itself at its k-th
     os.rename/os.replace, for every k. No handler runs, so the child's
     lease lock survives it. A reader still sees exactly the
-    before-index; once the dead writer's lease is broken (its lock
-    names the dead pid), a rerun converges to the after-index and
-    sweeps what the kill left."""
+    before-index; a rerun breaks the dead writer's lease by itself (its
+    lock names this host and the dead pid), converges to the
+    after-index and sweeps what the kill left."""
     import shutil
     import signal
     import subprocess
@@ -483,8 +483,8 @@ def test_compact_index_sigkill_at_every_rename_converges(spark, tmp_path):
         assert view(idx) == before  # the reader's view: the whole old index
         lock = lease_lock_path(idx)
         assert read_marker(lock)["owner"] == "compact_index"
-        os.remove(lock)  # an operator breaks the dead writer's lease
-        compact_index(spark, idx)
+        compact_index(spark, idx)  # no operator step: the holder is dead
+        assert not os.path.exists(lock)
         assert view(idx) == after
         assert stale_stages(idx) == []
         assert not any(".__tmp__" in n for n in os.listdir(idx))

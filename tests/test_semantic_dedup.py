@@ -185,3 +185,115 @@ def test_zero_norm_rows_never_pair(spark, threshold):
         .collect()
     }
     assert {9000, 9001} <= kept
+
+
+def test_shared_tiler_and_kernel_match_bruteforce(spark):
+    """The one tiler and threshold kernel behind both searches, pinned
+    against a NumPy brute force on 40 vectors with 4-row blocks (the
+    exact group spans 10 blocks, each cluster several): the exact set,
+    the clustered set and the one-pass tagged sets all match, and the
+    one-pass sets equal the two separate calls. Unassigned ids and
+    zero-norm rows pair with nothing."""
+    import numpy as np
+    import pyarrow as pa
+
+    from serverless_etl_bi_on_aws_spark.operators.semantic_dedup import (
+        exact_and_clustered_pairs,
+    )
+
+    rng = np.random.default_rng(5)
+    base = rng.normal(size=(8, 8))
+    vecs = base[rng.integers(0, 8, size=40)] + 0.3 * rng.normal(size=(40, 8))
+    vecs[[7, 23]] = 0.0  # zero-norm rows
+    vecs = vecs.astype("float32")
+    ids = np.arange(100, 140)
+    # Arrow tables, not lists of tuples: those are Python RDDs, and every
+    # scan of them would start Python workers
+    emb = spark.createDataFrame(
+        pa.table({"vec_id": ids, "embedding": list(vecs)}),
+        "vec_id bigint, embedding array<float>",
+    )
+    cluster = {int(i): int(i) % 3 for i in ids if i % 10 != 1}  # 4 unassigned
+    asg = spark.createDataFrame(
+        pa.table({"vec_id": list(cluster), "_cluster": list(cluster.values())}),
+        "vec_id bigint, _cluster int",
+    )
+
+    unit = vecs.astype("float64")
+    unit /= np.maximum(np.linalg.norm(unit, axis=1, keepdims=True), 1e-12)
+    cos = unit @ unit.T
+    th = 0.8
+    brute = {
+        (int(ids[a]), int(ids[b]))
+        for a, b in zip(*np.nonzero(np.triu(cos >= th, k=1)))
+    }
+    brute_clustered = {
+        (a, b) for a, b in brute if a in cluster and b in cluster and cluster[a] == cluster[b]
+    }
+    assert brute_clustered and len(brute_clustered) < len(brute)
+
+    def ids_of(df):
+        return {(r.id_1, r.id_2) for r in df.collect()}
+
+    exact = ids_of(neardup_cosine_pairs(emb, th, block_rows=4))
+    clustered = ids_of(semantic_neardup_pairs(emb, th, assignments=asg, block_rows=4))
+    both = exact_and_clustered_pairs(emb, th, asg, block_rows=4).collect()
+    tagged = {
+        s: {(r.id_1, r.id_2) for r in both if r.pair_set == s}
+        for s in ("exact", "clustered")
+    }
+    assert exact == tagged["exact"] == brute
+    assert clustered == tagged["clustered"] == brute_clustered
+    assert not any({a, b} & {107, 123} for a, b in exact | clustered)
+    for r in both:
+        assert abs(r.cosine - cos[r.id_1 - 100, r.id_2 - 100]) < 1e-6
+
+    none = spark.createDataFrame([], "vec_id bigint, embedding array<float>")
+    out = exact_and_clustered_pairs(none, th, asg.limit(0), block_rows=4)
+    assert out.collect() == []
+    assert out.schema.simpleString() == (
+        "struct<pair_set:string,id_1:bigint,id_2:bigint,cosine:double>"
+    )
+    assert neardup_cosine_pairs(none, th).schema.simpleString() == (
+        "struct<id_1:bigint,id_2:bigint,cosine:double>"
+    )
+
+
+def test_q80_build_is_one_pair_search_pass(spark):
+    """q80 builds both pair sets in one tiled pass. Its build (the query
+    function, eager checkpoint included) launches at most 7 jobs and runs
+    exactly one Python pair-search stage; the two-pass build launched 16
+    jobs and two such stages on this fixture."""
+    from serverless_etl_bi_on_aws_spark.plans.queries import (
+        q80_semantic_dedup_verify,
+    )
+
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def plans() -> dict:
+        out, it = {}, store.executionsList().iterator()
+        while it.hasNext():
+            e = it.next()
+            out[e.executionId()] = e.physicalPlanDescription()
+        return out
+
+    q80_semantic_dedup_verify(spark, SF_CORRECT)  # builds the assignment artifact
+    before = set(plans())
+    sc = spark.sparkContext
+    sc.setJobGroup("q80-build", "q80 build")
+    try:
+        q80_semantic_dedup_verify(spark, SF_CORRECT)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("q80-build")
+    # the final tree precedes the node details and, under AQE, the
+    # initial plan
+    python_stages = sum(
+        plan.split("\n\n")[0].split("== Initial Plan ==")[0].count(
+            "FlatMapGroupsInPandas"
+        )
+        for eid, plan in plans().items()
+        if eid not in before
+    )
+    assert python_stages == 1
+    assert 0 < len(jobs) <= 7
