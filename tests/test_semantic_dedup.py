@@ -268,32 +268,26 @@ def test_q80_build_is_one_pair_search_pass(spark):
         q80_semantic_dedup_verify,
     )
 
-    store = spark._jsparkSession.sharedState().statusStore()
-
-    def plans() -> dict:
-        out, it = {}, store.executionsList().iterator()
-        while it.hasNext():
-            e = it.next()
-            out[e.executionId()] = e.physicalPlanDescription()
-        return out
-
     q80_semantic_dedup_verify(spark, SF_CORRECT)  # builds the assignment artifact
-    before = set(plans())
     sc = spark.sparkContext
     sc.setJobGroup("q80-build", "q80 build")
     try:
         q80_semantic_dedup_verify(spark, SF_CORRECT)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    jobs = sc.statusTracker().getJobIdsForGroup("q80-build")
-    # the final tree precedes the node details and, under AQE, the
-    # initial plan
-    python_stages = sum(
-        plan.split("\n\n")[0].split("== Initial Plan ==")[0].count(
-            "FlatMapGroupsInPandas"
-        )
-        for eid, plan in plans().items()
-        if eid not in before
-    )
+    jobs = set(sc.statusTracker().getJobIdsForGroup("q80-build"))
+    python_stages = 0
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = store.executionsCount()  # the build's executions are among the last
+    it = store.executionsList(max(0, n - 50), 50).iterator()
+    while it.hasNext():
+        e = it.next()
+        ran = e.jobs().keySet().iterator()
+        if any(ran.next() in jobs for _ in range(e.jobs().size())):
+            # the final tree precedes the node details and, under AQE,
+            # the initial plan
+            tree = e.physicalPlanDescription().split("\n\n")[0]
+            tree = tree.split("== Initial Plan ==")[0]
+            python_stages += tree.count("FlatMapGroupsInPandas")
     assert python_stages == 1
     assert 0 < len(jobs) <= 7
