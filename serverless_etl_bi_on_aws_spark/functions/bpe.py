@@ -39,6 +39,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
+from serverless_etl_bi_on_aws_spark.util import local_frame
+
 #: End-of-word sentinel appended to every word's symbol sequence so merges
 #: can distinguish word-final contexts ("est</w>" vs mid-word "est").
 EOW = "</w>"
@@ -205,7 +207,7 @@ def save_bpe_merges(spark, merges: Sequence[tuple[str, str]], path: str) -> None
     artifact: train once on a sample, encode everywhere. KB-to-MB scale
     (50k merges ~ 1 MB), written as a single parquet file."""
     rows = [(i, a, b) for i, (a, b) in enumerate(merges)]
-    spark.createDataFrame(rows, "rank int, a string, b string").coalesce(
+    local_frame(spark, rows, "rank int, a string, b string").coalesce(
         1
     ).write.mode("overwrite").parquet(path)
 

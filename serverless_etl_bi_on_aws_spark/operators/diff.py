@@ -27,6 +27,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
+from serverless_etl_bi_on_aws_spark.util import local_frame
+
 
 def _classified(
     left: DataFrame,
@@ -69,8 +71,10 @@ def table_diff_summary(
         .groupBy("status")
         .agg(F.count("*").alias("n_rows"))
     )
-    statuses = left.sparkSession.createDataFrame(
-        [("added",), ("removed",), ("changed",), ("unchanged",)], ["status"]
+    statuses = local_frame(
+        left.sparkSession,
+        [("added",), ("removed",), ("changed",), ("unchanged",)],
+        "status string",
     )
     return (
         statuses.join(counted, "status", "left")

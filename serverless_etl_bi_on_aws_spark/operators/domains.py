@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from serverless_etl_bi_on_aws_spark.functions.text import token_count
 from serverless_etl_bi_on_aws_spark.functions.url import registered_domain
+from serverless_etl_bi_on_aws_spark.util import local_frame
 
 
 def _domain(df: DataFrame, url_col: str, out: str = "__dom") -> DataFrame:
@@ -34,8 +35,8 @@ def _blocked_df(df: DataFrame, blocked: Sequence[str] | DataFrame) -> DataFrame:
     if isinstance(blocked, DataFrame):
         c = blocked.columns[0]
         return blocked.select(F.lower(F.col(c)).alias("__blocked_dom")).distinct()
-    return df.sparkSession.createDataFrame(
-        [(d.lower(),) for d in blocked], "__blocked_dom string"
+    return local_frame(
+        df.sparkSession, [(d.lower(),) for d in blocked], "__blocked_dom string"
     ).distinct()
 
 

@@ -67,6 +67,7 @@ from serverless_etl_bi_on_aws_spark.operators.snapshot import (
     live_generation,
     staged_rewrite,
 )
+from serverless_etl_bi_on_aws_spark.util import local_frame
 
 #: Shadow sweeps report a COUNT plus a bounded id sample, never the full
 #: id list: a single takedown whose content was mass-replicated could
@@ -90,13 +91,16 @@ def _ids_df(spark: SparkSession, ids, col: str, target_type=None) -> DataFrame:
     if isinstance(ids, DataFrame):
         df = ids.select(F.col(ids.columns[0]).alias(col))
     elif isinstance(ids, Sequence) and not isinstance(ids, (str, bytes)):
-        if not ids:
-            from pyspark.sql.types import LongType, StructField, StructType
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import from_arrow_type
+        from pyspark.sql.types import LongType, StructField, StructType
 
-            return spark.createDataFrame(
-                [], StructType([StructField(col, target_type or LongType())])
-            )
-        df = spark.createDataFrame([(i,) for i in ids], [col])
+        # keys keep the type they were given (ints bigint, strs string),
+        # so the cast check below sees what the caller passed
+        key = from_arrow_type(pa.array(ids).type) if ids else target_type or LongType()
+        df = local_frame(
+            spark, [(i,) for i in ids], StructType([StructField(col, key)])
+        )
     else:
         raise TypeError("ids must be a DataFrame or a sequence of key values")
     if target_type is None or df.schema[col].dataType == target_type:

@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from serverless_etl_bi_on_aws_spark.functions.text import tokens
+from serverless_etl_bi_on_aws_spark.util import local_frame
 
 
 def _ngrams_with_positions(toks, n: int):
@@ -82,8 +83,8 @@ def gazetteer_tag(
         # hardcoded bigint diverged from non-bigint id callers, breaking
         # downstream unions only on the empty-dictionary path
         id_type = df.schema[id_col].dataType.simpleString()
-        return df.sparkSession.createDataFrame(
-            [], f"{id_col} {id_type}, term string, n_hits bigint"
+        return local_frame(
+            df.sparkSession, [], f"{id_col} {id_type}, term string, n_hits bigint"
         )
     hint_small = _estimated_bytes(terms) <= BROADCAST_STAGING_MAX_BYTES
     tok = df.select(F.col(id_col), tokens(text_col).alias("_toks"))

@@ -43,6 +43,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
+from serverless_etl_bi_on_aws_spark.util import local_frame
+
 
 def train_pq_codebooks(
     embeddings: DataFrame,
@@ -224,8 +226,8 @@ def build_pq_index(
     rows = [
         (j, i, books[j][i]) for j in range(len(books)) for i in range(len(books[j]))
     ]
-    embeddings.sparkSession.createDataFrame(
-        rows, "subspace int, idx int, centroid array<double>"
+    local_frame(
+        embeddings.sparkSession, rows, "subspace int, idx int, centroid array<double>"
     ).coalesce(1).write.mode("overwrite").parquet(
         os.path.join(index_path, "codebooks")
     )

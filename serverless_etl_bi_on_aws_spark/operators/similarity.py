@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
 from serverless_etl_bi_on_aws_spark.functions.vectors import cosine, dot
+from serverless_etl_bi_on_aws_spark.util import local_frame
 
 
 def topk_cosine_bruteforce(
@@ -238,22 +239,12 @@ def _tag_block_pairs(
     within a group."""
     import math
 
-    import pyarrow as pa
-
     if sizes is None:
         counts = rows.groupBy("_set", "_g").count().collect()
         sizes = {(int(s), int(g)): int(n) for s, g, n in counts}
-    keys = list(sizes)
-    # from an Arrow table the dimension is a local relation; from a list
-    # of tuples it would be a Python RDD, unpickled by Python workers
-    dim = rows.sparkSession.createDataFrame(
-        pa.table(
-            {
-                "_set": [s for s, _ in keys],
-                "_g": [g for _, g in keys],
-                "_nb": [max(1, math.ceil(sizes[k] / block_rows)) for k in keys],
-            }
-        ),
+    dim = local_frame(
+        rows.sparkSession,
+        [(s, g, max(1, math.ceil(n / block_rows))) for (s, g), n in sizes.items()],
         "_set int, _g bigint, _nb int",
     )
     blk, other = F.col("_blk"), F.col("_o")
@@ -728,7 +719,7 @@ def _write_ivf(
         n_rows = int(stats["n"])
         distortion = float(stats["s"] or 0.0) / max(n_rows, 1)
     rows = [(int(i), c) for i, c in enumerate(centers)]
-    spark.createDataFrame(rows, "cluster int, centroid array<double>").coalesce(
+    local_frame(spark, rows, "cluster int, centroid array<double>").coalesce(
         1
     ).write.mode("overwrite").parquet(os.path.join(gen, "centroids"))
     write_marker(

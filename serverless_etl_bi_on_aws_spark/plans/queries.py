@@ -46,8 +46,15 @@ from serverless_etl_bi_on_aws_spark.operators.similarity import (
     topk_cosine_bruteforce,
     topk_cosine_lsh,
 )
+from serverless_etl_bi_on_aws_spark.util import local_frame
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
+
+
+def _metric_frame(spark: SparkSession, rows: list[tuple[str, int]]) -> DataFrame:
+    """The verify queries' result: one ``(metric, value)`` row per check,
+    in metric order."""
+    return local_frame(spark, rows, "metric string, value bigint").orderBy("metric")
 
 
 # ---------------------------------------------------------------------------
@@ -3086,25 +3093,31 @@ def q80_semantic_dedup_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_exact = F.col("pair_set") == "exact"
     exact = pairs.filter(is_exact)
     clustered = pairs.filter(~is_exact)
-    dropped = clustered.select(F.col("id_2").alias("_drop")).distinct()
+    # nx and ns are real anti-joins. Their build sides (the verifier's
+    # exact pairs, the clustered pairs' dropped ids) are pair-set sized,
+    # so they broadcast instead of shuffling both sides; duplicate
+    # dropped ids do not change an anti-join.
+    unmatched = clustered.join(
+        F.broadcast(exact.select("id_1", "id_2")), ["id_1", "id_2"], "left_anti"
+    )
+    dropped = F.broadcast(clustered.select(F.col("id_2").alias("_drop")))
+    survivors = emb.join(dropped, emb["vec_id"] == dropped["_drop"], "left_anti")
 
-    nc = emb.agg(F.count("*").alias("_nc"))
-    # the join-free counts in one aggregate over the tagged pairs
-    counts = pairs.agg(
-        F.count(F.when(is_exact, 1)).alias("_ne"),
-        F.countDistinct(F.when(is_exact, F.col("id_2"))).alias("_dg"),
-        F.countDistinct(F.when(~is_exact, F.col("id_2"))).alias("_dc"),
-    )
-    nx = clustered.join(
-        exact.select("id_1", "id_2"), ["id_1", "id_2"], "left_anti"
-    ).agg(F.count("*").alias("_nx"))
-    ns = emb.join(dropped, emb["vec_id"] == dropped["_drop"], "left_anti").agg(
-        F.count("*").alias("_ns")
-    )
-    base = (
-        nc.crossJoin(F.broadcast(counts))
-        .crossJoin(F.broadcast(nx))
-        .crossJoin(F.broadcast(ns))
+    # every scalar from ONE aggregate over the tagged union of its inputs:
+    # a one-row frame per scalar would cost a broadcast job each, and the
+    # aggregate's single output partition lets the final sort skip its
+    # exchange (the final action runs 5 jobs, pinned in the tests)
+    k, pair_id = F.col("_k"), F.col("_id")
+    tagged = pairs.select(F.col("pair_set").alias("_k"), F.col("id_2").alias("_id"))
+    for tag, df in (("corpus", emb), ("unmatched", unmatched), ("survivor", survivors)):
+        tagged = tagged.unionByName(df.select(F.lit(tag).alias("_k"), F.lit(None).alias("_id")))
+    base = tagged.agg(
+        F.count(F.when(k == "corpus", 1)).alias("_nc"),
+        F.count(F.when(k == "exact", 1)).alias("_ne"),
+        F.countDistinct(F.when(k == "exact", pair_id)).alias("_dg"),
+        F.countDistinct(F.when(k == "clustered", pair_id)).alias("_dc"),
+        F.count(F.when(k == "unmatched", 1)).alias("_nx"),
+        F.count(F.when(k == "survivor", 1)).alias("_ns"),
     )
 
     # Round-18 optimization: the metric rows are F.inline'd out of ONE
@@ -3424,9 +3437,7 @@ def q83_forget_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
             ("readmitted", int(readmitted)),
             ("unrelated_still_deduped", int(still_deduped)),
         ]
-        return spark.createDataFrame(rows, "metric string, value bigint").orderBy(
-            "metric"
-        )
+        return _metric_frame(spark, rows)
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 
@@ -3521,8 +3532,8 @@ def q84_takedown_stream_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
         batches = ([0, 10], [20])
         for i, ids in enumerate(batches):
             staged = _os.path.join(scratch, f"r{i}")
-            spark.createDataFrame(
-                [(int(x),) for x in ids], "doc_id bigint"
+            local_frame(
+                spark, [(int(x),) for x in ids], "doc_id bigint"
             ).coalesce(1).write.parquet(staged)
             part = next(
                 p for p in _os.listdir(staged) if p.endswith(".parquet")
@@ -3594,9 +3605,7 @@ def q84_takedown_stream_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
             ("sigs_after_replay", int(sigs_replay)),
             ("snapshots_after_replay", int(seq_replay)),
         ]
-        return spark.createDataFrame(rows, "metric string, value bigint").orderBy(
-            "metric"
-        )
+        return _metric_frame(spark, rows)
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 
@@ -3750,9 +3759,7 @@ def q85_maintenance_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
             ("prunes_nothing_before", int(prunes_nothing_before)),
             ("xy_sum_after_zorder", int(xy_after)),
         ]
-        return spark.createDataFrame(rows, "metric string, value bigint").orderBy(
-            "metric"
-        )
+        return _metric_frame(spark, rows)
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 
@@ -3968,9 +3975,7 @@ def q87_langid_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     for r in per_lang:
         rows.append((f"eval_n_{r['lang']}", int(r["n"])))
         rows.append((f"recall_ge_90pct_{r['lang']}", int(r["ok"] >= 0.9 * r["n"])))
-    return spark.createDataFrame(rows, "metric string, value bigint").orderBy(
-        "metric"
-    )
+    return _metric_frame(spark, rows)
 
 
 def q88_paragraph_boilerplate_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4220,9 +4225,7 @@ def q90_snapshot_sql_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
             ("pre_count", int(pre_count)),
             ("seq1_count", int(seq1_count)),
         ]
-        return spark.createDataFrame(rows, "metric string, value bigint").orderBy(
-            "metric"
-        )
+        return _metric_frame(spark, rows)
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 
@@ -4581,7 +4584,8 @@ def q95_snapshot_diff_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .alias("text"),
                 )
                 .unionByName(
-                    spark.createDataFrame(
+                    local_frame(
+                        spark,
                         [(100001, "fresh a"), (100002, "fresh b")],
                         "doc_id long, text string",
                     )
@@ -4597,8 +4601,8 @@ def q95_snapshot_diff_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
         # materialized before the scratch family is removed (the returned
         # frame must not lazily re-scan deleted generation dirs)
-        return spark.createDataFrame(
-            diff_rows, "dataset string, status string, n_rows bigint"
+        return local_frame(
+            spark, diff_rows, "dataset string, status string, n_rows bigint"
         ).orderBy("dataset", "status")
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
@@ -5520,9 +5524,7 @@ def q117_dsir_selection_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         ("sample_keeps_no_raw", int((kept_stats.r or 0) == 0)),
     ]
-    return spark.createDataFrame(rows, "metric string, value bigint").orderBy(
-        "metric"
-    )
+    return _metric_frame(spark, rows)
 
 
 def q113_pii_card_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5868,13 +5870,11 @@ def q112_warc_stream_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
         junk_text = " ".join(f"junk{i:06d}" for i in range(40))
-        target_fit = spark.createDataFrame(
-            [(k, article(k)) for k in ks], "doc_id bigint, text string"
+        target_fit = local_frame(
+            spark, [(k, article(k)) for k in ks], "doc_id bigint, text string"
         )
         raw_fit = target_fit.unionByName(
-            spark.createDataFrame(
-                [(-1, junk_text)], "doc_id bigint, text string"
-            )
+            local_frame(spark, [(-1, junk_text)], "doc_id bigint, text string")
         )
         weights_path = _os.path.join(scratch, "dsir_weights")
         fit_dsir_weights(target_fit, raw_fit, num_buckets=1 << 10).write.parquet(
@@ -5955,9 +5955,7 @@ def q112_warc_stream_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             ("dsir_rejected_offtarget", int(junk_text not in stream_texts)),
         ]
-        return spark.createDataFrame(rows, "metric string, value bigint").orderBy(
-            "metric"
-        )
+        return _metric_frame(spark, rows)
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 
@@ -6179,7 +6177,8 @@ def q120_simhash_index_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     mid = real.agg(F.max("doc_id")).head()[0] // 2
     hi = mid * 2 + 10  # strictly above every real doc_id
     twin = " ".join(f"twin{i:03d}" for i in range(150))
-    plant = spark.createDataFrame(
+    plant = local_frame(
+        spark,
         [
             (-10, twin),                                  # b1 (indexed) member
             (hi, twin.replace("twin005", "twin900")),     # b2 near-twin: drops
@@ -6290,7 +6289,8 @@ def q121_similarity_join_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     mx = real.agg(F.max("doc_id")).head()[0]
     hi = 2 * (mx // 2) + 2  # even, strictly above every real id
     twin = " ".join(f"pair{i:03d}" for i in range(150))
-    plant = spark.createDataFrame(
+    plant = local_frame(
+        spark,
         [
             (hi, twin),                                    # left twin
             (hi + 1, twin.replace("pair005", "pair900")),  # right twin: link
@@ -6405,7 +6405,8 @@ def q121_similarity_join_operator(spark: SparkSession, sf_dir: str) -> DataFrame
     mx = real.agg(F.max("doc_id")).head()[0]
     hi = 2 * (mx // 2) + 2
     twin = " ".join(f"pair{i:03d}" for i in range(150))
-    plant = spark.createDataFrame(
+    plant = local_frame(
+        spark,
         [
             (hi, twin),
             (hi + 1, twin.replace("pair005", "pair900")),
@@ -6672,9 +6673,7 @@ def q125_generation_merge_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
             ("rows_replay", int(rows_replay)),
             ("rows_timetravel_pre_merge", int(rows_tt)),
         ]
-        return spark.createDataFrame(
-            rows, "metric string, value bigint"
-        ).orderBy("metric")
+        return _metric_frame(spark, rows)
     finally:
         shutil.rmtree(scratch, ignore_errors=True)
 

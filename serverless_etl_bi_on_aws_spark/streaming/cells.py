@@ -11,14 +11,17 @@ The fold is associative, so batch boundaries can never change the result
 
 Exactly-once is NOT free here: foreachBatch is at-least-once (the source
 checkpoint commits AFTER the sink callback returns), and an additive fold
-double-counts a re-delivered micro-batch — unlike the key-idempotent
-incremental merge or scd2_apply, which are no-ops on replay. The fold is
-therefore made idempotent per epoch: the (checkpoint, epoch_id) of the
-last applied micro-batch rides inside the cell table itself
-(``_applied_epoch.json``, underscore-prefixed so Spark's reader ignores
-it) and commits with the data in one generation, so a crash between the
-commit and the checkpoint commit replays the epoch into a skip, never a
-double-sum (pytest-pinned: same-epoch re-fold is a no-op).
+double-counts re-delivered rows — unlike the key-idempotent incremental
+merge or scd2_apply, which are no-ops on replay. The fold therefore uses
+the rollup's replay identity (streaming/incremental.py): a landed FILE.
+Each micro-batch folds only the rows of files the live generation has
+not applied, and the ids of every applied file ride inside the cell
+table itself (``_applied_files.json``, underscore-prefixed so Spark's
+reader ignores it), committing with the data in one generation. A crash
+between the commit and the checkpoint commit, or a wiped checkpoint that
+rediscovers every file under new epoch ids and a new batching, replays
+into a skip of the applied files, never a double-sum or a lost file
+(pytest-pinned).
 
 The cell table is an ``operators/snapshot.py`` generation store published
 through streaming/incremental.py's writer (read it with
@@ -43,6 +46,7 @@ from serverless_etl_bi_on_aws_spark.operators.histogram import build_histogram_c
 from serverless_etl_bi_on_aws_spark.streaming.incremental import (
     _live_data,
     _publish_generation,
+    _unapplied_files,
 )
 from serverless_etl_bi_on_aws_spark.streaming.launch import (
     read_landing_zone,
@@ -50,7 +54,7 @@ from serverless_etl_bi_on_aws_spark.streaming.launch import (
 )
 from serverless_etl_bi_on_aws_spark.util import read_marker
 
-_EPOCH_MARK = "_applied_epoch.json"
+_APPLIED_FILES = "_applied_files.json"
 
 
 def start_histogram_cell_maintenance(
@@ -66,19 +70,15 @@ def start_histogram_cell_maintenance(
     processing_time: str = "1 hour",
 ) -> StreamingQuery:
     """Watch ``source_dir`` for new event files and keep the histogram
-    cell table current: every micro-batch reduces to its own cells and
-    key-sums into the generation store at ``cells_path`` through
-    :func:`merge_cells_into_generations`. Drain with ``available_now``
-    for the scheduled-batch cadence, or leave running with a
-    processing-time trigger. Quantile reads (histogram_quantiles) hit
-    only the cell table (``read_generation_target``) — never the raw
-    stream history."""
+    cell table current: every micro-batch reduces the rows of its
+    not-yet-applied files to cells and key-sums them into the generation
+    store at ``cells_path``. Drain with ``available_now`` for the
+    scheduled-batch cadence, or leave running with a processing-time
+    trigger. Quantile reads (histogram_quantiles) hit only the cell table
+    (``read_generation_target``) — never the raw stream history."""
 
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_cells = build_histogram_cells(batch_df, value_col, grain, bin_width)
-        merge_cells_into_generations(
-            spark, batch_cells, cells_path, grain, epoch=(checkpoint_dir, epoch_id)
-        )
+        _fold_landed_cells(spark, batch_df, cells_path, value_col, grain, bin_width)
 
     return start_foreach_batch(
         read_landing_zone(spark, source_dir, schema),
@@ -89,38 +89,31 @@ def start_histogram_cell_maintenance(
     )
 
 
-def merge_cells_into_generations(
+def _fold_landed_cells(
     spark: SparkSession,
-    batch_cells: DataFrame,
+    landed: DataFrame,
     root: str,
+    value_col: str,
     grain: Sequence[str],
-    epoch: tuple[str, int] | None = None,
+    bin_width: float,
 ) -> None:
-    """Fold batch-local cells into the persisted cell table: union +
-    key-sum, published as the next generation of ``root``. Cell-sized
-    work end to end.
-
-    ``epoch`` = (checkpoint id, epoch_id) makes the additive fold
-    idempotent under foreachBatch's at-least-once replay: an epoch at or
-    below the live generation's recorded high-water mark (same
-    checkpoint) is skipped. The mark is written INSIDE the new
-    generation, so data and mark commit together with the pointer. A
-    different checkpoint id resets the mark — epoch ids restart at 0 per
-    checkpoint, so cross-checkpoint comparison would be meaningless."""
+    """Fold the cells of ``landed``'s rows from files the live generation
+    of ``root`` has not applied: union + key-sum, published as the next
+    generation together with the grown applied-file list. Cell-sized
+    work end to end."""
     live = _live_data(root)
+    applied = read_marker(os.path.join(live, _APPLIED_FILES))["files"] if live else []
+    todo, fresh = _unapplied_files(landed, set(applied).__contains__)
+    if not todo:
+        return  # every file already folded in: a re-delivery
+    cells = build_histogram_cells(fresh, value_col, grain, bin_width)
     if live is not None:
-        last = read_marker(os.path.join(live, _EPOCH_MARK)) if epoch else None
-        if (
-            last is not None
-            and last.get("ckpt") == epoch[0]
-            and epoch[1] <= last.get("epoch", -1)
-        ):
-            return  # re-delivered micro-batch: already folded in
-        batch_cells = (
+        cells = (
             spark.read.parquet(live)
-            .unionByName(batch_cells)
+            .unionByName(cells)
             .groupBy(*grain, "bin_id")
             .agg(F.sum("n").alias("n"))
         )
-    marks = {_EPOCH_MARK: {"ckpt": epoch[0], "epoch": epoch[1]}} if epoch else None
-    _publish_generation(root, batch_cells, marks)
+    _publish_generation(
+        root, cells, {_APPLIED_FILES: {"files": sorted([*applied, *todo])}}
+    )

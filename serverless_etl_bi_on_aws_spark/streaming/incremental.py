@@ -29,7 +29,7 @@ a log commit: the same shape); the operator algebra is unchanged.
 from __future__ import annotations
 
 import os
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
@@ -238,8 +238,6 @@ def start_rollup_maintenance(
     previous generation is retained through one further commit so
     in-flight readers finish on a complete immutable tree. The stream
     is its own serialization, so the staged rewrite takes no lease."""
-    from pyspark.sql import functions as F
-
     from serverless_etl_bi_on_aws_spark.operators.rollup import (
         build_pricing_rollup,
         upsert_pricing_rollup,
@@ -249,21 +247,15 @@ def start_rollup_maintenance(
     # injected before the _applied markers (test_merge_streaming)
     from serverless_etl_bi_on_aws_spark.util import marker_exists, write_marker
 
-    fid = _rollup_file_id
-
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        with_src = batch_df.withColumn("_src", F.input_file_name())
-        files = sorted(r[0] for r in with_src.select("_src").distinct().collect())
         cur = resolve_generation(rollup_path)
-        todo = [
-            f
-            for f in files
-            if cur is None
-            or not marker_exists(os.path.join(cur, "_applied", fid(f)))
-        ]
+        todo, delta = _unapplied_files(
+            batch_df,
+            lambda fid: cur is not None
+            and marker_exists(os.path.join(cur, "_applied", fid)),
+        )
         if not todo:
             return
-        delta = with_src.filter(F.col("_src").isin(todo)).drop("_src")
         with staged_rewrite(rollup_path) as (live, stage):
             if live is None:
                 # bootstrap: first unapplied files ARE the rollup
@@ -276,8 +268,8 @@ def start_rollup_maintenance(
                 )
             else:
                 upsert_pricing_rollup(spark, stage, delta)
-            for f in todo:
-                write_marker(os.path.join(stage, "_applied", fid(f)), {"file": f})
+            for fid, f in todo.items():
+                write_marker(os.path.join(stage, "_applied", fid), {"file": f})
 
     return start_foreach_batch(
         read_landing_zone(spark, source_dir, schema, fmt),
@@ -288,10 +280,26 @@ def start_rollup_maintenance(
     )
 
 
-def _rollup_file_id(path: str) -> str:
+def _unapplied_files(
+    batch_df: DataFrame, applied: Callable[[str], bool]
+) -> tuple[dict[str, str], DataFrame]:
+    """The replay identity of every additive fold (the rollup, the
+    histogram cells): a landed FILE, its id the md5 of its
+    ``input_file_name()``. Returns ``{file id: path}`` for the files of
+    ``batch_df`` whose id is not ``applied``, and ``batch_df`` cut to
+    those files' rows. A micro-batch is no identity: foreachBatch is
+    at-least-once, and a wiped checkpoint rediscovers every landed file
+    under epoch ids that restart at 0 and in any batching."""
     import hashlib
 
-    return hashlib.md5(path.encode()).hexdigest()[:16]
+    from pyspark.sql import functions as F
+
+    with_src = batch_df.withColumn("_src", F.input_file_name())
+    files = sorted(r[0] for r in with_src.select("_src").distinct().collect())
+    ids = {hashlib.md5(f.encode()).hexdigest()[:16]: f for f in files}
+    todo = {fid: f for fid, f in ids.items() if not applied(fid)}
+    fresh = with_src.filter(F.col("_src").isin(list(todo.values())))
+    return todo, fresh.drop("_src")
 
 
 def start_denorm_maintenance(

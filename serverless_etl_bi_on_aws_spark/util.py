@@ -78,6 +78,25 @@ def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     return df
 
 
+def local_frame(spark, rows, schema) -> DataFrame:
+    """The one way this package turns driver-side rows into a DataFrame.
+
+    ``rows`` are tuples in ``schema``'s column order; ``schema`` is a DDL
+    string or a ``StructType``. The rows become a ``pyarrow.Table`` typed
+    from the schema, so the frame is a local relation (``LocalTableScan``)
+    in any session, arrow conf or not. ``spark.createDataFrame`` over a
+    Python list is a Python RDD instead: every scan or broadcast of it
+    starts Python workers to unpickle the rows."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType, StructType
+
+    struct = schema if isinstance(schema, StructType) else DataType.fromDDL(schema)
+    rows = [dict(zip(struct.names, r)) for r in rows]
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(struct))
+    return spark.createDataFrame(table, struct)
+
+
 #: Held while any :func:`scoped_conf` block runs: session conf is global
 #: to the session, and plans build on concurrent driver threads.
 _CONF_LOCK = threading.RLock()
@@ -220,7 +239,7 @@ def commit_file(path: str, data: bytes) -> None:
 def write_marker(path: str, payload: dict | None = None) -> None:
     """Single swap point for every commit/applied marker in the engine
     (index `_meta.json`, the `_applied/<batch>` markers of
-    :func:`append_once`, the `_applied_epoch.json` high-water mark in
+    :func:`append_once`, the `_applied_files.json` applied-file list in
     streaming/cells.py). Publishes through :func:`commit_file` — the
     single-object atomic-publish seam — so a reader never sees a torn
     marker and the object-store swap happens in exactly one place.

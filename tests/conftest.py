@@ -61,6 +61,41 @@ def crash_replay_each_rename(monkeypatch, setup, publish, check, after_crash=Non
         k += 1
 
 
+def jobs_and_python_stages(spark, fn) -> tuple[int, int]:
+    """Run ``fn()`` under its own job group and return the number of
+    Spark jobs it launched and the number of Python-worker operators
+    (``...InPandas``, ``...InArrow``, ``...EvalPython``) in the executed
+    plans of those jobs. Under AQE every shuffle or broadcast stage is its
+    own job, so the job count is the launches the scheduler paid for."""
+    import re
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = set(sc.statusTracker().getJobIdsForGroup(group))
+    python_stages = 0
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = store.executionsCount()  # fn's executions are among the last
+    it = store.executionsList(max(0, n - 50), 50).iterator()
+    while it.hasNext():
+        e = it.next()
+        ran = e.jobs().keySet().iterator()
+        if any(ran.next() in jobs for _ in range(e.jobs().size())):
+            # the final tree precedes the node details and, under AQE,
+            # the initial plan
+            tree = e.physicalPlanDescription().split("\n\n")[0]
+            tree = tree.split("== Initial Plan ==")[0]
+            python_stages += len(
+                re.findall(r"\b\w*(?:InPandas|InArrow|EvalPython)\b", tree)
+            )
+    return len(jobs), python_stages
+
+
 @pytest.fixture(scope="session")
 def spark():
     # Cap the test session's driver heap well below the engine default

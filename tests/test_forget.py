@@ -241,6 +241,9 @@ def test_forget_clean_dir_string_ids_and_bad_cast_refusal(spark, tmp_path):
     bad = spark.createDataFrame([("not-a-number",)], "doc_id string")
     with pytest.raises(ValueError, match="cannot be cast"):
         forget_from_clean_dir(spark, clean2, bad)
+    # the same refusal for a plain sequence of keys (a local frame)
+    with pytest.raises(ValueError, match="cannot be cast"):
+        forget_from_clean_dir(spark, clean2, ["not-a-number"])
 
 
 def test_fuzzy_takedown_worklist_composes_with_forget(spark, tmp_path):

@@ -24,6 +24,22 @@ CUT_HIST = "2001-05-01"
 CUT_STAGE = "2001-02-01"  # overlaps history by 3 months (README.md:60 window)
 
 
+def _land_cells_rows(spark, land, name, rows):
+    """Land ``rows`` of ``(event_type, value)`` as one parquet file under
+    ``land/name``."""
+    spark.createDataFrame(rows, "event_type string, value double").coalesce(
+        1
+    ).write.parquet(str(land / name))
+
+
+def _read_landed(spark, land, *names):
+    return spark.read.parquet(*(str(land / n) for n in names))
+
+
+def _cells(df):
+    return {(r["event_type"], r["bin_id"]): r["n"] for r in df.collect()}
+
+
 def _split_orders(spark):
     orders = load_table(spark, SF_SMOKE, "orders")
     hist = orders.filter(F.col("o_orderdate") < CUT_HIST)
@@ -389,41 +405,30 @@ def test_streaming_histogram_cells_match_batch_build(spark, tmp_path):
 
 
 def test_cell_merge_epoch_replay_is_noop(spark, tmp_path):
-    """foreachBatch is at-least-once; the additive cell fold is made
-    idempotent per (checkpoint, epoch): re-folding the SAME epoch after
-    a simulated crash-between-publish-and-commit changes nothing, the next
-    epoch folds normally, and a NEW checkpoint id resets the mark."""
-    from serverless_etl_bi_on_aws_spark.streaming.cells import (
-        merge_cells_into_generations,
-    )
+    """foreachBatch is at-least-once; the additive cell fold is idempotent
+    per landed file: re-folding a file after a simulated
+    crash-between-publish-and-commit changes nothing, a re-batched
+    delivery of an applied and a new file folds only the new one, and
+    every file is then a no-op."""
+    from serverless_etl_bi_on_aws_spark.streaming.cells import _fold_landed_cells
 
+    land = tmp_path / "land"
     cells_path = str(tmp_path / "cells")
-    batch = spark.createDataFrame(
-        [("A", 0, 3), ("B", 1, 2)], ["event_type", "bin_id", "n"]
-    )
-    merge_cells_into_generations(spark, batch, cells_path, ["event_type"],
-                                 epoch=("ck1", 0))
-    once = {(r["event_type"], r["bin_id"]): r["n"]
-            for r in read_generation_target(spark, cells_path).collect()}
-    assert once == {("A", 0): 3, ("B", 1): 2}
-    # replayed epoch 0: no double-count
-    merge_cells_into_generations(spark, batch, cells_path, ["event_type"],
-                                 epoch=("ck1", 0))
-    again = {(r["event_type"], r["bin_id"]): r["n"]
-             for r in read_generation_target(spark, cells_path).collect()}
-    assert again == once
-    # epoch 1 folds in
-    merge_cells_into_generations(spark, batch, cells_path, ["event_type"],
-                                 epoch=("ck1", 1))
-    two = {(r["event_type"], r["bin_id"]): r["n"]
-           for r in read_generation_target(spark, cells_path).collect()}
-    assert two == {("A", 0): 6, ("B", 1): 4}
-    # different checkpoint id: epoch numbering restarts, fold applies
-    merge_cells_into_generations(spark, batch, cells_path, ["event_type"],
-                                 epoch=("ck2", 0))
-    three = {(r["event_type"], r["bin_id"]): r["n"]
-             for r in read_generation_target(spark, cells_path).collect()}
-    assert three == {("A", 0): 9, ("B", 1): 6}
+    rows = [("A", 1.0)] * 3 + [("B", 6.0)] * 2
+    _land_cells_rows(spark, land, "f1", rows)
+    _land_cells_rows(spark, land, "f2", rows)
+
+    def fold(*names):
+        _fold_landed_cells(
+            spark, _read_landed(spark, land, *names), cells_path,
+            "value", ["event_type"], 5.0,
+        )
+        return _cells(read_generation_target(spark, cells_path))
+
+    assert fold("f1") == {("A", 0): 3, ("B", 1): 2}
+    assert fold("f1") == {("A", 0): 3, ("B", 1): 2}  # re-delivered: no double-count
+    assert fold("f1", "f2") == {("A", 0): 6, ("B", 1): 4}  # only f2 folds
+    assert fold("f2") == fold("f1", "f2") == {("A", 0): 6, ("B", 1): 4}
 
 
 def test_streaming_denorm_maintenance(spark, tmp_path):
@@ -871,35 +876,35 @@ def test_generation_merge_streaming_end_to_end(spark, tmp_path):
 
 def test_generation_cell_fold_matches_swap_fold(spark, tmp_path):
     """Round 16 (SURVEY 7.1 convergence, cells): the generation-backed
-    fold equals a one-shot cell build over every batch it applied —
-    epoch-idempotent additive semantics, the commit is a pointer
-    marker, the epoch mark rides inside the generation so data and
-    mark still commit together."""
+    fold equals a one-shot cell build over every landed file it applied,
+    whatever batching re-delivers them — file-idempotent additive
+    semantics, the commit is a pointer marker, the applied-file list
+    rides inside the generation so data and list commit together."""
     from serverless_etl_bi_on_aws_spark.operators.histogram import (
         build_histogram_cells,
     )
-    from serverless_etl_bi_on_aws_spark.streaming.cells import (
-        merge_cells_into_generations,
-    )
+    from serverless_etl_bi_on_aws_spark.streaming.cells import _fold_landed_cells
 
-    raw = spark.createDataFrame(
-        [("A", 1.0)] * 3 + [("B", 6.0)] * 2, ["event_type", "value"]
-    )
-    batch = build_histogram_cells(raw, "value", ["event_type"], 5.0)
+    land = tmp_path / "land"
+    for i, name in enumerate(("f1", "f2", "f3")):
+        _land_cells_rows(
+            spark, land, name, [("A", 1.0 + i)] * 3 + [("B", 6.0 * (i + 1))] * 2
+        )
     root = str(tmp_path / "gens")
-
-    def cells(df):
-        return {(r["event_type"], r["bin_id"]): r["n"] for r in df.collect()}
-
-    applied = None
-    for ep, fresh in ((("ck1", 0), True), (("ck1", 0), False),
-                      (("ck1", 1), True), (("ck2", 0), True)):
-        merge_cells_into_generations(spark, batch, root, ["event_type"], epoch=ep)
-        if fresh:
-            applied = raw if applied is None else applied.unionByName(raw)
-        want = build_histogram_cells(applied, "value", ["event_type"], 5.0)
-        assert cells(read_generation_target(spark, root)) == cells(want)
-    assert cells(read_generation_target(spark, root)) == {("A", 0): 9, ("B", 1): 6}
+    applied: set[str] = set()
+    for names in (["f1"], ["f1"], ["f1", "f2"], ["f3"], ["f2", "f3"]):
+        _fold_landed_cells(
+            spark, _read_landed(spark, land, *names), root,
+            "value", ["event_type"], 5.0,
+        )
+        applied.update(names)
+        want = build_histogram_cells(
+            _read_landed(spark, land, *sorted(applied)), "value", ["event_type"], 5.0
+        )
+        assert _cells(read_generation_target(spark, root)) == _cells(want)
+    assert _cells(read_generation_target(spark, root)) == {
+        ("A", 0): 9, ("B", 1): 2, ("B", 2): 2, ("B", 3): 2,
+    }
 
 
 def test_generation_cell_stream_end_to_end(spark, tmp_path):
@@ -942,6 +947,62 @@ def test_generation_cell_stream_end_to_end(spark, tmp_path):
         ).collect()
     }
     assert got == want
+
+
+def test_cell_stream_wiped_checkpoint_keeps_new_file(spark, tmp_path):
+    """A wiped checkpoint rediscovers every landed file under epoch ids
+    that restart at 0, batched together with a newly landed one. The
+    fold skips the two applied files and folds the new one: the cells
+    equal a one-shot build over all three. Keyed on (checkpoint, epoch),
+    the whole rediscovered batch was skipped and the third file lost."""
+    import shutil
+
+    from serverless_etl_bi_on_aws_spark.operators.histogram import (
+        build_histogram_cells,
+    )
+    from serverless_etl_bi_on_aws_spark.streaming.cells import (
+        start_histogram_cell_maintenance,
+    )
+
+    events = load_table(spark, SF_SMOKE, "events").withColumn(
+        "day", F.to_date("ts")
+    )
+    src = tmp_path / "landing"
+    src.mkdir()
+    root = str(tmp_path / "cells")
+    ckpt = str(tmp_path / "ckpt")
+
+    def drain():
+        start_histogram_cell_maintenance(
+            spark,
+            str(src / "*"),
+            root,
+            events.schema,
+            ckpt,
+            value_col="value",
+            grain=["day", "event_type"],
+            bin_width=5.0,
+        ).awaitTermination(120)
+
+    for i in range(2):
+        events.filter(F.col("event_id") % 3 == i).coalesce(1).write.parquet(
+            str(src / f"drop{i}")
+        )
+        drain()
+    shutil.rmtree(ckpt)
+    events.filter(F.col("event_id") % 3 == 2).coalesce(1).write.parquet(
+        str(src / "drop2")
+    )
+    drain()
+
+    def cells(df):
+        return {
+            (str(r["day"]), r["event_type"], r["bin_id"]): r["n"]
+            for r in df.collect()
+        }
+
+    want = build_histogram_cells(events, "value", ["day", "event_type"], 5.0)
+    assert cells(read_generation_target(spark, root)) == cells(want)
 
 
 def test_incremental_merge_crash_replay_converges(spark, tmp_path, monkeypatch):
@@ -994,50 +1055,44 @@ def test_incremental_merge_crash_replay_converges(spark, tmp_path, monkeypatch):
 
 def test_cell_fold_crash_replay_converges(spark, tmp_path, monkeypatch):
     """The cell fold's publish crashes at each of its renames (the
-    generation rename, the epoch mark, the pointer) and the same epoch
-    replays: the cells equal a one-shot build over both batches — the
-    crashed epoch is neither lost nor counted twice."""
+    generation rename, the applied-file list, the pointer) and the same
+    file replays: the cells equal a one-shot build over both files — the
+    crashed file is neither lost nor counted twice."""
     import shutil
 
     from serverless_etl_bi_on_aws_spark.operators.histogram import (
         build_histogram_cells,
     )
-    from serverless_etl_bi_on_aws_spark.streaming.cells import (
-        merge_cells_into_generations,
-    )
+    from serverless_etl_bi_on_aws_spark.streaming.cells import _fold_landed_cells
 
-    cols = ["event_type", "value"]
-    raw1 = spark.createDataFrame([("A", 1.0), ("A", 2.0), ("B", 6.0)], cols)
-    raw2 = spark.createDataFrame([("A", 3.0), ("B", 7.0), ("C", 11.0)], cols)
+    land = tmp_path / "land"
+    _land_cells_rows(spark, land, "r1", [("A", 1.0), ("A", 2.0), ("B", 6.0)])
+    _land_cells_rows(spark, land, "r2", [("A", 3.0), ("B", 7.0), ("C", 11.0)])
 
-    def cells(df):
-        return {(r["event_type"], r["bin_id"]): r["n"] for r in df.collect()}
-
-    def fold(raw, k, epoch):
-        merge_cells_into_generations(
-            spark,
-            build_histogram_cells(raw, "value", ["event_type"], 5.0),
-            str(tmp_path / f"cells{k}"),
-            ["event_type"],
-            epoch=("ck", epoch),
+    def fold(name, k):
+        _fold_landed_cells(
+            spark, _read_landed(spark, land, name), str(tmp_path / f"cells{k}"),
+            "value", ["event_type"], 5.0,
         )
 
-    want = cells(
-        build_histogram_cells(raw1.unionByName(raw2), "value", ["event_type"], 5.0)
+    want = _cells(
+        build_histogram_cells(
+            _read_landed(spark, land, "r1", "r2"), "value", ["event_type"], 5.0
+        )
     )
 
     def check(k):
-        got = cells(read_generation_target(spark, str(tmp_path / f"cells{k}")))
+        got = _cells(read_generation_target(spark, str(tmp_path / f"cells{k}")))
         assert got == want, f"crash at rename {k}"
 
-    fold(raw1, 0, 0)
+    fold("r1", 0)
     points = crash_replay_each_rename(
         monkeypatch,
         lambda k: shutil.copytree(tmp_path / "cells0", tmp_path / f"cells{k}"),
-        lambda k: fold(raw2, k, 1),
+        lambda k: fold("r2", k),
         check,
     )
-    assert points >= 3  # generation rename, epoch mark, pointer
+    assert points >= 3  # generation rename, applied-file list, pointer
 
 
 def test_incremental_merge_rejects_swap_path(spark, tmp_path):

@@ -20,7 +20,7 @@ from serverless_etl_bi_on_aws_spark.operators.similarity import (
     neardup_cosine_pairs,
 )
 
-from conftest import SF_CORRECT
+from conftest import SF_CORRECT, jobs_and_python_stages
 
 
 def _planted(spark, n_groups: int = 6, dim: int = 8):
@@ -269,25 +269,34 @@ def test_q80_build_is_one_pair_search_pass(spark):
     )
 
     q80_semantic_dedup_verify(spark, SF_CORRECT)  # builds the assignment artifact
-    sc = spark.sparkContext
-    sc.setJobGroup("q80-build", "q80 build")
-    try:
-        q80_semantic_dedup_verify(spark, SF_CORRECT)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    jobs = set(sc.statusTracker().getJobIdsForGroup("q80-build"))
-    python_stages = 0
-    store = spark._jsparkSession.sharedState().statusStore()
-    n = store.executionsCount()  # the build's executions are among the last
-    it = store.executionsList(max(0, n - 50), 50).iterator()
-    while it.hasNext():
-        e = it.next()
-        ran = e.jobs().keySet().iterator()
-        if any(ran.next() in jobs for _ in range(e.jobs().size())):
-            # the final tree precedes the node details and, under AQE,
-            # the initial plan
-            tree = e.physicalPlanDescription().split("\n\n")[0]
-            tree = tree.split("== Initial Plan ==")[0]
-            python_stages += tree.count("FlatMapGroupsInPandas")
+    jobs, python_stages = jobs_and_python_stages(
+        spark, lambda: q80_semantic_dedup_verify(spark, SF_CORRECT)
+    )
     assert python_stages == 1
-    assert 0 < len(jobs) <= 7
+    assert 0 < jobs <= 7
+
+
+def test_q80_final_action_jobs(spark):
+    """q80's final action (the collect of its five metric rows) launches
+    at most 5 jobs and no Python stage: the two anti-join broadcasts and
+    the two exchanges of the one scalar aggregate, then the result. When
+    each scalar came from its own one-row frame, broadcast into a
+    cross join, it launched 15 on this fixture."""
+    from serverless_etl_bi_on_aws_spark.plans.queries import (
+        q80_semantic_dedup_verify,
+    )
+
+    out = q80_semantic_dedup_verify(spark, SF_CORRECT)
+    rows = []
+    jobs, python_stages = jobs_and_python_stages(
+        spark, lambda: rows.extend(out.collect())
+    )
+    assert [r.metric for r in rows] == [
+        "capture_floor",
+        "cluster_pairs_subset",
+        "corpus",
+        "exact_pairs",
+        "partition",
+    ]
+    assert python_stages == 0
+    assert 0 < jobs <= 5
