@@ -25,6 +25,7 @@ ISO 10918-1) and its Annex K reference tables.
 
 from __future__ import annotations
 
+import functools
 import struct
 
 import numpy as np
@@ -366,18 +367,24 @@ def _extend(bits: int, size: int) -> int:
     return bits if bits >= (1 << (size - 1)) else bits - (1 << size) + 1
 
 
-def _prefix_luts(codes: dict[int, tuple[int, int]]) -> tuple[bytes, bytes]:
-    """Canonical codes -> 16-bit prefix lookup tables (round-18
-    optimization: replaces the per-bit _BitReader walk — ~85% of decode
-    time — with one index per symbol). Entry ``i`` covers every 16-bit
-    window whose leading bits spell a code; length 0 marks an unassigned
-    prefix (invalid code). Prefix-freeness makes the mapping unambiguous,
-    so decoded symbols are identical to the bit-walk's. Returned as
-    ``bytes`` — indexing bytes yields ints at C speed, where numpy scalar
-    extraction (or a 65536-entry tolist per frame) dominated the decode."""
+@functools.lru_cache(maxsize=512)
+def _prefix_luts(bits: bytes, vals: bytes) -> tuple[bytes, bytes]:
+    """One DHT table's ``(BITS, HUFFVAL)`` bytes -> 16-bit prefix lookup
+    tables ``(length, symbol)``. Entry ``i`` covers every 16-bit window
+    whose leading bits spell a code; length 0 marks an unassigned prefix
+    (invalid code). Prefix-freeness makes the mapping unambiguous, so each
+    symbol costs one index instead of a per-bit walk. Returned as
+    ``bytes``: indexing bytes yields ints at C speed.
+
+    Cached per DHT byte pair: optimized tables repeat across frames (the
+    2,000 gradient frames of the curation workload carry 128 distinct DC
+    and 238 distinct AC tables), and building both 64 KB tables was a
+    fixed ~35 us per table. The bound sits above that working set, since
+    an LRU smaller than a cyclic working set never hits, and caps a
+    Python worker's cache at 64 MB."""
     lut_len = bytearray(65536)
     lut_sym = bytearray(65536)
-    for sym, (code, ln) in codes.items():
+    for sym, (code, ln) in _canonical_codes(list(bits), list(vals)).items():
         start = code << (16 - ln)
         end = (code + 1) << (16 - ln)
         lut_len[start:end] = bytes([ln]) * (end - start)
@@ -385,17 +392,58 @@ def _prefix_luts(codes: dict[int, tuple[int, int]]) -> tuple[bytes, bytes]:
     return bytes(lut_len), bytes(lut_sym)
 
 
+#: Right shifts that turn a 24-bit word (three entropy bytes) into the
+#: 16-bit window starting at bit offset 0..7 of its first byte.
+_PEEK_SHIFTS = np.arange(8, 0, -1, dtype=np.int64)
+
+#: The peek list is rebuilt over this many entropy bytes at a time.
+_WINDOW_BYTES = 4096
+
+#: The most entropy bits one block can consume before a check fires, so a
+#: refill at a block boundary covers the whole block. DC: a code of <= 16
+#: bits, then a magnitude of <= 16 (a larger size shifts by a negative
+#: count and raises before it consumes anything). AC: every symbol read
+#: either ends the block (EOB), raises, or advances k by >= 1 (a ZRL by
+#: 16) from 1 while k < 64, so a block reads <= 63 AC symbols, EOB
+#: included, each a code of <= 16 bits plus a magnitude of <= 15. That
+#: holds on a corrupt stream too: 16 + 16 + 63 * (16 + 15) = 1985.
+_BLOCK_BITS = 16 + 16 + 63 * (16 + 15)
+
+
+def _peek_window(stream: np.ndarray, start: int, n: int) -> list[int]:
+    """The 16-bit windows at every bit offset of ``stream[start:start + n]``,
+    in bit order; ``stream`` ends in >= 2 zero bytes. Each byte's 24-bit
+    word ``b0 << 16 | b1 << 8 | b2`` holds its 8 windows, one right shift
+    each. A list, because indexing a list beats numpy scalar extraction
+    once per symbol."""
+    c = stream[start : start + n + 2].astype(np.int64)
+    w24 = (c[:-2] << 16) | (c[1:-1] << 8) | c[2:]
+    return ((w24[:, None] >> _PEEK_SHIFTS) & 0xFFFF).reshape(-1).tolist()
+
+
 def decode_jpeg_gray(data: bytes) -> tuple[bytes, int, int]:
     """Baseline JFIF bytes -> (row-major grayscale pixels, width, height).
 
     General within the baseline single-component profile: tables are taken
     from the stream (any spec-valid DQT/DHT layout), unknown APPn/COM
-    segments are skipped by their length fields."""
+    segments are skipped by their length fields.
+
+    The entropy decode reads one symbol per lookup: the 16 bits at the
+    read position index the DHT table's cached prefix tables
+    (:func:`_prefix_luts`). Those 16-bit windows come from
+    :func:`_peek_window` over a bounded window of the entropy bytes,
+    rebuilt only at block boundaries, so memory is O(window + blocks),
+    not O(compressed bits). The IDCT is one batched ``DCT.T @ coef @ DCT``
+    matmul over all blocks; it matches the encoder's ``einsum`` within an
+    ulp, and decoded pixels are pinned by golden md5s (no IDCT value of
+    the fixture family sits on a rounding tie). The encoder keeps its
+    ``einsum`` because its quantizer does hit exact ties (see
+    :func:`encode_jpeg_gray`)."""
     if data[:2] != b"\xff\xd8":
         raise ValueError("jpeg: missing SOI")
     pos = 2
     quant: dict[int, np.ndarray] = {}
-    huff: dict[tuple[int, int], dict[int, tuple[int, int]]] = {}
+    huff: dict[tuple[int, int], tuple[bytes, bytes]] = {}  # prefix tables
     width = height = None
     dc_id = ac_id = 0
     entropy_start = None
@@ -439,10 +487,11 @@ def decode_jpeg_gray(data: bytes) -> tuple[bytes, int, int]:
             off = 0
             while off < len(seg):
                 tc, th = seg[off] >> 4, seg[off] & 0xF
-                bits = list(seg[off + 1 : off + 17])
-                nvals = sum(bits)
-                vals = list(seg[off + 17 : off + 17 + nvals])
-                huff[(tc, th)] = _canonical_codes(bits, vals)
+                nvals = sum(seg[off + 1 : off + 17])
+                huff[(tc, th)] = _prefix_luts(
+                    bytes(seg[off + 1 : off + 17]),
+                    bytes(seg[off + 17 : off + 17 + nvals]),
+                )
                 off += 17 + nvals
         elif marker == 0xDA:  # SOS
             dc_id, ac_id = seg[2] >> 4, seg[2] & 0xF
@@ -463,49 +512,52 @@ def decode_jpeg_gray(data: bytes) -> tuple[bytes, int, int]:
     n_blocks = bw * bh
     zz = np.zeros((n_blocks, 64), dtype=np.int64)
 
-    # LUT entropy decode (round-18 optimization — see _prefix_luts): the
-    # stream becomes a rolling 16-bit integer window; each symbol is one
-    # LUT index + length advance, each magnitude one shift of the window.
-    dc_len_l, dc_sym_l = _prefix_luts(huff[(0, dc_id)])
-    ac_len_l, ac_sym_l = _prefix_luts(huff[(1, ac_id)])
-    bits = np.unpackbits(np.frombuffer(entropy, dtype=np.uint8))
-    total = int(bits.size)
-    ext = np.concatenate([bits, np.zeros(16, dtype=np.uint8)]).astype(np.int64)
-    weights = (1 << np.arange(15, -1, -1)).astype(np.int64)
-    peek = np.lib.stride_tricks.sliding_window_view(ext, 16) @ weights
-    # Scale assumption (round-18 ADVICE): this materializes one Python int
-    # per entropy BIT (~28 bytes each, plus the (total+1)x16 int64 matmul)
-    # — ~250x the compressed size, sized for the <=63px fixture frames.
-    # Chunk the peek window before attaching images beyond ~1 MB compressed.
-    peek_l = peek.tolist()  # list indexing beats np scalar extraction per symbol
-
-    pos = 0
+    dc_len_l, dc_sym_l = huff[(0, dc_id)]
+    ac_len_l, ac_sym_l = huff[(1, ac_id)]
+    total = 8 * len(entropy)
+    # three zero bytes: the windows at bit offsets up to ``total`` (a read
+    # there is legal: the exhaustion checks fire only past it) see zeros
+    stream = np.frombuffer(entropy + bytes(3), dtype=np.uint8)
+    # ``p`` is the read position within the current peek window, which
+    # starts at stream bit ``base``; ``left`` is ``total`` in window terms
+    base = p = 0
+    left = total
+    refill_at = -1
     prev_dc = 0
     for b in range(n_blocks):
-        if pos > total:
+        if p > left:
             raise ValueError("jpeg: entropy data exhausted")
-        e = peek_l[pos]
+        if p > refill_at:  # fewer than _BLOCK_BITS windows left: refill
+            start = (base + p) >> 3
+            p += base - 8 * start
+            base = 8 * start
+            left = total - base
+            peek_l = _peek_window(stream, start, _WINDOW_BYTES)
+            # the last window reaches past ``total``: no further refill
+            last = start + _WINDOW_BYTES >= len(stream) - 2
+            refill_at = left if last else len(peek_l) - _BLOCK_BITS
+        e = peek_l[p]
         ln = dc_len_l[e]
         if ln == 0:
             raise ValueError("jpeg: invalid huffman code")
         s = dc_sym_l[e]
-        pos += ln
+        p += ln
         if s:
-            if pos > total:
+            if p > left:
                 raise ValueError("jpeg: entropy data exhausted")
-            prev_dc += _extend(peek_l[pos] >> (16 - s), s)
-            pos += s
+            prev_dc += _extend(peek_l[p] >> (16 - s), s)
+            p += s
         zz[b, 0] = prev_dc
         k = 1
         while k < 64:
-            if pos > total:
+            if p > left:
                 raise ValueError("jpeg: entropy data exhausted")
-            e = peek_l[pos]
+            e = peek_l[p]
             ln = ac_len_l[e]
             if ln == 0:
                 raise ValueError("jpeg: invalid huffman code")
             sym = ac_sym_l[e]
-            pos += ln
+            p += ln
             if sym == 0x00:  # EOB
                 break
             run, size = sym >> 4, sym & 0xF
@@ -517,11 +569,12 @@ def decode_jpeg_gray(data: bytes) -> tuple[bytes, int, int]:
             k += run
             if k >= 64:
                 raise ValueError("jpeg: AC run past block end")
-            if pos > total:
+            if p > left:
                 raise ValueError("jpeg: entropy data exhausted")
-            zz[b, k] = _extend(peek_l[pos] >> (16 - size), size)
-            pos += size
+            zz[b, k] = _extend(peek_l[p] >> (16 - size), size)
+            p += size
             k += 1
+    pos = base + p
     if pos > total:
         raise ValueError("jpeg: entropy data exhausted")
     # Strict tail check (round-18 ADVICE): after the declared block count,
@@ -530,11 +583,12 @@ def decode_jpeg_gray(data: bytes) -> tuple[bytes, int, int]:
     # would otherwise pass the pos<=total check above silently.
     if total - pos >= 8:
         raise ValueError("jpeg: trailing entropy data after final block")
-    if pos < total and not all(bits[pos:total]):
+    pad = (1 << (total - pos)) - 1  # the last byte's unread low bits
+    if pad and entropy[-1] & pad != pad:
         raise ValueError("jpeg: invalid entropy padding (expected 1-bits)")
 
     coef = (zz[:, UNZIGZAG].reshape(n_blocks, 8, 8)) * q[None, :, :]
-    spatial = np.einsum("ji,njk,kl->nil", DCT, coef.astype(np.float64), DCT)
+    spatial = DCT.T @ coef.astype(np.float64) @ DCT
     img = (
         spatial.reshape(bh, bw, 8, 8).transpose(0, 2, 1, 3).reshape(bh * 8, bw * 8)
     )

@@ -59,7 +59,7 @@ from serverless_etl_bi_on_aws_spark.operators.merge import (
     BROADCAST_STAGING_MAX_BYTES,
     _estimated_bytes,
 )
-from serverless_etl_bi_on_aws_spark.util import artifact_dir, fixture_digest
+from serverless_etl_bi_on_aws_spark.util import artifact_dir, fixture_digest, parquet_once
 
 
 def denorm_rows(
@@ -206,8 +206,7 @@ def ensure_sales_denorm(spark: SparkSession, sf_dir: str) -> str:
     retained — must not reuse a round-9 flat-layout artifact.)"""
     digest = fixture_digest(sf_dir, ("lineitem", "orders", "part"))[:8]
     path = artifact_dir(f"spark_graft_denorm3_{digest}")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        build_sales_denorm(spark, sf_dir, path)
+    parquet_once(path, lambda p: build_sales_denorm(spark, sf_dir, p))
     return path
 
 

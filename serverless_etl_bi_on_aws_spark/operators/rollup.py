@@ -32,8 +32,6 @@ merged into the touched year partitions only.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 #: additive partial columns carried by the rollup (all exact scaled longs)
@@ -163,14 +161,18 @@ def ensure_pricing_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     temp dir, built once (parquet _SUCCESS gate) and reread ever after —
     the same write-once discipline as q46's bucket build."""
     from serverless_etl_bi_on_aws_spark.catalog import load_table
-    from serverless_etl_bi_on_aws_spark.util import artifact_dir, fixture_digest
+    from serverless_etl_bi_on_aws_spark.util import artifact_dir, fixture_digest, parquet_once
 
     digest = fixture_digest(sf_dir, ("lineitem",))[:8]
     path = artifact_dir(f"spark_graft_rollup_{digest}")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        li = load_table(spark, sf_dir, "lineitem")
-        # one file per year partition: the rollup is tiny, the scan of it
-        # should be one task per touched year, not one per build task
-        (build_pricing_rollup(li).repartition(1, "ship_year")
-         .write.mode("overwrite").partitionBy("ship_year").parquet(path))
+    # one file per year partition: the rollup is tiny, the scan of it
+    # should be one task per touched year, not one per build task
+    parquet_once(
+        path,
+        lambda p: build_pricing_rollup(load_table(spark, sf_dir, "lineitem"))
+        .repartition(1, "ship_year")
+        .write.mode("overwrite")
+        .partitionBy("ship_year")
+        .parquet(p),
+    )
     return spark.read.parquet(path)

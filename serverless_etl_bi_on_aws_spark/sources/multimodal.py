@@ -31,7 +31,7 @@ from collections.abc import Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -1024,3 +1024,44 @@ def attach_mp4_media(df: DataFrame, id_col: str = "doc_id", fps: int = 4) -> Dat
             yield pdf
 
     return df.mapInPandas(batches, schema=out_schema)
+
+
+#: the payload builder of each stored media kind (see :func:`stored_media`)
+_ATTACH = {
+    "png": attach_png_media,
+    "jpeg": attach_jpeg_media,
+    "wav": attach_wav_media,
+    "avi": attach_avi_media,
+    "gif": attach_gif_media,
+    "mp4": attach_mp4_media,
+}
+
+
+def stored_media(spark: SparkSession, sf_dir: str, kind: str) -> DataFrame:
+    """The fixture documents' ``(doc_id, source, media)`` rows with
+    ``kind`` payloads, landed once and read back: the media queries'
+    input, the way the reference lands data once and queries it many
+    times.
+
+    The first call writes ``attach_<kind>_media`` over the documents to a
+    parquet artifact keyed on the documents' data (``util.fixture_digest``,
+    the rule every write-once artifact uses), so a fixture refresh
+    rebuilds it. Every later call is a scan with a declared schema, so a
+    media query's only Python stage is the decode it measures. Both sides
+    are fanned out: the single-file fixture scan is one task, which would
+    serialize every encode or decode on one core."""
+    from serverless_etl_bi_on_aws_spark.catalog import load_table
+    from serverless_etl_bi_on_aws_spark.util import (
+        artifact_dir,
+        fan_out,
+        fixture_digest,
+        parquet_once,
+    )
+
+    attach = _ATTACH[kind]
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
+    digest = fixture_digest(sf_dir, ("documents",), version="media1")[:8]
+    path = artifact_dir(f"spark_graft_media_{kind}_{digest}")
+    parquet_once(path, lambda p: attach(fan_out(docs)).write.mode("overwrite").parquet(p))
+    schema = StructType(docs.schema.fields + [StructField("media", MEDIA_STRUCT, True)])
+    return fan_out(spark.read.schema(schema).parquet(path))

@@ -60,6 +60,17 @@ def artifact_dir(name: str) -> str:
     return os.path.join(base, name)
 
 
+def parquet_once(path: str, write: Callable[[str], None]) -> bool:
+    """The write-once gate of every digest-keyed parquet artifact: call
+    ``write(path)`` unless ``path/_SUCCESS`` exists. Returns True iff it
+    wrote. Spark writes ``_SUCCESS`` last, so a crashed or concurrent
+    partial write is rebuilt, and ``write`` must overwrite."""
+    if os.path.exists(os.path.join(path, "_SUCCESS")):
+        return False
+    write(path)
+    return True
+
+
 def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     """Repartition a narrow input so CPU-heavy per-row stages (interpreted
     higher-order functions, Python batches) use every core.
@@ -530,8 +541,7 @@ def write_survivors_once(
     partition. A crash before ``_SUCCESS`` recomputes against an index
     the batch has not touched yet and overwrites the same partition with
     the identical result."""
-    out = os.path.join(clean_dir, f"batch={batch_id}")
-    if os.path.exists(os.path.join(out, "_SUCCESS")):
-        return False
-    survivors().write.mode("overwrite").parquet(out)
-    return True
+    return parquet_once(
+        os.path.join(clean_dir, f"batch={batch_id}"),
+        lambda out: survivors().write.mode("overwrite").parquet(out),
+    )

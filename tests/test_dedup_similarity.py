@@ -321,6 +321,70 @@ def test_jpeg_vectorized_entropy_encode_golden_bytes():
         assert hashlib.md5(enc).hexdigest() == md5, f"k={k}: encode bytes moved"
 
 
+def _gradient_jpeg(k):
+    """The q49 payload of key ``k``: its gradient frame, JPEG-encoded."""
+    import numpy as np
+
+    from serverless_etl_bi_on_aws_spark.functions.jpeg import encode_jpeg_gray
+
+    w, h = 32 + k % 32, 32 + (k * 7) % 32
+    img = np.fromfunction(lambda y, x: (x * 3 + y * 5 + k) % 256, (h, w)).astype(np.uint8)
+    return encode_jpeg_gray(img.tobytes(), w, h)
+
+
+def test_jpeg_decode_golden_pixels():
+    """Decoded pixels are pinned: md5s recorded from the per-bit-matmul,
+    einsum-IDCT decoder, per reference frame and over the concatenated
+    frames of the curation workload's keys 0..1999. The shift-built peek
+    windows, the cached prefix tables and the matmul IDCT must not move
+    one pixel."""
+    import hashlib
+
+    from serverless_etl_bi_on_aws_spark.functions.jpeg import decode_jpeg_gray
+
+    golden = {
+        0: "e89e49663709f4bc3b95a51bf5398f5c",
+        5: "b259000338f9caddb455a88b4caf6240",
+        123: "b5144a8df9027246a7639796b2d3aa4f",
+        4091: "4d7b88676b25ba350cf80d700bd4b236",
+    }
+    for k, md5 in golden.items():
+        px = decode_jpeg_gray(_gradient_jpeg(k))[0]
+        assert hashlib.md5(px).hexdigest() == md5, f"k={k}: decoded pixels moved"
+    h = hashlib.md5()
+    for k in range(2000):
+        h.update(decode_jpeg_gray(_gradient_jpeg(k))[0])
+    assert h.hexdigest() == "d6fd95b637875f874f9b1af229b0a5be"
+
+
+def test_jpeg_decode_memory_is_bounded():
+    """A 512x512 noise frame (108 KB of entropy data) decodes to the
+    pixels recorded from the whole-stream decoder, whose per-bit peek
+    list peaked at 62 MB under tracemalloc. Windowed peeks keep the peak
+    to the block arrays (~14 MB measured)."""
+    import hashlib
+    import tracemalloc
+
+    import numpy as np
+
+    from serverless_etl_bi_on_aws_spark.functions.jpeg import (
+        decode_jpeg_gray,
+        encode_jpeg_gray,
+    )
+
+    noise = np.random.default_rng(0).integers(0, 256, (512, 512), dtype=np.uint8)
+    enc = encode_jpeg_gray(noise.tobytes(), 512, 512)
+    tracemalloc.start()
+    try:
+        px, w, h = decode_jpeg_gray(enc)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert (w, h) == (512, 512)
+    assert hashlib.md5(px).hexdigest() == "a4e921be78aa6fe297d5039b48654f38"
+    assert peak < 24 * 2**20, f"decode peak {peak / 2**20:.1f} MiB"
+
+
 def test_jpeg_encoder_rejects_out_of_range_quant():
     """A caller quant table must be 8x8 with entries in 1..255: a 0 would
     divide by zero, and 256 would wrap to 0 in the 8-bit DQT segment. A
